@@ -37,7 +37,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # which detects a dead context, tears down the python-side singletons, and
 # rebuilds. Rebuild events are recorded in the output (a rebuild means a
 # prior step crashed the JVM — evidence, not silence).
-_ACTIVE: dict = {"spark": None, "dead": [], "rebuilds": []}
+_ACTIVE: dict = {"spark": None, "rebuilds": []}
 
 
 def _context_stopped(spark) -> bool:
@@ -52,13 +52,8 @@ def _live_spark():
     if spark is not None and not _context_stopped(spark):
         return spark
     if spark is not None:
-        # keep the dead session object referenced: id(spark)-keyed memo
-        # caches (knn quantizer/query memos, hot-table keys) must never
-        # see a recycled id() collide with the new session
-        _ACTIVE["dead"].append(spark)
-        from flink_realtime_2024_spark.sources.io import _HOT
-
-        _HOT.clear()  # cached DataFrames belong to the dead context
+        # the package's memos live on the session object, so they die
+        # with it: the rebuilt session starts empty
         try:
             spark.stop()  # python-side teardown of the stopped context
         except Exception:
@@ -644,35 +639,18 @@ _SF10_QUERIES = (
 )
 
 
-def _staged_probe_dir(prefix: str, *params) -> str:
-    """Content-addressed staging dir for a probe corpus: the digest
-    covers the source fixture files (name/size/mtime_ns) plus the
-    probe parameters, so regenerating the fixture IN PLACE produces a
-    new dir instead of silently reusing a stale corpus — the same
-    stale-staging class the IVF index and hot staging already guard
-    against (stage_digest over size/mtime). Stale same-prefix siblings
-    are pruned to bound /tmp growth."""
-    from flink_realtime_2024_spark.sources.io import _prune_stale, stage_digest
+def _stage_probe(prefix: str, params: tuple, build) -> str:
+    """Stage a probe corpus derived from SF_DIR's tables with
+    ``sources.io.stage``: content-addressed over every fixture file plus
+    the probe parameters, so regenerating the fixture IN PLACE builds a
+    new dir instead of silently reusing a stale corpus, and the stale
+    sibling is pruned."""
+    from flink_realtime_2024_spark.sources.io import stage
 
-    parts = [os.path.normpath(SF_DIR)]
-    for f in sorted(os.listdir(SF_DIR)):
-        if f.endswith(".parquet"):
-            st = os.stat(os.path.join(SF_DIR, f))
-            parts += [f, st.st_size, st.st_mtime_ns]
-    digest = stage_digest(*parts, *params)
-    tag = os.path.basename(SF_DIR.rstrip("/"))
-    stem = f"{prefix}_{tag}"
-    dst = os.path.join(tempfile.gettempdir(), f"{stem}_{digest}")
-    _prune_stale(tempfile.gettempdir(), f"{stem}_", f"{stem}_{digest}")
-    # pre-digest layouts used the bare stem as the dir name, which the
-    # underscore-suffixed prune prefix can never match — reclaim those
-    # multi-GB corpora explicitly or they are orphaned forever
-    import shutil
-
-    legacy = os.path.join(tempfile.gettempdir(), stem)
-    if os.path.isdir(legacy):
-        shutil.rmtree(legacy, ignore_errors=True)
-    return dst
+    inputs = [
+        os.path.join(SF_DIR, f) for f in sorted(os.listdir(SF_DIR)) if f.endswith(".parquet")
+    ]
+    return stage(f"{prefix}_{os.path.basename(SF_DIR.rstrip('/'))}", inputs, params, build)
 
 
 def stage_replicated_corpus(spark, replication: int) -> tuple[str, float]:
@@ -688,10 +666,7 @@ def stage_replicated_corpus(spark, replication: int) -> tuple[str, float]:
     join stays valid and selectivities match the original."""
     import pyspark.sql.functions as F
 
-    probe_dir = _staged_probe_dir(f"sfx{replication}_probe", replication)
-    marker = os.path.join(probe_dir, "_STAGED_OK_V2")
-    t0 = time.perf_counter()
-    if not os.path.exists(marker):
+    def build(probe_dir: str) -> None:
         key_off = 10_000_000
 
         def replicas(df, keys, perturb_col=None):
@@ -740,7 +715,9 @@ def stage_replicated_corpus(spark, replication: int) -> tuple[str, float]:
             load_table(spark, SF_DIR, table).write.mode("overwrite").parquet(
                 os.path.join(probe_dir, f"{table}.parquet")
             )
-        open(marker, "w").close()
+
+    t0 = time.perf_counter()
+    probe_dir = _stage_probe(f"sfx{replication}_probe", (replication,), build)
     return probe_dir, round(time.perf_counter() - t0, 3)
 
 
@@ -1319,11 +1296,9 @@ def _skew_probe(spark) -> dict:
     )
 
     replication, hot_fraction_target = 10, 0.3
-    probe_dir = _staged_probe_dir("skew_probe", replication, hot_fraction_target)
-    marker = os.path.join(probe_dir, "_STAGED_OK")
     key_off = 10_000_000
-    t0 = time.perf_counter()
-    if not os.path.exists(marker):
+
+    def build(probe_dir: str) -> None:
         li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
         orders = load_table(spark, SF_DIR, "orders").select(
             "o_orderkey", "o_orderstatus"
@@ -1356,7 +1331,9 @@ def _skew_probe(spark) -> dict:
         replicas(orders, "o_orderkey").write.mode("overwrite").parquet(
             os.path.join(probe_dir, "orders.parquet")
         )
-        open(marker, "w").close()
+
+    t0 = time.perf_counter()
+    probe_dir = _stage_probe("skew_probe", (replication, hot_fraction_target), build)
     staging_s = round(time.perf_counter() - t0, 3)
 
     li = spark.read.parquet(os.path.join(probe_dir, "lineitem_skew.parquet"))

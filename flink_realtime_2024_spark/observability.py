@@ -14,7 +14,6 @@ late_rows_metrics for that path.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation
 
 
@@ -40,7 +39,3 @@ def observe_counts(df: DataFrame, name: str, **metrics: Column):
     observed = df.observe(obs, *[expr.alias(alias) for alias, expr in metrics.items()])
     return observed, obs
 
-
-def row_count_metric() -> Column:
-    """The canonical records-out counter."""
-    return F.count(F.lit(1))

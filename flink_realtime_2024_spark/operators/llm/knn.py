@@ -73,7 +73,7 @@ def llm_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixed-SIZE query budget: orderBy+limit compiles to
     # TakeOrderedAndProject (per-partition top-N, no full sort) — the
     # collect is O(_KNN_MAX_QUERIES) regardless of corpus size
-    qids, Q = _knn_query_matrix(emb, _knn_memo_key(spark, sf_dir))
+    qids, Q = _knn_query_matrix(spark, sf_dir, emb)
     sc = spark.sparkContext
     b = sc.broadcast((qids, Q))
 
@@ -113,26 +113,31 @@ def llm_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Ground-truth exact top-k, memoized per (session, fixture content):
-# every ANN variant self-reports recall against it, and the brute-force
-# pass is paid once per fixture, not once per variant. The result is
-# bounded — O(_KNN_MAX_QUERIES × _KNN_K) rows — so holding it on the
-# driver is a fixed cost at any corpus size (the scan that produced it
-# was distributed).
-_EXACT_TOPK_CACHE: dict[tuple[int, str], list] = {}
+def _emb_memo(spark: SparkSession, sf_dir: str, kind: str, build, *knobs):
+    """Session memo (``sources.io.memo``) keyed on the embeddings
+    table's content digest plus the knobs that shape the value: repeat
+    kernel calls in one session (bench reps, looping consumers) skip
+    the driver-synchronous job, and a regenerated fixture or a changed
+    knob misses by construction."""
+    from ...sources.io import content_digest, memo, table_path
+
+    key = (content_digest([table_path(sf_dir, "embeddings")]), *knobs)
+    return memo(spark, kind, key, build)
 
 
 def _exact_topk_rows(spark: SparkSession, sf_dir: str) -> list:
-    # the query-budget knobs are part of what the ground truth IS — in
-    # the key so a future knob change can't serve a stale memo within a
-    # session (digest shape shared with the quantizer/query caches,
-    # per-file for directory corpora — see _emb_memo_key)
-    key = _emb_memo_key(
-        spark, sf_dir, "exact_topk", _KNN_QUERY_MOD, _KNN_MAX_QUERIES, _KNN_K
+    """Ground-truth exact top-k, memoized per session and fixture
+    content: every ANN variant self-reports recall against it, and the
+    brute-force pass is paid once per fixture, not once per variant.
+    The result is bounded — O(_KNN_MAX_QUERIES × _KNN_K) rows — so
+    holding it on the driver is a fixed cost at any corpus size. The
+    query-budget knobs are part of what the ground truth IS, so they
+    are in the key."""
+    return _emb_memo(
+        spark, sf_dir, "knn_exact_topk",
+        lambda: llm_knn_cosine(spark, sf_dir).collect(),
+        _KNN_QUERY_MOD, _KNN_MAX_QUERIES, _KNN_K,
     )
-    if key not in _EXACT_TOPK_CACHE:
-        _EXACT_TOPK_CACHE[key] = llm_knn_cosine(spark, sf_dir).collect()
-    return _EXACT_TOPK_CACHE[key]
 
 
 def with_recall_vs_exact(spark: SparkSession, sf_dir: str, approx: DataFrame) -> DataFrame:
@@ -172,88 +177,33 @@ _IVF_NCENT = 16
 _IVF_NPROBE = 6
 
 
-# Quantizer memo, same idiom as _EXACT_TOPK_CACHE: the Lloyd training
-# is deterministic given the embeddings file + knobs, so repeat kernel
-# calls in one session (bench reps, looping consumers) skip the
-# training scan + collect entirely (r12 — the retrain was the
-# 'driver-synchronous index path' variance the r11 verdict tagged on
-# llm_knn_ivf). Keyed by session id + content digest; a regenerated
-# fixture or changed knob misses the memo by construction.
-_IVF_TRAIN_CACHE: dict[tuple[int, str], np.ndarray] = {}
-
 _IVF_KNUTH = 2654435761  # Knuth multiplicative hash constant
 
-# Same story for the fixed-budget query set: all five kNN entry points
-# collect the IDENTICAL (qids, Q) per call (TakeOrderedAndProject, one
-# driver-synchronous job each) — memoize it once per session+digest.
-_KNN_QUERY_CACHE: dict[tuple[int, str], tuple] = {}
 
-
-def _emb_memo_key(spark: SparkSession, sf_dir: str, *extra) -> tuple[int, str]:
-    """Session + embeddings-content memo key shared by the quantizer
-    and query-matrix caches (r12 review: the two builders were
-    line-for-line copies, and a single os.stat of the table PATH is a
-    weak staleness guard for a part-file DIRECTORY — rewriting one
-    part in place changes the file's mtime, not necessarily the
-    dir's). For directories, fold every file's relpath/size/mtime into
-    the digest RECURSIVELY (advice r12: a flat listdir missed rewrites
-    inside Hive-partitioned subdirectories — a subdir's own stat need
-    not change when a part file within it is replaced) — the same
-    per-file discipline as bench's staged-corpus addressing."""
-    import os
-
-    from ...sources.io import stage_digest, table_path
-
-    p = table_path(sf_dir, "embeddings")
-    parts: list = [os.path.normpath(sf_dir), "embeddings"]
-    if os.path.isdir(p):
-        for root, dirs, files in os.walk(p):
-            dirs.sort()
-            for f in sorted(files):
-                fp = os.path.join(root, f)
-                st = os.stat(fp)
-                parts += [os.path.relpath(fp, p), st.st_size, st.st_mtime_ns]
-    else:
-        st = os.stat(p)
-        parts += [st.st_size, st.st_mtime_ns]
-    return (id(spark), stage_digest(*parts, *extra))
-
-
-def _knn_memo_key(spark: SparkSession, sf_dir: str) -> tuple[int, str]:
-    return _emb_memo_key(
-        spark, sf_dir, "qmatrix", _KNN_QUERY_MOD, _KNN_MAX_QUERIES
-    )
-
-
-def _knn_query_matrix(emb: DataFrame, memo_key: tuple | None = None):
+def _knn_query_matrix(spark: SparkSession, sf_dir: str, emb: DataFrame):
     """The fixed-size query budget as driver arrays (qids, Q) — the
-    shared prologue of every kNN entry point. orderBy+limit compiles to
-    TakeOrderedAndProject, so the collect is O(_KNN_MAX_QUERIES) at any
-    corpus size; ``memo_key`` (from ``_knn_memo_key``) skips the job on
-    repeat calls within a session."""
-    if memo_key is not None and memo_key in _KNN_QUERY_CACHE:
-        return _KNN_QUERY_CACHE[memo_key]
-    q_rows = (
-        emb.filter(F.col("vec_id") % _KNN_QUERY_MOD == 0)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(_KNN_MAX_QUERIES)
-        .collect()
-    )
-    qids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    if memo_key is not None:
-        _KNN_QUERY_CACHE[memo_key] = (qids, Q)
-    return qids, Q
+    shared prologue of every kNN entry point, memoized per session and
+    fixture since they all collect the IDENTICAL arrays. orderBy+limit
+    compiles to TakeOrderedAndProject, so the collect is
+    O(_KNN_MAX_QUERIES) at any corpus size."""
 
+    def build():
+        q_rows = (
+            emb.filter(F.col("vec_id") % _KNN_QUERY_MOD == 0)
+            .select("vec_id", "embedding")
+            .orderBy("vec_id")
+            .limit(_KNN_MAX_QUERIES)
+            .collect()
+        )
+        qids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
+        return qids, np.array([r["embedding"] for r in q_rows], dtype=np.float64)
 
-def _ivf_memo_key(spark: SparkSession, sf_dir: str) -> tuple[int, str]:
-    return _emb_memo_key(
-        spark, sf_dir, "quantizer", _IVF_TRAIN_BUDGET, _IVF_NCENT
+    return _emb_memo(
+        spark, sf_dir, "knn_queries", build, _KNN_QUERY_MOD, _KNN_MAX_QUERIES
     )
 
 
-def _ivf_train(emb: DataFrame, memo_key: tuple | None = None) -> np.ndarray:
+def _ivf_train(emb: DataFrame) -> np.ndarray:
     """Coarse quantizer: deterministic sample → numpy Lloyd iterations.
     The training sample is bounded by SIZE (_IVF_TRAIN_BUDGET rows), not
     by a sampling rate: ordering by the Knuth multiplicative hash
@@ -263,10 +213,9 @@ def _ivf_train(emb: DataFrame, memo_key: tuple | None = None) -> np.ndarray:
     re-derive the sample — xxhash64's seed-42 serialized-value hash has
     no DuckDB twin), and orderBy+limit compiles to
     TakeOrderedAndProject — driver memory is O(budget) at any corpus
-    size. ``memo_key`` (from ``_ivf_memo_key``) short-circuits repeat
-    training within a session."""
-    if memo_key is not None and memo_key in _IVF_TRAIN_CACHE:
-        return _IVF_TRAIN_CACHE[memo_key]
+    size. Callers memoize it per session (``_emb_memo``): the training
+    is deterministic given the embeddings and knobs, so repeat kernel
+    calls skip the training scan + collect entirely."""
     sample = np.array(
         [
             r["embedding"]
@@ -290,8 +239,6 @@ def _ivf_train(emb: DataFrame, memo_key: tuple | None = None) -> np.ndarray:
                 n = np.linalg.norm(m)
                 if n > 0:
                     cent[c] = m / n
-    if memo_key is not None:
-        _IVF_TRAIN_CACHE[memo_key] = cent
     return cent
 
 
@@ -465,11 +412,14 @@ def llm_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_semantics.py.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = _ivf_train(emb, _ivf_memo_key(spark, sf_dir))
+    cent = _emb_memo(
+        spark, sf_dir, "ivf_quantizer", lambda: _ivf_train(emb),
+        _IVF_TRAIN_BUDGET, _IVF_NCENT,
+    )
 
     # queries + their probe sets (fixed-size cap, same budget as the
     # exact kNN so both entry points answer the same query set)
-    qids, Q = _knn_query_matrix(emb, _knn_memo_key(spark, sf_dir))
+    qids, Q = _knn_query_matrix(spark, sf_dir, emb)
     probe_mask = np.zeros((len(qids), _IVF_NCENT), dtype=bool)
     for j in range(len(qids)):
         top = np.argsort(-(cent @ Q[j]))[:_IVF_NPROBE]
@@ -517,11 +467,7 @@ def llm_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_recall_vs_exact(spark, sf_dir, topk)
 
 
-def _ivf_seeded_memo_key(spark: SparkSession, sf_dir: str) -> tuple[int, str]:
-    return _emb_memo_key(spark, sf_dir, "quantizer_seeded", _IVF_NCENT)
-
-
-def _ivf_seeded_centroids(emb: DataFrame, memo_key: tuple | None = None) -> np.ndarray:
+def _ivf_seeded_centroids(emb: DataFrame) -> np.ndarray:
     """Seeded deterministic coarse quantizer (r14, verdict #5): the
     centroids are the ``_IVF_NCENT`` corpus vectors FIRST in Knuth
     multiplicative-hash order — ``(vec_id * 2654435761) % 2^32``, a
@@ -534,8 +480,6 @@ def _ivf_seeded_centroids(emb: DataFrame, memo_key: tuple | None = None) -> np.n
     k-means rounds. Centroid ORDINAL = position in hash order (the
     argmax/probe tie-break key on both engines). orderBy+limit compiles
     to TakeOrderedAndProject — O(ncent) driver memory at any corpus."""
-    if memo_key is not None and memo_key in _IVF_TRAIN_CACHE:
-        return _IVF_TRAIN_CACHE[memo_key]
     rows = (
         emb.select("vec_id", "embedding")
         .orderBy(
@@ -544,10 +488,7 @@ def _ivf_seeded_centroids(emb: DataFrame, memo_key: tuple | None = None) -> np.n
         .limit(_IVF_NCENT)
         .collect()
     )
-    cent = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    if memo_key is not None:
-        _IVF_TRAIN_CACHE[memo_key] = cent
-    return cent
+    return np.array([r["embedding"] for r in rows], dtype=np.float64)
 
 
 def _ivf_partitioned_oracle() -> str:
@@ -630,86 +571,63 @@ def llm_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs zero-training seeding), both value-checked. The numpy expected
     output is additionally pinned by tests/test_semantics.py."""
     import os
-    import tempfile
 
-    from ...sources.io import _prune_stale, stage_digest, stage_lock, table_path
+    from ...sources.io import stage, table_path
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = _ivf_seeded_centroids(emb, _ivf_seeded_memo_key(spark, sf_dir))
+    cent = _emb_memo(
+        spark, sf_dir, "ivf_quantizer_seeded", lambda: _ivf_seeded_centroids(emb),
+        _IVF_NCENT,
+    )
     bc_cent = spark.sparkContext.broadcast(cent)
-
-    # CONTENT-addressed index path (r8; was keyed on basename(sf_dir),
-    # which silently served a stale index if the fixture was regenerated
-    # in place — the one wrong-answer path the r7 verdict found): the
-    # digest covers the fixture file's identity (path, size, mtime) plus
-    # the index layout knobs, same recipe as bench staging. A new
-    # fixture ⇒ new digest ⇒ rebuild; stale siblings are pruned.
-    st = os.stat(table_path(sf_dir, "embeddings"))
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    digest = stage_digest(
-        os.path.normpath(sf_dir), "embeddings", st.st_size, st.st_mtime_ns,
-        _IVF_NCENT, "ivf_seeded_v2",
+    assign_schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("centroid_id", T.IntegerType()),
+            T.StructField("embedding", T.ArrayType(T.FloatType())),
+        ]
     )
-    index_dir = os.path.join(
-        tempfile.gettempdir(), f"ivf_index_{tag}_{digest}"
+
+    def assign(batches):
+        C = bc_cent.value
+        for pdf in batches:
+            E = np.array(list(pdf["embedding"]), dtype=np.float64)
+            # dots quantized to 1e-6 BEFORE argmax (oracle parity);
+            # np.argmax takes the FIRST max ⇒ ties break on centroid
+            # ordinal, same as the SQL
+            cids = np.round(E @ C.T, 6).argmax(axis=1).astype(np.int32)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
+                    "centroid_id": cids,
+                    "embedding": pdf["embedding"],
+                }
+            )
+
+    # CONTENT-addressed index (r8; a basename-keyed path silently served
+    # a stale index after an in-place fixture regeneration): ``stage``
+    # digests the embeddings file plus the index layout knobs, so a new
+    # fixture ⇒ new digest ⇒ rebuild, and the stale sibling is pruned.
+    index_dir = stage(
+        f"ivf_index_{os.path.basename(os.path.normpath(sf_dir))}",
+        [table_path(sf_dir, "embeddings")],
+        (_IVF_NCENT, "ivf_seeded_v2"),
+        lambda tmp: widen(emb.select("vec_id", "embedding"))
+        .mapInPandas(assign, assign_schema)
+        # cluster the write by centroid (guide §6: pay one shuffle at
+        # build time so each inverted list is ONE file, not one shard
+        # per scan task — the unclustered write left up to scan_width ×
+        # ncent tiny files, which the probed read then paid for in
+        # listing and per-file open cost on every query). Width = the
+        # index's own list count, the same tablet idiom as
+        # stream_agg_merge; a 100 TB index would add maxRecordsPerFile
+        # to split oversized lists.
+        .repartition(_IVF_NCENT, "centroid_id")
+        .write.partitionBy("centroid_id")
+        .parquet(tmp),
     )
-    marker = os.path.join(index_dir, "_INDEX_OK")
-    if not os.path.exists(marker):
-        with stage_lock(index_dir):
-            if not os.path.exists(marker):  # re-check under the lock
-                assign_schema = T.StructType(
-                    [
-                        T.StructField("vec_id", T.LongType()),
-                        T.StructField("centroid_id", T.IntegerType()),
-                        T.StructField("embedding", T.ArrayType(T.FloatType())),
-                    ]
-                )
 
-                def assign(batches):
-                    C = bc_cent.value
-                    for pdf in batches:
-                        E = np.array(list(pdf["embedding"]), dtype=np.float64)
-                        # dots quantized to 1e-6 BEFORE argmax (oracle
-                        # parity); np.argmax takes the FIRST max ⇒ ties
-                        # break on centroid ordinal, same as the SQL
-                        cids = (
-                            np.round(E @ C.T, 6).argmax(axis=1).astype(np.int32)
-                        )
-                        yield pd.DataFrame(
-                            {
-                                "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                                "centroid_id": cids,
-                                "embedding": pdf["embedding"],
-                            }
-                        )
-
-                (
-                    widen(emb.select("vec_id", "embedding"))
-                    .mapInPandas(assign, assign_schema)
-                    # cluster the write by centroid (guide §6: pay one
-                    # shuffle at build time so each inverted list is ONE
-                    # file, not one shard per scan task — the unclustered
-                    # write left up to scan_width × ncent tiny files,
-                    # which the probed read then paid for in listing and
-                    # per-file open cost on every query). Width = the
-                    # index's own list count, the same tablet idiom as
-                    # stream_agg_merge; a 100 TB index would add
-                    # maxRecordsPerFile to split oversized lists.
-                    .repartition(_IVF_NCENT, "centroid_id")
-                    .write.mode("overwrite")
-                    .partitionBy("centroid_id")
-                    .parquet(index_dir)
-                )
-                with open(marker, "w") as fh:
-                    fh.write("ok")
-                # one live index per fixture dir: stale digests are dead
-                _prune_stale(
-                    tempfile.gettempdir(),
-                    f"ivf_index_{tag}_",
-                    f"ivf_index_{tag}_{digest}",
-                )
-
-    qids, Q = _knn_query_matrix(emb, _knn_memo_key(spark, sf_dir))
+    qids, Q = _knn_query_matrix(spark, sf_dir, emb)
     probe_mask = np.zeros((len(qids), _IVF_NCENT), dtype=bool)
     for j in range(len(qids)):
         # stable rank on QUANTIZED dots, ties to the lower ordinal —
@@ -948,7 +866,7 @@ def llm_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs exact kNN are additionally pytest-asserted."""
     emb = load_table(spark, sf_dir, "embeddings")
     books = _pq_train(emb)
-    qids, Q = _knn_query_matrix(emb, _knn_memo_key(spark, sf_dir))
+    qids, Q = _knn_query_matrix(spark, sf_dir, emb)
     bc = spark.sparkContext.broadcast((books, qids, Q))
 
     out_schema = T.StructType(
@@ -992,11 +910,7 @@ def llm_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_recall_vs_exact(spark, sf_dir, topk)
 
 
-def _pq_seeded_memo_key(spark: SparkSession, sf_dir: str) -> tuple[int, str]:
-    return _emb_memo_key(spark, sf_dir, "pq_books_seeded", _PQ_M, _PQ_K)
-
-
-def _pq_seeded_books(emb: DataFrame, memo_key: tuple | None = None) -> np.ndarray:
+def _pq_seeded_books(emb: DataFrame) -> np.ndarray:
     """Seeded deterministic PQ codebooks (r14 — the llm_knn_ivf_partitioned
     flip standard applied to product quantization): the per-subspace
     codewords are the SUBVECTORS of the first ``_PQ_K`` corpus vectors in
@@ -1008,8 +922,6 @@ def _pq_seeded_books(emb: DataFrame, memo_key: tuple | None = None) -> np.ndarra
     (better reconstruction) live on in ``llm_knn_pq`` (rows-only, recall
     self-reported). Returns (m, k, d/m); O(_PQ_K) driver memory at any
     corpus size (orderBy+limit is TakeOrderedAndProject)."""
-    if memo_key is not None and memo_key in _IVF_TRAIN_CACHE:
-        return _IVF_TRAIN_CACHE[memo_key]
     rows = (
         emb.select("vec_id", "embedding")
         .orderBy(
@@ -1020,12 +932,7 @@ def _pq_seeded_books(emb: DataFrame, memo_key: tuple | None = None) -> np.ndarra
     )
     src = np.array([r["embedding"] for r in rows], dtype=np.float64)
     dsub = src.shape[1] // _PQ_M
-    books = np.stack(
-        [src[:, mi * dsub : (mi + 1) * dsub] for mi in range(_PQ_M)]
-    )
-    if memo_key is not None:
-        _IVF_TRAIN_CACHE[memo_key] = books
-    return books
+    return np.stack([src[:, mi * dsub : (mi + 1) * dsub] for mi in range(_PQ_M)])
 
 
 def _pq_seeded_encode(E: np.ndarray, books: np.ndarray) -> np.ndarray:
@@ -1141,8 +1048,10 @@ def llm_knn_pq_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored index would be the 8-byte codes either way — the kernel and
     plan shape are unchanged by the codebook choice."""
     emb = load_table(spark, sf_dir, "embeddings")
-    books = _pq_seeded_books(emb, _pq_seeded_memo_key(spark, sf_dir))
-    qids, Q = _knn_query_matrix(emb, _knn_memo_key(spark, sf_dir))
+    books = _emb_memo(
+        spark, sf_dir, "pq_books_seeded", lambda: _pq_seeded_books(emb), _PQ_M, _PQ_K
+    )
+    qids, Q = _knn_query_matrix(spark, sf_dir, emb)
     bc = spark.sparkContext.broadcast((books, qids, Q))
 
     out_schema = T.StructType(
@@ -1695,7 +1604,7 @@ def llm_knn_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``recall_at_k_vs_exact`` column is replicated in SQL (int8 top-k
     vs exact cosine top-k, both derived independently)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qids, Q = _knn_query_matrix(emb, _knn_memo_key(spark, sf_dir))
+    qids, Q = _knn_query_matrix(spark, sf_dir, emb)
     qscale = np.abs(Q).max(axis=1) / 127.0
     qscale[qscale == 0] = 1.0
     # half-up rounding (floor(x + 0.5)), NOT np.round's banker's mode:

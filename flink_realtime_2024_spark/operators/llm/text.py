@@ -11,6 +11,7 @@ package ``__init__`` so ``operators.llm.<name>`` paths are unchanged.
 from __future__ import annotations
 
 import re
+import time
 import uuid
 
 import numpy as np
@@ -785,6 +786,20 @@ def bpe_train(
         )
         .localCheckpoint(eager=True)
     )
+    # obs.get blocks until an action over the observed frame has posted
+    # the metrics, and the eager checkpoint above is that action (the
+    # post itself may land a moment after the action returns): wait
+    # boundedly, so a refactor that drops or defers the checkpoint fails
+    # loudly instead of hanging the trainer forever.
+    posted = obs._jo.future()
+    deadline = time.monotonic() + 60
+    while not posted.isCompleted():
+        if time.monotonic() > deadline:
+            raise RuntimeError(
+                "bpe_train: histogram Observation never posted; the eager "
+                "localCheckpoint must run before obs.get"
+            )
+        time.sleep(0.005)
     stats = obs.get
     pair_rows = max(int(stats["n_syms"]) - int(stats["n_words"]), 1)
     try:
@@ -869,7 +884,8 @@ def bpe_train(
                                END) AS p
                 FROM (SELECT weight,
                              split(substring(r, 2, length(r) - 2),
-                                   concat(char(31), char(30))) AS t
+                                   concat(char({ord(_BPE_TOK_CLOSE)}),
+                                          char({ord(_BPE_TOK_OPEN)}))) AS t
                       FROM {view})
               )
             ) GROUP BY a, b ORDER BY cnt DESC, a, b LIMIT {int(window)}
@@ -1157,17 +1173,18 @@ def bpe_encode_counts(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFra
     return widen(docs.select("doc_id", "text")).mapInPandas(encode, out_schema)
 
 
-# merge tables are a pure function of the corpus directory; memoize so
-# running train and encode in the same session trains once
-_BPE_MERGE_CACHE: dict[str, list[tuple[str, str]]] = {}
-
-
 def _bpe_merges_for(docs: DataFrame, sf_dir: str) -> list[tuple[str, str]]:
-    merges = _BPE_MERGE_CACHE.get(sf_dir)
-    if merges is None:
+    """The corpus-trained merge list, memoized per session on the
+    documents table's content digest: encoding repeatedly in one
+    session trains once, and a corpus rewritten in place retrains."""
+    from ...sources.io import content_digest, memo, table_path
+
+    def train() -> list[tuple[str, str]]:
         rows = bpe_train(docs).orderBy("merge_rank").collect()
-        merges = _BPE_MERGE_CACHE[sf_dir] = [(r["left"], r["right"]) for r in rows]
-    return merges
+        return [(r["left"], r["right"]) for r in rows]
+
+    key = (content_digest([table_path(sf_dir, "documents")]), _BPE_MERGES)
+    return memo(docs.sparkSession, "bpe_merges", key, train)
 
 
 @register("llm_bpe_encode", oracle=_bpe_encode_oracle(), section="L4", reverify=14)

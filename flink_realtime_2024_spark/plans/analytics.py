@@ -12,8 +12,6 @@ the MoM trend sorts only the (tiny) month dimension.
 
 from __future__ import annotations
 
-import threading
-
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -948,32 +946,26 @@ def analytics_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NOAQE_LOCK = threading.Lock()
-
-
 def _noaqe_session(spark: SparkSession) -> SparkSession:
     """Memoized ``newSession()`` clone with adaptive=false: own SQLConf,
     shared SparkContext. Iterative-checkpoint builders (pagerank) plan
     through it so their checkpoints preserve hash partitioning (under
     AQE a LogicalRDD captures UnknownPartitioning) WITHOUT toggling the
-    caller's session conf. Memoized per parent session — a fresh clone
-    per call would re-stage the hot-cache tables (keyed by session id)
-    and grow the in-memory cache unboundedly across bench reps."""
-    clone = getattr(spark, "_flink_rt_noaqe_session", None)
-    if clone is None:
-        with _NOAQE_LOCK:
-            clone = getattr(spark, "_flink_rt_noaqe_session", None)
-            if clone is None:  # re-check under the lock
-                from ..session import prepare
+    caller's session conf. One clone per parent session (``memo``) — a
+    fresh clone per call would re-stage the hot-cache tables (memoized
+    per session) and grow the in-memory cache unboundedly across bench
+    reps."""
+    from ..session import prepare
+    from ..sources.io import memo
 
-                clone = spark.newSession()
-                prepare(clone)
-                clone.conf.set("spark.sql.adaptive.enabled", "false")
-                # pin against later prepare() sweeps: any load_table on
-                # the clone (concurrent builders included) must NOT
-                # re-enable AQE mid-iteration — see session.prepare
-                clone._flink_rt_pinned_confs = (
-                    "spark.sql.adaptive.enabled",
-                )
-                spark._flink_rt_noaqe_session = clone
-    return clone
+    def clone() -> SparkSession:
+        s = spark.newSession()
+        prepare(s)
+        s.conf.set("spark.sql.adaptive.enabled", "false")
+        # pin against later prepare() sweeps: any load_table on the
+        # clone (concurrent builders included) must NOT re-enable AQE
+        # mid-iteration — see session.prepare
+        s._flink_rt_pinned_confs = ("spark.sql.adaptive.enabled",)
+        return s
+
+    return memo(spark, "noaqe_session", None, clone)

@@ -637,12 +637,13 @@ def stream_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the manifest chain for replay idempotence. The final snapshot
     carries the full latest-per-key oracle; per-batch cost is
     O(batch + overlapping files)."""
+    from ..operators._util import register_tmp_dir
     from ..sources.cdc import cdc_binlog_stream
     from ..session import prepare
     from ..streaming.jobs import run_stream
 
     prepare(spark)
-    root = tempfile.mkdtemp(prefix="lake_stream_")
+    root = register_tmp_dir(tempfile.mkdtemp(prefix="lake_stream_"))
     state: dict = {"table": None}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

@@ -257,20 +257,16 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     bucketing/`repartition` co-location technique, made durable.
     Returns the two table names.
 
-    CONTENT-ADDRESSED + SHARED (round-7, was pid-scoped): the bucket
-    dirs live at a digest of (fixture path, size, mtime, n_buckets), so
-    a later process ADOPTS an existing layout by registering external-
-    table DDL over it (CLUSTERED BY ... LOCATION) instead of rewriting
-    — bucketing is one-time physical layout work, and the warm bench
-    now pays only the catalog registration. Commit protocol: the
-    writer saves through a throwaway pid-scoped external table, drops
-    it (files survive — external), and os.rename()s the dir into the
-    content address; rename is atomic, so adopters only ever see
-    complete bucket sets, and a lost race discards the loser's copy."""
+    CONTENT-ADDRESSED + SHARED: the bucket dirs are ``stage``d layouts
+    (digest of the fixture file and n_buckets), so a later process
+    ADOPTS an existing layout by registering external-table DDL over
+    it (CLUSTERED BY ... LOCATION) instead of rewriting — bucketing is
+    one-time physical layout work, and the warm bench pays only the
+    catalog registration."""
     import os
-    import shutil
+    import uuid
 
-    from ..sources.io import _prune_stale, stage_digest, stage_lock
+    from ..sources.io import stage, stage_lock, table_path
 
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     t_orders, t_lineitem = f"b_orders_{tag}", f"b_lineitem_{tag}"
@@ -287,62 +283,41 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             spark.conf.get("spark.sql.catalogImplementation", "in-memory")
             == "in-memory"
         ), "bucketed staging assumes a per-session in-memory catalog"
-        st = os.stat(os.path.join(sf_dir, f"{src}.parquet"))
-        digest = stage_digest(
-            os.path.normpath(sf_dir), src, st.st_size, st.st_mtime_ns, _N_BUCKETS
-        )
-        dst = os.path.join(tempfile.gettempdir(), f"bucketed_{name}_{digest}")
-        # same per-destination lock discipline as io.py's hot staging:
-        # two in-process threads racing here would collide on the
-        # scratch table, the final CREATE TABLE, AND the staleness
-        # check's DROP (the loser would describe/drop a table the
-        # winner just replaced) — so the whole check-drop-build-create
-        # sequence sits under one lock; uuid keeps the scratch name
-        # unique even across lock-free callers in other sessions
+
+        def build(tmp: str, name=name, src=src, key=key) -> None:
+            # save through a throwaway external table (uuid-unique
+            # across sessions); dropping it leaves the bucket files
+            scratch = f"_stage_{name}_{uuid.uuid4().hex[:8]}"
+            (
+                load_table(spark, sf_dir, src)
+                .write.bucketBy(_N_BUCKETS, key)
+                .sortBy(key)
+                .option("path", tmp)
+                .format("parquet")
+                .saveAsTable(scratch)
+            )
+            spark.sql(f"DROP TABLE {scratch}")
+
+        dst = stage(f"bucketed_{name}", [table_path(sf_dir, src)], (_N_BUCKETS,), build)
+        # two in-process threads racing here would collide on the final
+        # CREATE TABLE and the staleness check's DROP (the loser would
+        # describe/drop a table the winner just replaced), so the
+        # check-drop-create sequence sits under the destination's lock
         with stage_lock(dst):
             if spark.catalog.tableExists(name):
                 # the catalog entry pins the digest dir it was created
-                # on; an in-place fixture regeneration mid-session
-                # would make it serve STALE bucketed data (same class
-                # as the IVF stale-index bug, session-scoped). Trust
-                # it only if its LOCATION matches the fresh digest.
+                # on; an in-place fixture regeneration mid-session would
+                # make it serve STALE bucketed data. Trust it only if
+                # its LOCATION is the fresh digest dir.
                 row = (
                     spark.sql(f"DESCRIBE FORMATTED {name}")
                     .filter("col_name = 'Location'")
                     .first()
                 )
                 loc = row["data_type"] if row else None
-                if loc and loc.rstrip("/").endswith(f"_{digest}"):
+                if loc and loc.rstrip("/").endswith(dst):
                     continue  # fresh (possibly via the thread we waited on)
                 spark.sql(f"DROP TABLE IF EXISTS {name}")  # external: files survive
-            if not os.path.isdir(dst):
-                import uuid
-
-                tmp = f"{dst}.tmp.{os.getpid()}_{uuid.uuid4().hex[:8]}"
-                scratch = f"_stage_{name}_{uuid.uuid4().hex[:8]}"
-                (
-                    load_table(spark, sf_dir, src)
-                    .write.mode("overwrite")
-                    .bucketBy(_N_BUCKETS, key)
-                    .sortBy(key)
-                    .option("path", tmp)
-                    .format("parquet")
-                    .saveAsTable(scratch)
-                )
-                spark.sql(f"DROP TABLE {scratch}")  # external: files survive
-                try:
-                    os.rename(tmp, dst)
-                    # bound /tmp: one live bucketed layout per (sf,
-                    # table); stale digests (regenerated fixtures) and
-                    # hour-old orphaned .tmp dirs from crashed writers
-                    # are reaped
-                    _prune_stale(
-                        tempfile.gettempdir(),
-                        f"bucketed_{name}_",
-                        f"bucketed_{name}_{digest}",
-                    )
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)  # lost the race
             cols = ", ".join(
                 f"{f.name} {f.dataType.simpleString()}"
                 for f in schemas.TABLES[src].fields
@@ -482,21 +457,9 @@ def warehouse_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH predicates) is pytest-asserted from the parquet footers."""
     import os
 
-    from ..operators._util import register_tmp_dir
+    from ..sources.io import stage, table_path
 
-    # pid-suffixed like the bucketed_/frag_/lake_ staging dirs: a shared
-    # path with a marker-written-after-data protocol lets concurrent
-    # first-time staging (pytest + driver) interleave overwrite writes
-    # and leave a mixed dir with duplicate part files
-    clustered = register_tmp_dir(
-        os.path.join(
-            tempfile.gettempdir(),
-            f"zorder_lineitem_{os.path.basename(os.path.normpath(sf_dir))}"
-            f"_{os.getpid()}",
-        )
-    )
-    marker = os.path.join(clustered, "_STAGED_OK")
-    if not os.path.exists(marker):
+    def build(tmp: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity"
         )
@@ -517,11 +480,13 @@ def warehouse_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartitionByRange(16, "z")
             .sortWithinPartitions("z")
             .drop("z")
-            .write.mode("overwrite")
-            .parquet(clustered)
+            .write.parquet(tmp)
         )
-        with open(marker, "w"):
-            pass
+
+    clustered = stage(
+        f"zorder_lineitem_{os.path.basename(os.path.normpath(sf_dir))}",
+        [table_path(sf_dir, "lineitem")], (), build,
+    )
     return spark.read.parquet(clustered).filter(
         F.col("l_partkey").between(100, 400) & F.col("l_suppkey").between(10, 40)
     )

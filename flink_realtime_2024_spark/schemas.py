@@ -136,23 +136,6 @@ TABLES: dict[str, T.StructType] = {
 }
 
 
-def cdc_envelope(row_schema: T.StructType) -> T.StructType:
-    """Debezium-style change envelope ``{before, after, op, ts_ms}``.
-
-    Shape of what flink-connector-mysql-cdc (realtime-common/pom.xml:33-36)
-    emits as JSON and the reference parses with fastjson
-    (realtime-common/pom.xml:23-26). ``op`` ∈ {'c','u','d','r'}.
-    """
-    return T.StructType(
-        [
-            T.StructField("before", row_schema),
-            T.StructField("after", row_schema),
-            T.StructField("op", T.StringType()),
-            T.StructField("ts_ms", T.LongType()),
-        ]
-    )
-
-
 # Multimodal payload column pattern (SURVEY §2.10 L6): opaque binary +
 # typed metadata struct. Decoders are Pandas-UDF stubs (operators/llm/).
 multimodal_asset = T.StructType(

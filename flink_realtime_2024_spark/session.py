@@ -104,10 +104,11 @@ def prepare(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Flag attribute stashed on each verified SparkSession object. An
-# id(spark)-keyed set would be wrong twice over: ids recycle after GC
-# (a new session could silently skip the probe) and the set would grow
-# without bound. An attribute dies with the session it verified.
+# Flag attribute stashed on each verified SparkSession object. A set
+# keyed on the session's Python id would be wrong twice over: ids
+# recycle after GC (a new session could silently skip the probe) and the
+# set would grow without bound. An attribute dies with the session it
+# verified (sources.io.memo keeps its entries the same way).
 _ENV_CHECKED_ATTR = "_flink_realtime_2024_env_checked"
 
 

@@ -29,12 +29,14 @@ the merge-overwrite dim store would be hash-bucketed by key range at
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..plans.registry import register
 from ..operators._util import dec
-from .io import load_table
+from .io import load_table, stage_ordered_topic, table_path
 
 # Common CTE (DuckDB) mirroring build_changelog()
 CHANGELOG_SQL = """
@@ -246,7 +248,6 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dim_upsert is the batch-loop twin; this one exercises the real
     streaming machinery: source offsets, checkpointing, batch
     boundaries chosen by the engine.)"""
-    import os
     import tempfile
 
     from ..session import prepare
@@ -281,30 +282,12 @@ def cdc_binlog_stream(spark: SparkSession, sf_dir: str):
     topic' and open a readStream over it (maxFilesPerTrigger=1 → real
     micro-batches in commit order) — the shared CDC source for every
     streaming changelog consumer."""
-    import os
-    import tempfile
-
-    staged = os.path.join(
-        tempfile.gettempdir(), f"cdc_topic_{os.path.basename(os.path.normpath(sf_dir))}"
+    staged = stage_ordered_topic(
+        f"cdc_topic_{os.path.basename(os.path.normpath(sf_dir))}",
+        [table_path(sf_dir, "orders")],
+        lambda: build_changelog(spark, sf_dir),
+        3, "ts_ms",
     )
-    marker = os.path.join(staged, "_STAGED_OK")
-    if not os.path.exists(marker):
-        log = build_changelog(spark, sf_dir)
-        log.repartitionByRange(3, "ts_ms").sortWithinPartitions("ts_ms").write.mode(
-            "overwrite"
-        ).parquet(staged)
-        import pyarrow.parquet as pq
-
-        files = [
-            os.path.join(staged, f) for f in os.listdir(staged) if f.endswith(".parquet")
-        ]
-        files.sort(key=lambda p: pq.read_table(p, columns=["ts_ms"])["ts_ms"][0].as_py())
-        base = int(os.path.getmtime(files[0]))
-        for i, p in enumerate(files):
-            os.utime(p, (base + i, base + i))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-
     schema = "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint"
     return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(staged)
 

@@ -29,7 +29,13 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
-from ..sources.io import events_ts_to_timestamp, load_table
+from ..sources.io import (
+    events_ts_to_timestamp,
+    load_table,
+    stage,
+    stage_ordered_topic,
+    table_path,
+)
 from ..session import prepare
 from ..plans.registry import register
 from ..plans.sql_api import _SQL_CUMULATE_ORACLE as _sql_api_cumulate_oracle
@@ -38,46 +44,25 @@ from ..plans.sql_api import _SQL_CUMULATE_ORACLE as _sql_api_cumulate_oracle
 def _staged_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Stage events.parquet as an n-file directory (the 'topic'):
     one file ≈ one micro-batch under maxFilesPerTrigger=1."""
-    staged = os.path.join(
-        tempfile.gettempdir(), f"events_topic_{os.path.basename(sf_dir)}_{n_files}"
+    path = table_path(sf_dir, "events")
+    return stage(
+        f"events_topic_{os.path.basename(os.path.normpath(sf_dir))}", [path], (n_files,),
+        # keep the on-disk ts type: events_stream normalizes on read
+        lambda tmp: spark.read.parquet(path).repartition(n_files).write.parquet(tmp),
     )
-    marker = os.path.join(staged, "_SUCCESS")
-    if not os.path.exists(marker):
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")  # keep on-disk ts type
-        raw.repartition(n_files).write.mode("overwrite").parquet(staged)
-    return staged
 
 
 def staged_events_dir_ordered(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Stage events as n_files consecutive event-time ranges with
-    ascending modification times — a realistic in-order topic replay
-    (FileStreamSource picks oldest files first). Required by operators
-    whose semantics depend on watermark progression (event-time timers,
-    late-row accounting)."""
-    staged = os.path.join(
-        tempfile.gettempdir(), f"events_topic_ordered_{os.path.basename(sf_dir)}_{n_files}"
+    ascending modification times — a realistic in-order topic replay.
+    Required by operators whose semantics depend on watermark
+    progression (event-time timers, late-row accounting)."""
+    path = table_path(sf_dir, "events")
+    return stage_ordered_topic(
+        f"events_topic_ordered_{os.path.basename(os.path.normpath(sf_dir))}", [path],
+        lambda: spark.read.parquet(path),  # on-disk ts type
+        n_files, "ts",
     )
-    marker = os.path.join(staged, "_STAGED_OK")
-    if not os.path.exists(marker):
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")  # on-disk ts type
-        raw.repartitionByRange(n_files, "ts").sortWithinPartitions("ts").write.mode(
-            "overwrite"
-        ).parquet(staged)
-        # one file per range; enforce mtime order == event-time order
-        import pyarrow.parquet as pq
-
-        files = [
-            os.path.join(staged, f)
-            for f in os.listdir(staged)
-            if f.endswith(".parquet")
-        ]
-        files.sort(key=lambda p: pq.read_table(p, columns=["ts"])["ts"][0].as_py())
-        base = int(os.path.getmtime(files[0]))
-        for i, p in enumerate(files):
-            os.utime(p, (base + i, base + i))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return staged
 
 
 def _staged_events_dir_keyed(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
@@ -90,33 +75,24 @@ def _staged_events_dir_keyed(spark: SparkSession, sf_dir: str, n_files: int = 4)
     carry a full DuckDB oracle instead of a rows-only check."""
     import shutil
 
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        f"events_topic_keyed_{os.path.basename(os.path.normpath(sf_dir))}_{n_files}",
-    )
-    marker = os.path.join(staged, "_STAGED_OK")
-    if not os.path.exists(marker):
-        os.makedirs(staged, exist_ok=True)
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")  # on-disk ts type
+    path = table_path(sf_dir, "events")
+
+    def build(tmp: str) -> None:
+        raw = spark.read.parquet(path)  # on-disk ts type
         base = None
         for k in range(n_files):
-            tmp = tempfile.mkdtemp(prefix="keyed_part_")
-            (
-                raw.filter(F.col("event_id") % n_files == k)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(staged, f"part-{k}.parquet")
-            shutil.move(os.path.join(tmp, src), dst)
-            shutil.rmtree(tmp, ignore_errors=True)
+            part = os.path.join(tmp, f"_part{k}")  # '_' hides it from readers
+            raw.filter(F.col("event_id") % n_files == k).coalesce(1).write.parquet(part)
+            src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
+            dst = os.path.join(tmp, f"part-{k}.parquet")
+            shutil.move(os.path.join(part, src), dst)
+            shutil.rmtree(part)
             if base is None:
                 base = int(os.path.getmtime(dst))
             os.utime(dst, (base + k, base + k))
-        with open(marker, "w"):
-            pass
-    return staged
+
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    return stage(f"events_topic_keyed_{tag}", [path], (n_files,), build)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

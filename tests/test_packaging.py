@@ -175,3 +175,25 @@ def test_pyproject_metadata_matches_package():
     # duckdb is the ORACLE dependency, not an engine dependency
     assert "duckdb" not in deps
     assert sys.version_info >= (3, 10)  # matches requires-python
+
+
+def test_no_session_id_memo_keys():
+    """Session-scoped state lives on the session object
+    (``sources.io.memo``). A key built from the session's Python id goes
+    stale silently: ids recycle once a session is garbage-collected, so
+    a rebuilt session could be served a dead one's entries."""
+    import re
+
+    pattern = re.compile(r"\bid\(spark\)")
+    paths = [os.path.join(REPO, "bench.py")]
+    for root, _, files in os.walk(os.path.join(REPO, "flink_realtime_2024_spark")):
+        paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    hits = []
+    for p in paths:
+        with open(p, encoding="utf-8") as fh:
+            hits += [
+                f"{os.path.relpath(p, REPO)}:{n}"
+                for n, line in enumerate(fh, 1)
+                if pattern.search(line)
+            ]
+    assert not hits, hits

@@ -213,8 +213,10 @@ def test_live_spark_resurrects_stopped_context():
 import sys
 sys.path.insert(0, %r)
 import bench
+from flink_realtime_2024_spark.sources import io
 s1 = bench._live_spark()
 assert s1.range(10).count() == 10
+assert io.memo(s1, "probe", 1, lambda: "built") == "built"
 # stop the context JVM-SIDE only, as SparkUncaughtExceptionHandler does
 s1.sparkContext._jsc.sc().stop()
 assert bench._context_stopped(s1)
@@ -222,7 +224,9 @@ s2 = bench._live_spark()
 assert s2 is not s1
 assert s2.range(10).count() == 10
 assert len(bench._ACTIVE["rebuilds"]) == 1
-assert bench._ACTIVE["dead"] == [s1]  # id() pinned, no recycle
+# memos live on the session object: the rebuilt one starts empty
+assert not getattr(s2, io._MEMO_ATTR, None)
+assert io.memo(s2, "probe", 1, lambda: "rebuilt") == "rebuilt"
 print("RESURRECT_OK")
 """ % (root,)
     env = dict(os.environ)

@@ -264,7 +264,7 @@ def test_compaction_preserves_data_and_reduces_files(spark, tmp_path):
     assert not os.path.exists(target + ".compact_bak")
 
 
-def test_zorder_clustering_tightens_file_stats(spark):
+def test_zorder_clustering_tightens_file_stats(spark, tmp_path):
     """Z-order evidence from the parquet footers themselves: in the
     Morton-clustered lineitem copy every file must cover a TIGHT
     sub-range of BOTH l_partkey and l_suppkey (each file ≈ a rectangle
@@ -273,7 +273,9 @@ def test_zorder_clustering_tightens_file_stats(spark):
     pruning works on either filter column. Asserted as: mean per-file
     range fraction < 0.5 on both dims for the clustered copy, and
     strictly tighter than the unclustered baseline on both dims."""
+    import glob
     import os
+    import re
     import tempfile
 
     import pyarrow.parquet as pq
@@ -282,16 +284,18 @@ def test_zorder_clustering_tightens_file_stats(spark):
     from flink_realtime_2024_spark.sources.io import load_table
 
     warehouse_zorder_scan(spark, SF_DIR)  # stages the clustered dir
-    clustered = os.path.join(
-        tempfile.gettempdir(),
-        f"zorder_lineitem_{os.path.basename(os.path.normpath(SF_DIR))}"
-        f"_{os.getpid()}",
-    )
-    baseline = clustered + "_unclustered"
-    if not os.path.exists(os.path.join(baseline, "_SUCCESS")):
-        load_table(spark, SF_DIR, "lineitem").select(
-            "l_partkey", "l_suppkey"
-        ).repartition(16).write.mode("overwrite").parquet(baseline)
+    # the staged layout: zorder_lineitem_<sf>_<digest>
+    tag = os.path.basename(os.path.normpath(SF_DIR))
+    name = re.compile(re.escape(f"zorder_lineitem_{tag}_") + "[0-9a-f]{16}")
+    (clustered,) = [
+        d
+        for d in glob.glob(os.path.join(tempfile.gettempdir(), f"zorder_lineitem_{tag}_*"))
+        if name.fullmatch(os.path.basename(d))
+    ]
+    baseline = str(tmp_path / "unclustered")
+    load_table(spark, SF_DIR, "lineitem").select(
+        "l_partkey", "l_suppkey"
+    ).repartition(16).write.parquet(baseline)
 
     def mean_range_fraction(path, col):
         spans, lo_g, hi_g = [], None, None
@@ -1000,7 +1004,7 @@ def test_hot_stage_prune_is_sf_scoped(spark):
         assert spark.read.parquet(a[0]).count() == 25
         # re-staging the same SF is a no-op reuse, not a rewrite
         m0 = os.path.getmtime(a[0])
-        sio._HOT.clear()  # force the staged-copy path again
+        sio.drop_all_caches(spark)  # force the staged-copy path again
         sio.load_table(spark, "/root/testdata/sf0.001", "nation")
         assert os.path.getmtime(a[0]) == m0
     finally:

@@ -316,39 +316,205 @@ def test_knn_ivf_partitioned_matches_and_prunes(spark):
     assert m and "centroid_id" in m.group(1), plan
 
 
-def test_knn_ivf_index_rebuilds_on_fixture_change(spark, tmp_path):
-    """The parquet IVF index is content-addressed (r8): regenerating the
-    fixture IN PLACE (same path, new bytes/mtime) must miss the cached
-    index and rebuild — the stale-index path the r7 verdict flagged —
-    and the stale digest dir must be pruned, keeping one live index per
-    fixture dir."""
+def _rewrite_fixture(path, transform):
+    """Regenerate one fixture file IN PLACE: same path, different rows.
+    Returns the new table."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    table = transform(pq.read_table(path))
+    os.chmod(path, 0o644)  # the copied fixtures are read-only
+    pq.write_table(table, path)
+    return table
+
+
+@pytest.mark.parametrize(
+    "case", ["cdc_topic", "events_topic_ordered", "hot_copy", "bpe_merges", "ivf_index"]
+)
+def test_derived_state_rebuilds_on_fixture_change(spark, tmp_path, case):
+    """Staged layouts (``sources.io.stage``) and session memos
+    (``sources.io.memo``) are keyed on input CONTENT, not on the path:
+    rewriting one fixture file in place must, in the SAME session, give
+    a result derived from the new rows — never a replay of the stale
+    stream topic, hot copy or merge table. The IVF case pins that an
+    mtime-only change already misses, and that the stale index dir is
+    pruned, keeping one live index per fixture dir."""
     import glob
     import os
     import shutil
     import tempfile
 
-    from flink_realtime_2024_spark.operators.llm import llm_knn_ivf_partitioned
+    import pyarrow as pa
 
-    fixture = tmp_path / "sfcopy"
+    fixture = tmp_path / "sfregen"
     shutil.copytree(SF_DIR, fixture)
-    tag = os.path.basename(str(fixture))
-    pattern = os.path.join(tempfile.gettempdir(), f"ivf_index_{tag}_*")
+    sf = str(fixture)
 
-    llm_knn_ivf_partitioned(spark, str(fixture)).collect()
-    first = glob.glob(pattern)
-    assert len(first) == 1, first
+    def halve(t):
+        return t.slice(0, t.num_rows // 2)
 
-    # "regenerate" the fixture: same path, new mtime (the digest also
-    # covers size, but mtime alone must already miss the cache)
-    emb_path = fixture / "embeddings.parquet"
-    st = emb_path.stat()
-    os.utime(emb_path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    if case == "cdc_topic":
+        from flink_realtime_2024_spark.plans.lakehouse import stream_lake_merge
+        from flink_realtime_2024_spark.sources.cdc import cdc_latest_row
 
-    llm_knn_ivf_partitioned(spark, str(fixture)).collect()
-    second = glob.glob(pattern)
-    assert len(second) == 1, second
-    assert second[0] != first[0], "stale index reused after fixture change"
-    assert not os.path.isdir(first[0]), "stale index dir not pruned"
+        cols = ("key", "op", "totalprice", "orderstatus", "ts_ms")
+        before = _collect_set(stream_lake_merge(spark, sf), *cols)
+        _rewrite_fixture(fixture / "orders.parquet", halve)
+        after = _collect_set(stream_lake_merge(spark, sf), *cols)
+        assert after == _collect_set(cdc_latest_row(spark, sf), *cols)
+        assert after != before
+
+    elif case == "events_topic_ordered":
+        from flink_realtime_2024_spark.streaming.jobs import staged_events_dir_ordered
+
+        def staged_ids():
+            staged = staged_events_dir_ordered(spark, sf)
+            return sorted(r["event_id"] for r in spark.read.parquet(staged).collect())
+
+        assert len(staged_ids()) > 0
+        new = _rewrite_fixture(fixture / "events.parquet", halve)
+        assert staged_ids() == sorted(new["event_id"].to_pylist())
+
+    elif case == "hot_copy":
+        from flink_realtime_2024_spark.sources import io as sio
+
+        sio.enable_hot_cache(True)
+        try:
+            old = sio.load_table(spark, sf, "orders")
+            assert old.count() > 0
+            new = _rewrite_fixture(fixture / "orders.parquet", halve)
+            fresh = sio.load_table(spark, sf, "orders")
+            got = sorted(r["o_orderkey"] for r in fresh.select("o_orderkey").collect())
+            assert got == sorted(new["o_orderkey"].to_pylist())
+            old.unpersist()
+            fresh.unpersist()
+        finally:
+            sio.enable_hot_cache(False)
+
+    elif case == "bpe_merges":
+        from flink_realtime_2024_spark.operators.llm.text import (
+            bpe_encode_counts,
+            bpe_train,
+            llm_bpe_encode,
+        )
+        from flink_realtime_2024_spark.sources.io import load_table
+
+        def encoded(df):
+            return sorted(tuple(r) for r in df.collect())
+
+        encoded(llm_bpe_encode(spark, sf))  # memoizes the original merges
+
+        def rare_words(t):
+            t = t.slice(0, 40)
+            text = pa.array(["zqj zqjx zqjxk qjxz zqj zqjx"] * t.num_rows)
+            return t.set_column(t.schema.get_field_index("text"), "text", text)
+
+        _rewrite_fixture(fixture / "documents.parquet", rare_words)
+        docs = load_table(spark, sf, "documents")
+        rows = bpe_train(docs).orderBy("merge_rank").collect()
+        merges = [(r["left"], r["right"]) for r in rows]
+        assert encoded(llm_bpe_encode(spark, sf)) == encoded(bpe_encode_counts(docs, merges))
+
+    else:
+        from flink_realtime_2024_spark.operators.llm import llm_knn_ivf_partitioned
+
+        own = re.compile(re.escape(f"ivf_index_{fixture.name}_") + "[0-9a-f]{16}")
+
+        def index_dirs():
+            pattern = os.path.join(tempfile.gettempdir(), f"ivf_index_{fixture.name}_*")
+            return [d for d in glob.glob(pattern) if own.fullmatch(os.path.basename(d))]
+
+        llm_knn_ivf_partitioned(spark, sf).collect()
+        first = index_dirs()
+        assert len(first) == 1, first
+
+        # "regenerate" the fixture: same path, new mtime (the digest also
+        # covers size, but mtime alone must already miss the cache)
+        emb_path = fixture / "embeddings.parquet"
+        st = emb_path.stat()
+        os.utime(emb_path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+
+        llm_knn_ivf_partitioned(spark, sf).collect()
+        second = index_dirs()
+        assert len(second) == 1, second
+        assert second[0] != first[0], "stale index reused after fixture change"
+        assert not os.path.isdir(first[0]), "stale index dir not pruned"
+
+
+def test_stage_and_memo_build_once_under_contention(tmp_path, monkeypatch):
+    """More threads than cores race on one memo key and one stage
+    destination: each build runs exactly once and every caller gets the
+    one published result. A build that raises publishes nothing, leaves
+    no tmp dir behind, and the next caller builds again."""
+    import os
+    import sys
+    import tempfile
+    import threading
+    import time
+    import types
+    from concurrent.futures import ThreadPoolExecutor
+
+    from flink_realtime_2024_spark.sources import io as sio
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    src = tmp_path / "input.txt"
+    src.write_text("rows")
+    owner = types.SimpleNamespace()
+    builds = {"memo": 0, "stage": 0}
+    guard = threading.Lock()
+
+    def count(kind):
+        with guard:
+            builds[kind] += 1
+
+    def build_memo():
+        count("memo")
+        time.sleep(0.02)
+        return object()
+
+    def build_dir(tmp):
+        count("stage")
+        os.makedirs(tmp)
+        time.sleep(0.02)
+        with open(os.path.join(tmp, "part"), "w") as fh:
+            fh.write("ok")
+
+    def race(_):
+        return (
+            sio.memo(owner, "k", 1, build_memo),
+            sio.stage("layout", [str(src)], (), build_dir),
+        )
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            results = list(pool.map(race, range(64), timeout=60))
+    finally:
+        sys.setswitchinterval(old)
+    assert builds == {"memo": 1, "stage": 1}
+    assert len({id(value) for value, _ in results}) == 1
+    (published,) = {path for _, path in results}
+    assert os.path.isfile(os.path.join(published, "part"))
+
+    def failing_dir(tmp):
+        os.makedirs(tmp)
+        raise RuntimeError("build failed")
+
+    src.write_text("new rows")  # new content: a new destination
+    with pytest.raises(RuntimeError):
+        sio.stage("layout", [str(src)], (), failing_dir)
+    assert [d for d in os.listdir(tmp_path) if d.startswith("layout_")] == [
+        os.path.basename(published)
+    ]
+
+    def failing_memo():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        sio.memo(owner, "k", 2, failing_memo)
+    assert sio.memo(owner, "k", 2, lambda: "retried") == "retried"
 
 
 def _explain(df) -> str:
@@ -2816,7 +2982,7 @@ def test_noaqe_clone_checkpoints_preserve_partitioning(spark):
     assert "Exchange" not in plan, plan
 
     analytics_pagerank(spark, SF_DIR)
-    clone = spark._flink_rt_noaqe_session
+    clone = _noaqe_session(spark)
     assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
@@ -2830,12 +2996,13 @@ def test_recursive_twin_levels_are_exchange_free(spark):
     _noaqe_session checkpoints must yield a 5-level plan with ZERO
     exchanges (broadcast disabled so toy-scale stats can't hide a
     shuffle behind a BHJ)."""
+    from flink_realtime_2024_spark.plans.analytics import _noaqe_session
     from flink_realtime_2024_spark.plans.sql_api import (
         sql_recursive_cte_iterative,
     )
 
     sql_recursive_cte_iterative(spark, SF_DIR)  # memoizes the clone
-    s = spark._flink_rt_noaqe_session
+    s = _noaqe_session(spark)
     prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
     try:
         s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
