@@ -92,7 +92,10 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array_distinct on the generated gram array replaces the old
     # `.distinct()` — which was a full exchange of every (doc_id, gram)
     # pair, the largest intermediate in the query — with zero shuffles;
-    # the distinct (doc_id, gram) set is identical by construction.
+    # the distinct (doc_id, gram) set is identical by construction —
+    # given the invariant this relies on: doc_id is unique in documents
+    # (tests/test_semantics.py::test_documents_doc_id_unique); duplicate
+    # ids would inflate n_overlap relative to the oracle.
     exploded = docs.select(
         "doc_id", F.explode(F.array_distinct(_token_ngrams())).alias("gram")
     )

@@ -14,18 +14,12 @@ import re
 import time
 import uuid
 
-import numpy as np
-import pandas as pd
-
 import pyspark.sql.functions as F
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import types as T
 
 from ...sources.io import load_table
 from ...plans.registry import register
-from .._util import distributed_row_number, widen
-
 
 
 # =============================================================================
@@ -498,8 +492,9 @@ def _bpe_word_histogram(docs: DataFrame) -> DataFrame:
 
 def _bpe_merge_pair(s: list[str], a: str, b: str) -> list[str]:
     """Left-to-right non-overlapping replacement of adjacent (a, b)
-    with their concatenation — the one subtle BPE rewrite rule, shared
-    by the trainer and the encoder so they can never desynchronize."""
+    with their concatenation — the one subtle BPE rewrite rule, kept as
+    the plain-Python reference that the native ``_bpe_apply`` chain
+    (shared by the trainer and the encoder) is pytest-asserted against."""
     merged = a + b
     res: list[str] = []
     i = 0
@@ -513,121 +508,78 @@ def _bpe_merge_pair(s: list[str], a: str, b: str) -> list[str]:
     return res
 
 
-def _bpe_pairs_expr(col: str = "syms"):
-    """JVM-side adjacent-pair enumeration over a symbol array column —
-    array<struct<a,b>> of (s[i], s[i+1]), empty for 1-symbol words."""
-    pair_t = "array<struct<a:string,b:string>>"
-    return F.when(
-        F.size(col) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(col) - 1),
-            lambda i: F.struct(
-                F.element_at(col, i).alias("a"),
-                F.element_at(col, i + F.lit(1)).alias("b"),
-            ),
-        ),
-    ).otherwise(F.expr(f"CAST(array() AS {pair_t})"))
-
-
-def _bpe_merge_expr(col, a: str, b: str):
-    """JVM expression equivalent of ``_bpe_merge_pair(s, a, b)`` — a
-    left fold over the symbol array that merges adjacent (a, b) into
-    a+b, left-to-right non-overlapping. Exactness of the fold (no
-    "just merged" flag needed): the match condition is last(acc) == a
-    AND current == b, and a freshly merged element can never spuriously
-    re-match as the NEXT match's left symbol because that would require
-    a+b == a, impossible for non-empty b — so the fold resumes after
-    each merge exactly like the reference's i += 2
-    (property-pytested: test_bpe_merge_pair_reference +
-    test_bpe_train_fuzzed_vs_reference). Unlike a delimited-string
-    REPLACE encoding (the oracle's trick), this is correct for
-    arbitrary token alphabets — no control-char precondition."""
-    merged = a + b
-    return F.when(F.size(col) < 2, col).otherwise(
-        F.aggregate(
-            F.slice(col, 2, F.size(col) - F.lit(1)),
-            F.slice(col, 1, 1),
-            lambda acc, x: F.when(
-                (F.element_at(acc, -1) == F.lit(a)) & (x == F.lit(b)),
-                F.concat(
-                    F.slice(acc, F.lit(1), F.size(acc) - F.lit(1)),
-                    F.array(F.lit(merged)),
-                ),
-            ).otherwise(F.concat(acc, F.array(x))),
-        )
-    )
-
-
-# paired open/close token delimiters for the REPLACE-encoded rewrite —
-# the same encoding (and the same two code points) the committed DuckDB
-# training oracle uses (_bpe_cte_chain below documents why SINGLE
-# delimiters would be wrong)
+# Paired open/close token delimiters: a word's symbol sequence lives as
+# ONE string, every token wrapped open·tok·close — the same encoding and
+# the same two code points the committed DuckDB training oracle uses
+# (_bpe_cte_chain below documents why SINGLE delimiters would be wrong).
 _BPE_TOK_OPEN = "\x1e"
 _BPE_TOK_CLOSE = "\x1f"
-# Both the fast-path F.split in _bpe_rewrite_expr and the string-loop
-# candidates SQL treat _BPE_TOK_CLOSE + _BPE_TOK_OPEN as a Java REGEX
-# pattern (ADVICE r14 #3): pin the delimiters as regex-metachar-free so
-# a future change to either code point fails loudly here instead of
+# The candidates SQL treats _BPE_TOK_CLOSE + _BPE_TOK_OPEN as a Java REGEX
+# split pattern (ADVICE r14 #3): pin the delimiters as regex-metachar-free
+# so a future change to either code point fails loudly here instead of
 # silently corrupting the rewrite.
 assert re.escape(_BPE_TOK_CLOSE + _BPE_TOK_OPEN) == _BPE_TOK_CLOSE + _BPE_TOK_OPEN, (
     "BPE token delimiters must stay regex-safe: they are used verbatim "
     "as split() patterns"
 )
+# Token text is escaped per character: every code point below ' ' becomes
+# _BPE_ESC + chr(c + 32). The escaped text never holds a delimiter, and the
+# escape is a homomorphism (esc(a + b) == esc(a) + esc(b)), prefix-free and
+# order-preserving, so replace literals, the a+b occupancy test and the
+# (cnt DESC, a, b) tie-break all behave as on the raw text — on which it is
+# the identity whenever no control character occurs.
+_BPE_ESC = "\x1d"
+_BPE_ESC_TABLE = {c: _BPE_ESC + chr(c + 32) for c in range(32)}
+# _bpe_render's Spark form: the marker itself is escaped first, then every
+# other control char that can occur inside a word (all but the Java \s
+# separators \t \n \v \f \r) is marked and shifted by 32.
+_BPE_WORD_CTRL = [c for c in range(32) if c not in (9, 10, 11, 12, 13, ord(_BPE_ESC))]
+_BPE_ESC_RE = "[" + "".join(f"\\x{c:02x}" for c in _BPE_WORD_CTRL) + "]"
+_BPE_ESC_SHIFT = (
+    "".join(chr(c) for c in _BPE_WORD_CTRL),
+    "".join(chr(c + 32) for c in _BPE_WORD_CTRL),
+)
 
 
-def _bpe_rewrite_expr(col, batch: list[tuple[str, str]]):
-    """JVM rewrite of a whole merge batch IN RANK ORDER over a symbol
-    array column — the kernel ``bpe_train``'s loop runs (r14 opt,
-    replacing the per-round pandas_udf: no Python boundary, no
-    touched/untouched double scan).
+def _bpe_tok(t: str) -> str:
+    """One token as it appears in a rendered word: escaped and wrapped."""
+    return _BPE_TOK_OPEN + t.translate(_BPE_ESC_TABLE) + _BPE_TOK_CLOSE
 
-    Fast path (everything in practice): render the array as one string
-    with every token wrapped in the chr(30)/chr(31) open/close pair and
-    apply each merge as one native ``replace`` of open·a·close·open·b·
-    close with open·ab·close — string replace scans left to right and
-    resumes AFTER each replacement, which with PAIRED delimiters is
-    exactly the non-overlapping BPE rewrite (the committed DuckDB
-    training oracle uses this identical encoding; its comment block
-    carries the [a,a,a,a] → [aa,aa] argument). Then split back.
 
-    Correctness is UNCONDITIONAL, unlike the oracle's corpus-level
-    absence assumption: a row whose symbols contain either control
-    character (possible only for adversarial non-text corpora — never
-    the fixture corpus) is detected per row and routed to the
-    ``_bpe_merge_expr`` fold, which needs no delimiters at all. The
-    check is one linear pass; the fold branch costs O(len²) interpreted
-    steps but executes only on such rows."""
-    safe = col
-    for a, b in batch:
-        safe = _bpe_merge_expr(safe, a, b)
-    rendered = F.array_join(
-        F.transform(
-            col,
-            lambda t: F.concat(F.lit(_BPE_TOK_OPEN), t, F.lit(_BPE_TOK_CLOSE)),
-        ),
-        "",
+def _bpe_unesc(t: str) -> str:
+    """Inverse of the token escape, for tokens read back from Spark."""
+    return re.sub(_BPE_ESC + "(.)", lambda m: chr(ord(m[1]) - 32), t, flags=re.S)
+
+
+def _bpe_render(text) -> F.Column:
+    """Render every word of a string column (maximal runs of non-Java-
+    ``\\s`` chars, the trainer's tokenizer) as its initial symbol
+    string: chars + ``</w>``, each token as ``_bpe_tok`` renders it; the
+    whitespace between words stays, so no ``_bpe_apply`` literal (whose
+    tokens abut) can match across words. The same render serves one
+    histogram word and a whole document, all in native string ops."""
+    esc = F.replace(text, F.lit(_BPE_ESC), F.lit(_BPE_ESC + "="))
+    esc = F.regexp_replace(esc, _BPE_ESC_RE, _BPE_ESC + "$0")
+    esc = F.translate(esc, *_BPE_ESC_SHIFT)
+    # a unit is one escape pair or one other non-space char; every word's
+    # last unit (a close followed by a separator or the end) gains </w>
+    units = F.regexp_replace(
+        esc, _BPE_ESC + r".|\S", _BPE_TOK_OPEN + "$0" + _BPE_TOK_CLOSE
     )
-    for a, b in batch:
-        rendered = F.replace(
-            rendered,
-            F.lit(
-                _BPE_TOK_OPEN + a + _BPE_TOK_CLOSE + _BPE_TOK_OPEN + b + _BPE_TOK_CLOSE
-            ),
-            F.lit(_BPE_TOK_OPEN + a + b + _BPE_TOK_CLOSE),
-        )
-    has_ctrl = F.exists(
-        col,
-        lambda t: t.contains(F.lit(_BPE_TOK_OPEN))
-        | t.contains(F.lit(_BPE_TOK_CLOSE)),
+    return F.regexp_replace(
+        units, _BPE_TOK_CLOSE + r"(?=\s|\z)", _BPE_TOK_CLOSE + _bpe_tok(_BPE_EOW)
     )
-    return F.when(F.size(col) < 2, col).otherwise(
-        F.when(has_ctrl, safe).otherwise(
-            F.split(
-                rendered.substr(F.lit(2), F.length(rendered) - 2),
-                _BPE_TOK_CLOSE + _BPE_TOK_OPEN,
-            )
-        )
-    )
+
+
+def _bpe_apply(r, merges) -> F.Column:
+    """Apply ``merges`` (raw (a, b) pairs) in rank order to a rendered
+    column: each is one native ``replace`` of tok(a)·tok(b) with tok(ab).
+    ``replace`` scans left to right and resumes AFTER each replacement,
+    which with PAIRED delimiters is exactly ``_bpe_merge_pair``'s
+    non-overlapping rewrite ([a,a,a,a] → [aa,aa])."""
+    for a, b in merges:
+        r = F.replace(r, F.lit(_bpe_tok(a) + _bpe_tok(b)), F.lit(_bpe_tok(a + b)))
+    return r
 
 
 def _bpe_select_batch(
@@ -715,16 +667,18 @@ def bpe_train(
     2016, the GPT-2/RoBERTa tokenizer-training algorithm), Spark-shaped:
 
     1. one corpus pass builds the (word, count) histogram;
-    2. words become symbol arrays (chars + ``</w>``);
+    2. each distinct word becomes ONE delimited string (``_bpe_render``:
+       chars + ``</w>``, each token escaped and wrapped in the
+       open/close delimiters — the committed DuckDB oracle's encoding);
     3. each round, adjacent-pair counts aggregate distributed
        (weighted by word count), a bounded candidate window — at most
        ``_BPE_CAND_WINDOW`` small rows — comes to the driver, a batch
        of up to ``merges_per_round`` provably-non-interacting merges
        is selected (see ``_bpe_select_batch`` for the exactness
-       argument), and ONE rewrite pass applies them in rank order as
-       chained whole-stage-codegen fold expressions
-       (``_bpe_merge_expr`` — no Python boundary anywhere in the
-       loop).
+       argument), and ONE rewrite pass applies them in rank order as a
+       chain of native ``replace`` calls (``_bpe_apply`` — no Python
+       boundary anywhere in the loop). The escape makes this total:
+       any corpus, control characters included, takes the same path.
 
     ``localCheckpoint`` per round keeps the iterative lineage flat
     (same discipline as ``connected_components``). Ties break
@@ -769,21 +723,9 @@ def bpe_train(
     from pyspark.sql import Observation
 
     obs = Observation()
-    has_ctrl = F.exists(
-        "syms",
-        lambda t: t.contains(F.lit(_BPE_TOK_OPEN)) | t.contains(F.lit(_BPE_TOK_CLOSE)),
-    )
-    sym = (
-        hist.select(
-            "weight",
-            F.concat(F.split("word", ""), F.array(F.lit(_BPE_EOW))).alias("syms"),
-        )
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n_words"),
-            F.coalesce(F.sum(F.size("syms")), F.lit(0)).alias("n_syms"),
-            F.coalesce(F.sum(has_ctrl.cast("long")), F.lit(0)).alias("n_ctrl"),
-        )
+    symr = (
+        hist.observe(obs, F.coalesce(F.sum(F.length("word")), F.lit(0)).alias("n_pairs"))
+        .select("weight", _bpe_render("word").alias("r"))
         .localCheckpoint(eager=True)
     )
     # obs.get blocks until an action over the observed frame has posted
@@ -800,8 +742,8 @@ def bpe_train(
                 "localCheckpoint must run before obs.get"
             )
         time.sleep(0.005)
-    stats = obs.get
-    pair_rows = max(int(stats["n_syms"]) - int(stats["n_words"]), 1)
+    # a word of n chars has n + 1 symbols, hence n adjacent pairs
+    pair_rows = max(int(obs.get["n_pairs"]), 1)
     try:
         session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
@@ -815,147 +757,73 @@ def bpe_train(
     # let the planner do partial agg + exchange at the session width.
     narrow_loop = width < session_width
     if narrow_loop:
-        sym = sym.coalesce(width)
+        symr = symr.coalesce(width)
 
-    # Representation choice for the loop (r15 opt, guide §1.2 "per-task
-    # work" + driver latency): with ZERO control-char rows (n_ctrl — a
-    # property of the ORIGINAL words: a merge of two clean tokens can
-    # never introduce chr(30)/chr(31), so it is loop-invariant), the
-    # histogram lives across rounds in the SAME delimited-string
-    # encoding the committed training oracle uses — each round's
-    # rewrite is then a bare chain of native ``replace`` calls (the
-    # oracle's own rewrite, equivalence argument in the _bpe_cte_chain
-    # comment block) instead of a render→replace→split round trip with
-    # a per-row fold fallback. That cuts both the per-row executor work
-    # and — the measured bottleneck at test scale — the ~0.2 s/round of
-    # driver-side py4j expression construction (the fold builder emits
-    # hundreds of gateway calls per round; the replace chain emits a
-    # handful). An adversarial corpus with control-char tokens routes
-    # to the unchanged array+fold loop below: correctness stays
-    # UNCONDITIONAL, only the fast path narrows.
+    # The histogram lives across rounds in the delimited-string encoding
+    # (r15 opt, guide §1.2 "per-task work" + driver latency): each
+    # round's rewrite is a bare chain of native ``replace`` calls, which
+    # cuts both the per-row executor work and — the measured bottleneck
+    # at test scale — the driver-side py4j expression construction (a
+    # handful of gateway calls per round).
     merges: list[tuple[int, str, str, str, int]] = []
     window = _BPE_CAND_WINDOW if merges_per_round > 1 else 1
-    if int(stats["n_ctrl"]) == 0:
-        symr = sym.select(
-            "weight",
-            F.array_join(
-                F.transform(
-                    "syms",
-                    lambda t: F.concat(
-                        F.lit(_BPE_TOK_OPEN), t, F.lit(_BPE_TOK_CLOSE)
-                    ),
-                ),
-                "",
-            ).alias("r"),
-        ).localCheckpoint(eager=False)
-        # candidates as ONE static SQL string over a loop-local temp
-        # view: tokens never appear in the SQL text (no escaping
-        # hazard), and the per-round driver cost is two gateway calls
-        # (replace view + parse) instead of rebuilding the expression
-        # tree. _BPE_TOK_CLOSE+_BPE_TOK_OPEN as a split pattern is
-        # regex-safe — pinned by the module-level assert next to the
-        # constants.
-        view = f"bpe_sym_loop_{uuid.uuid4().hex}"
-        # the REPARTITION hint rides the INNER block so the outer
-        # groupBy's clustering requirement is satisfied by the hint's
-        # exchange (hashpartitioning(a,b,width) satisfies
-        # ClusteredDistribution(a,b) at any width) — one exchange at the
-        # derived width, exactly the DataFrame repartition-then-groupBy
-        # idiom. At width == 1 the coalesced single-partition input
-        # already satisfies ANY clustering requirement, so the round
-        # plan runs with ZERO exchanges — no hint at all (captured in
-        # plans/r15/llm_bpe_train_after.txt). On the plain-groupBy
-        # branch the planner keeps partial agg + session-width exchange
-        # (ADVICE r14 #1).
-        hint = (
-            f"/*+ REPARTITION({width}, a, b) */ "
-            if narrow_loop and width > 1
-            else ""
-        )
-        cands_sql = f"""
-            SELECT a, b, sum(weight) AS cnt FROM (
-              SELECT {hint}weight, p.a AS a, p.b AS b FROM (
-                SELECT weight,
-                       explode(CASE WHEN size(t) >= 2
-                               THEN transform(sequence(1, size(t) - 1),
-                                    i -> struct(element_at(t, i) AS a,
-                                                element_at(t, i + 1) AS b))
-                               ELSE CAST(array() AS array<struct<a:string,b:string>>)
-                               END) AS p
-                FROM (SELECT weight,
-                             split(substring(r, 2, length(r) - 2),
-                                   concat(char({ord(_BPE_TOK_CLOSE)}),
-                                          char({ord(_BPE_TOK_OPEN)}))) AS t
-                      FROM {view})
-              )
-            ) GROUP BY a, b ORDER BY cnt DESC, a, b LIMIT {int(window)}
-        """
-        try:
-            while len(merges) < n_merges:
-                symr.createOrReplaceTempView(view)
-                cands = spark.sql(cands_sql).collect()
-                if not cands or cands[0]["cnt"] < 2:
-                    break  # nothing left worth merging
-                batch = _bpe_select_batch(
-                    cands, window, min(merges_per_round, n_merges - len(merges))
-                )
-                for c in batch:
-                    merges.append(
-                        (len(merges), c["a"], c["b"], c["a"] + c["b"], int(c["cnt"]))
-                    )
-                r = F.col("r")
-                for c in batch:
-                    a, b = c["a"], c["b"]
-                    r = F.replace(
-                        r,
-                        F.lit(
-                            _BPE_TOK_OPEN + a + _BPE_TOK_CLOSE
-                            + _BPE_TOK_OPEN + b + _BPE_TOK_CLOSE
-                        ),
-                        F.lit(_BPE_TOK_OPEN + a + b + _BPE_TOK_CLOSE),
-                    )
-                symr = symr.select("weight", r.alias("r")).localCheckpoint(
-                    eager=False
-                )
-        finally:
-            try:
-                spark.catalog.dropTempView(view)
-            except Exception:
-                pass
-    else:
+    # candidates as ONE static SQL string over a loop-local temp view:
+    # tokens never appear in the SQL text (no escaping hazard), and the
+    # per-round driver cost is two gateway calls (replace view + parse)
+    # instead of rebuilding the expression tree. The collected a/b are
+    # still escaped — ``_bpe_select_batch`` compares them as they are
+    # (the escape is injective and a homomorphism), and they are
+    # unescaped only when a merge is recorded.
+    view = f"bpe_sym_loop_{uuid.uuid4().hex}"
+    # the REPARTITION hint rides the INNER block so the outer groupBy's
+    # clustering requirement is satisfied by the hint's exchange
+    # (hashpartitioning(a,b,width) satisfies ClusteredDistribution(a,b)
+    # at any width) — one exchange at the derived width, exactly the
+    # DataFrame repartition-then-groupBy idiom. At width == 1 the
+    # coalesced single-partition input already satisfies ANY clustering
+    # requirement, so the round plan runs with ZERO exchanges — no hint
+    # at all (captured in plans/r15/llm_bpe_train_after.txt). On the
+    # plain-groupBy branch the planner keeps partial agg + session-width
+    # exchange (ADVICE r14 #1).
+    hint = f"/*+ REPARTITION({width}, a, b) */ " if narrow_loop and width > 1 else ""
+    cands_sql = f"""
+        SELECT a, b, sum(weight) AS cnt FROM (
+          SELECT {hint}weight, p.a AS a, p.b AS b FROM (
+            SELECT weight,
+                   explode(CASE WHEN size(t) >= 2
+                           THEN transform(sequence(1, size(t) - 1),
+                                i -> struct(element_at(t, i) AS a,
+                                            element_at(t, i + 1) AS b))
+                           ELSE CAST(array() AS array<struct<a:string,b:string>>)
+                           END) AS p
+            FROM (SELECT weight,
+                         split(substring(r, 2, length(r) - 2),
+                               concat(char({ord(_BPE_TOK_CLOSE)}),
+                                      char({ord(_BPE_TOK_OPEN)}))) AS t
+                  FROM {view})
+          )
+        ) GROUP BY a, b ORDER BY cnt DESC, a, b LIMIT {int(window)}
+    """
+    try:
         while len(merges) < n_merges:
-            pair_stream = sym.select(
-                "weight", F.explode(_bpe_pairs_expr()).alias("p")
-            ).select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), "weight")
-            if narrow_loop:
-                # exchange on the exact group keys at the derived width —
-                # the classic planner reuses it for the aggregate below
-                pair_stream = pair_stream.repartition(width, "a", "b")
-            cands = (
-                pair_stream.groupBy("a", "b")
-                .agg(F.sum("weight").alias("cnt"))
-                .orderBy(F.col("cnt").desc(), "a", "b")
-                .limit(window)
-                .collect()
-            )
+            symr.createOrReplaceTempView(view)
+            cands = spark.sql(cands_sql).collect()
             if not cands or cands[0]["cnt"] < 2:
                 break  # nothing left worth merging
             batch = _bpe_select_batch(
                 cands, window, min(merges_per_round, n_merges - len(merges))
             )
-            for c in batch:
-                merges.append(
-                    (len(merges), c["a"], c["b"], c["a"] + c["b"], int(c["cnt"]))
-                )
-            # One narrow JVM projection rewrites every row (r14 opt): the
-            # REPLACE-encoded batch rewrite runs native in rank order — no
-            # Python boundary, no touched/untouched filter+union double scan
-            # (replace is the identity on rows without the adjacency), no
-            # partition-count drift to coalesce.
-            pairs = [(c["a"], c["b"]) for c in batch]
-            sym = sym.select(
-                "weight", _bpe_rewrite_expr(F.col("syms"), pairs).alias("syms")
+            pairs = [(_bpe_unesc(c["a"]), _bpe_unesc(c["b"])) for c in batch]
+            for (a, b), c in zip(pairs, batch):
+                merges.append((len(merges), a, b, a + b, int(c["cnt"])))
+            symr = symr.select(
+                "weight", _bpe_apply(F.col("r"), pairs).alias("r")
             ).localCheckpoint(eager=False)
+    finally:
+        try:
+            spark.catalog.dropTempView(view)
+        except Exception:
+            pass
 
     schema = T.StructType(
         [
@@ -974,30 +842,32 @@ def bpe_train(
 # _BPE_MERGES is a fixed small constant, so the loop unrolls into 8
 # chained CTE rounds. Two representation tricks make each round pure SQL:
 #   1. a word's symbol sequence is one STRING with every token wrapped in
-#      a distinct open/close control-char pair, chr(30)||tok||chr(31) —
-#      both verified absent from the corpus (a violation would surface as
-#      a loud oracle mismatch, never a silent wrong answer);
+#      the _BPE_TOK_OPEN/_BPE_TOK_CLOSE control-char pair — unlike the Spark
+#      trainer, the oracle does not escape token text, so it assumes both
+#      code points absent from the corpus (a violation would surface as a
+#      loud oracle mismatch, never a silent wrong answer);
 #   2. BPE's leftmost-non-overlapping merge rewrite is then EXACTLY one
-#      string REPLACE of chr(30)·a·chr(31)·chr(30)·b·chr(31) with
-#      chr(30)·ab·chr(31): REPLACE scans left to right and resumes AFTER
-#      each replacement, and the paired delimiters share no characters
-#      between adjacent matches, so [a,a,a,a] → [aa,aa] exactly like
-#      _bpe_merge_pair (single-delimiter encodings get this wrong — the
-#      shared boundary breaks the second match).
+#      string REPLACE of open·a·close·open·b·close with open·ab·close:
+#      REPLACE scans left to right and resumes AFTER each replacement, and
+#      the paired delimiters share no characters between adjacent matches,
+#      so [a,a,a,a] → [aa,aa] exactly like _bpe_merge_pair
+#      (single-delimiter encodings get this wrong — the shared boundary
+#      breaks the second match).
 # Each round re-derives pair counts from the delimited strings (weighted
 # by the word histogram, overlapping adjacencies — the Sennrich
-# convention, same as _bpe_pairs_expr), takes the (cnt DESC, a, b) argmax
-# with the cnt>=2 stop rule, and rewrites. An empty winner (training
-# stopped) keeps seqs unchanged via LEFT JOIN ON TRUE, so later rounds
-# and the encode oracle read the settled state. The Spark trainer's
-# multi-merge batching is bit-identical to 1-merge-per-round (proof in
-# _bpe_select_batch; pytest-asserted vs a sequential reference), which is
-# what licenses the strictly sequential SQL. Unicode: both engines split
-# words per CODEPOINT (fixtures hold no non-BMP text, where JVM UTF-16
-# vs UTF-8 would diverge — probed before this flip).
+# convention, same as bpe_train's candidates SQL), takes the
+# (cnt DESC, a, b) argmax with the cnt>=2 stop rule, and rewrites. An
+# empty winner (training stopped) keeps seqs unchanged via LEFT JOIN ON
+# TRUE, so later rounds and the encode oracle read the settled state. The
+# Spark trainer's multi-merge batching is bit-identical to
+# 1-merge-per-round (proof in _bpe_select_batch; pytest-asserted vs a
+# sequential reference), which is what licenses the strictly sequential
+# SQL. Unicode: both engines split words per CODEPOINT (fixtures hold no
+# non-BMP text, where JVM UTF-16 vs UTF-8 would diverge — probed before
+# this flip).
 
-_BPE_OPEN = "chr(30)"
-_BPE_CLOSE = "chr(31)"
+_BPE_OPEN = f"chr({ord(_BPE_TOK_OPEN)})"
+_BPE_CLOSE = f"chr({ord(_BPE_TOK_CLOSE)})"
 
 
 def _bpe_cte_chain(n_merges: int = _BPE_MERGES) -> str:
@@ -1120,57 +990,26 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bpe_encode_counts(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply a learned merge list to the corpus and report per-document
-    BPE token counts. The kernel encodes each DISTINCT word once per
-    Arrow batch (memoized dict — Zipf makes the hit rate high) and
-    applies merges in rank order, the standard greedy BPE encoder.
+    BPE token counts: (doc_id, n_words, n_bpe_tokens). Each document is
+    rendered and rewritten exactly as ``bpe_train`` rewrites a word
+    (``_bpe_render`` then ``_bpe_apply``, merges in rank order — the
+    standard greedy BPE encoder; the render keeps words apart), and its
+    token count is the number of open delimiters left. Words are the
+    trainer's (Java ``\\s``, the DuckDB oracle's RE2 ``\\s``); NULL text
+    has no words and reports (0, 0), like the oracle's LEFT JOIN
+    zero-fill.
 
-    Scale shape: one mapInPandas pass, merge list broadcast (it is
-    vocab-sized, KBs), no shuffle at all — per-doc outputs land where
+    Scale shape: one narrow projection of native string ops per
+    document — no Python worker, no shuffle; per-doc outputs land where
     the docs already are."""
-    spark = docs.sparkSession
-    bc = spark.sparkContext.broadcast(list(merges))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n_words", T.LongType()),
-            T.StructField("n_bpe_tokens", T.LongType()),
-        ]
+    text = F.lower(F.coalesce("text", F.lit("")))
+    r = _bpe_apply(_bpe_render(text), merges)
+    n_tokens = F.length(r) - F.length(F.replace(r, F.lit(_BPE_TOK_OPEN), F.lit("")))
+    return docs.select(
+        "doc_id",
+        F.regexp_count(text, F.lit(r"\S+")).cast("long").alias("n_words"),
+        n_tokens.cast("long").alias("n_bpe_tokens"),
     )
-
-    def encode(batches):
-        merge_list = bc.value
-        cache: dict[str, int] = {}
-        # EXACTLY the trainer's/oracle's tokenizer: Java and RE2 '\s'
-        # are the same ASCII class [ \t\n\v\f\r] — Python str.split()
-        # is NOT (it splits on Unicode whitespace, e.g. U+00A0, and a
-        # NULL text would stringify to the word 'none'). NULL → no
-        # words, matching the oracle's LEFT JOIN zero-fill.
-        ws = re.compile("[ \t\n\x0b\f\r]+")
-
-        def word_tokens(w: str) -> int:
-            n = cache.get(w)
-            if n is None:
-                s = list(w) + [_BPE_EOW]
-                for a, b in merge_list:
-                    s = _bpe_merge_pair(s, a, b)
-                n = cache[w] = len(s)
-            return n
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = (
-                    [w for w in ws.split(text.lower()) if w]
-                    if isinstance(text, str)
-                    else []
-                )
-                rows.append(
-                    (int(doc_id), len(words), sum(word_tokens(w) for w in words))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "n_words", "n_bpe_tokens"])
-
-    return widen(docs.select("doc_id", "text")).mapInPandas(encode, out_schema)
 
 
 def _bpe_merges_for(docs: DataFrame, sf_dir: str) -> list[tuple[str, str]]:

@@ -237,63 +237,85 @@ def test_bpe_merge_pair_reference(seqs, a, b):
             assert _bpe_merge_pair(out, a, b) == out or merged in (a, b)
 
 
-def test_bpe_merge_expr_matches_reference(spark):
-    """The JVM fold rewrite (_bpe_merge_expr, what bpe_train actually
-    runs since r14) must equal _bpe_merge_pair on the adversarial
-    shapes: self-pairs over runs ([a,a,a] with (a,a) — non-overlap),
-    interleavings, merged-output collisions with pre-existing symbols,
-    1-symbol arrays, and absent pairs."""
+def _check_bpe_apply(spark, cases, words=()):
+    """Run the string rewrite bpe_train and bpe_encode_counts both use —
+    a rendered symbol string, then ``_bpe_apply``'s native ``replace``
+    chain, then split back — on each ``(symbols, batch)`` case and
+    compare it with sequential ``_bpe_merge_pair`` application in rank
+    order. Symbol arrays are rendered by ``_bpe_tok``; each of ``words``
+    goes through ``_bpe_render`` itself (which must agree with
+    ``_bpe_tok``) and gets a two-merge chain."""
     from pyspark.sql import functions as F
 
     from flink_realtime_2024_spark.operators.llm import (
-        _bpe_merge_expr,
+        _BPE_EOW,
+        _BPE_TOK_CLOSE,
+        _BPE_TOK_OPEN,
+        _bpe_apply,
         _bpe_merge_pair,
+        _bpe_render,
+        _bpe_tok,
+        _bpe_unesc,
     )
 
-    cases = [
-        (["a", "a", "a"], "a", "a"),
-        (["a", "a", "a", "a"], "a", "a"),
-        (["a", "b", "a", "b"], "b", "a"),
-        (["a", "b", "a", "b"], "a", "b"),
-        (["ab", "a", "b"], "a", "b"),          # pre-existing token == merged
-        (["a", "b", "ab", "a", "b"], "a", "b"),
-        (["x"], "a", "b"),                      # 1-symbol array
-        (["x", "y", "z"], "a", "b"),            # pair absent
-        (["b", "a", "b", "b"], "b", "b"),
-        (["a", "b", "b", "a", "b"], "b", "b"),
-        (["</w>", "a", "</w>"], "a", "</w>"),
-    ]
-    # one Spark job over every (case, pair): group rows by pair so each
-    # distinct pair gets its own column expression
-    for a, b in sorted({(a, b) for _, a, b in cases}):
-        rows = [(i, s) for i, (s, ca, cb) in enumerate(cases) if (ca, cb) == (a, b)]
-        df = spark.createDataFrame(rows, "i int, syms array<string>")
-        got = {
-            r["i"]: list(r["out"])
-            for r in df.select(
-                "i", _bpe_merge_expr(F.col("syms"), a, b).alias("out")
-            ).collect()
-        }
-        for i, s in rows:
-            assert got[i] == _bpe_merge_pair(list(s), a, b), (s, a, b, got[i])
+    cases = list(cases)
+    rows = [(i, "".join(_bpe_tok(t) for t in s)) for i, (s, _) in enumerate(cases)]
+    if words:
+        wdf = spark.createDataFrame(list(enumerate(words)), "i int, w string")
+        rendered = dict(wdf.select("i", _bpe_render("w")).collect())
+        for i, w in enumerate(words):
+            syms = list(w) + [_BPE_EOW]
+            assert rendered[i] == "".join(_bpe_tok(t) for t in syms), w
+            rows.append((len(cases), rendered[i]))
+            cases.append((syms, [(w[0], w[1]), (w[0] + w[1], w[2])]))
+    df = spark.createDataFrame(rows, "i int, r string")
+
+    def split(r):
+        return [_bpe_unesc(t) for t in r[1:-1].split(_BPE_TOK_CLOSE + _BPE_TOK_OPEN)]
+
+    for i, (s, batch) in enumerate(cases):
+        got = (
+            df.filter(F.col("i") == i)
+            .select(_bpe_apply(F.col("r"), batch).alias("out"))
+            .collect()[0]["out"]
+        )
+        ref = list(s)
+        for a, b in batch:
+            ref = _bpe_merge_pair(ref, a, b)
+        assert split(got) == ref, (s, batch, split(got), ref)
+
+
+def test_bpe_merge_expr_matches_reference(spark):
+    """One merge at a time: the ``_bpe_apply`` rewrite of a single pair
+    must equal ``_bpe_merge_pair`` on the adversarial shapes: self-pairs
+    over runs ([a,a,a] with (a,a) — non-overlap), interleavings,
+    merged-output collisions with pre-existing symbols, 1-symbol arrays,
+    absent pairs, and runs of NUL or of the escape marker."""
+    _check_bpe_apply(spark, [
+        (["a", "a", "a"], [("a", "a")]),
+        (["a", "a", "a", "a"], [("a", "a")]),
+        (["a", "b", "a", "b"], [("b", "a")]),
+        (["a", "b", "a", "b"], [("a", "b")]),
+        (["ab", "a", "b"], [("a", "b")]),                 # pre-existing == merged
+        (["a", "b", "ab", "a", "b"], [("a", "b")]),
+        (["x"], [("a", "b")]),                            # 1-symbol array
+        (["x", "y", "z"], [("a", "b")]),                  # pair absent
+        (["b", "a", "b", "b"], [("b", "b")]),
+        (["a", "b", "b", "a", "b"], [("b", "b")]),
+        (["</w>", "a", "</w>"], [("a", "</w>")]),
+        (["\x00", "\x00", "\x00"], [("\x00", "\x00")]),    # NUL run
+        (["\x1d", "\x1d=", "\x1d", "="], [("\x1d", "=")]),  # escape marker
+    ])
 
 
 def test_bpe_rewrite_expr_matches_reference(spark):
-    """The whole-batch JVM rewrite (_bpe_rewrite_expr — the REPLACE
-    fast path plus the control-char fold fallback, what bpe_train's
-    loop actually runs since r14) must equal sequential
-    _bpe_merge_pair application in rank order, INCLUDING on rows whose
-    symbols contain the delimiter control characters (which must route
-    to the fold branch, never corrupt silently)."""
-    from pyspark.sql import functions as F
-
-    from flink_realtime_2024_spark.operators.llm import (
-        _bpe_merge_pair,
-        _bpe_rewrite_expr,
-    )
-
-    cases = [
-        (["a", "a", "a", "a"], [("a", "a")]),            # non-overlap runs
+    """A whole merge batch: the ``_bpe_apply`` chain must equal
+    sequential ``_bpe_merge_pair`` application in rank order, on chained
+    batches and on symbols holding the delimiters, the escape marker or
+    NUL (the escape must keep every one of them inside its token).
+    Words are rendered by ``_bpe_render`` itself."""
+    _check_bpe_apply(spark, [
+        (["a", "a", "a", "a"], [("a", "a")]),             # non-overlap runs
         (["a", "b", "a", "b"], [("a", "b"), ("ab", "ab")]),  # chained batch
         (["l", "o", "w", "</w>"], [("l", "o"), ("lo", "w")]),
         (["x"], [("a", "b")]),                            # 1-symbol array
@@ -301,20 +323,8 @@ def test_bpe_rewrite_expr_matches_reference(spark):
         (["\x1ea", "b", "a", "b"], [("a", "b")]),         # open-delim symbol
         (["a", "\x1f", "a", "\x1f"], [("a", "\x1f")]),    # close-delim symbol
         (["\x1e", "\x1f"], [("\x1e", "\x1f")]),           # pure-delim symbols
-    ]
-    df = spark.createDataFrame(
-        [(i, s) for i, (s, _) in enumerate(cases)], "i int, syms array<string>"
-    )
-    for i, (s, batch) in enumerate(cases):
-        got = (
-            df.filter(F.col("i") == i)
-            .select(_bpe_rewrite_expr(F.col("syms"), batch).alias("out"))
-            .collect()[0]["out"]
-        )
-        ref = list(s)
-        for a, b in batch:
-            ref = _bpe_merge_pair(ref, a, b)
-        assert list(got) == ref, (s, batch, list(got), ref)
+        (["\x1d", "\x1e", "\x1f", "</w>"], [("\x1d", "\x1e"), ("\x1d\x1e", "\x1f")]),
+    ], words=["low", "\x00\x1d=", "\x1d\x1e\x1f!", "</w>"])
 
 
 @st.composite
@@ -642,7 +652,10 @@ def test_fuzzy_pairs_matches_brute_levenshtein(spark, names):
 
 
 @given(
-    st.lists(st.text(alphabet="abz", min_size=1, max_size=5), min_size=2, max_size=10),
+    st.lists(
+        st.text(alphabet="abz\x00\x1d\x1e\x1f!", min_size=1, max_size=5),
+        min_size=2, max_size=10,
+    ),
 )
 @settings(max_examples=6, deadline=None)
 def test_bpe_train_fuzzed_vs_reference(spark, words):

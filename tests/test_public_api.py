@@ -83,14 +83,21 @@ def test_reclaim_checkpoints_bounds_looped_kernel_blocks(spark, tmp_path):
     the size-based form flaked twice on a loaded box — checkpoints an
     earlier test left dying kept draining between the base read and
     the grown read, so "base" was stale the moment it was taken.
-    Id-set deltas are immune to concurrent drain in either phase."""
+    Id-set deltas are immune to concurrent drain in either phase.
+
+    The probe reads the keys of SparkContext's weak-valued registry
+    itself. ``getPersistentRDDs()`` returns a strong copy whose py4j
+    handle outlives the call until py4j's finalizer thread (1 s period)
+    releases it, so each poll pinned the very RDDs it waited on:
+    reclamation took 7-34 s instead of ~1 s, and over 90 s on a busy
+    host."""
     import time
 
     docs = _user_docs(spark, tmp_path)
 
     def persistent_ids():
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        return {k for k in m.keySet().toArray()}
+        keys = spark.sparkContext._jsc.sc().persistentRdds().keys()
+        return {int(k) for k in keys.mkString(",").split(",") if k}
 
     ids_before = persistent_ids()
     # HOLD the returned frames during the loop: CPython refcounting

@@ -10,6 +10,7 @@ import re
 import tempfile
 
 import pyspark.sql.functions as F
+import pytest
 
 from .conftest import SF_DIR
 
@@ -547,21 +548,25 @@ def test_lakehouse_compact_then_expire(spark):
     assert len(os.listdir(t.data_dir)) == 2  # only the compacted files remain
 
 
-def test_span_dedup_stays_jvm_side(spark):
-    """llm_dedup_spans claims zero Python: window generation, md5, and
-    both aggregates must all be JVM operators (no Arrow/Python eval
-    nodes), and the shuffle must carry digests — the executed plan is
-    the proof."""
-    from flink_realtime_2024_spark.operators.llm import llm_dedup_spans
+@pytest.mark.parametrize("query_id", ["llm_dedup_spans", "llm_bpe_encode"])
+def test_span_dedup_stays_jvm_side(spark, query_id):
+    """llm_dedup_spans and llm_bpe_encode claim zero Python: window
+    generation, md5 and both aggregates, and BPE's render/replace chain,
+    must all be JVM operators (no Arrow/Python eval nodes) — the
+    executed plan is the proof. The span shuffle must carry digests;
+    the encoder is one narrow projection with no Exchange at all."""
+    from flink_realtime_2024_spark.operators import llm
 
     plan = (
-        llm_dedup_spans(spark, SF_DIR)
+        getattr(llm, query_id)(spark, SF_DIR)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     for python_node in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas", "MapInPandas"):
         assert python_node not in plan, python_node
+    if query_id == "llm_bpe_encode":
+        assert "Exchange" not in plan, plan
 
 
 def test_driver_prefix_matches_committed_log():

@@ -1122,6 +1122,25 @@ def test_bloom_decontaminate_equals_exact(spark):
     assert exact == bloom
 
 
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_documents_doc_id_unique(sf):
+    """llm_decontaminate dedups (doc_id, gram) row-locally with
+    array_distinct, which equals the global distinct (and the oracle's
+    n_overlap) only while doc_id is unique in documents — pin it on
+    the fixtures the oracles run against."""
+    import os
+
+    import duckdb
+
+    path = os.path.join(os.path.dirname(SF_DIR), sf, "documents.parquet")
+    if not os.path.exists(path):
+        pytest.skip(f"no {sf} fixture")
+    n, n_ids = duckdb.sql(
+        f"SELECT count(*), count(DISTINCT doc_id) FROM read_parquet('{path}')"
+    ).fetchone()
+    assert n > 0 and n == n_ids, (sf, n, n_ids)
+
+
 def test_kmeans_equals_sequential_reference(spark):
     """EXACT assignment equivalence against a single-node NumPy replay
     of the same schedule (init = first k vectors by vec_id, 8 Lloyd
@@ -1446,7 +1465,11 @@ def test_bpe_train_matches_reference(spark):
     sequential reference implementation produces (same tie-breaking),
     and the encoder's per-word token counts must match the reference's
     final symbol tables."""
-    from flink_realtime_2024_spark.operators.llm import bpe_train, bpe_encode_counts
+    from flink_realtime_2024_spark.operators.llm import (
+        _bpe_merge_pair,
+        bpe_encode_counts,
+        bpe_train,
+    )
 
     texts = [
         "low low low low low",
@@ -1495,8 +1518,11 @@ def test_bpe_train_matches_reference(spark):
     # not Python str.split(): NULL text is zero words (not the word
     # 'none'), and U+00A0 — Unicode whitespace but not ASCII \s — is
     # word-internal, so 'low\xa0low' is ONE word on both engines
+    # a document of control-char words between every Java \s separator:
+    # the whole-document render must keep each word apart and escaped
+    ctrl = "\x00low\t\x1dlow\x1f \n\x0b\x1e\x1f\x0clow\rnewest\x1c"
     tricky = spark.createDataFrame(
-        [(100, None), (101, "low low")], "doc_id bigint, text string"
+        [(100, None), (101, "low\xa0low"), (102, ctrl)], "doc_id bigint, text string"
     )
     enc2 = {
         r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
@@ -1506,6 +1532,14 @@ def test_bpe_train_matches_reference(spark):
     }
     assert enc2[100] == (0, 0)
     assert enc2[101][0] == 1
+    ctrl_words = [w for w in re.split("[ \t\n\x0b\f\r]+", ctrl) if w]
+    expect = 0
+    for w in ctrl_words:
+        syms = list(w) + ["</w>"]
+        for m in ref_merges:
+            syms = _bpe_merge_pair(syms, m[1], m[2])
+        expect += len(syms)
+    assert enc2[102] == (len(ctrl_words), expect)
 
 
 def test_bpe_batched_matches_reference_tie_heavy(spark):
@@ -1541,35 +1575,46 @@ def test_bpe_batched_matches_reference_tie_heavy(spark):
 
 
 def test_bpe_train_branches_match_reference(spark, monkeypatch):
-    """The r15 loop has three code paths: the delimited-string fast loop
-    (n_ctrl == 0, narrow width), the array+fold fallback (any word
-    containing the chr(30)/chr(31) delimiters), and the plain-groupBy
-    wide branch (derived width ≥ session shuffle width, which restores
-    map-side partial aggregation). All three must reproduce the
-    sequential reference exactly."""
+    """bpe_train has one loop with two plan shapes: the narrow width
+    (an explicit repartition at the measured pair volume) and the wide
+    plain-groupBy branch (derived width ≥ session shuffle width, which
+    restores map-side partial aggregation). Both must reproduce the
+    sequential reference exactly — including on words made of control
+    characters, which the token escape must carry through merges and
+    (cnt DESC, a, b) tie-breaks unchanged."""
     import flink_realtime_2024_spark.operators.llm.text as X
     from flink_realtime_2024_spark.operators.llm import bpe_train
 
-    # (a) control-char corpus → n_ctrl > 0 → array+fold loop end to end
+    # (a) control-char corpus: the delimiters themselves, the escape
+    # marker and NUL are word characters (none is Java \s), control
+    # pairs win merges, and ("\x1f", "a</w>") ties ("!", "a</w>") at 4
+    # across the escape boundary — the escaped "\x1f" must still sort
+    # below "!"
     texts = [
-        "low low low low low",
-        "lower lower newest newest",
-        f"sp{X._BPE_TOK_OPEN}ike sp{X._BPE_TOK_OPEN}ike wider wider",
-        f"od{X._BPE_TOK_CLOSE}d new new newest newest",
+        "\x00\x00\x1d \x00\x00\x1d \x00\x00\x1d \x00\x00\x1d \x00\x00\x1d",
+        f"\x1fa \x1fa !a !a sp{X._BPE_TOK_OPEN}ike sp{X._BPE_TOK_OPEN}ike",
+        f"\x1fa \x1fa !a !a od{X._BPE_TOK_CLOSE}d od{X._BPE_TOK_CLOSE}d",
+        "\x1d\x1e\x1f \x1d\x1e\x1f \x1d\x1e\x1f low low",
     ]
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
     )
+    # the trainer's tokenizer is Java \s — Python str.split() would also
+    # split on \x1c-\x1f and train on different words
     word_counts: dict = {}
     for t in texts:
-        for w in t.split():
-            word_counts[w] = word_counts.get(w, 0) + 1
-    ref_merges, _ = _bpe_reference(word_counts, n_merges=8)
+        for w in re.split("[ \t\n\x0b\f\r]+", t):
+            if w:
+                word_counts[w] = word_counts.get(w, 0) + 1
+    ref_merges, _ = _bpe_reference(word_counts, n_merges=12)
     got = [
         (r["merge_rank"], r["left"], r["right"], r["merged"], r["pair_count"])
-        for r in bpe_train(docs, n_merges=8).orderBy("merge_rank").collect()
+        for r in bpe_train(docs, n_merges=12).orderBy("merge_rank").collect()
     ]
     assert got == ref_merges
+    assert any(ch < " " for m in got for ch in m[3]), got
+    tie = [m[1] for m in got if m[2] == "a</w>"]
+    assert tie == ["\x1f", "!"], got
 
     # (b) clean corpus forced onto the WIDE branch: a 1-row-per-task
     # budget makes the derived width exceed the session shuffle width,
