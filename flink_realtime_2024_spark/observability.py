@@ -14,7 +14,12 @@ late_rows_metrics for that path.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import Column, DataFrame, Observation
+
+# How long ``await_observation`` waits for an action's metrics to post.
+_OBSERVATION_WAIT_S = 60.0
 
 
 def observe_counts(df: DataFrame, name: str, **metrics: Column):
@@ -33,9 +38,29 @@ def observe_counts(df: DataFrame, name: str, **metrics: Column):
             n_dirty=F.count(F.when(F.col("k").isNull(), 1)),
         )
         obs_df.write.parquet(out)   # the job
-        obs.get["n_dirty"]          # the counter, for free
+        await_observation(obs, "parse")["n_dirty"]  # the counter, for free
     """
     obs = Observation(name)
     observed = df.observe(obs, *[expr.alias(alias) for alias, expr in metrics.items()])
     return observed, obs
 
+
+def await_observation(obs: Observation, who: str) -> dict:
+    """``obs.get``, bounded: the metrics of an action that has already
+    run over the observed frame. The post lands on a listener thread a
+    moment after the action returns, so wait for it, but at most
+    ``_OBSERVATION_WAIT_S`` seconds: an Observation no action ran on
+    raises instead of hanging its caller forever."""
+    jo = getattr(obs, "_jo", None)
+    if jo is None:
+        raise RuntimeError(f"{who}: Observation was never attached to a DataFrame")
+    posted = jo.future()
+    deadline = time.monotonic() + _OBSERVATION_WAIT_S
+    while not posted.isCompleted():
+        if time.monotonic() > deadline:
+            raise RuntimeError(
+                f"{who}: Observation never posted; an action over the "
+                "observed frame must run before its metrics are read"
+            )
+        time.sleep(0.005)
+    return obs.get

@@ -11,13 +11,13 @@ package ``__init__`` so ``operators.llm.<name>`` paths are unchanged.
 from __future__ import annotations
 
 import re
-import time
 import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import types as T
 
+from ...observability import await_observation
 from ...sources.io import load_table
 from ...plans.registry import register
 
@@ -728,22 +728,11 @@ def bpe_train(
         .select("weight", _bpe_render("word").alias("r"))
         .localCheckpoint(eager=True)
     )
-    # obs.get blocks until an action over the observed frame has posted
-    # the metrics, and the eager checkpoint above is that action (the
-    # post itself may land a moment after the action returns): wait
-    # boundedly, so a refactor that drops or defers the checkpoint fails
-    # loudly instead of hanging the trainer forever.
-    posted = obs._jo.future()
-    deadline = time.monotonic() + 60
-    while not posted.isCompleted():
-        if time.monotonic() > deadline:
-            raise RuntimeError(
-                "bpe_train: histogram Observation never posted; the eager "
-                "localCheckpoint must run before obs.get"
-            )
-        time.sleep(0.005)
+    # the eager checkpoint above is the action that posts the metrics;
+    # a refactor that drops or defers it fails loudly instead of hanging
+    n_pairs = await_observation(obs, "bpe_train")["n_pairs"]
     # a word of n chars has n + 1 symbols, hence n adjacent pairs
-    pair_rows = max(int(obs.get["n_pairs"]), 1)
+    pair_rows = max(int(n_pairs), 1)
     try:
         session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:

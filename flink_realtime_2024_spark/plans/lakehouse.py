@@ -10,27 +10,31 @@ first principles on stdlib + parquet:
 
 - a table is a directory of immutable data files plus numbered manifest
   files; **the manifest is the table** — a snapshot is the file list in
-  ``manifest-v{N}.json``, committed atomically (O_EXCL create), so a
-  reader of version N is isolated from every later writer;
-- every data file records min/max stats of the merge key in the
-  manifest; a MERGE reads and rewrites ONLY the files whose key range
-  intersects the incoming batch (everything else is carried into the
-  new snapshot by reference) — the Delta/Iceberg MERGE INTO shape, and
-  the durable version of what stream_agg_merge does with buckets;
+  ``manifest-v{N}.json``, committed atomically (a fsynced temp file
+  hard-linked onto the name: first commit wins, no reader or crash ever
+  sees a partial head), so a reader of version N is isolated from every
+  later writer;
+- every data file records min/max stats and a Bloom bitmap of the merge
+  key in the manifest; a MERGE reads and rewrites ONLY the files whose
+  key range intersects the incoming batch (everything else is carried
+  into the new snapshot by reference) — the Delta/Iceberg MERGE INTO
+  shape, and the durable version of what stream_agg_merge does with
+  buckets;
+- every write (create, merge, compact) is one materialization of its
+  input, one range shuffle and one file write: the file stats come from
+  the write itself (Parquet footers, an Observation for the Bloom
+  bits), never from a second pass over the written files, and reads
+  take the manifest's schema instead of inferring one;
 - old snapshots stay readable (time travel) until explicitly expired.
 
 At 100 TB: data files are the unit of both pruning and rewrite, so
 MERGE cost is O(batch + overlapping files), and the manifest (one JSON
-row per file) is the only metadata a planner must list — no directory
-walks. Round 6 closed the two seams a real CDC user hits first:
-ADD-COLUMN SCHEMA EVOLUTION (batches may carry new columns; old files
-are never rewritten, readers surface NULL via mergeSchema — the
-``lake_schema_evolve`` oracle) and CONCURRENT-WRITER RETRY (a lost
-manifest race re-derives the merge against the new head — racing
-disjoint-key writers both land; tests/test_streaming.py). The
-remaining deliberate gap vs a real format: one merge key, no
-column rename/drop or type widening. Documented seams, not hidden
-assumptions.
+row per file) is the only metadata a planner must list. ADD-COLUMN
+schema evolution (old files are never rewritten; reads surface NULL —
+``lake_schema_evolve``) and concurrent-writer retry (a lost manifest
+race re-derives the merge against the new head) are supported. The
+deliberate gaps vs a real format: one merge key, no column rename/drop
+or type widening.
 """
 
 from __future__ import annotations
@@ -38,18 +42,20 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
+import shutil
 import tempfile
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
+from ..observability import await_observation
 from ..sources.cdc import (
     CHANGELOG_SQL,
     _LATEST_ORACLE,
     build_changelog,
     latest_per_key,
-    merge_upsert,
 )
 from ..plans.registry import register
 
@@ -59,6 +65,13 @@ from ..plans.registry import register
 # a sound may-intersect test: a key present in both sets sets the same
 # bit in both, so AND == 0 proves the key sets disjoint.
 _BLOOM_BITS = 8192
+# Spark names a task's output file part-<task index, %05d>-<uuid>...
+_PART_RE = re.compile(r"^part-(\d{5})-")
+_MANIFEST_RE = re.compile(r"^manifest-v(\d+)\.json$")
+
+
+def _bloom_bit(key: Column) -> Column:
+    return F.pmod(F.xxhash64(key), F.lit(_BLOOM_BITS)).cast("int")
 
 
 def _bloom_hex(positions) -> str:
@@ -81,17 +94,13 @@ def _latest_image(changelog: DataFrame) -> DataFrame:
     struct carries EVERY column of the input, so add-column batches
     flow through the merge reduction without being projected away.
 
-    GENERIC TIEBREAK (round-7, was hardcoded totalprice/orderstatus):
-    after (ts_ms, op-precedence) the ordering struct appends every
-    remaining ORDERABLE column in input-column order — so a table
-    without the orders columns no longer raises AnalysisException, and
-    rows tying on the first fields resolve deterministically even when
-    they differ only in an evolved column. Spark's struct ordering
-    ranks NULL below any value, which on the standard schema matches
-    the oracle's COALESCE(totalprice,-1)/COALESCE(orderstatus,'')
-    DESC (prices are positive, statuses non-empty). Requires only
-    ``key``/``op``/``ts_ms``. Same scale shape: an aggregate with
-    map-side partial combining, shuffling O(keys) not O(events)."""
+    After (ts_ms, op-precedence) the ordering struct appends every
+    remaining ORDERABLE column in input-column order, so any schema
+    with ``key``/``op``/``ts_ms`` works and ties resolve
+    deterministically even on an evolved column. Spark's struct
+    ordering ranks NULL below any value, which on the standard schema
+    matches the oracle's COALESCE(totalprice,-1)/COALESCE(orderstatus,'')
+    DESC (prices are positive, statuses non-empty)."""
     from pyspark.sql.types import AtomicType
 
     prec = F.when(F.col("op") == "d", 2).when(F.col("op") == "u", 1).otherwise(0)
@@ -127,10 +136,13 @@ class LakeTable:
         return os.path.join(self.root, f"manifest-v{version}.json")
 
     def latest_version(self) -> int:
+        """The head: the highest committed version. Only exact
+        ``manifest-v{N}.json`` names count — a commit's temp file is
+        never a head."""
         versions = [
-            int(f[len("manifest-v"):-len(".json")])
-            for f in os.listdir(self.root)
-            if f.startswith("manifest-v") and f.endswith(".json")
+            int(m.group(1))
+            for m in map(_MANIFEST_RE.match, os.listdir(self.root))
+            if m
         ]
         if not versions:
             raise FileNotFoundError(f"no manifest in {self.root}")
@@ -148,87 +160,106 @@ class LakeTable:
         columns: list[str] | None = None,
         types: dict[str, str] | None = None,
     ) -> None:
-        """First-commit-wins atomic manifest write: O_EXCL create fails
-        if another writer took this version. ``merge()`` catches that
-        and re-derives against the new head (optimistic concurrency
-        with retry — the Delta commit loop); direct ``_commit`` callers
-        keep the raise-loudly contract. ``columns`` records the commit's
-        schema so readers order mixed-generation files consistently;
-        ``types`` (column → Spark simpleString) lets ``read()`` NULL-
-        fill a logged column no surviving data file physically holds."""
+        """First-commit-wins atomic manifest write: a fsynced temp file
+        is hard-linked onto ``manifest-v{version}.json``, so the name
+        never points at a partial manifest (a reader or a crash sees the
+        old head or the new one) and the link fails with EEXIST if
+        another writer took this version. ``merge()`` catches that and
+        re-derives against the new head (the Delta commit loop); direct
+        callers get the FileExistsError. ``columns`` and ``types``
+        (column → Spark simpleString) are the schema reads use."""
         manifest = {
-            "version": version,
-            "key": self.key,
-            "operation": operation,
-            "files": files,
+            "version": version, "key": self.key, "operation": operation,
+            "files": files, "columns": columns, "types": types,
         }
-        if columns:
-            manifest["columns"] = columns
-        if types:
-            manifest["types"] = types
-        path = self._manifest_path(version)
-        fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-        with os.fdopen(fd, "w") as fh:
-            json.dump(manifest, fh)
+        fd, tmp = tempfile.mkstemp(prefix=".manifest-", suffix=".tmp", dir=self.root)
+        try:
+            with os.fdopen(fd, "w") as fh:
+                json.dump(manifest, fh)
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.link(tmp, self._manifest_path(version))
+        finally:
+            os.remove(tmp)
 
     # -- data-file plumbing ------------------------------------------------
 
-    def _write_files(self, df: DataFrame, n_files: int) -> list[dict]:
-        """Write ``df`` as ``n_files`` immutable data files range-sorted
-        by the merge key (tight per-file stats ⇒ effective pruning) and
-        return manifest entries with per-file min/max key stats plus an
-        xxhash64 key Bloom bitmap. Stats come from ONE executor-side
-        aggregation over the staged files (grouped by
-        ``input_file_name``) — the shape a real format computes during
-        the write itself; the driver holds only n_files × (2 scalars +
-        a fixed 8192-bit bitmap)."""
-        os.makedirs(self.data_dir, exist_ok=True)
-        staging = tempfile.mkdtemp(prefix="lake_stage_")
-        (
-            df.repartitionByRange(n_files, self.key)
-            .sortWithinPartitions(self.key)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        spark = df.sparkSession
-        stats = (
-            spark.read.parquet(staging)
-            .groupBy(F.input_file_name().alias("_f"))
-            .agg(
-                F.min(self.key).alias("lo"),
-                F.max(self.key).alias("hi"),
-                F.collect_set(
-                    F.pmod(F.xxhash64(F.col(self.key)), F.lit(_BLOOM_BITS)).cast(
-                        "int"
-                    )
-                ).alias("bits"),
-            )
-            .collect()
-        )
-        from urllib.parse import unquote, urlparse
+    def _write_files(self, df: DataFrame, n_files: int, reduce=None) -> list[dict]:
+        """Write ``df`` as at most ``n_files`` immutable data files
+        range-sorted by the merge key (tight per-file stats ⇒ effective
+        pruning); return their manifest entries with the key's min/max
+        and xxhash64 Bloom bitmap.
 
-        # input_file_name() yields a URI (file:/...%-escaped): parse the
-        # path component first, THEN percent-decode it
-        by_name = {os.path.basename(unquote(urlparse(r["_f"]).path)): r for r in stats}
-        entries = []
-        for f in sorted(os.listdir(staging)):
-            # zero-row part files (a batch can net to nothing, e.g. all
-            # deletes) form no stats group — never manifested (caught by
-            # the hypothesis dict-state model, single-delete create batch)
-            if not f.endswith(".parquet") or f not in by_name:
-                continue
-            r = by_name[f]
-            dst_name = f"{uuid.uuid4().hex}.parquet"
-            os.rename(os.path.join(staging, f), os.path.join(self.data_dir, dst_name))
-            entries.append(
-                {
-                    "path": os.path.join("data", dst_name),
-                    "min": r["lo"],
-                    "max": r["hi"],
-                    "bloom": _bloom_hex(r["bits"]),
-                }
-            )
-        return entries
+        One shuffle: ``df`` is range-partitioned on the key FIRST and
+        ``reduce`` (the merge's latest-image aggregate) runs inside
+        those partitions, whose RangePartitioning(key) satisfies its
+        clustering; AQE never coalesces an explicit-width repartition,
+        so task i writes ``part-<i>``. The stats come from the write
+        itself, as in Delta/Iceberg: min/max from the Parquet footers
+        (``_key_range``), the Bloom bits from an Observation on the
+        write job keyed by partition id. Zero-row files (e.g. an
+        all-deletes merge) are never manifested."""
+        import pyarrow.parquet as pq
+
+        os.makedirs(self.data_dir, exist_ok=True)
+        out = df.repartitionByRange(n_files, self.key)
+        out = (reduce(out) if reduce else out).sortWithinPartitions(self.key)
+        # spark_partition_id() cannot be evaluated inside observe():
+        # project it as a column, observe that, then drop it
+        obs = Observation()
+        bit = F.struct("_part", _bloom_bit(F.col(self.key)))
+        staging = tempfile.mkdtemp(prefix="lake_stage_")
+        try:
+            out.withColumn("_part", F.spark_partition_id()).observe(
+                obs, F.collect_set(bit).alias("bits")
+            ).drop("_part").write.mode("overwrite").parquet(staging)
+            bits: dict[int, list[int]] = {}
+            for part, b in await_observation(obs, "LakeTable._write_files")["bits"]:
+                bits.setdefault(part, []).append(b)
+            entries = []
+            for f in sorted(f for f in os.listdir(staging) if f.endswith(".parquet")):
+                meta = pq.read_metadata(os.path.join(staging, f))
+                if meta.num_rows == 0:
+                    continue
+                part = _PART_RE.match(f)
+                task_bits = part and bits.get(int(part.group(1)))
+                if not task_bits:
+                    raise RuntimeError(f"data file {f} has no observed write task")
+                lo, hi = _key_range(os.path.join(staging, f), meta, self.key)
+                dst = os.path.join("data", f"{uuid.uuid4().hex}.parquet")
+                os.rename(os.path.join(staging, f), os.path.join(self.root, dst))
+                entries.append({"path": dst, "min": lo, "max": hi, "bloom": _bloom_hex(task_bits)})
+            return entries
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def _scan(self, spark: SparkSession, m: dict, paths: list[str]) -> DataFrame:
+        """Read data files of manifest ``m`` at the manifest's schema: a
+        file that lacks a column reads it as NULL, and no job infers a
+        schema."""
+        ddl = ", ".join(f"`{c.replace('`', '``')}` {m['types'][c]}" for c in m["columns"])
+        return spark.read.schema(ddl).parquet(*(os.path.join(self.root, p) for p in paths))
+
+    def changed(
+        self, spark: SparkSession, v_from: int, v_to: int
+    ) -> tuple[DataFrame | None, DataFrame | None]:
+        """Rows of the data files only in snapshot ``v_from`` and of
+        those only in ``v_to`` (None where no file differs), both read
+        at ``v_to``'s schema; version -1 is the empty table before v0.
+        Files carried between the two are byte-identical and cannot
+        hold a change, so the cost is that of the rewritten files."""
+        m_from = self.manifest(v_from) if v_from >= 0 else {"files": []}
+        m_to = self.manifest(v_to)
+        a, b = ({e["path"] for e in m["files"]} for m in (m_from, m_to))
+        return tuple(self._scan(spark, m_to, sorted(p)) if p else None for p in (a - b, b - a))
+
+    def _head(self) -> tuple[int, dict]:
+        """(version, manifest) of the head; (-1, no files) before v0."""
+        try:
+            version = self.latest_version()
+        except FileNotFoundError:
+            return -1, {"files": []}
+        return version, self.manifest(version)
 
     # -- public API --------------------------------------------------------
 
@@ -251,34 +282,14 @@ class LakeTable:
         """Snapshot read: exactly the manifest's file list — a reader of
         version N never sees later commits (snapshot isolation by
         construction: data files are immutable, manifests append-only).
-        ``mergeSchema`` unions mixed-generation file schemas — files
-        written before an add-column commit surface NULL for the new
-        column (Delta/Iceberg read-time evolution semantics); column
-        order follows the newest committed schema when recorded. The
-        manifest schema is MONOTONE (a merge never narrows it — see
-        ``_merge_attempt``), so a logged column can be absent from
-        every surviving file (all its values were NULL); such columns
-        are NULL-filled at the manifest-recorded type, exactly Delta's
-        log-schema-wins read semantics."""
+        The read takes the manifest's (MONOTONE, see ``_merge_attempt``)
+        schema, so a file written before an add-column commit, or a
+        column no surviving file holds, reads as NULL at the logged type
+        — Delta's log-schema-wins semantics."""
         m = self.manifest(self.latest_version() if version is None else version)
         if not m["files"]:
             raise ValueError("empty table snapshot")
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *(os.path.join(self.root, e["path"]) for e in m["files"])
-        )
-        cols = m.get("columns")
-        if not cols:
-            return df
-        types = m.get("types") or {}
-        have = set(df.columns)
-        return df.select(
-            *(
-                F.col(c)
-                if c in have
-                else F.lit(None).cast(types.get(c, "string")).alias(c)
-                for c in cols
-            )
-        )
+        return self._scan(spark, m, [e["path"] for e in m["files"]])
 
     def merge(
         self,
@@ -291,40 +302,41 @@ class LakeTable:
         table. File-level pruning via manifest stats — only data files
         whose [min,max] key range AND key Bloom bitmap both intersect
         the batch's are read and rewritten; disjoint files carry over
-        BY REFERENCE into the new snapshot. Returns the new version.
+        BY REFERENCE into the new snapshot. Returns the new version; an
+        empty batch commits nothing and returns the head (-1 on a table
+        with no snapshot yet, which gets its v0 from its first non-empty
+        batch).
 
-        Driver state is O(1): the batch reduces to ONE aggregate row —
-        min key, max key, and a fixed 8192-bit xxhash64 Bloom bitmap
-        (≤8192 ints from collect_set, constant regardless of batch
-        size). The round-5 form collected the batch's DISTINCT KEYS for
-        exact pruning — fine for CDC micro-batches but O(batch) driver
-        memory at the 100 TB bar; min/max + Bloom is the stats shape
-        Delta/Iceberg actually use (a false Bloom collision only costs
-        an unnecessary rewrite, never correctness).
+        The batch is materialized ONCE (an eager localCheckpoint, so a
+        streaming batch's source is scanned exactly once) and its stats
+        ride that job as an Observation: row count, min/max key and a
+        fixed 8192-bit xxhash64 Bloom bitmap — O(1) driver state, the
+        stats shape Delta/Iceberg use (a false Bloom collision only
+        costs an unnecessary rewrite). The rewrite is one range shuffle
+        and one write (``_write_files``): four Spark jobs in all.
+        Re-applying a batch is idempotent: the latest-image reduction
+        over (current rows ∪ batch) picks the same winner per key.
 
-        CONCURRENCY (round-6): losing a manifest race no longer fails
-        the writer — the attempt's uncommitted files are removed and
-        the whole merge is RE-DERIVED against the new head (optimistic
-        concurrency with serialized retry, the Delta commit-loop
-        shape). Re-derivation is unconditionally sound — the retry
-        re-reads whatever the winner committed — so concurrent writers
-        with ANY key ranges serialize correctly; disjoint-key writers
-        just never rewrite each other's files.
-
-        SCHEMA EVOLUTION (round-6): the batch may carry columns the
-        table has never seen (add-column); current and batch are
-        aligned by name with NULL fill, the latest-image reduction
-        carries the superset image, and the commit records the new
-        column list. Files from older snapshots are never rewritten —
-        readers surface NULL via mergeSchema."""
-        b = batch.agg(
-            F.min(self.key).alias("lo"),
-            F.max(self.key).alias("hi"),
-            F.collect_set(
-                F.pmod(F.xxhash64(F.col(self.key)), F.lit(_BLOOM_BITS)).cast("int")
-            ).alias("bits"),
-        ).first()
-        batch_bloom = _bloom_hex(b["bits"] or [])
+        CONCURRENCY: a lost manifest race removes the attempt's
+        uncommitted files and RE-DERIVES the merge against the new head
+        (the Delta commit loop), so concurrent writers with any key
+        ranges serialize correctly. SCHEMA EVOLUTION: batch columns the
+        table has never seen are aligned by name with NULL fill, carried
+        through the reduction and recorded in the commit; files from
+        older snapshots are never rewritten."""
+        obs = Observation()
+        k = F.col(self.key)
+        batch = batch.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.min(k).alias("lo"),
+            F.max(k).alias("hi"),
+            F.collect_set(_bloom_bit(k)).alias("bits"),
+        ).localCheckpoint()
+        b = await_observation(obs, "LakeTable.merge")
+        if not b["n"]:
+            return self._head()[0]
+        batch_bloom = _bloom_hex(b["bits"])
         last_err: Exception | None = None
         for _ in range(max_retries + 1):
             try:
@@ -338,11 +350,10 @@ class LakeTable:
     def _merge_attempt(
         self, spark: SparkSession, batch: DataFrame, n_files: int, b, batch_bloom: str
     ) -> int:
-        parent = self.latest_version()
-        m = self.manifest(parent)
+        parent, m = self._head()
 
         def overlaps(entry: dict) -> bool:
-            if b["lo"] is None:  # empty batch touches nothing
+            if b["lo"] is None:  # a batch of NULL keys touches nothing
                 return False
             if entry["min"] > b["hi"] or entry["max"] < b["lo"]:
                 return False
@@ -352,30 +363,27 @@ class LakeTable:
         touched = [e for e in m["files"] if overlaps(e)]
         carried = [e for e in m["files"] if not overlaps(e)]
         if touched:
-            current = spark.read.option("mergeSchema", "true").parquet(
-                *(os.path.join(self.root, e["path"]) for e in touched)
-            )
-            merged = _latest_image(
-                current.unionByName(batch, allowMissingColumns=True)
+            changes = self._scan(spark, m, [e["path"] for e in touched]).unionByName(
+                batch, allowMissingColumns=True
             )
         else:
-            merged = _latest_image(batch)
-        new_files = self._write_files(merged, n_files)
+            changes = batch
+        new_files = self._write_files(changes, n_files, reduce=_latest_image)
         # MONOTONE log schema (the Delta rule): the commit's column list
         # is the parent manifest's columns plus any the batch added —
-        # never merged.columns alone. Otherwise a later merge whose
+        # never the merged columns alone. Otherwise a later merge whose
         # batch lacks an evolved column and whose pruning touches only
         # pre-evolution files would record a narrower list, and read()
         # would silently drop the evolved column still held by carried
         # files. Types accumulate the same way (parent's win for
-        # carried-only columns; merged's for columns it carries).
+        # carried-only columns; the merge's for columns it carries).
         parent_cols = m.get("columns") or []
         commit_cols = list(parent_cols) + [
-            c for c in merged.columns if c not in parent_cols
+            c for c in changes.columns if c not in parent_cols
         ]
         commit_types = {
             **(m.get("types") or {}),
-            **{f.name: f.dataType.simpleString() for f in merged.schema.fields},
+            **{f.name: f.dataType.simpleString() for f in changes.schema.fields},
         }
         try:
             self._commit(
@@ -393,6 +401,25 @@ class LakeTable:
                     os.remove(os.path.join(self.root, e["path"]))
             raise
         return parent + 1
+
+
+def _key_range(path: str, meta, key: str) -> tuple:
+    """(min, max) of ``key`` in one data file, from its footer's
+    row-group statistics. Where the writer left them out (parquet-mr
+    drops min/max over 4 KiB, e.g. a string key of ~2 KB), the file's
+    key column alone is read instead; a key with no non-NULL value
+    fails loudly."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    col = [meta.schema.column(i).path for i in range(meta.num_columns)].index(key)
+    stats = [meta.row_group(i).column(col).statistics for i in range(meta.num_row_groups)]
+    if all(s is not None and s.has_min_max for s in stats):
+        return min(s.min for s in stats), max(s.max for s in stats)
+    r = pc.min_max(pq.read_table(path, columns=[key]).column(key)).as_py()
+    if r["min"] is None:
+        raise RuntimeError(f"data file {path} has no non-NULL {key!r}")
+    return r["min"], r["max"]
 
 
 # =============================================================================
@@ -512,8 +539,8 @@ def lake_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     final third arrives carrying a NEW ``audit_seq`` column (the
     classic CDC upstream-ALTER-TABLE event). The merge aligns schemas
     by name (NULL fill), records the widened column list in the commit,
-    and never rewrites pre-evolution files — carried files surface
-    NULL for the new column at read time via mergeSchema. The oracle
+    and never rewrites pre-evolution files — carried files read NULL
+    for the new column at the manifest's schema. The oracle
     recomputes the full latest-per-key state in DuckDB with
     audit_seq = ts_ms % 1000 exactly for rows whose WINNING image came
     from the evolved batch — so both the merge algebra and the
@@ -526,11 +553,9 @@ def lake_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"lake_evo_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
         )
     )
-    # resumable build (round-7, was keyed on v1 alone): a failure
-    # between create (commits v0) and the evolve merge must not wedge
-    # the pid-scoped dir — re-running create would die forever on the
-    # O_EXCL FileExistsError for manifest-v0. Each stage is gated on
-    # its own manifest, so a partial build resumes at the merge.
+    # resumable build: each stage is gated on its own manifest, so a
+    # failure between create (v0) and the evolve merge resumes at the
+    # merge instead of dying on create's FileExistsError for v0
     if os.path.exists(os.path.join(root, "manifest-v1.json")):
         t = LakeTable(root, "key")
     else:
@@ -599,9 +624,7 @@ def lake_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     kdf = spark.createDataFrame([(k,) for k in probe_keys], "key bigint")
     bits = {
         r["key"]: r["bit"]
-        for r in kdf.select(
-            "key", F.pmod(F.xxhash64(F.col("key")), F.lit(_BLOOM_BITS)).cast("int").alias("bit")
-        ).collect()
+        for r in kdf.select("key", _bloom_bit(F.col("key")).alias("bit")).collect()
     }
 
     def file_may_contain(entry: dict, key: int) -> bool:
@@ -619,10 +642,7 @@ def lake_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         if any(file_may_contain(e, k) for k in probe_keys)
     ]
     assert hit_files, "probe keys exist, so some file must match"
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *(os.path.join(t.root, p) for p in hit_files)
-    )
-    return df.where(F.col("key").isin(probe_keys)).select(
+    return t._scan(spark, m, hit_files).where(F.col("key").isin(probe_keys)).select(
         "key", "op", "totalprice", "orderstatus", "ts_ms"
     )
 
@@ -633,38 +653,26 @@ def stream_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumed through real micro-batches, each committed to the
     lakehouse table as ONE stats-pruned MERGE snapshot — exactly how a
     Structured Streaming job feeds a Delta/Iceberg table
-    (foreachBatch + MERGE INTO), with the micro-batch id recoverable
-    from the manifest chain for replay idempotence. The final snapshot
-    carries the full latest-per-key oracle; per-batch cost is
-    O(batch + overlapping files)."""
+    (foreachBatch + MERGE INTO). The first non-empty batch commits v0;
+    an empty one commits nothing. No manifest records the batch id: a
+    replayed batch is safe because re-applying a batch is idempotent
+    under the latest-image reduction. Each batch scans its source once
+    in four Spark jobs; the final snapshot carries the full
+    latest-per-key oracle."""
     from ..operators._util import register_tmp_dir
     from ..sources.cdc import cdc_binlog_stream
     from ..session import prepare
     from ..streaming.jobs import run_stream
 
     prepare(spark)
-    root = register_tmp_dir(tempfile.mkdtemp(prefix="lake_stream_"))
-    state: dict = {"table": None}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint()
-        if batch.isEmpty():
-            return
-        if state["table"] is None:
-            state["table"] = LakeTable.create(
-                latest_per_key(batch), root, "key", n_files=4
-            )
-        else:
-            state["table"].merge(spark, batch)
-
+    table = LakeTable(register_tmp_dir(tempfile.mkdtemp(prefix="lake_stream_")), "key")
     run_stream(
         cdc_binlog_stream(spark, sf_dir)
         .writeStream.outputMode("append")
-        .foreachBatch(sink),
+        .foreachBatch(lambda batch_df, batch_id: table.merge(spark, batch_df)),
         "lake_merge",
     )
-    assert state["table"] is not None
-    return state["table"].read(spark).select(
+    return table.read(spark).select(
         "key", "op", "totalprice", "orderstatus", "ts_ms"
     )
 
@@ -727,19 +735,8 @@ def snapshot_diff(
     the merge key yields +I (new key), -D (gone key), or -U/+U pairs
     (changed image) — exactly the retract kinds cdc_retract_stream
     derives from an input changelog, now derived from table state."""
-    m_from = {e["path"]: e for e in table.manifest(v_from)["files"]}
-    m_to = {e["path"]: e for e in table.manifest(v_to)["files"]}
-    only_from = [p for p in m_from if p not in m_to]
-    only_to = [p for p in m_to if p not in m_from]
+    old, new = table.changed(spark, v_from, v_to)
     key = table.key
-
-    def read_files(paths):
-        if not paths:
-            return None
-        return spark.read.parquet(*(os.path.join(table.root, p) for p in paths))
-
-    old = read_files(only_from)
-    new = read_files(only_to)
     if old is None and new is None:
         raise ValueError("identical snapshots")
 

@@ -29,13 +29,14 @@ the merge-overwrite dim store would be hash-bucketed by key range at
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..plans.registry import register
-from ..operators._util import dec
+from ..operators._util import dec, register_tmp_dir
 from .io import load_table, stage_ordered_topic, table_path
 
 # Common CTE (DuckDB) mirroring build_changelog()
@@ -432,72 +433,59 @@ def cdc_retract_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("stream_retract_agg", oracle=_RETRACT_AGG_ORACLE, section="S3,A1,T5")
 def stream_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The retract aggregate in its TRUE streaming form — incremental
-    view maintenance over the binlog topic. Per micro-batch:
+    view maintenance over the binlog topic. The dim store is a
+    lakehouse table (plans/lakehouse.py). Per micro-batch:
 
-    1. the batch's touched keys look up their CURRENT images in the dim
-       store (the streaming ChangelogNormalize — before-images come
-       from state, exactly Flink's operator);
-    2. old touched images retract (−1), the merged new touched images
-       assert (+1), and the signed per-status delta — a handful of
-       rows — merges into the running aggregate (driver-held exact
-       Decimal sums, O(groups) state);
-    3. the dim store is a lakehouse table (plans/lakehouse.py): the
-       before-image lookup reads only manifest-stats-overlapping data
-       files, and the state advance is the same stats-pruned MERGE
-       commit.
+    1. the batch is one stats-pruned MERGE commit: only the data files
+       whose key stats overlap the batch are read and rewritten, so
+       before-images come from state (the streaming ChangelogNormalize,
+       as in Flink's operator);
+    2. the commit's file diff IS the retract stream: rows of the files
+       it replaced retract (−1), rows of the files it wrote assert
+       (+1). Carried files are byte-identical and cannot contribute; a
+       key a rewritten file merely carried along appears on both sides
+       with the same image and cancels. The signed per-status delta —
+       a handful of rows — merges into the running aggregate
+       (driver-held exact Decimal sums, O(groups) state).
 
     Per-batch cost is O(batch + overlapping state files + groups) on
     BOTH the aggregate and the store; the untouched dim majority is
-    neither read nor rewritten. The final running
-    aggregate carries the same full oracle as the batch twin — batch
-    boundaries are invisible because signed DECIMAL addition is
-    associative and commutative."""
+    neither read nor rewritten, and the batch's source is scanned once
+    (by the merge). The final running aggregate carries the same full
+    oracle as the batch twin — batch boundaries are invisible because
+    signed DECIMAL addition is associative and commutative."""
     import tempfile
     from decimal import Decimal
 
+    # lazy import: lakehouse registers queries and imports this module
+    from ..plans.lakehouse import LakeTable
     from ..session import prepare
     from ..streaming.jobs import run_stream
 
     prepare(spark)
     stream = cdc_binlog_stream(spark, sf_dir)
-    store = tempfile.mkdtemp(prefix="cdc_retract_dim_")
-    state: dict = {"table": None}
+    table = LakeTable(register_tmp_dir(tempfile.mkdtemp(prefix="cdc_retract_dim_")), "key")
     agg: dict[str, list] = {}  # status -> [n_orders, Decimal total]
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # lakehouse-backed state: before-image lookup reads only the
-        # manifest-stats-overlapping files, and the state update is the
-        # same stats-pruned MERGE — so BOTH halves of the job are
-        # O(batch + touched files), never O(all keys) (lazy import:
-        # lakehouse registers queries and imports this module)
-        from ..plans.lakehouse import LakeTable
-
-        batch = batch_df.localCheckpoint()
-        touched = batch.select("key").distinct()
-        t: LakeTable | None = state["table"]
-        old_touched = (
-            t.read(batch_df.sparkSession).join(touched, "key", "semi")
-            if t is not None
-            else None
-        )
-        if old_touched is not None:
-            old_touched = old_touched.localCheckpoint()
-        new_touched = merge_upsert(old_touched, batch)
-        signed = new_touched.select(
-            F.col("orderstatus").alias("status"),
-            F.lit(1).alias("sign"),
-            F.col("totalprice").alias("price"),
-        )
-        if old_touched is not None:
-            signed = signed.unionByName(
-                old_touched.select(
-                    F.col("orderstatus").alias("status"),
-                    F.lit(-1).alias("sign"),
-                    F.col("totalprice").alias("price"),
-                )
+        head = table._head()[0]
+        v = table.merge(spark, batch_df)
+        if v == head:  # an empty batch commits nothing
+            return
+        signed = [
+            part.select(
+                F.col("orderstatus").alias("status"),
+                F.lit(sign).alias("sign"),
+                F.col("totalprice").alias("price"),
             )
+            for part, sign in zip(table.changed(spark, v - 1, v), (-1, 1))
+            if part is not None
+        ]
+        if not signed:  # e.g. deletes of keys the table never held
+            return
         delta = (
-            signed.groupBy("status")
+            functools.reduce(DataFrame.unionByName, signed)
+            .groupBy("status")
             .agg(
                 F.sum("sign").cast("bigint").alias("dn"),
                 F.sum(F.col("sign") * dec("price")).alias("dv"),
@@ -508,12 +496,6 @@ def stream_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             cur = agg.setdefault(r["status"], [0, Decimal("0")])
             cur[0] += int(r["dn"])
             cur[1] += Decimal(str(r["dv"])) if r["dv"] is not None else Decimal("0")
-        if t is None:
-            state["table"] = LakeTable.create(
-                latest_per_key(batch), store, "key", n_files=4
-            )
-        else:
-            t.merge(spark, batch)
 
     run_stream(stream.writeStream.outputMode("append").foreachBatch(sink), "retract_agg")
     rows = [

@@ -486,6 +486,8 @@ def stream_late_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     def split_sink(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Observation
 
+        from ..observability import await_observation
+
         # observation rides the SAME pass as the first branch write
         # (the observe node sits below the branch filters, so every
         # batch row flows through it) — no second scan for the max
@@ -510,7 +512,7 @@ def stream_late_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                 branch.drop("us").write.mode("overwrite").parquet(
                     os.path.join(root, name, f"batch={batch_id}")
                 )
-            batch_max = obs.get["max_us"]
+            batch_max = await_observation(obs, "late_split")["max_us"]
             if batch_max is not None:
                 cand = batch_max - allowed_us
                 wm["us"] = cand if threshold is None else max(threshold, cand)

@@ -943,6 +943,192 @@ def test_lakehouse_merge_schema_stays_monotone(spark):
     assert all(r["audit_seq"] is None for r in got.collect())
 
 
+@pytest.mark.parametrize("key_type", ["bigint", "string", "long_string"])
+def test_lakehouse_file_stats_match_spark_aggregate(spark, key_type):
+    """Manifest stats come from the write itself: min/max from the
+    Parquet footers, Bloom bits from an Observation on the write job.
+    For every entry of every snapshot built by create, merge and
+    compact_table they must equal the derivation kept here as the
+    oracle: a Spark aggregate over that one file. Covers a string key
+    (lexicographic, so "10" < "9"), a string key of over 2 KB (the
+    writer leaves its min/max out of the footer, so they are read from
+    the key column), an all-deletes batch and a merge that nets the
+    whole table to zero rows (its empty file is never manifested)."""
+    import os
+    import tempfile
+
+    import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
+
+    from flink_realtime_2024_spark.plans.lakehouse import (
+        _BLOOM_BITS,
+        LakeTable,
+        _bloom_hex,
+        compact_table,
+    )
+
+    key_of = {"bigint": int, "string": str, "long_string": lambda k: "k" * 2100 + str(k)}[key_type]
+    schema = (
+        f"key {'bigint' if key_type == 'bigint' else 'string'}, op string,"
+        " totalprice double, orderstatus string, ts_ms bigint"
+    )
+
+    def rows(keys, op, ts):
+        return spark.createDataFrame(
+            [(key_of(k), op, None if op == "d" else float(k), None if op == "d" else "F", ts)
+             for k in keys],
+            schema,
+        )
+
+    def oracle(path):
+        r = spark.read.parquet(path).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("key").alias("lo"),
+            F.max("key").alias("hi"),
+            F.collect_set(
+                F.pmod(F.xxhash64(F.col("key")), F.lit(_BLOOM_BITS)).cast("int")
+            ).alias("bits"),
+        ).first()
+        assert r["n"] > 0, f"zero-row file manifested: {path}"
+        return {"min": r["lo"], "max": r["hi"], "bloom": _bloom_hex(r["bits"])}
+
+    def check(t):
+        for v in range(t.latest_version() + 1):
+            for e in t.manifest(v)["files"]:
+                want = oracle(os.path.join(t.root, e["path"]))
+                assert {k: e[k] for k in want} == want, (v, e["path"])
+
+    t = LakeTable.create(rows(range(300), "c", 1), tempfile.mkdtemp(prefix="lake_st_"), "key", 4)
+    t.merge(spark, rows(range(10, 41), "u", 2).unionByName(rows(range(400, 411), "c", 2)))
+    t.merge(spark, rows(range(250, 261), "d", 3))  # all deletes
+    compact_table(t, spark, n_files=3)
+    check(t)
+    assert len(t.manifest(t.latest_version())["files"]) == 3
+    stats = pq.read_metadata(os.path.join(t.root, t.manifest(0)["files"][0]["path"])) \
+        .row_group(0).column(0).statistics
+    assert stats.has_min_max == (key_type != "long_string")
+
+    small = LakeTable.create(rows(range(10), "c", 1), tempfile.mkdtemp(prefix="lake_st0_"), "key", 2)
+    v = small.merge(spark, rows(range(10), "d", 2))
+    assert small.manifest(v)["files"] == []
+    check(small)
+
+
+def test_lakehouse_commit_survives_failed_manifest_write(spark, monkeypatch):
+    """A commit that dies while writing its manifest must not publish
+    it: the head stays at v(N-1) and readable, no temp name is taken
+    for a head, and the next commit still takes vN. Under an O_EXCL
+    create followed by json.dump the partial manifest-vN.json would be
+    the head and the table unreadable."""
+    import json
+    import os
+    import tempfile
+
+    import pyspark.sql.functions as F
+    import pytest as _pytest
+
+    from flink_realtime_2024_spark.plans import lakehouse
+    from flink_realtime_2024_spark.plans.lakehouse import LakeTable
+
+    base = spark.range(0, 50).select(
+        F.col("id").alias("key"), F.lit("c").alias("op"),
+        (F.col("id") * 1.0).alias("totalprice"),
+        F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
+    )
+    root = tempfile.mkdtemp(prefix="lake_crash_")
+    t = LakeTable.create(base, root, "key", n_files=2)
+    upd = spark.createDataFrame(
+        [(5, "u", 99.0, "F", 2)],
+        "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint",
+    )
+    before = {tuple(r) for r in t.read(spark).collect()}
+    real_dump = json.dump
+
+    def dump_half(obj, fh, **kwargs):
+        text = json.dumps(obj)
+        fh.write(text[: len(text) // 2])
+        fh.flush()
+        raise OSError("injected: crash mid-manifest")
+
+    with monkeypatch.context() as m:
+        m.setattr(lakehouse.json, "dump", dump_half)
+        with _pytest.raises(OSError, match="injected"):
+            t.merge(spark, upd)
+    assert json.dump is real_dump
+    assert t.latest_version() == 0
+    assert sorted(os.listdir(root)) == ["data", "manifest-v0.json"]
+    assert {tuple(r) for r in LakeTable(root, "key").read(spark).collect()} == before
+    assert t.merge(spark, upd) == 1
+    got = {r["key"]: r["totalprice"] for r in t.read(spark).collect()}
+    assert got[5] == 99.0 and len(got) == 50
+
+
+def test_lakehouse_empty_batch_commits_nothing(spark):
+    """A zero-row batch commits no snapshot: ``merge`` returns the head
+    and adds no manifest. On a table with no snapshot yet that head is
+    -1 (``latest_version`` still raises) and the first non-empty merge
+    then commits v0. The batch's Observation must post over an empty
+    checkpoint, both from an input with partitions and from one with
+    none."""
+    import os
+    import tempfile
+
+    import pytest as _pytest
+
+    from flink_realtime_2024_spark.plans.lakehouse import LakeTable
+
+    schema = "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint"
+    rows = spark.createDataFrame([(1, "c", 1.0, "O", 1), (2, "c", 2.0, "O", 1)], schema)
+    empties = [
+        spark.createDataFrame(spark.sparkContext.emptyRDD(), schema),
+        rows.where("key < 0"),
+    ]
+    assert [e.rdd.getNumPartitions() > 0 for e in empties] == [False, True]
+    root = tempfile.mkdtemp(prefix="lake_empty_")
+    t = LakeTable(root, "key")
+    assert [t.merge(spark, e) for e in empties] == [-1, -1]
+    assert os.listdir(root) == []
+    with _pytest.raises(FileNotFoundError):
+        t.latest_version()
+    assert t.merge(spark, rows) == 0
+    assert [t.merge(spark, e) for e in empties] == [0, 0]
+    assert sorted(os.listdir(root)) == ["data", "manifest-v0.json"]
+    assert t.manifest(0)["operation"] == "merge"
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == sorted(
+        tuple(r) for r in rows.collect()
+    )
+
+
+def test_lakehouse_merge_reapply_is_idempotent(spark):
+    """Replay safety of the foreachBatch sink: no manifest records a
+    batch id, so a batch replayed after a crash is merged again. The
+    latest-image reduction makes that harmless — merging the same batch
+    twice (inserts, updates, deletes, an in-batch duplicate key) leaves
+    content identical to merging it once."""
+    import tempfile
+
+    import pyspark.sql.functions as F
+
+    from flink_realtime_2024_spark.plans.lakehouse import LakeTable
+
+    base = spark.range(0, 200).select(
+        F.col("id").alias("key"), F.lit("c").alias("op"),
+        (F.col("id") * 1.0).alias("totalprice"),
+        F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
+    )
+    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_idem_"), "key", n_files=4)
+    batch = spark.createDataFrame(
+        [(5, "u", 50.0, "F", 2), (5, "u", 51.0, "F", 3), (70, "d", None, None, 2),
+         (150, "u", 1.5, "P", 2), (250, "c", 2.5, "O", 2), (3, "u", 0.5, "F", 0)],
+        "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint",
+    )
+    once = {tuple(r) for r in t.read(spark, t.merge(spark, batch)).collect()}
+    twice = {tuple(r) for r in t.read(spark, t.merge(spark, batch)).collect()}
+    assert twice == once
+    got = {r[0]: r for r in once}
+    assert got[5][2] == 51.0 and 70 not in got and got[3][2] == 3.0 and len(got) == 200
+
+
 def test_latest_image_schema_generic_tiebreak(spark):
     """_latest_image on a table WITHOUT the orders columns (the
     round-6 advisor's AnalysisException repro) must work and resolve

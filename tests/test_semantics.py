@@ -982,6 +982,24 @@ def test_observation_metrics_single_pass(spark):
     assert got["n_null"] == n_out  # $.missing never present
 
 
+def test_await_observation_raises_without_action(spark, monkeypatch):
+    """The bounded Observation wait: metrics an action has posted come
+    back, and an Observation no action ran on raises instead of
+    blocking its caller forever (a bare ``obs.get`` would hang)."""
+    import pytest as _pytest
+
+    from flink_realtime_2024_spark import observability
+    from flink_realtime_2024_spark.observability import await_observation, observe_counts
+
+    monkeypatch.setattr(observability, "_OBSERVATION_WAIT_S", 0.5)
+    ran_df, ran = observe_counts(spark.range(5), "ran", n=F.count(F.lit(1)))
+    ran_df.collect()
+    assert await_observation(ran, "test")["n"] == 5
+    _, idle = observe_counts(spark.range(5), "idle", n=F.count(F.lit(1)))
+    with _pytest.raises(RuntimeError, match="never posted"):
+        await_observation(idle, "test")
+
+
 def test_pq_reconstruction_and_recall(spark):
     """PQ quality gates: (1) reconstruction preserves direction — mean
     cosine between each vector and its decoded codes well above the

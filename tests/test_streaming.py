@@ -694,3 +694,45 @@ def test_stream_stream_join_state_is_bounded(spark):
     # and the join itself was correct: one click per purchase
     got = spark.read.parquet(out)
     assert got.count() == n_batches * len(list(users))
+
+
+def test_stream_lake_merge_jobs_per_batch_and_single_scan(spark, monkeypatch):
+    """stream_lake_merge's per-batch cost, in counters that do not
+    depend on the machine: every micro-batch runs at most 4 Spark jobs
+    in the query's runId job group (one checkpoint of the batch with
+    its stats observed, then the range sample, the shuffle and the
+    write), and the source is scanned exactly once — the rows the
+    query's progress reports equal the staged topic's rows (a second
+    scan of a batch would add its rows again)."""
+    import re
+
+    from flink_realtime_2024_spark.plans.lakehouse import stream_lake_merge
+    from flink_realtime_2024_spark.sources.cdc import build_changelog
+    from flink_realtime_2024_spark.streaming import jobs
+
+    queries = []
+    real_run_stream = jobs.run_stream
+
+    def capture(df_writer, tag):
+        q = real_run_stream(df_writer, tag)
+        queries.append(q)
+        return q
+
+    monkeypatch.setattr(jobs, "run_stream", capture)
+    sc = spark.sparkContext._jsc.sc()
+    first_job = sc.dagScheduler().numTotalJobs()
+    stream_lake_merge(spark, SF_DIR)
+    sc.listenerBus().waitUntilEmpty(60_000)
+    (q,) = queries
+    store = sc.statusStore()
+    per_batch: dict[str, int] = {}
+    for jid in range(first_job, sc.dagScheduler().numTotalJobs()):
+        job = store.job(jid)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == str(q.runId):
+            desc = job.description().get() if job.description().isDefined() else ""
+            batch = re.search(r"batch = (\d+)", desc).group(1)
+            per_batch[batch] = per_batch.get(batch, 0) + 1
+    progress = q.recentProgress
+    assert len(per_batch) == len(progress) >= 2, (per_batch, len(progress))
+    assert max(per_batch.values()) <= 4, per_batch
+    assert sum(p["numInputRows"] for p in progress) == build_changelog(spark, SF_DIR).count()
