@@ -1238,26 +1238,6 @@ def _streaming_probe(spark) -> dict:
                     sorted(stages.items(), key=lambda kv: -kv[1])
                 ),
             }
-            # the one tuning lever the breakdown points at: addBatch
-            # (per-batch engine+sink work) dominates, so measure the
-            # same id with 2 files per trigger (half the batches) to
-            # quantify what batch-granularity amortization buys. Knob
-            # stays at 1 by default — the semantic tests need the
-            # multi-batch replay.
-            os.environ["SPARK_GRAFT_STREAM_FILES_PER_TRIGGER"] = "2"
-            try:
-                t0 = time.perf_counter()
-                qs[name].builder(spark, SF_DIR).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                w2 = time.perf_counter() - t0
-                probe[name]["events_per_sec_files2"] = int(n_events / w2)
-            except Exception as e:
-                # the tuning measurement must not clobber the primary
-                # numbers already recorded for this id
-                probe[name]["files2_error"] = f"{type(e).__name__}: {e}"[:120]
-            finally:
-                os.environ.pop("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER", None)
         except Exception as e:
             probe[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
     return {"n_events": n_events, "queries": probe}

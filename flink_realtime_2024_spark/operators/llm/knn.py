@@ -619,9 +619,9 @@ def llm_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per scan task — the unclustered write left up to scan_width ×
         # ncent tiny files, which the probed read then paid for in
         # listing and per-file open cost on every query). Width = the
-        # index's own list count, the same tablet idiom as
-        # stream_agg_merge; a 100 TB index would add maxRecordsPerFile
-        # to split oversized lists.
+        # index's own list count, not the session's shuffle width; a
+        # 100 TB index would add maxRecordsPerFile to split oversized
+        # lists.
         .repartition(_IVF_NCENT, "centroid_id")
         .write.partitionBy("centroid_id")
         .parquet(tmp),

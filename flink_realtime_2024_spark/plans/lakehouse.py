@@ -18,8 +18,9 @@ first principles on stdlib + parquet:
   key in the manifest; a MERGE reads and rewrites ONLY the files whose
   key range intersects the incoming batch (everything else is carried
   into the new snapshot by reference) — the Delta/Iceberg MERGE INTO
-  shape, and the durable version of what stream_agg_merge does with
-  buckets;
+  shape. The merge's per-key reduction is a parameter: the latest
+  image (a UNIQUE-KEY / HBase upsert) by default, or a sum
+  (``stream_agg_merge``'s Doris AGGREGATE-KEY table);
 - every write (create, merge, compact) is one materialization of its
   input, one range shuffle and one file write: the file stats come from
   the write itself (Parquet footers, an Observation for the Bloom
@@ -85,41 +86,6 @@ def _bloom_hex(positions) -> str:
 
 def _bloom_intersects(a_hex: str, b_hex: str) -> bool:
     return any(x & y for x, y in zip(bytes.fromhex(a_hex), bytes.fromhex(b_hex)))
-
-
-def _latest_image(changelog: DataFrame) -> DataFrame:
-    """Schema-generic twin of ``sources.cdc.latest_per_key``: the SAME
-    (ts_ms, op-precedence, image) MAX_BY ordering — bit-identical
-    results on the standard changelog schema — but the winning image
-    struct carries EVERY column of the input, so add-column batches
-    flow through the merge reduction without being projected away.
-
-    After (ts_ms, op-precedence) the ordering struct appends every
-    remaining ORDERABLE column in input-column order, so any schema
-    with ``key``/``op``/``ts_ms`` works and ties resolve
-    deterministically even on an evolved column. Spark's struct
-    ordering ranks NULL below any value, which on the standard schema
-    matches the oracle's COALESCE(totalprice,-1)/COALESCE(orderstatus,'')
-    DESC (prices are positive, statuses non-empty)."""
-    from pyspark.sql.types import AtomicType
-
-    prec = F.when(F.col("op") == "d", 2).when(F.col("op") == "u", 1).otherwise(0)
-    others = [c for c in changelog.columns if c != "key"]
-    tiebreak = [
-        F.col(f.name)
-        for f in changelog.schema.fields
-        if f.name not in ("key", "op", "ts_ms")
-        and isinstance(f.dataType, AtomicType)
-    ]
-    latest = changelog.groupBy("key").agg(
-        F.max_by(
-            F.struct(*[F.col(c) for c in others]),
-            F.struct(F.col("ts_ms"), prec, *tiebreak),
-        ).alias("last")
-    )
-    return latest.select(
-        "key", *[F.col(f"last.{c}").alias(c) for c in others]
-    ).filter(F.col("op") != "d")
 
 
 class LakeTable:
@@ -191,7 +157,7 @@ class LakeTable:
         and xxhash64 Bloom bitmap.
 
         One shuffle: ``df`` is range-partitioned on the key FIRST and
-        ``reduce`` (the merge's latest-image aggregate) runs inside
+        ``reduce`` (the merge's per-key aggregate) runs inside
         those partitions, whose RangePartitioning(key) satisfies its
         clustering; AQE never coalesces an explicit-width repartition,
         so task i writes ``part-<i>``. The stats come from the write
@@ -203,7 +169,14 @@ class LakeTable:
 
         os.makedirs(self.data_dir, exist_ok=True)
         out = df.repartitionByRange(n_files, self.key)
-        out = (reduce(out) if reduce else out).sortWithinPartitions(self.key)
+        if reduce:
+            out = reduce(out)
+            # the commit records df's types: files of any other type
+            # would fail every later read of the table
+            want, got = ({f.name: f.dataType.simpleString() for f in x.schema.fields} for x in (df, out))
+            if got != want:
+                raise ValueError(f"reduce changed the column types {want} to {got}")
+        out = out.sortWithinPartitions(self.key)
         # spark_partition_id() cannot be evaluated inside observe():
         # project it as a column, observe that, then drop it
         obs = Observation()
@@ -297,11 +270,15 @@ class LakeTable:
         batch: DataFrame,
         n_files: int = 2,
         max_retries: int = 3,
+        reduce=latest_per_key,
     ) -> int:
-        """MERGE INTO: upsert/delete the changelog ``batch`` into the
-        table. File-level pruning via manifest stats — only data files
-        whose [min,max] key range AND key Bloom bitmap both intersect
-        the batch's are read and rewritten; disjoint files carry over
+        """MERGE INTO: ``reduce`` folds the touched files' rows and
+        ``batch`` to one row per key, keeping every column at its input
+        type. The default, the latest image, upserts/deletes the
+        changelog ``batch`` into the table. File-level pruning via
+        manifest stats — only data files whose [min,max] key range AND
+        key Bloom bitmap both intersect the batch's are read and
+        rewritten; disjoint files carry over
         BY REFERENCE into the new snapshot. Returns the new version; an
         empty batch commits nothing and returns the head (-1 on a table
         with no snapshot yet, which gets its v0 from its first non-empty
@@ -314,8 +291,10 @@ class LakeTable:
         stats shape Delta/Iceberg use (a false Bloom collision only
         costs an unnecessary rewrite). The rewrite is one range shuffle
         and one write (``_write_files``): four Spark jobs in all.
-        Re-applying a batch is idempotent: the latest-image reduction
-        over (current rows ∪ batch) picks the same winner per key.
+        Under the latest-image reduction re-applying a batch is
+        idempotent: it picks the same winner per key over (current rows
+        ∪ batch). Other reductions are not (a sum counts a replayed
+        batch twice), and no manifest records a batch id.
 
         CONCURRENCY: a lost manifest race removes the attempt's
         uncommitted files and RE-DERIVES the merge against the new head
@@ -340,7 +319,7 @@ class LakeTable:
         last_err: Exception | None = None
         for _ in range(max_retries + 1):
             try:
-                return self._merge_attempt(spark, batch, n_files, b, batch_bloom)
+                return self._merge_attempt(spark, batch, n_files, b, batch_bloom, reduce)
             except FileExistsError as e:
                 last_err = e  # lost the race — re-derive against new head
         raise RuntimeError(
@@ -348,7 +327,7 @@ class LakeTable:
         ) from last_err
 
     def _merge_attempt(
-        self, spark: SparkSession, batch: DataFrame, n_files: int, b, batch_bloom: str
+        self, spark: SparkSession, batch: DataFrame, n_files: int, b, batch_bloom: str, reduce
     ) -> int:
         parent, m = self._head()
 
@@ -368,7 +347,7 @@ class LakeTable:
             )
         else:
             changes = batch
-        new_files = self._write_files(changes, n_files, reduce=_latest_image)
+        new_files = self._write_files(changes, n_files, reduce=reduce)
         # MONOTONE log schema (the Delta rule): the commit's column list
         # is the parent manifest's columns plus any the batch added —
         # never the merged columns alone. Otherwise a later merge whose
@@ -655,10 +634,10 @@ def stream_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming job feeds a Delta/Iceberg table
     (foreachBatch + MERGE INTO). The first non-empty batch commits v0;
     an empty one commits nothing. No manifest records the batch id: a
-    replayed batch is safe because re-applying a batch is idempotent
-    under the latest-image reduction. Each batch scans its source once
-    in four Spark jobs; the final snapshot carries the full
-    latest-per-key oracle."""
+    replayed batch is safe only because this merge uses the
+    latest-image reduction, under which re-applying a batch is
+    idempotent. Each batch scans its source once in four Spark jobs;
+    the final snapshot carries the full latest-per-key oracle."""
     from ..operators._util import register_tmp_dir
     from ..sources.cdc import cdc_binlog_stream
     from ..session import prepare

@@ -21,10 +21,11 @@ DuckDB can reproduce it exactly: every order inserts ('c') at its
 orderdate; finished ('F') orders get an update ('u') a day later raising
 o_totalprice 10%; every 50th orderkey gets a delete ('d') two days later.
 
-Scale notes: latest-per-key is one hash shuffle on the key + per-key
-sort (row_number) — linear in changelog size, no driver involvement;
-the merge-overwrite dim store would be hash-bucketed by key range at
-100 TB so each micro-batch rewrites only touched buckets.
+Scale notes: latest-per-key is one hash shuffle on the key with a
+map-side-combined MAX_BY — linear in changelog size, no driver
+involvement. The merge-overwrite dim store rewrites all of its state
+each batch; at 100 TB it would be a ``plans/lakehouse.py`` table,
+whose MERGE rewrites only the files whose key stats overlap the batch.
 """
 
 from __future__ import annotations
@@ -107,7 +108,10 @@ def build_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def latest_per_key(changelog: DataFrame) -> DataFrame:
     """Materialize current state from a changelog: last image per key by
-    (ts_ms, op-precedence), deletes drop the key.
+    (ts_ms, op-precedence), deletes drop the key. Schema-generic: any
+    input with ``key``/``op``/``ts_ms`` works, and the winning image
+    carries EVERY input column, so add-column batches flow through a
+    lakehouse merge (whose default reduction this is) unprojected.
 
     Implemented as MAX_BY over an ordering struct rather than a
     row_number window: an aggregate gets map-side partial combining
@@ -115,25 +119,32 @@ def latest_per_key(changelog: DataFrame) -> DataFrame:
     the shuffle), while a window must shuffle and sort every changelog
     row — at 100 TB of CDC that is the difference between shuffling
     O(keys) and O(events)."""
+    from pyspark.sql.types import AtomicType
+
     # op precedence breaks same-ts ties deterministically: d > u > c;
     # remaining ties (identical ts+op — possible in a replayed/merged
-    # changelog) are broken by the image itself so the result is a
-    # deterministic function of the input SET, not of arrival order
+    # changelog) are broken by every other ORDERABLE column in input
+    # order, so the result is a deterministic function of the input
+    # SET, not of arrival order. Struct ordering ranks NULL below any
+    # value, which on the changelog schema matches the oracle's
+    # COALESCE(totalprice,-1)/COALESCE(orderstatus,'') DESC (prices are
+    # positive, statuses non-empty).
     prec = F.when(F.col("op") == "d", 2).when(F.col("op") == "u", 1).otherwise(0)
+    others = [c for c in changelog.columns if c != "key"]
+    tiebreak = [
+        F.col(f.name)
+        for f in changelog.schema.fields
+        if f.name not in ("key", "op", "ts_ms") and isinstance(f.dataType, AtomicType)
+    ]
     latest = changelog.groupBy("key").agg(
         F.max_by(
-            F.struct("op", "totalprice", "orderstatus", "ts_ms"),
-            F.struct(
-                F.col("ts_ms"),
-                prec,
-                F.coalesce(F.col("totalprice"), F.lit(-1.0)),
-                F.coalesce(F.col("orderstatus"), F.lit("")),
-            ),
+            F.struct(*[F.col(c) for c in others]),
+            F.struct(F.col("ts_ms"), prec, *tiebreak),
         ).alias("last")
     )
-    return latest.filter(F.col("last.op") != "d").select(
-        "key", "last.op", "last.totalprice", "last.orderstatus", "last.ts_ms"
-    )
+    return latest.select(
+        "key", *[F.col(f"last.{c}").alias(c) for c in others]
+    ).filter(F.col("op") != "d")
 
 
 _LATEST_ORACLE = f"""
@@ -205,10 +216,11 @@ def dim_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     changelog into ascending event-time ranges, incremental
     merge-upsert converges to exactly the one-shot latest-per-key
     materialization — so the job carries the FULL ``cdc_latest_row``
-    oracle (also asserted in tests/test_cdc.py).
+    oracle (also asserted in
+    tests/test_semantics.py::test_dim_upsert_equals_latest_row).
 
     The batch loop is the test-harness replay of the streaming
-    foreachBatch sink (streaming/sinks.py) — same merge function.
+    foreachBatch sink ``stream_cdc_upsert`` — same merge function.
     """
     import tempfile
 

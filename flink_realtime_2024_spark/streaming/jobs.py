@@ -25,7 +25,6 @@ import os
 import tempfile
 
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
@@ -102,22 +101,12 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch loader so batch twins share expressions."""
     prepare(spark)
     staged = _staged_events_dir(spark, sf_dir)
-    # micro-batch granularity: 1 file per trigger by default — the
-    # semantic tests (checkpoint resume, cross-batch dedup, late
-    # re-fire) rely on the replay arriving as multiple batches. The
-    # env knob exists because the r11 streaming attribution showed
-    # addBatch (per-batch engine+sink work) bounds throughput at ~85%
-    # of wall; batching more files per trigger amortizes the fixed
-    # per-batch cost — a deployment replaying history can raise it,
-    # the bench probe measures both settings.
-    try:
-        fpt = int(os.environ.get("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER", "1"))
-    except ValueError:
-        fpt = 1  # malformed env must not break every stream builder
-    fpt = max(fpt, 1)
+    # micro-batch granularity: 1 file per trigger — the semantic tests
+    # (checkpoint resume, cross-batch dedup, late re-fire) rely on the
+    # replay arriving as multiple batches
     raw = (
         spark.readStream.schema(spark.read.parquet(staged).schema)
-        .option("maxFilesPerTrigger", fpt)
+        .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
     return events_ts_to_timestamp(raw)
@@ -832,18 +821,6 @@ def stream_neardup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out)
 
 
-_AGG_MERGE_BUCKETS = 16  # state-table hash buckets (Doris tablet analogue)
-
-# schema of one state-bucket file as written by stream_agg_merge's merge
-# (bucket is a partition column at write time, so it is NOT in the file)
-_AGG_MERGE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DecimalType(18, 4)),
-    ]
-)
-
 _AGG_MERGE_ORACLE = """
 SELECT user_id,
        COUNT(*) AS n_events,
@@ -853,10 +830,19 @@ GROUP BY user_id
 """
 
 
+def sum_per_user(rows: DataFrame) -> DataFrame:
+    """stream_agg_merge's merge reduction: per-user sums of the count
+    and the DECIMAL value, cast back to the table's column types."""
+    return rows.groupBy("user_id").agg(
+        F.sum("n_events").cast("bigint").alias("n_events"),
+        F.sum("total_value").cast("decimal(18,4)").alias("total_value"),
+    )
+
+
 @register("stream_agg_merge", oracle=_AGG_MERGE_ORACLE, section="S7,S2,T6,A1", bench=True)
 def stream_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7 Doris AGGREGATE-KEY serving model: each micro-batch computes a
-    PARTIAL aggregate and MERGES it into the serving table (sum-merge on
+    """S7 Doris AGGREGATE-KEY serving model: each micro-batch is
+    MERGED into the serving table as a partial aggregate (sum-merge on
     the key) — the third Doris table model next to the UNIQUE-KEY upsert
     (stream_cdc_upsert) and the partitioned duplicate-key serving table
     (serving_partition_prune). The stream never replays old batches: the
@@ -868,119 +854,39 @@ def stream_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, so the merged result is bit-identical to the one-shot
     batch aggregate the oracle computes.
 
-    Incremental merge at bucket granularity: the state table is
-    hash-partitioned into ``_AGG_MERGE_BUCKETS`` key buckets (Doris
-    tablets; a Delta/Iceberg MERGE target's file groups). Each
-    micro-batch aggregates only its own rows, collects its touched
-    bucket ids (≤ bucket-count values, bounded driver state), reads
-    back ONLY those buckets' current state files, and rewrites ONLY
-    those buckets into a fresh versioned dir — untouched buckets keep
-    their existing files via the per-bucket pointer map. Per-batch
-    cost is O(batch + touched-bucket state), not O(all keys): at 10⁹
-    users and a batch touching 3% of buckets, 97% of the state table
-    is neither read nor written. Versioned dirs (not in-place
-    overwrite) keep the sequential availableNow rounds race-free;
-    a lakehouse MERGE INTO is the same shape with commit-log-managed
-    versions.
+    The serving table is a ``plans/lakehouse.py`` table keyed on
+    ``user_id`` — the same store as the UNIQUE-KEY paths, merged with a
+    sum reduction instead of the latest image. Each micro-batch maps
+    its raw rows to (user_id, 1, value) (count := sum of 1s —
+    associative, so no per-batch pre-aggregation job is needed) and is
+    one stats-pruned MERGE commit: only the data files whose key stats
+    overlap the batch are read and rewritten, the rest carry over by
+    reference, and the batch's source is scanned once. Per-batch cost
+    is O(batch + overlapping state), not O(all keys).
 
-    Scale: the per-batch partial is a map-side-combined groupBy of the
-    batch only; the merge joins two bucket-sized aggregates. At 100 TB
-    of history the state table is still only O(users)."""
+    No manifest records the batch id, and a sum is not idempotent: a
+    replayed batch (a restart between the commit and the offset
+    commit) is counted twice.
+
+    Scale: the merge's sum runs inside the write's range partitions,
+    so it costs no extra shuffle. At 100 TB of history the state table
+    is still only O(users)."""
+    from ..operators._util import dec, register_tmp_dir
+    from ..plans.lakehouse import LakeTable
+
     ev = events_stream(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="agg_merge_")
-    bucket_path: dict[int, str] = {}  # bucket id -> current state dir
-
-    from ..operators._util import dec
-
-    bucket = F.pmod(F.xxhash64("user_id"), F.lit(_AGG_MERGE_BUCKETS)).cast("int")
+    table = LakeTable(register_tmp_dir(tempfile.mkdtemp(prefix="agg_merge_")), "user_id")
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        # No per-batch persist, no pre-aggregation job (r14 opt, 2nd
-        # pass): the raw batch is mapped straight to merge-shaped rows
-        # (count := sum of 1s — associative, so pre-aggregating per
-        # batch and merging raw rows produce identical state), and the
-        # touched-bucket discovery is one tiny map-side-combined
-        # distinct over ≤ bucket-count values on the raw batch. The
-        # single real aggregation happens once, inside the merge job.
         rows = batch_df.select(
             "user_id",
             F.lit(1).cast("bigint").alias("n_events"),
             dec("value").alias("total_value"),
-            bucket.alias("bucket"),
         )
-        # touched-bucket discovery as ONE global collect_set aggregate
-        # (r15): map-side partial collect_set over ≤ bucket-count values
-        # per task, a single-row reduce — no 32-partition distinct
-        # exchange + collect round trip per micro-batch (measured with
-        # the width change below: 3.49 → 2.84 s over the 4-batch replay)
-        touched = sorted(rows.agg(F.collect_set("bucket")).first()[0])
-        prev_dirs = [bucket_path[b] for b in touched if b in bucket_path]
-        if prev_dirs:
-            # leaf bucket=k dirs hold plain files (bucket was a partition
-            # column at write time); re-derive it from the key — cheaper
-            # and simpler than cross-version partition discovery. The
-            # state schema is fixed by the write below — passing it
-            # explicitly skips a per-batch footer-sampling pass over
-            # every touched bucket file (r14 opt: schema inference is
-            # driver-side I/O repeated once per micro-batch forever).
-            prev = (
-                spark.read.schema(_AGG_MERGE_STATE_SCHEMA)
-                .parquet(*prev_dirs)
-                .withColumn("bucket", bucket)
-            )
-            rows = prev.select(
-                "user_id", "n_events", "total_value", "bucket"
-            ).unionByName(rows)
-        # ONE exchange for merge + layout (r14 opt): repartition on
-        # ``bucket`` FIRST — hash partitioning on a subset of the
-        # grouping keys satisfies the aggregate's clustered
-        # distribution (every (user_id, bucket) group lives in one
-        # bucket), so the merge groupBy runs partition-local and the
-        # bucket-per-file layout needs no second shuffle. The exchange
-        # key being ``bucket`` (not the group key) means no map-side
-        # combine before it — per-batch shuffle volume is the raw
-        # micro-batch, which the trigger bounds; that trade buys one
-        # exchange + one cache round-trip per batch.
-        # width = the operator's OWN tablet count, not the session's
-        # shuffle width (r15): the merge exchange needs at most one
-        # reduce task per bucket (every (user_id, bucket) group lives in
-        # exactly one), and the task count is what bounds the per-batch
-        # commit overhead — _AGG_MERGE_BUCKETS is the operator's scale
-        # knob (a 10⁹-user deployment raises it), so the width stays
-        # scale-parameterised rather than local-tuned.
-        part = (
-            rows.repartition(_AGG_MERGE_BUCKETS, "bucket")
-            .groupBy("user_id", "bucket")
-            .agg(
-                F.sum("n_events").cast("bigint").alias("n_events"),
-                F.sum("total_value").alias("total_value"),
-            )
-        )
-        out = os.path.join(root, f"v{batch_id}")
-        (
-            part.select(
-                "user_id",
-                "n_events",
-                F.col("total_value").cast("decimal(18,4)").alias("total_value"),
-                "bucket",
-            )
-            # one file per touched bucket (not shuffle-width × buckets):
-            # the serving store's file count stays O(buckets), and each
-            # bucket dir is a single sorted run for point lookups
-            .sortWithinPartitions("user_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(out)
-        )
-        for b in touched:
-            bucket_path[b] = os.path.join(out, f"bucket={b}")
+        table.merge(spark, rows, reduce=sum_per_user)
 
     run_stream(ev.writeStream.outputMode("append").foreachBatch(merge), "agg_merge")
-    assert bucket_path, "no state buckets written"
-    # same explicit schema as the per-batch merge read: the serving
-    # read over all bucket dirs needs no footer-sampling pass either
-    final = spark.read.schema(_AGG_MERGE_STATE_SCHEMA).parquet(*bucket_path.values())
-    return final.select(
+    return table.read(spark).select(
         "user_id",
         "n_events",
         F.col("total_value").cast("double").alias("total_value"),

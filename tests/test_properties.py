@@ -5,7 +5,9 @@ empty sessions)."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from decimal import Decimal
+
+from hypothesis import example, given, settings, strategies as st
 
 # each example runs a Spark job — keep the count tight, the generated
 # batches rich
@@ -538,6 +540,64 @@ def test_lakehouse_snapshot_diff_matches_dict_diff(spark, batches):
     assert got == want, (got, want)
 
 
+@st.composite
+def sum_batches(draw):
+    """1-4 batches of (user_id, value) rows. Each batch draws its keys
+    from a low range, a disjoint high range or both, so a merge may
+    overlap only some of the table's files and carry the rest."""
+    batches = []
+    for _ in range(draw(st.integers(1, 4))):
+        lo, hi = draw(st.sampled_from([(0, 9), (100, 109), (0, 109)]))
+        batches.append([
+            (
+                draw(st.integers(lo, hi)),
+                draw(st.decimals(Decimal("-1000"), Decimal("1000"), places=4)),
+            )
+            for _ in range(draw(st.integers(1, 10)))
+        ])
+    return batches
+
+
+@given(sum_batches())
+@example([[(0, Decimal("1.5")), (9, Decimal("-2.25"))], [(100, Decimal("0.0001"))],
+          [(5, Decimal("3")), (101, Decimal("-0.5"))]])
+@settings(**_SETTINGS)
+def test_lakehouse_sum_merge_matches_dict_sum(spark, batches):
+    """MERGE commits with stream_agg_merge's sum reduction must leave
+    the table equal to a dict of exact per-key sums of the same
+    batches, and every file whose key range misses a batch's must be
+    carried into the new snapshot by reference, not rewritten."""
+    import tempfile
+
+    import pyspark.sql.functions as F
+
+    from flink_realtime_2024_spark.plans.lakehouse import LakeTable
+    from flink_realtime_2024_spark.streaming.jobs import sum_per_user
+
+    table = LakeTable(tempfile.mkdtemp(prefix="lake_sum_prop_"), "user_id")
+    want: dict = {}
+    for rows in batches:
+        for k, v in rows:
+            n, total = want.get(k, (0, Decimal(0)))
+            want[k] = (n + 1, total + v)
+        head, m = table._head()
+        df = spark.createDataFrame(rows, "user_id bigint, v decimal(18,4)").select(
+            "user_id", F.lit(1).cast("bigint").alias("n_events"), F.col("v").alias("total_value")
+        )
+        v = table.merge(spark, df, n_files=2, reduce=sum_per_user)
+        assert v == head + 1
+        lo, hi = min(k for k, _ in rows), max(k for k, _ in rows)
+        paths = {e["path"] for e in table.manifest(v)["files"]}
+        for e in m["files"]:
+            if e["max"] < lo or e["min"] > hi:
+                assert e["path"] in paths, (e, lo, hi)
+    got = {
+        r["user_id"]: (r["n_events"], r["total_value"])
+        for r in table.read(spark).collect()
+    }
+    assert got == want, (got, want)
+
+
 @given(
     st.integers(min_value=1, max_value=40),
     st.integers(min_value=1, max_value=40),
@@ -685,8 +745,9 @@ def test_bpe_train_fuzzed_vs_reference(spark, words):
 def test_merge_upsert_split_equivalence(spark, rows, split_ts):
     """Applying a changelog in two EVENT-TIME-ORDERED batches through
     merge_upsert must equal the one-shot latest-per-key materialization
-    for ANY split point — the invariant dim_upsert and the lakehouse
-    MERGE path rely on."""
+    for ANY split point — the invariant dim_upsert and stream_cdc_upsert
+    rely on. (LakeTable.merge runs the same latest_per_key reduction;
+    its replay property is test_lakehouse_merge_matches_dict_state.)"""
     from flink_realtime_2024_spark.sources.cdc import latest_per_key, merge_upsert
 
     schema = "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint"

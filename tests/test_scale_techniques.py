@@ -1129,12 +1129,31 @@ def test_lakehouse_merge_reapply_is_idempotent(spark):
     assert got[5][2] == 51.0 and 70 not in got and got[3][2] == 3.0 and len(got) == 200
 
 
+def test_lakehouse_merge_rejects_type_changing_reduce(spark):
+    """A merge reduction must keep every column at its input type: the
+    commit records the input's types, and a file of another type would
+    fail every later read of the table. A sum of an int column (a
+    bigint) is rejected before any file or manifest is written."""
+    import os
+    import tempfile
+
+    import pyspark.sql.functions as F
+
+    from flink_realtime_2024_spark.plans.lakehouse import LakeTable
+
+    t = LakeTable(tempfile.mkdtemp(prefix="lake_reduce_type_"), "k")
+    df = spark.createDataFrame([(1, 2), (1, 3)], "k bigint, v int")
+    with pytest.raises(ValueError, match="reduce changed the column types"):
+        t.merge(spark, df, reduce=lambda r: r.groupBy("k").agg(F.sum("v").alias("v")))
+    assert t._head()[0] == -1 and not os.listdir(t.data_dir)
+
+
 def test_latest_image_schema_generic_tiebreak(spark):
-    """_latest_image on a table WITHOUT the orders columns (the
+    """latest_per_key on a table WITHOUT the orders columns (the
     round-6 advisor's AnalysisException repro) must work and resolve
     same-(ts,op) ties deterministically via the remaining columns —
     including a tie that differs ONLY in an evolved column."""
-    from flink_realtime_2024_spark.plans.lakehouse import _latest_image
+    from flink_realtime_2024_spark.sources.cdc import latest_per_key
 
     df = spark.createDataFrame(
         [
@@ -1145,29 +1164,30 @@ def test_latest_image_schema_generic_tiebreak(spark):
         ],
         "key bigint, op string, ts_ms bigint, name string, extra bigint",
     )
-    got = {r["key"]: (r["name"], r["extra"]) for r in _latest_image(df).collect()}
+    got = {r["key"]: (r["name"], r["extra"]) for r in latest_per_key(df).collect()}
     # NULL ranks below any value in Spark struct ordering → 9 wins
     assert got[1] == ("x", 9)
     assert got[2] == ("b", None)
 
 
 def test_latest_image_equals_latest_per_key(spark):
-    """The schema-generic `_latest_image` reduction must be
-    bit-identical to `sources.cdc.latest_per_key` on the standard
-    changelog schema — same (ts, op-precedence, image) MAX_BY ordering,
-    including same-timestamp tie-breaks."""
-    from flink_realtime_2024_spark.plans.lakehouse import _latest_image
+    """The one latest-image reduction, ``sources.cdc.latest_per_key``,
+    equals the pure-Python reference model on the fixture changelog
+    (same (ts, op-precedence, image) ordering, same-timestamp ties
+    included), and it is what ``LakeTable.merge`` reduces with by
+    default."""
+    import inspect
+
+    from flink_realtime_2024_spark.plans.lakehouse import LakeTable
     from flink_realtime_2024_spark.sources.cdc import build_changelog, latest_per_key
 
+    from .test_properties import _reference_latest
+
     log = build_changelog(spark, SF_DIR)
-    a = {tuple(r) for r in latest_per_key(log).collect()}
-    b = {
-        tuple(r)
-        for r in _latest_image(log)
-        .select("key", "op", "totalprice", "orderstatus", "ts_ms")
-        .collect()
-    }
-    assert a == b and len(a) > 0
+    got = {tuple(r) for r in latest_per_key(log).collect()}
+    assert got == _reference_latest([tuple(r) for r in log.collect()]) and got
+    default = inspect.signature(LakeTable.merge).parameters["reduce"].default
+    assert default is latest_per_key
 
 
 def test_hot_stage_prune_is_sf_scoped(spark):

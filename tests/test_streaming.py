@@ -696,18 +696,13 @@ def test_stream_stream_join_state_is_bounded(spark):
     assert got.count() == n_batches * len(list(users))
 
 
-def test_stream_lake_merge_jobs_per_batch_and_single_scan(spark, monkeypatch):
-    """stream_lake_merge's per-batch cost, in counters that do not
-    depend on the machine: every micro-batch runs at most 4 Spark jobs
-    in the query's runId job group (one checkpoint of the batch with
-    its stats observed, then the range sample, the shuffle and the
-    write), and the source is scanned exactly once — the rows the
-    query's progress reports equal the staged topic's rows (a second
-    scan of a batch would add its rows again)."""
+def _jobs_per_batch(spark, monkeypatch, build):
+    """Run ``build(spark, SF_DIR)``, which starts exactly one stream;
+    return its Spark job count per micro-batch (the jobs in the
+    query's runId job group, grouped by their ``batch = N``
+    description) and the query's ``recentProgress``."""
     import re
 
-    from flink_realtime_2024_spark.plans.lakehouse import stream_lake_merge
-    from flink_realtime_2024_spark.sources.cdc import build_changelog
     from flink_realtime_2024_spark.streaming import jobs
 
     queries = []
@@ -721,7 +716,7 @@ def test_stream_lake_merge_jobs_per_batch_and_single_scan(spark, monkeypatch):
     monkeypatch.setattr(jobs, "run_stream", capture)
     sc = spark.sparkContext._jsc.sc()
     first_job = sc.dagScheduler().numTotalJobs()
-    stream_lake_merge(spark, SF_DIR)
+    build(spark, SF_DIR)
     sc.listenerBus().waitUntilEmpty(60_000)
     (q,) = queries
     store = sc.statusStore()
@@ -734,5 +729,35 @@ def test_stream_lake_merge_jobs_per_batch_and_single_scan(spark, monkeypatch):
             per_batch[batch] = per_batch.get(batch, 0) + 1
     progress = q.recentProgress
     assert len(per_batch) == len(progress) >= 2, (per_batch, len(progress))
+    return per_batch, progress
+
+
+def test_stream_lake_merge_jobs_per_batch_and_single_scan(spark, monkeypatch):
+    """stream_lake_merge's per-batch cost, in counters that do not
+    depend on the machine: every micro-batch runs at most 4 Spark jobs
+    in the query's runId job group (one checkpoint of the batch with
+    its stats observed, then the range sample, the shuffle and the
+    write), and the source is scanned exactly once — the rows the
+    query's progress reports equal the staged topic's rows (a second
+    scan of a batch would add its rows again)."""
+    from flink_realtime_2024_spark.plans.lakehouse import stream_lake_merge
+    from flink_realtime_2024_spark.sources.cdc import build_changelog
+
+    per_batch, progress = _jobs_per_batch(spark, monkeypatch, stream_lake_merge)
     assert max(per_batch.values()) <= 4, per_batch
     assert sum(p["numInputRows"] for p in progress) == build_changelog(spark, SF_DIR).count()
+
+
+def test_stream_agg_merge_jobs_per_batch_and_single_scan(spark, monkeypatch):
+    """stream_agg_merge commits each micro-batch as one LakeTable MERGE
+    with a sum reduction, so it has the same per-batch cost as
+    stream_lake_merge: at most 4 Spark jobs per batch, and the events
+    source scanned exactly once — the rows the query's progress reports
+    equal the events row count (a second scan of a batch, e.g. a
+    separate touched-key discovery job, would add its rows again)."""
+    from flink_realtime_2024_spark.sources.io import load_table
+    from flink_realtime_2024_spark.streaming.jobs import stream_agg_merge
+
+    per_batch, progress = _jobs_per_batch(spark, monkeypatch, stream_agg_merge)
+    assert max(per_batch.values()) <= 4, per_batch
+    assert sum(p["numInputRows"] for p in progress) == load_table(spark, SF_DIR, "events").count()
