@@ -13,8 +13,9 @@ decision) and provides the two canonical consumers:
 - ``cdc_latest_row`` — materialize current state: latest image per key,
   deletes drop the key (the Flink Deduplication/upsert-materialize op).
 - ``dim_upsert`` — apply the changelog in ts-ordered micro-batches to a
-  keyed parquet dim store via merge-overwrite (foreachBatch pattern),
-  reference's HBase put/delete sink.
+  keyed dim store (foreachBatch pattern), the reference's HBase
+  put/delete sink. The store is a ``plans/lakehouse.py`` table, as for
+  every keyed sink.
 
 The synthetic changelog is derived deterministically from ``orders`` so
 DuckDB can reproduce it exactly: every order inserts ('c') at its
@@ -23,9 +24,10 @@ o_totalprice 10%; every 50th orderkey gets a delete ('d') two days later.
 
 Scale notes: latest-per-key is one hash shuffle on the key with a
 map-side-combined MAX_BY — linear in changelog size, no driver
-involvement. The merge-overwrite dim store rewrites all of its state
-each batch; at 100 TB it would be a ``plans/lakehouse.py`` table,
-whose MERGE rewrites only the files whose key stats overlap the batch.
+involvement. The dim store's MERGE is merge-on-read: each batch is
+written as it arrives and reduced at read, and compaction rewrites only
+the files whose key stats overlap the folded deltas, so a batch's write
+cost is O(batch), not O(state).
 """
 
 from __future__ import annotations
@@ -104,6 +106,21 @@ def build_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         F.col("o_orderkey").alias("key"), F.explode(envelopes).alias("e")
     ).select("key", "e.op", "e.totalprice", "e.orderstatus", "e.ts_ms")
+
+
+def _changelog_thirds(spark: SparkSession, sf_dir: str):
+    """The cached changelog and its split into 3 ascending event-time
+    ranges (deterministic boundaries, so oracles can reproduce them);
+    the caller unpersists the changelog."""
+    log = build_changelog(spark, sf_dir).cache()
+    b = log.agg(F.min("ts_ms").alias("lo"), F.max("ts_ms").alias("hi")).first()
+    lo, hi = b["lo"], b["hi"]
+    step = (hi - lo) // 3 + 1
+    parts = [
+        log.filter((F.col("ts_ms") >= lo + i * step) & (F.col("ts_ms") < lo + (i + 1) * step))
+        for i in range(3)
+    ]
+    return log, parts
 
 
 def latest_per_key(changelog: DataFrame) -> DataFrame:
@@ -211,38 +228,29 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("dim_upsert", oracle=_LATEST_ORACLE, section="S4", reverify=5)
 def dim_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 HBase-style dim sink: apply the changelog in ts-ordered
-    micro-batches, each merged into a keyed parquet dim store
-    (foreachBatch merge-overwrite). Because the batches partition the
-    changelog into ascending event-time ranges, incremental
-    merge-upsert converges to exactly the one-shot latest-per-key
+    micro-batches, each merged into a keyed dim store — a latest-image
+    ``plans/lakehouse.py`` table, whose merge-on-read MERGE writes each
+    batch as a delta and reduces at read. Because the batches partition
+    the changelog into ascending event-time ranges, incremental
+    merging converges to exactly the one-shot latest-per-key
     materialization — so the job carries the FULL ``cdc_latest_row``
     oracle (also asserted in
     tests/test_semantics.py::test_dim_upsert_equals_latest_row).
 
     The batch loop is the test-harness replay of the streaming
-    foreachBatch sink ``stream_cdc_upsert`` — same merge function.
+    foreachBatch sink ``stream_cdc_upsert`` — same store, same merge.
     """
     import tempfile
 
-    changelog = build_changelog(spark, sf_dir).cache()
+    # lazy import: lakehouse registers queries and imports this module
+    from ..plans.lakehouse import LakeTable
+
+    changelog, batches = _changelog_thirds(spark, sf_dir)
     try:
-        # split into 3 micro-batches by event-time range (deterministic)
-        bounds = changelog.select(
-            F.min("ts_ms").alias("lo"), F.max("ts_ms").alias("hi")
-        ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-        step = (hi - lo) // 3 + 1
-        store = tempfile.mkdtemp(prefix="dim_store_")
-        dim: DataFrame | None = None
-        for i in range(3):
-            batch = changelog.filter(
-                (F.col("ts_ms") >= lo + i * step) & (F.col("ts_ms") < lo + (i + 1) * step)
-            )
-            merged = merge_upsert(dim, batch)
-            merged.write.mode("overwrite").parquet(f"{store}/v{i}")
-            dim = spark.read.parquet(f"{store}/v{i}")
-        assert dim is not None
-        return dim
+        table = LakeTable(register_tmp_dir(tempfile.mkdtemp(prefix="dim_store_")), "key")
+        for batch in batches:
+            table.merge(spark, batch)
+        return table.read(spark)
     finally:
         changelog.unpersist()
 
@@ -252,42 +260,21 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3/S4 the CDC pipeline in its TRUE streaming form: the changelog
     is staged as a time-ordered multi-file 'binlog topic', consumed via
     readStream (maxFilesPerTrigger=1 → real micro-batches), and each
-    batch is merge-upserted into the keyed dim store inside
-    foreachBatch — the Flink CDC-source → HBase-sink job end to end.
-    The final materialized state carries the full latest-row oracle:
+    batch is merged into the keyed dim store inside foreachBatch — the
+    Flink CDC-source → HBase-sink job end to end. The store is the
+    latest-image lakehouse table, so this is the same pipeline as
+    ``stream_lake_merge``, which it runs: each batch is one
+    merge-on-read commit of one Spark job, and the read reduces. The
+    final materialized state carries the full latest-row oracle:
     replaying the binlog through the streaming path must converge to
     the same table as the one-shot batch materialization.
 
     (dim_upsert is the batch-loop twin; this one exercises the real
     streaming machinery: source offsets, checkpointing, batch
     boundaries chosen by the engine.)"""
-    import tempfile
+    from ..plans.lakehouse import stream_lake_merge
 
-    from ..session import prepare
-    from ..streaming.jobs import run_stream
-
-    prepare(spark)
-    stream = cdc_binlog_stream(spark, sf_dir)
-    store = tempfile.mkdtemp(prefix="cdc_stream_dim_")
-    state = {"dim": None}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        merged = merge_upsert(state["dim"], batch_df)
-        path = os.path.join(store, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(path)
-        state["dim"] = batch_df.sparkSession.read.parquet(path)
-
-    run_stream(stream.writeStream.outputMode("append").foreachBatch(sink), "cdc_upsert")
-    assert state["dim"] is not None
-    return state["dim"].select("key", "op", "totalprice", "orderstatus", "ts_ms")
-
-
-def merge_upsert(dim: DataFrame | None, batch: DataFrame) -> DataFrame:
-    """MERGE INTO-equivalent for a keyed dim: union(current-as-oldest,
-    batch) → latest per key → drop deletes."""
-    if dim is None:
-        return latest_per_key(batch)
-    return latest_per_key(dim.unionByName(batch))
+    return stream_lake_merge(spark, sf_dir)
 
 
 def cdc_binlog_stream(spark: SparkSession, sf_dir: str):
@@ -446,26 +433,25 @@ def cdc_retract_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The retract aggregate in its TRUE streaming form — incremental
     view maintenance over the binlog topic. The dim store is a
-    lakehouse table (plans/lakehouse.py). Per micro-batch:
+    latest-image lakehouse table (plans/lakehouse.py). Per micro-batch:
 
-    1. the batch is one stats-pruned MERGE commit: only the data files
-       whose key stats overlap the batch are read and rewritten, so
-       before-images come from state (the streaming ChangelogNormalize,
-       as in Flink's operator);
-    2. the commit's file diff IS the retract stream: rows of the files
-       it replaced retract (−1), rows of the files it wrote assert
-       (+1). Carried files are byte-identical and cannot contribute; a
-       key a rewritten file merely carried along appears on both sides
-       with the same image and cancels. The signed per-status delta —
-       a handful of rows — merges into the running aggregate
-       (driver-held exact Decimal sums, O(groups) state).
+    1. the batch is one merge-on-read MERGE commit: the batch is
+       written as a delta, its source scanned once, and no state is
+       read or rewritten;
+    2. ``LakeTable.changed`` over that commit IS the retract stream:
+       the table's images before it for the batch's keys retract (−1)
+       and the images after it assert (+1) — the before-images come
+       from state, the streaming ChangelogNormalize, as in Flink's
+       operator. A key whose image did not change appears on both sides
+       and cancels. The signed per-status delta — a handful of rows —
+       merges into the running aggregate (driver-held exact Decimal
+       sums, O(groups) state).
 
-    Per-batch cost is O(batch + overlapping state files + groups) on
-    BOTH the aggregate and the store; the untouched dim majority is
-    neither read nor rewritten, and the batch's source is scanned once
-    (by the merge). The final running aggregate carries the same full
-    oracle as the batch twin — batch boundaries are invisible because
-    signed DECIMAL addition is associative and commutative."""
+    Per-batch cost is O(batch + the store files whose key stats overlap
+    the batch + groups); the dim files no batch key can be in are never
+    read. The final running aggregate carries the same full oracle as
+    the batch twin — batch boundaries are invisible because signed
+    DECIMAL addition is associative and commutative."""
     import tempfile
     from decimal import Decimal
 
@@ -490,7 +476,7 @@ def stream_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(sign).alias("sign"),
                 F.col("totalprice").alias("price"),
             )
-            for part, sign in zip(table.changed(spark, v - 1, v), (-1, 1))
+            for part, sign in zip(table.changed(spark, head, v), (-1, 1))
             if part is not None
         ]
         if not signed:  # e.g. deletes of keys the table never held

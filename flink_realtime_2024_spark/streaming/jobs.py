@@ -124,9 +124,12 @@ last_stream_breakdown: dict[str, dict] = {}
 
 def run_stream(df_writer, checkpoint_tag: str):
     """Start with availableNow (process everything, then stop) + a fresh
-    checkpoint dir (S11), await termination. Records a per-stage
-    durationMs breakdown into ``last_stream_breakdown``."""
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{checkpoint_tag}_")
+    checkpoint dir (S11, removed at interpreter exit), await
+    termination. Records a per-stage durationMs breakdown into
+    ``last_stream_breakdown``."""
+    from ..operators._util import register_tmp_dir
+
+    ckpt = register_tmp_dir(tempfile.mkdtemp(prefix=f"ckpt_{checkpoint_tag}_"))
     q = df_writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     q.awaitTermination()
     stages: dict[str, int] = {}
@@ -831,7 +834,7 @@ GROUP BY user_id
 
 
 def sum_per_user(rows: DataFrame) -> DataFrame:
-    """stream_agg_merge's merge reduction: per-user sums of the count
+    """stream_agg_merge's table reduction: per-user sums of the count
     and the DECIMAL value, cast back to the table's column types."""
     return rows.groupBy("user_id").agg(
         F.sum("n_events").cast("bigint").alias("n_events"),
@@ -855,27 +858,30 @@ def stream_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch aggregate the oracle computes.
 
     The serving table is a ``plans/lakehouse.py`` table keyed on
-    ``user_id`` — the same store as the UNIQUE-KEY paths, merged with a
-    sum reduction instead of the latest image. Each micro-batch maps
-    its raw rows to (user_id, 1, value) (count := sum of 1s —
-    associative, so no per-batch pre-aggregation job is needed) and is
-    one stats-pruned MERGE commit: only the data files whose key stats
-    overlap the batch are read and rewritten, the rest carry over by
-    reference, and the batch's source is scanned once. Per-batch cost
-    is O(batch + overlapping state), not O(all keys).
+    ``user_id`` — the same store as the UNIQUE-KEY paths, with a sum
+    reduction (``sum_per_user``) instead of the latest image. Each
+    micro-batch maps its raw rows to (user_id, 1, value) (count := sum
+    of 1s — associative, so no per-batch pre-aggregation job is needed)
+    and is one merge-on-read MERGE commit: the rows are written as a
+    delta in one Spark job that scans the batch's source once, and no
+    state is read or rewritten. Per-batch cost is O(batch), not O(all
+    keys); the final read sums base ∪ deltas.
 
     No manifest records the batch id, and a sum is not idempotent: a
     replayed batch (a restart between the commit and the offset
     commit) is counted twice.
 
-    Scale: the merge's sum runs inside the write's range partitions,
-    so it costs no extra shuffle. At 100 TB of history the state table
+    Scale: compaction folds the deltas into base once there are more
+    than a few (the sum runs inside the compaction's range partitions,
+    so it costs no extra shuffle). At 100 TB of history the state table
     is still only O(users)."""
     from ..operators._util import dec, register_tmp_dir
     from ..plans.lakehouse import LakeTable
 
     ev = events_stream(spark, sf_dir)
-    table = LakeTable(register_tmp_dir(tempfile.mkdtemp(prefix="agg_merge_")), "user_id")
+    table = LakeTable(
+        register_tmp_dir(tempfile.mkdtemp(prefix="agg_merge_")), "user_id", reduce=sum_per_user
+    )
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.select(
@@ -883,7 +889,7 @@ def stream_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).cast("bigint").alias("n_events"),
             dec("value").alias("total_value"),
         )
-        table.merge(spark, rows, reduce=sum_per_user)
+        table.merge(spark, rows)
 
     run_stream(ev.writeStream.outputMode("append").foreachBatch(merge), "agg_merge")
     return table.read(spark).select(

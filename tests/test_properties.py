@@ -444,13 +444,29 @@ def merge_batches(draw):
     return batches
 
 
-@given(merge_batches())
+# where to compact after each batch: not at all, the merge's
+# stats-pruned fold of the deltas, or compact_table's fold of every file
+_COMPACTIONS = st.lists(st.sampled_from(["none", "fold", "all"]), min_size=4, max_size=4)
+
+
+def _compact(spark, table, how):
+    from flink_realtime_2024_spark.plans.lakehouse import compact_table
+
+    if how == "fold":
+        return table._compact(spark, n_files=2)
+    if how == "all":
+        return compact_table(table, spark, n_files=2)
+    return table.latest_version()
+
+
+@given(merge_batches(), _COMPACTIONS)
 @settings(**_SETTINGS)
-def test_lakehouse_merge_matches_dict_state(spark, batches):
-    """Any sequence of MERGE commits must leave the table equal to a
-    trivial dict-state replay of the same batches (latest image per
-    key, deletes drop) — stats pruning, file carry-over, and in-batch
-    dedup can never change semantics."""
+def test_lakehouse_merge_matches_dict_state(spark, batches, compactions):
+    """Any sequence of MERGE commits, with compactions drawn anywhere
+    between them, must leave the table equal to a trivial dict-state
+    replay of the same batches (latest image per key, deletes drop) —
+    merge-on-read reduction, stats-pruned compaction, file carry-over
+    and in-batch dedup can never change semantics."""
     import tempfile
 
     from flink_realtime_2024_spark.plans.lakehouse import LakeTable
@@ -458,7 +474,7 @@ def test_lakehouse_merge_matches_dict_state(spark, batches):
     schema = "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint"
     state: dict = {}
     table = None
-    for rows in batches:
+    for rows, how in zip(batches, compactions):
         for key, op, price, status, ts in sorted(rows, key=lambda r: r[4]):
             if op == "d":
                 state.pop(key, None)
@@ -476,6 +492,7 @@ def test_lakehouse_merge_matches_dict_state(spark, batches):
             )
         else:
             table.merge(spark, df)
+        _compact(spark, table, how)
     got = {
         r["key"]: (r["op"], r["totalprice"], r["orderstatus"], r["ts_ms"])
         for r in table.read(spark).collect()
@@ -558,15 +575,17 @@ def sum_batches(draw):
     return batches
 
 
-@given(sum_batches())
+@given(sum_batches(), _COMPACTIONS)
 @example([[(0, Decimal("1.5")), (9, Decimal("-2.25"))], [(100, Decimal("0.0001"))],
-          [(5, Decimal("3")), (101, Decimal("-0.5"))]])
+          [(5, Decimal("3")), (101, Decimal("-0.5"))]], ["fold", "fold", "fold", "none"])
 @settings(**_SETTINGS)
-def test_lakehouse_sum_merge_matches_dict_sum(spark, batches):
-    """MERGE commits with stream_agg_merge's sum reduction must leave
-    the table equal to a dict of exact per-key sums of the same
-    batches, and every file whose key range misses a batch's must be
-    carried into the new snapshot by reference, not rewritten."""
+def test_lakehouse_sum_merge_matches_dict_sum(spark, batches, compactions):
+    """MERGE commits into a table with stream_agg_merge's sum reduction,
+    with compactions drawn anywhere between them, must leave the table
+    equal to a dict of exact per-key sums of the same batches. A merge
+    rewrites nothing (every file of its parent is carried by path), and
+    the stats-pruned fold carries every base file whose key range
+    misses the deltas' by reference, not rewritten."""
     import tempfile
 
     import pyspark.sql.functions as F
@@ -574,23 +593,27 @@ def test_lakehouse_sum_merge_matches_dict_sum(spark, batches):
     from flink_realtime_2024_spark.plans.lakehouse import LakeTable
     from flink_realtime_2024_spark.streaming.jobs import sum_per_user
 
-    table = LakeTable(tempfile.mkdtemp(prefix="lake_sum_prop_"), "user_id")
+    table = LakeTable(tempfile.mkdtemp(prefix="lake_sum_prop_"), "user_id", reduce=sum_per_user)
     want: dict = {}
-    for rows in batches:
+    for rows, how in zip(batches, compactions):
         for k, v in rows:
             n, total = want.get(k, (0, Decimal(0)))
             want[k] = (n + 1, total + v)
-        head, m = table._head()
+        head, parent = table._head()
         df = spark.createDataFrame(rows, "user_id bigint, v decimal(18,4)").select(
             "user_id", F.lit(1).cast("bigint").alias("n_events"), F.col("v").alias("total_value")
         )
-        v = table.merge(spark, df, n_files=2, reduce=sum_per_user)
+        v = table.merge(spark, df)
         assert v == head + 1
-        lo, hi = min(k for k, _ in rows), max(k for k, _ in rows)
-        paths = {e["path"] for e in table.manifest(v)["files"]}
-        for e in m["files"]:
-            if e["max"] < lo or e["min"] > hi:
-                assert e["path"] in paths, (e, lo, hi)
+        m = table.manifest(v)
+        assert {e["path"] for e in parent["files"]} <= {e["path"] for e in m["files"]}
+        deltas = [e for e in m["files"] if e["kind"] == "delta"]
+        lo, hi = min(e["min"] for e in deltas), max(e["max"] for e in deltas)
+        paths = {e["path"] for e in table.manifest(_compact(spark, table, how))["files"]}
+        if how == "fold":
+            for e in m["files"]:
+                if e["kind"] == "base" and (e["max"] < lo or e["min"] > hi):
+                    assert e["path"] in paths, (e, lo, hi)
     got = {
         r["user_id"]: (r["n_events"], r["total_value"])
         for r in table.read(spark).collect()
@@ -740,15 +763,19 @@ def test_bpe_train_fuzzed_vs_reference(spark, words):
     assert got == ref
 
 
-@given(changelogs(), st.integers(0, 10))
+@given(changelogs(), st.integers(0, 10), st.booleans())
 @settings(**_SETTINGS)
-def test_merge_upsert_split_equivalence(spark, rows, split_ts):
+def test_merge_upsert_split_equivalence(spark, rows, split_ts, compact):
     """Applying a changelog in two EVENT-TIME-ORDERED batches through
-    merge_upsert must equal the one-shot latest-per-key materialization
-    for ANY split point — the invariant dim_upsert and stream_cdc_upsert
-    rely on. (LakeTable.merge runs the same latest_per_key reduction;
-    its replay property is test_lakehouse_merge_matches_dict_state.)"""
-    from flink_realtime_2024_spark.sources.cdc import latest_per_key, merge_upsert
+    ``LakeTable.merge`` — with or without a compaction between them —
+    must equal the one-shot latest-per-key materialization for ANY
+    split point: the invariant dim_upsert and stream_cdc_upsert rely
+    on. (Its replay property over arbitrary batch sequences is
+    test_lakehouse_merge_matches_dict_state.)"""
+    import tempfile
+
+    from flink_realtime_2024_spark.plans.lakehouse import LakeTable
+    from flink_realtime_2024_spark.sources.cdc import latest_per_key
 
     schema = "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint"
     df = spark.createDataFrame(rows, schema)
@@ -756,16 +783,14 @@ def test_merge_upsert_split_equivalence(spark, rows, split_ts):
         (r["key"], r["totalprice"], r["orderstatus"])
         for r in latest_per_key(df).collect()
     }
-    b0 = df.filter(df.ts_ms < split_ts)
-    b1 = df.filter(df.ts_ms >= split_ts)
-    dim = None
-    for batch in (b0, b1):
-        if batch.isEmpty():
-            continue
-        dim = merge_upsert(dim, batch)
+    table = LakeTable(tempfile.mkdtemp(prefix="lake_split_"), "key")
+    table.merge(spark, df.filter(df.ts_ms < split_ts))  # an empty batch commits nothing
+    if compact and table._head()[0] >= 0:
+        table._compact(spark, n_files=2)
+    table.merge(spark, df.filter(df.ts_ms >= split_ts))
     got = (
-        {(r["key"], r["totalprice"], r["orderstatus"]) for r in dim.collect()}
-        if dim is not None
+        {(r["key"], r["totalprice"], r["orderstatus"]) for r in table.read(spark).collect()}
+        if table._head()[1]["files"]
         else set()
     )
     assert got == one_shot

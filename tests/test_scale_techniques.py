@@ -400,7 +400,10 @@ def test_lakehouse_expire_snapshots(spark):
     """VACUUM reclaims exactly the files referenced only by dropped
     snapshots: the latest snapshot stays fully readable and content-
     identical, time travel to dropped versions fails, and every data
-    file still on disk is referenced by a kept manifest."""
+    file still on disk is referenced by a kept manifest. A merge-on-read
+    commit references every file of its parent, so expiring the parent
+    frees no file; after a compaction, expiring frees the replaced
+    ones."""
     import os
     import tempfile
 
@@ -408,6 +411,7 @@ def test_lakehouse_expire_snapshots(spark):
 
     from flink_realtime_2024_spark.plans.lakehouse import (
         LakeTable,
+        compact_table,
         expire_snapshots,
     )
 
@@ -426,7 +430,11 @@ def test_lakehouse_expire_snapshots(spark):
     before = {tuple(r) for r in t.read(spark).collect()}
 
     stats = expire_snapshots(t, keep_last=1)
-    assert stats["removed_manifests"] == 1 and stats["removed_files"] >= 1
+    assert stats == {"kept_versions": [1], "removed_manifests": 1, "removed_files": 0}
+    replaced = len(t.manifest(1)["files"])  # 4 base files and the delta's
+    compact_table(t, spark, n_files=2)
+    stats = expire_snapshots(t, keep_last=1)
+    assert stats == {"kept_versions": [2], "removed_manifests": 1, "removed_files": replaced}
 
     after = {tuple(r) for r in t.read(spark).collect()}
     assert after == before, "latest snapshot changed under vacuum"
@@ -813,6 +821,188 @@ def test_lakehouse_racing_disjoint_writers(spark, monkeypatch):
     assert got[5] == 111.0 and got[90] == 222.0 and len(got) == 100
 
 
+def test_lakehouse_delete_delta_masks_base_across_compaction(spark):
+    """A delete is merge-on-read: the merge writes only the tombstone as
+    a delta, the base file still holds the key, and every read masks it.
+    The stats-pruned fold then rewrites only the base file the tombstone
+    overlaps, drops the key from it and carries the others by path; the
+    key stays gone."""
+    import tempfile
+
+    import pyspark.sql.functions as F
+
+    from flink_realtime_2024_spark.plans.lakehouse import LakeTable
+
+    base = spark.range(0, 100).select(
+        F.col("id").alias("key"), F.lit("c").alias("op"),
+        (F.col("id") * 1.0).alias("totalprice"),
+        F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
+    )
+    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_tomb_"), "key", n_files=4)
+    v0 = {e["path"]: e for e in t.manifest(0)["files"]}
+    dels = spark.createDataFrame(
+        [(7, "d", None, None, 2)],
+        "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint",
+    )
+    v1 = t.merge(spark, dels)
+    m1 = t.manifest(v1)
+    assert set(v0) < {e["path"] for e in m1["files"]} and m1["deltas"] == 1
+    assert [e["kind"] for e in m1["files"] if e["path"] not in v0] == ["delta"]
+    keys = sorted(r["key"] for r in t.read(spark).collect())
+    assert keys == [k for k in range(100) if k != 7]
+
+    v2 = t._compact(spark, n_files=2)
+    m2 = t.manifest(v2)
+    assert m2["operation"] == "compact" and m2["deltas"] == 0
+    assert all(e["kind"] == "base" for e in m2["files"])
+    carried = {p for p in v0 if p in {e["path"] for e in m2["files"]}}
+    assert carried == {p for p, e in v0.items() if not e["min"] <= 7 <= e["max"]}
+    assert sorted(r["key"] for r in t.read(spark).collect()) == keys
+
+
+def test_lakehouse_append_racing_compaction_survives(spark, monkeypatch):
+    """An append and a compaction computed against the same head race
+    for the next version (a barrier inside _commit makes the race
+    real). Whichever loses retries against the winner's head: a lost
+    append re-commits its delta next to the compacted base, a lost
+    compaction folds the append's delta too. Both updates survive, the
+    history is linear, and no uncommitted file is left behind."""
+    import os
+    import tempfile
+    import threading
+
+    import pyspark.sql.functions as F
+
+    from flink_realtime_2024_spark.plans.lakehouse import LakeTable
+
+    base = spark.range(0, 100).select(
+        F.col("id").alias("key"), F.lit("c").alias("op"),
+        (F.col("id") * 1.0).alias("totalprice"),
+        F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
+    )
+    root = tempfile.mkdtemp(prefix="lake_race_compact_")
+    schema = "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint"
+    LakeTable.create(base, root, "key", n_files=2).merge(
+        spark, spark.createDataFrame([(5, "u", 111.0, "F", 2)], schema)
+    )
+
+    orig = LakeTable._commit
+    barrier = threading.Barrier(2, timeout=60)
+
+    def rendezvous_commit(self, version, files, operation, **kwargs):
+        if not getattr(self, "_raced", False):
+            self._raced = True
+            barrier.wait()
+        return orig(self, version, files, operation, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_commit", rendezvous_commit)
+    compactor, writer = LakeTable(root, "key"), LakeTable(root, "key")
+    batch = spark.createDataFrame([(90, "u", 222.0, "F", 3)], schema)
+    errs: list[Exception] = []
+
+    def run(fn):
+        try:
+            fn()
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    threads = [
+        threading.Thread(target=run, args=(lambda: compactor._compact(spark, n_files=2),)),
+        threading.Thread(target=run, args=(lambda: writer.merge(spark, batch),)),
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=120)
+    assert not any(th.is_alive() for th in threads) and not errs, errs
+
+    final = LakeTable(root, "key")
+    assert final.latest_version() == 3  # v0, v1 and both racers
+    assert sorted(final.manifest(v)["operation"] for v in (2, 3)) == ["compact", "merge"]
+    got = {r["key"]: r["totalprice"] for r in final.read(spark).collect()}
+    assert got[5] == 111.0 and got[90] == 222.0 and len(got) == 100
+    referenced = {
+        os.path.basename(e["path"]) for v in range(4) for e in final.manifest(v)["files"]
+    }
+    assert set(os.listdir(final.data_dir)) == referenced
+
+
+def test_lakehouse_reduce_is_recorded_and_checked_on_open(spark):
+    """The per-key reduction is a property of the table: every commit
+    records it, and opening the table with another one raises instead
+    of reading sums as latest images (or the reverse)."""
+    import tempfile
+
+    import pyspark.sql.functions as F
+
+    from flink_realtime_2024_spark.plans.lakehouse import LakeTable
+    from flink_realtime_2024_spark.streaming.jobs import sum_per_user
+
+    root = tempfile.mkdtemp(prefix="lake_reduce_rec_")
+    t = LakeTable(root, "user_id", reduce=sum_per_user)
+    rows = spark.createDataFrame([(1, 2), (1, 3), (2, 5)], "user_id bigint, v bigint").select(
+        "user_id", F.lit(1).cast("bigint").alias("n_events"),
+        F.col("v").cast("decimal(18,4)").alias("total_value"),
+    )
+    t.merge(spark, rows)
+    assert t.manifest(0)["reduce"] == "flink_realtime_2024_spark.streaming.jobs.sum_per_user"
+    with pytest.raises(ValueError, match="is reduced by"):
+        LakeTable(root, "user_id")
+    got = {r["user_id"]: (r["n_events"], float(r["total_value"]))
+           for r in LakeTable(root, "user_id", reduce=sum_per_user).read(spark).collect()}
+    assert got == {1: (2, 5.0), 2: (1, 5.0)}
+
+
+def test_lakehouse_merge_write_cost_scales_with_batch(spark):
+    """A merge's write cost is O(batch), not O(state): equal batches
+    whose keys spread over the WHOLE base (so a copy-on-write merge
+    would rewrite every base file) are merged into tables whose base is
+    1x, 4x and 16x the batch, and the bytes of each merge's new files
+    stay within 2x of the batch's own parquet bytes, whatever the base
+    size (three merges per table, below the compaction threshold)."""
+    import os
+    import tempfile
+
+    import pyspark.sql.functions as F
+
+    from flink_realtime_2024_spark.plans.lakehouse import _MAX_DELTAS, LakeTable
+
+    n = 500
+
+    def rows(count, stride, op, ts):
+        return spark.range(0, count, numPartitions=2).select(
+            (F.col("id") * stride).alias("key"), F.lit(op).alias("op"),
+            (F.col("id") * 1.5 + ts).alias("totalprice"),
+            F.lit("F").alias("orderstatus"), F.lit(ts).cast("bigint").alias("ts_ms"),
+        )
+
+    def nbytes(root, paths):
+        return sum(os.path.getsize(os.path.join(root, p)) for p in paths)
+
+    assert 3 <= _MAX_DELTAS
+    for mult in (1, 4, 16):
+        t = LakeTable.create(
+            rows(n * mult, 1, "c", 1), tempfile.mkdtemp(prefix=f"lake_cost{mult}_"), "key", 4
+        )
+        base_bytes = nbytes(t.root, [e["path"] for e in t.manifest(0)["files"]])
+        for ts in (2, 3, 4):
+            batch = rows(n, mult, "u", ts)  # every mult-th key: all base files
+            own = tempfile.mkdtemp(prefix="lake_cost_batch_")
+            batch.write.mode("overwrite").parquet(own)
+            own_bytes = nbytes(own, [f for f in os.listdir(own) if f.endswith(".parquet")])
+            head = t.latest_version()
+            v = t.merge(spark, batch)
+            assert v == head + 1 and t.manifest(v)["operation"] == "merge"
+            before = {e["path"] for e in t.manifest(head)["files"]}
+            written = [e["path"] for e in t.manifest(v)["files"] if e["path"] not in before]
+            assert 0 < nbytes(t.root, written) <= 2 * own_bytes, (mult, ts, own_bytes)
+        if mult == 16:
+            assert base_bytes > 4 * own_bytes  # the state dwarfs the batch
+        got = {r["key"]: r["ts_ms"] for r in t.read(spark).collect()}
+        assert len(got) == n * mult and got[(n - 1) * mult] == 4
+        assert got[1] == (4 if mult == 1 else 1)
+
+
 def test_lake_point_lookup_prunes_files(spark):
     """The manifest Bloom + min/max stats must actually SKIP files on a
     point probe: for a 6-file table, a single-key lookup may read only
@@ -953,7 +1143,8 @@ def test_lakehouse_file_stats_match_spark_aggregate(spark, key_type):
     (lexicographic, so "10" < "9"), a string key of over 2 KB (the
     writer leaves its min/max out of the footer, so they are read from
     the key column), an all-deletes batch and a merge that nets the
-    whole table to zero rows (its empty file is never manifested)."""
+    whole table to zero rows (once compacted, its empty file is never
+    manifested)."""
     import os
     import tempfile
 
@@ -1009,7 +1200,9 @@ def test_lakehouse_file_stats_match_spark_aggregate(spark, key_type):
     assert stats.has_min_max == (key_type != "long_string")
 
     small = LakeTable.create(rows(range(10), "c", 1), tempfile.mkdtemp(prefix="lake_st0_"), "key", 2)
-    v = small.merge(spark, rows(range(10), "d", 2))
+    small.merge(spark, rows(range(10), "d", 2))
+    assert small.read(spark).count() == 0
+    v = compact_table(small, spark, n_files=2)
     assert small.manifest(v)["files"] == []
     check(small)
 
@@ -1130,9 +1323,9 @@ def test_lakehouse_merge_reapply_is_idempotent(spark):
 
 
 def test_lakehouse_merge_rejects_type_changing_reduce(spark):
-    """A merge reduction must keep every column at its input type: the
-    commit records the input's types, and a file of another type would
-    fail every later read of the table. A sum of an int column (a
+    """A table's reduction must keep every column at its input type:
+    the commit records the input's types, and a file of another type
+    would fail every later read of the table. A sum of an int column (a
     bigint) is rejected before any file or manifest is written."""
     import os
     import tempfile
@@ -1141,11 +1334,14 @@ def test_lakehouse_merge_rejects_type_changing_reduce(spark):
 
     from flink_realtime_2024_spark.plans.lakehouse import LakeTable
 
-    t = LakeTable(tempfile.mkdtemp(prefix="lake_reduce_type_"), "k")
+    t = LakeTable(
+        tempfile.mkdtemp(prefix="lake_reduce_type_"), "k",
+        reduce=lambda r: r.groupBy("k").agg(F.sum("v").alias("v")),
+    )
     df = spark.createDataFrame([(1, 2), (1, 3)], "k bigint, v int")
     with pytest.raises(ValueError, match="reduce changed the column types"):
-        t.merge(spark, df, reduce=lambda r: r.groupBy("k").agg(F.sum("v").alias("v")))
-    assert t._head()[0] == -1 and not os.listdir(t.data_dir)
+        t.merge(spark, df)
+    assert t._head()[0] == -1 and not os.path.exists(t.data_dir)
 
 
 def test_latest_image_schema_generic_tiebreak(spark):
@@ -1174,7 +1370,7 @@ def test_latest_image_equals_latest_per_key(spark):
     """The one latest-image reduction, ``sources.cdc.latest_per_key``,
     equals the pure-Python reference model on the fixture changelog
     (same (ts, op-precedence, image) ordering, same-timestamp ties
-    included), and it is what ``LakeTable.merge`` reduces with by
+    included), and it is the reduction a ``LakeTable`` has by
     default."""
     import inspect
 
@@ -1186,7 +1382,7 @@ def test_latest_image_equals_latest_per_key(spark):
     log = build_changelog(spark, SF_DIR)
     got = {tuple(r) for r in latest_per_key(log).collect()}
     assert got == _reference_latest([tuple(r) for r in log.collect()]) and got
-    default = inspect.signature(LakeTable.merge).parameters["reduce"].default
+    default = inspect.signature(LakeTable).parameters["reduce"].default
     assert default is latest_per_key
 
 

@@ -734,24 +734,24 @@ def _jobs_per_batch(spark, monkeypatch, build):
 
 def test_stream_lake_merge_jobs_per_batch_and_single_scan(spark, monkeypatch):
     """stream_lake_merge's per-batch cost, in counters that do not
-    depend on the machine: every micro-batch runs at most 4 Spark jobs
-    in the query's runId job group (one checkpoint of the batch with
-    its stats observed, then the range sample, the shuffle and the
-    write), and the source is scanned exactly once — the rows the
-    query's progress reports equal the staged topic's rows (a second
-    scan of a batch would add its rows again)."""
+    depend on the machine: every micro-batch runs at most 1 Spark job
+    in the query's runId job group (the merge-on-read delta write, with
+    its stats observed on the write itself), and the source is scanned
+    exactly once — the rows the query's progress reports equal the
+    staged topic's rows (a second scan of a batch would add its rows
+    again)."""
     from flink_realtime_2024_spark.plans.lakehouse import stream_lake_merge
     from flink_realtime_2024_spark.sources.cdc import build_changelog
 
     per_batch, progress = _jobs_per_batch(spark, monkeypatch, stream_lake_merge)
-    assert max(per_batch.values()) <= 4, per_batch
+    assert max(per_batch.values()) <= 1, per_batch
     assert sum(p["numInputRows"] for p in progress) == build_changelog(spark, SF_DIR).count()
 
 
 def test_stream_agg_merge_jobs_per_batch_and_single_scan(spark, monkeypatch):
     """stream_agg_merge commits each micro-batch as one LakeTable MERGE
-    with a sum reduction, so it has the same per-batch cost as
-    stream_lake_merge: at most 4 Spark jobs per batch, and the events
+    into a table with a sum reduction, so it has the same per-batch
+    cost as stream_lake_merge: at most 1 Spark job per batch, and the events
     source scanned exactly once — the rows the query's progress reports
     equal the events row count (a second scan of a batch, e.g. a
     separate touched-key discovery job, would add its rows again)."""
@@ -759,5 +759,31 @@ def test_stream_agg_merge_jobs_per_batch_and_single_scan(spark, monkeypatch):
     from flink_realtime_2024_spark.streaming.jobs import stream_agg_merge
 
     per_batch, progress = _jobs_per_batch(spark, monkeypatch, stream_agg_merge)
-    assert max(per_batch.values()) <= 4, per_batch
+    assert max(per_batch.values()) <= 1, per_batch
     assert sum(p["numInputRows"] for p in progress) == load_table(spark, SF_DIR, "events").count()
+
+
+def test_stream_cdc_upsert_jobs_per_batch_and_single_scan(spark, monkeypatch):
+    """stream_cdc_upsert's dim store is the same merge-on-read LakeTable
+    as stream_lake_merge: at most 1 Spark job per micro-batch, and the
+    binlog topic scanned exactly once."""
+    from flink_realtime_2024_spark.sources.cdc import build_changelog, stream_cdc_upsert
+
+    per_batch, progress = _jobs_per_batch(spark, monkeypatch, stream_cdc_upsert)
+    assert max(per_batch.values()) <= 1, per_batch
+    assert sum(p["numInputRows"] for p in progress) == build_changelog(spark, SF_DIR).count()
+
+
+def test_run_stream_registers_checkpoint_dir(spark):
+    """run_stream's fresh checkpoint dir is registered for removal at
+    interpreter exit, like every other per-run temp dir: after a
+    streaming builder runs, its ``ckpt_<tag>_`` dir is in the registry."""
+    import os
+
+    from flink_realtime_2024_spark.operators import _util
+    from flink_realtime_2024_spark.streaming.jobs import stream_source_smoke
+
+    before = set(_util._TMP_DIRS)
+    stream_source_smoke(spark, SF_DIR).collect()
+    new = [d for d in _util._TMP_DIRS if d not in before]
+    assert any(os.path.basename(d).startswith("ckpt_smoke_") for d in new), new
