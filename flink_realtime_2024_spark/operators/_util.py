@@ -115,26 +115,6 @@ def _plan_is_exchange_free(df) -> bool:
     return True
 
 
-# --- process-lifetime tmp dirs ------------------------------------------------
-
-_TMP_DIRS: list[str] = []
-
-
-def register_tmp_dir(path: str) -> str:
-    """Track a staged tmp directory for removal at interpreter exit, so
-    repeated pytest/bench/driver processes don't accrete /tmp garbage
-    (advice-r4 pattern, shared by every per-pid staging site)."""
-    import atexit
-    import shutil
-
-    if not _TMP_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(d, ignore_errors=True) for d in _TMP_DIRS]
-        )
-    _TMP_DIRS.append(path)
-    return path
-
-
 # --- scale-safe global rank / running sum -------------------------------------
 #
 # Spark executes `Window.orderBy(...)` without a partitionBy as ONE task

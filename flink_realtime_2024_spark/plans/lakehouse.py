@@ -75,6 +75,7 @@ from ..sources.cdc import (
     _changelog_thirds,
     latest_per_key,
 )
+from ..sources.io import content_digest, memo, table_path, workspace
 from ..plans.registry import register
 
 
@@ -497,26 +498,20 @@ def _key_range(path: str, meta, key: str) -> tuple:
 
 def _build_lake(spark: SparkSession, sf_dir: str) -> LakeTable:
     """Create the table from batch 0 (reduced into base files), then
-    MERGE batches 1-2 as deltas — one table dir per (sf_dir, pid), built
-    once per process."""
-    from ..operators._util import register_tmp_dir
+    MERGE batches 1-2 as deltas — built once per session and content of
+    ``orders``."""
 
-    root = register_tmp_dir(
-        os.path.join(
-            tempfile.gettempdir(),
-            f"lake_orders_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-        )
-    )
-    if os.path.exists(os.path.join(root, "manifest-v2.json")):
-        return LakeTable(root, "key")
-    log, parts = _changelog_thirds(spark, sf_dir)
-    try:
-        t = LakeTable.create(parts[0], root, "key")
-        t.merge(spark, parts[1])
-        t.merge(spark, parts[2])
-        return t
-    finally:
-        log.unpersist()
+    def build() -> LakeTable:
+        log, parts = _changelog_thirds(spark, sf_dir)
+        try:
+            t = LakeTable.create(parts[0], workspace("lake_orders_"), "key")
+            t.merge(spark, parts[1])
+            t.merge(spark, parts[2])
+            return t
+        finally:
+            log.unpersist()
+
+    return memo(spark, "lake_orders", content_digest([table_path(sf_dir, "orders")]), build)
 
 
 @register("lake_cdc_merge", oracle=_LATEST_ORACLE, section="S4,S7")
@@ -599,32 +594,19 @@ def lake_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit_seq = ts_ms % 1000 exactly for rows whose WINNING image came
     from the evolved batch — so both the merge algebra and the
     NULL-for-old-files read semantics are value-checked."""
-    from ..operators._util import register_tmp_dir
 
-    root = register_tmp_dir(
-        os.path.join(
-            tempfile.gettempdir(),
-            f"lake_evo_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-        )
-    )
-    # resumable build: each stage is gated on its own manifest, so a
-    # failure between create (v0) and the evolve merge resumes at the
-    # merge instead of dying on create's FileExistsError for v0
-    if os.path.exists(os.path.join(root, "manifest-v1.json")):
-        t = LakeTable(root, "key")
-    else:
+    def build() -> LakeTable:
         log, parts = _changelog_thirds(spark, sf_dir)
         try:
-            if os.path.exists(os.path.join(root, "manifest-v0.json")):
-                t = LakeTable(root, "key")  # create already committed
-            else:
-                t = LakeTable.create(parts[0].unionByName(parts[1]), root, "key")
-            evolved = parts[2].withColumn(
-                "audit_seq", (F.col("ts_ms") % 1000).cast("bigint")
+            t = LakeTable.create(parts[0].unionByName(parts[1]), workspace("lake_evo_"), "key")
+            t.merge(
+                spark, parts[2].withColumn("audit_seq", (F.col("ts_ms") % 1000).cast("bigint"))
             )
-            t.merge(spark, evolved)
+            return t
         finally:
             log.unpersist()
+
+    t = memo(spark, "lake_evo", content_digest([table_path(sf_dir, "orders")]), build)
     return t.read(spark).select(
         "key", "op", "totalprice", "orderstatus", "ts_ms", "audit_seq"
     )
@@ -703,13 +685,12 @@ def stream_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent. Each batch is one Spark job that scans its source once
     and writes only the batch; the final read reduces base ∪ deltas and
     carries the full latest-per-key oracle."""
-    from ..operators._util import register_tmp_dir
     from ..sources.cdc import cdc_binlog_stream
     from ..session import prepare
     from ..streaming.jobs import run_stream
 
     prepare(spark)
-    table = LakeTable(register_tmp_dir(tempfile.mkdtemp(prefix="lake_stream_")), "key")
+    table = LakeTable(workspace("lake_stream_"), "key")
     run_stream(
         cdc_binlog_stream(spark, sf_dir)
         .writeStream.outputMode("append")

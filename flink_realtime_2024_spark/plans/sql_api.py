@@ -16,7 +16,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.io import register_views
+from ..sources.io import register_views, workspace
 from ..streaming.event_time import _SESSION_ORACLE as _EVENT_TIME_SESSION_ORACLE
 from .registry import register
 
@@ -727,15 +727,13 @@ def sql_ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read the TABLE back by name. The whole path — catalog DDL,
     SQL-string insert through the same Catalyst pipeline, table-name
     scan — must reproduce the direct query bit-for-bit (full oracle).
-    Per-process table name + location: in-memory catalog, no cross-run
-    state."""
+    Per-call table name and location (a ``workspace`` dir): no
+    cross-run state."""
     import os
-    import tempfile
 
     register_views(spark, sf_dir, ["customer", "nation"])
-    table = f"nation_balances_{os.getpid()}"
-    loc = os.path.join(tempfile.gettempdir(), f"sql_ddl_{table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    loc = workspace("sql_ddl_nation_balances_")
+    table = os.path.basename(loc)
     spark.sql(
         f"""CREATE TABLE {table}
             (nation STRING, n_customers BIGINT, total_balance DOUBLE)

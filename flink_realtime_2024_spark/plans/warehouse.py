@@ -15,13 +15,11 @@ canonical jobs, batch-testable end to end:
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
-from ..sources.io import load_table, csv_roundtrip
+from ..sources.io import load_table, csv_roundtrip, workspace
 from ..operators._util import dec
 from .registry import register
 
@@ -55,8 +53,9 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared schema must equal the parquet original (full oracle, not
     rows-only — the roundtrip is lossless for these types)."""
     nation = load_table(spark, sf_dir, "nation")
-    out = tempfile.mkdtemp(prefix="csv_roundtrip_")
-    return csv_roundtrip(spark, nation, out).select("n_nationkey", "n_name", "n_regionkey")
+    return csv_roundtrip(spark, nation, workspace("csv_roundtrip_")).select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
 
 
 _JSON_RT_ORACLE = """
@@ -71,7 +70,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared schema equals the parquet original. (Record-level JSON
     parsing is `json_extract`.)"""
     region = load_table(spark, sf_dir, "region")
-    out = tempfile.mkdtemp(prefix="json_roundtrip_")
+    out = workspace("json_roundtrip_")
     region.write.mode("overwrite").json(out)
     return spark.read.schema(region.schema).json(out).select("r_regionkey", "r_name")
 
@@ -164,7 +163,7 @@ def serving_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(dec("o_totalprice")).cast("double").alias("revenue"),
     ).withColumn("month", F.substring("day", 1, 7))
-    out = tempfile.mkdtemp(prefix="serving_dws_")
+    out = workspace("serving_dws_")
     daily.write.mode("overwrite").partitionBy("month").parquet(out)
     served = spark.read.parquet(out)
     # the filter targets the PARTITION column → directory-level pruning
@@ -375,21 +374,9 @@ def warehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     table); the file-count reduction is asserted inline and in
     tests/test_scale_techniques.py. At 100 TB this runs per
     partition-directory, embarrassingly parallel across partitions."""
-    import os
-    import shutil
-
     from ..sources.maintenance import compact_parquet
 
-    from ..operators._util import register_tmp_dir
-
-    frag = register_tmp_dir(
-        os.path.join(
-            tempfile.gettempdir(),
-            f"frag_orders_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-        )
-    )
-    if os.path.exists(frag):
-        shutil.rmtree(frag)
+    frag = workspace("frag_orders_")
     load_table(spark, sf_dir, "orders").repartition(64).write.mode(
         "overwrite"
     ).parquet(frag)

@@ -39,8 +39,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..plans.registry import register
-from ..operators._util import dec, register_tmp_dir
-from .io import load_table, stage_ordered_topic, table_path
+from ..operators._util import dec
+from .io import load_table, stage_ordered_topic, table_path, workspace
 
 # Common CTE (DuckDB) mirroring build_changelog()
 CHANGELOG_SQL = """
@@ -240,14 +240,12 @@ def dim_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     The batch loop is the test-harness replay of the streaming
     foreachBatch sink ``stream_cdc_upsert`` — same store, same merge.
     """
-    import tempfile
-
     # lazy import: lakehouse registers queries and imports this module
     from ..plans.lakehouse import LakeTable
 
     changelog, batches = _changelog_thirds(spark, sf_dir)
     try:
-        table = LakeTable(register_tmp_dir(tempfile.mkdtemp(prefix="dim_store_")), "key")
+        table = LakeTable(workspace("dim_store_"), "key")
         for batch in batches:
             table.merge(spark, batch)
         return table.read(spark)
@@ -452,7 +450,6 @@ def stream_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     read. The final running aggregate carries the same full oracle as
     the batch twin — batch boundaries are invisible because signed
     DECIMAL addition is associative and commutative."""
-    import tempfile
     from decimal import Decimal
 
     # lazy import: lakehouse registers queries and imports this module
@@ -462,7 +459,7 @@ def stream_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prepare(spark)
     stream = cdc_binlog_stream(spark, sf_dir)
-    table = LakeTable(register_tmp_dir(tempfile.mkdtemp(prefix="cdc_retract_dim_")), "key")
+    table = LakeTable(workspace("cdc_retract_dim_"), "key")
     agg: dict[str, list] = {}  # status -> [n_orders, Decimal total]
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

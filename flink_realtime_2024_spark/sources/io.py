@@ -20,12 +20,16 @@ z-ordered tables, stream topics, the IVF index, bench probe corpora);
 kNN query sets and quantizers, BPE merges, the no-AQE clone). Both are
 keyed on CONTENT — every input file's relpath, size and mtime_ns plus
 the knobs that shape the result — so a fixture regenerated in place at
-the same path misses by construction.
+the same path misses by construction. Every other directory the package
+writes (sink outputs, lake tables, stream checkpoints) comes from
+``workspace``, which removes it at interpreter exit.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import threading
 
@@ -117,7 +121,6 @@ def _prune_stale(stem: str, keep: str) -> None:
     dir is minutes old at most). Only exact ``<stem>_<digest>`` names
     match, so a longer name sharing the prefix is never touched."""
     import re
-    import shutil
     import time
 
     own = re.compile(re.escape(os.path.basename(stem)) + r"_[0-9a-f]{16}(\.tmp\..+)?")
@@ -153,7 +156,6 @@ def stage(name: str, inputs, params, build) -> str:
     digest are pruned, so a regenerated fixture leaves one live copy;
     ``name`` must therefore tell apart inputs that are live at the same
     time (callers put the sf dir's basename in it)."""
-    import shutil
     import uuid
 
     stem = os.path.join(tempfile.gettempdir(), name)
@@ -213,6 +215,22 @@ def forget(spark: SparkSession, kind: str) -> None:
         held = [v for _, v in store.values() if isinstance(v, SparkSession)]
     for s in held:
         forget(s, kind)
+
+
+# Every dir workspace() has handed out; removed at interpreter exit, so
+# long pytest/bench/driver processes leave no per-run dirs behind.
+_WORKSPACES: list[str] = []
+atexit.register(lambda: [shutil.rmtree(d, ignore_errors=True) for d in _WORKSPACES])
+
+
+def workspace(prefix: str) -> str:
+    """A fresh private ``$TMPDIR/<prefix>*`` directory for a sink output,
+    a table or a checkpoint, removed at interpreter exit. The only way
+    package code gets a scratch or output dir; layouts derived from
+    fixture files go through ``stage`` instead."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _WORKSPACES.append(path)
+    return path
 
 
 def stage_ordered_topic(name: str, inputs, frame, n_files: int, order_col: str) -> str:

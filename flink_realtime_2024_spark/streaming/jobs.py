@@ -15,14 +15,17 @@ would — swap ``format("parquet")`` for ``format("kafka")`` in
 production and nothing else changes. That substitution point is
 ``events_stream()``.
 
-Determinism: each fire writes into a fresh temp dir; results are read
-back as plain DataFrames so the driver can collect them.
+Sinks: every file sink is ``stream_to_parquet``. A run writes into its
+own ``workspace`` dir, a complete-mode snapshot overwrites it and any
+other batch overwrites its own ``batch=<id>`` dir, so a replayed batch
+replaces itself instead of landing twice. The output is read back as a
+plain DataFrame so the driver can collect it.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +37,7 @@ from ..sources.io import (
     stage,
     stage_ordered_topic,
     table_path,
+    workspace,
 )
 from ..session import prepare
 from ..plans.registry import register
@@ -72,8 +76,6 @@ def _staged_events_dir_keyed(spark: SparkSession, sf_dir: str, n_files: int = 4)
     repartition), the batch→row mapping here is a pure function of the
     data — which lets batch-boundary-dependent jobs (late-row split)
     carry a full DuckDB oracle instead of a rows-only check."""
-    import shutil
-
     path = table_path(sf_dir, "events")
 
     def build(tmp: str) -> None:
@@ -124,14 +126,17 @@ last_stream_breakdown: dict[str, dict] = {}
 
 def run_stream(df_writer, checkpoint_tag: str):
     """Start with availableNow (process everything, then stop) + a fresh
-    checkpoint dir (S11, removed at interpreter exit), await
-    termination. Records a per-stage durationMs breakdown into
+    checkpoint dir (S11), await termination and remove the checkpoint
+    once the query has stopped: no caller resumes an availableNow run.
+    Records a per-stage durationMs breakdown into
     ``last_stream_breakdown``."""
-    from ..operators._util import register_tmp_dir
-
-    ckpt = register_tmp_dir(tempfile.mkdtemp(prefix=f"ckpt_{checkpoint_tag}_"))
+    ckpt = workspace(f"ckpt_{checkpoint_tag}_")
     q = df_writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()  # a no-op once terminated; an interrupted wait leaves it running
+        shutil.rmtree(ckpt, ignore_errors=True)
     stages: dict[str, int] = {}
     batches = 0
     rows = 0
@@ -174,6 +179,37 @@ def _accumulate_breakdown(tag: str, bd: dict) -> None:
     last_stream_breakdown[tag] = bd
 
 
+def write_batch(
+    batch_df: DataFrame, batch_id: int, out: str, output_mode: str = "append", transform=None
+) -> None:
+    """Write one micro-batch of a file sink, after ``transform``. A
+    ``complete`` batch is the whole result and overwrites ``out``; any
+    other batch overwrites its own ``out/batch=<id>`` dir, so a replayed
+    batch replaces itself instead of adding its rows a second time."""
+    if transform is not None:
+        batch_df = transform(batch_df)
+    dest = out if output_mode == "complete" else os.path.join(out, f"batch={batch_id}")
+    batch_df.write.mode("overwrite").parquet(dest)
+
+
+def stream_to_parquet(
+    df: DataFrame, tag: str, output_mode: str = "append", transform=None
+) -> DataFrame:
+    """The streaming file sink: run ``df`` to completion through
+    ``run_stream`` with every micro-batch written by ``write_batch``
+    into a fresh ``workspace`` dir, and return what it holds with only
+    the written columns (no ``batch`` partition column)."""
+    out = workspace(f"{tag}_out_")
+    run_stream(
+        df.writeStream.outputMode(output_mode).foreachBatch(
+            lambda batch_df, batch_id: write_batch(batch_df, batch_id, out, output_mode, transform)
+        ),
+        tag,
+    )
+    result = df.sparkSession.read.parquet(out)
+    return result if output_mode == "complete" else result.drop("batch")
+
+
 def late_rows_metrics(spark: SparkSession, sf_dir: str, delay: str = "1 hour") -> dict:
     """T7 allowed-lateness accounting. Structured Streaming has no late-
     data *side output* (documented semantic gap, SURVEY §2.8 T7) — the
@@ -191,12 +227,8 @@ def late_rows_metrics(spark: SparkSession, sf_dir: str, delay: str = "1 hour") -
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = tempfile.mkdtemp(prefix="late_metrics_out_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out)
-
-    q = run_stream(agg.writeStream.outputMode("append").foreachBatch(sink), "late")
+    # only the progress is read: the noop sink writes nothing
+    q = run_stream(agg.writeStream.outputMode("append").format("noop"), "late")
     dropped = 0
     batches = 0
     for p in q.recentProgress:
@@ -237,14 +269,13 @@ def stream_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = tempfile.mkdtemp(prefix="stream_topn_out_")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def top2(snapshot: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
         w = Window.partitionBy("window").orderBy(F.desc("n"), "event_type")
-        (
-            batch_df.withColumn("rn", F.row_number().over(w))
+        return (
+            snapshot.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= 2)
             .select(
                 F.unix_micros(F.col("window.start")).alias("bucket_us"),
@@ -252,12 +283,9 @@ def stream_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n",
                 F.col("rn").cast("bigint").alias("rn"),
             )
-            .write.mode("overwrite")
-            .parquet(out)
         )
 
-    run_stream(agg.writeStream.outputMode("complete").foreachBatch(sink), "wtopn")
-    return spark.read.parquet(out)
+    return stream_to_parquet(agg, "wtopn", "complete", top2)
 
 
 @register(
@@ -290,9 +318,8 @@ def stream_window_cumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,4)")).alias("val"),
         )
     )
-    out = tempfile.mkdtemp(prefix="stream_cumulate_out_")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def expand(snapshot: DataFrame) -> DataFrame:
         # integer-exact bucket arithmetic (pmod + integer `div`, no
         # float division anywhere): window.start is 15-min aligned,
         # so pmod(ms, 1h) div 15min ∈ {0,1,2,3}
@@ -301,8 +328,8 @@ def stream_window_cumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
         step_idx = F.expr(
             "CAST(pmod(unix_millis(window.start), 3600000) DIV 900000 AS INT) + 1"
         )
-        (
-            batch_df.select(
+        return (
+            snapshot.select(
                 hour.alias("window_start_ms"),
                 step_idx.alias("i"),
                 "event_type",
@@ -325,12 +352,9 @@ def stream_window_cumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n").alias("n"),
                 F.sum("val").cast("double").alias("total_value"),
             )
-            .write.mode("overwrite")
-            .parquet(out)
         )
 
-    run_stream(agg.writeStream.outputMode("complete").foreachBatch(sink), "wcumulate")
-    return spark.read.parquet(out)
+    return stream_to_parquet(agg, "wcumulate", "complete", expand)
 
 
 _STREAM_DIM_ORACLE = """
@@ -353,13 +377,7 @@ def stream_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = ev.join(cust, "user_id")
     agg = joined.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n_events"))
-    out = tempfile.mkdtemp(prefix="stream_dim_out_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out)
-
-    run_stream(agg.writeStream.outputMode("complete").foreachBatch(sink), "dimjoin")
-    return spark.read.parquet(out)
+    return stream_to_parquet(agg, "dimjoin", "complete")
 
 
 _SSJ_ORACLE = """
@@ -407,15 +425,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("cts") >= F.col("pts") - F.expr("INTERVAL 30 MINUTES"))
         & (F.col("cts") <= F.col("pts")),
     ).select("purchase_id", "click_id")
-    out = tempfile.mkdtemp(prefix="ssj_out_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # append-once per pair: stream-stream inner joins emit each match
-        # exactly once (state-backed); batch dirs keep retries idempotent
-        batch_df.write.mode("overwrite").parquet(os.path.join(out, f"batch={batch_id}"))
-
-    run_stream(joined.writeStream.outputMode("append").foreachBatch(sink), "ssj")
-    return spark.read.parquet(out).select("purchase_id", "click_id")
+    # stream-stream inner joins emit each match exactly once (state-backed)
+    return stream_to_parquet(joined, "ssj")
 
 
 _LATE_SPLIT_ORACLE = """
@@ -471,7 +482,7 @@ def stream_late_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    root = tempfile.mkdtemp(prefix="late_split_")
+    root = workspace("late_split_")
     allowed_us = 3_600_000_000  # 1 hour allowed lateness
     wm = {"us": None}  # watermark BEFORE the current batch, in epoch-µs
 
@@ -537,16 +548,7 @@ def stream_source_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch answer — so it gets a full oracle, not just rows-only."""
     ev = events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    out = tempfile.mkdtemp(prefix="stream_smoke_out_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # complete-mode rewrite per batch — idempotent by construction
-        batch_df.write.mode("overwrite").parquet(out)
-
-    run_stream(
-        agg.writeStream.outputMode("complete").foreachBatch(sink), "smoke"
-    )
-    return spark.read.parquet(out)
+    return stream_to_parquet(agg, "smoke", "complete")
 
 
 _SPLIT_ORACLE = """
@@ -561,41 +563,18 @@ FROM events GROUP BY 1
 @register("stream_split", oracle=_SPLIT_ORACLE, section="F4")
 def stream_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 side outputs / stream split (the DWD log-split job: page/err/
-    action topics). One parent stream fans out to N filtered branches
-    inside a single foreachBatch — each branch appends to its own sink
-    (its own 'topic'); per-branch totals are the query result."""
-    ev = events_stream(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="stream_split_")
-    branches = {
-        "errors": F.col("event_type") == "error",
-        "conversions": F.col("event_type").isin("purchase", "signup"),
-        "traffic": ~F.col("event_type").isin("error", "purchase", "signup"),
-    }
-
-    def split_sink(batch_df: DataFrame, batch_id: int) -> None:
-        # exactly-once contract (SURVEY §7): idempotent writes keyed by
-        # batchId — a retried batch overwrites its own directory instead
-        # of appending duplicates
-        batch_df.persist()
-        try:
-            for name, cond in branches.items():
-                branch_dir = os.path.join(root, name, f"batch={batch_id}")
-                batch_df.filter(cond).write.mode("overwrite").parquet(branch_dir)
-        finally:
-            batch_df.unpersist()
-
-    run_stream(ev.writeStream.foreachBatch(split_sink), "split")
-
-    result = None
-    for name in branches:
-        df = (
-            spark.read.parquet(os.path.join(root, name))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(name).alias("branch"), "n")
-        )
-        result = df if result is None else result.unionByName(df)
-    assert result is not None
-    return result
+    action topics). Each row of the parent stream is tagged with its
+    destination branch, so a micro-batch is one write whatever the
+    number of branches; per-branch totals are the query result."""
+    branch = (
+        F.when(F.col("event_type") == "error", "errors")
+        .when(F.col("event_type").isin("purchase", "signup"), "conversions")
+        .otherwise("traffic")
+    )
+    tagged = events_stream(spark, sf_dir).withColumn("branch", branch)
+    return stream_to_parquet(tagged, "split").groupBy("branch").agg(
+        F.count(F.lit(1)).alias("n")
+    )
 
 
 _DEDUP_ORACLE = """
@@ -619,14 +598,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doubled.withWatermark("ts", "31 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    out = tempfile.mkdtemp(prefix="stream_dedup_out_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # idempotent per-batch overwrite (exactly-once under retries)
-        batch_df.write.mode("overwrite").parquet(os.path.join(out, f"batch={batch_id}"))
-
-    run_stream(deduped.writeStream.outputMode("append").foreachBatch(sink), "dedup")
-    return spark.read.parquet(out).agg(F.count(F.lit(1)).alias("n_unique"))
+    return stream_to_parquet(deduped, "dedup").agg(F.count(F.lit(1)).alias("n_unique"))
 
 
 _ROUTING_ORACLE = """
@@ -645,12 +617,12 @@ FROM events GROUP BY 1
 def config_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T8 broadcast state / dynamic config (the reference's CDC-driven
     table-process routing): a small config table is re-read every
-    micro-batch and broadcast-joined onto the data stream to decide each
-    record's destination. Config changes between batches take effect on
-    the next batch — exactly the Flink broadcast-state contract."""
+    micro-batch and broadcast-joined onto the data stream to tag each
+    record with its destination route. Config changes between batches
+    take effect on the next batch — exactly the Flink broadcast-state
+    contract."""
     ev = events_stream(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="config_routing_")
-    config_path = os.path.join(root, "config")
+    config_path = workspace("config_routing_")
     rules = [
         ("purchase", "dwd_trade"),
         ("signup", "dwd_user"),
@@ -661,21 +633,15 @@ def config_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.createDataFrame(rules, "event_type string, route string").write.mode(
         "overwrite"
     ).parquet(config_path)
-    out = os.path.join(root, "routed")
 
-    def route_sink(batch_df: DataFrame, batch_id: int) -> None:
+    def route(batch_df: DataFrame) -> DataFrame:
         config = F.broadcast(batch_df.sparkSession.read.parquet(config_path))
-        routed = batch_df.join(config, "event_type", "left").withColumn(
+        return batch_df.join(config, "event_type", "left").withColumn(
             "route", F.coalesce("route", F.lit("dwd_traffic"))
         )
-        # idempotent per-batch overwrite (exactly-once under retries)
-        routed.write.mode("overwrite").partitionBy("route").parquet(
-            os.path.join(out, f"batch={batch_id}")
-        )
 
-    run_stream(ev.writeStream.foreachBatch(route_sink), "routing")
     return (
-        spark.read.parquet(out)
+        stream_to_parquet(ev, "routing", transform=route)
         .groupBy("route")
         .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("user_id").alias("uv"))
     )
@@ -803,25 +769,24 @@ def stream_neardup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("tok"),
     ).persist()
 
-    staged = tempfile.mkdtemp(prefix="neardup_ingest_")
-    incoming.repartition(4).write.mode("overwrite").parquet(staged)
+    staged = stage(
+        f"neardup_ingest_{os.path.basename(os.path.normpath(sf_dir))}",
+        [table_path(sf_dir, "documents")], (4,),
+        lambda tmp: incoming.repartition(4).write.parquet(tmp),
+    )
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-
-    out = tempfile.mkdtemp(prefix="neardup_admit_out_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        probe = batch_df.select(
-            "doc_id", shingle_str_expr("text").alias("sh")
-        )
-        neardup_admit_batch(probe, index).write.mode("append").parquet(out)
-
-    run_stream(stream.writeStream.foreachBatch(sink), "neardup_admit")
+    admitted = stream_to_parquet(
+        stream, "neardup_admit",
+        transform=lambda batch_df: neardup_admit_batch(
+            batch_df.select("doc_id", shingle_str_expr("text").alias("sh")), index
+        ),
+    )
     store.unpersist()
-    return spark.read.parquet(out)
+    return admitted
 
 
 _AGG_MERGE_ORACLE = """
@@ -869,19 +834,19 @@ def stream_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     No manifest records the batch id, and a sum is not idempotent: a
     replayed batch (a restart between the commit and the offset
-    commit) is counted twice.
+    commit) is counted twice. The file sinks replace a replayed batch
+    by its id (``write_batch``); this keyed store needs its commit to
+    record a (queryId, batchId) txn for the same guarantee.
 
     Scale: compaction folds the deltas into base once there are more
     than a few (the sum runs inside the compaction's range partitions,
     so it costs no extra shuffle). At 100 TB of history the state table
     is still only O(users)."""
-    from ..operators._util import dec, register_tmp_dir
+    from ..operators._util import dec
     from ..plans.lakehouse import LakeTable
 
     ev = events_stream(spark, sf_dir)
-    table = LakeTable(
-        register_tmp_dir(tempfile.mkdtemp(prefix="agg_merge_")), "user_id", reduce=sum_per_user
-    )
+    table = LakeTable(workspace("agg_merge_"), "user_id", reduce=sum_per_user)
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.select(

@@ -27,9 +27,6 @@ nothing is driver-resident.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pandas as pd
 
 import pyspark.sql.functions as F
@@ -317,7 +314,7 @@ def run_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the CEP job over the in-order replay (register semantics
     need cross-batch event-time order) and aggregate the accumulated
     conversion stream to the batch twin's schema."""
-    from .jobs import run_stream, staged_events_dir_ordered
+    from .jobs import staged_events_dir_ordered, stream_to_parquet
     from ..session import prepare
     from ..sources.io import events_ts_to_timestamp
 
@@ -328,17 +325,8 @@ def run_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    out = tempfile.mkdtemp(prefix="cep_funnel_out_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    run_stream(
-        cep_funnel_stream(ev).writeStream.outputMode("append").foreachBatch(sink),
-        "cep_funnel",
-    )
     return (
-        spark.read.parquet(out)
+        stream_to_parquet(cep_funnel_stream(ev), "cep_funnel")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_conversions"),
@@ -352,21 +340,10 @@ def run_first_visits(
 ) -> DataFrame:
     """Execute the streaming first-visit job over the staged replay and
     return the accumulated output (all micro-batches appended)."""
-    from .jobs import events_stream, run_stream
+    from .jobs import events_stream, stream_to_parquet
 
     ev = events_stream(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="first_visits_out_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    run_stream(
-        first_visits_stream(ev, use_tws=use_tws)
-        .writeStream.outputMode("append")
-        .foreachBatch(sink),
-        "first_visits",
-    )
-    return spark.read.parquet(out)
+    return stream_to_parquet(first_visits_stream(ev, use_tws=use_tws), "first_visits")
 
 
 def run_order_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,7 +351,7 @@ def run_order_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark to advance monotonically across micro-batches)."""
     from ..session import prepare
     from ..sources.io import events_ts_to_timestamp
-    from .jobs import run_stream, staged_events_dir_ordered
+    from .jobs import staged_events_dir_ordered, stream_to_parquet
 
     prepare(spark)
     staged = staged_events_dir_ordered(spark, sf_dir)
@@ -383,13 +360,4 @@ def run_order_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    out = tempfile.mkdtemp(prefix="order_timeouts_out_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    run_stream(
-        order_timeouts_stream(ev).writeStream.outputMode("append").foreachBatch(sink),
-        "order_timeouts",
-    )
-    return spark.read.parquet(out)
+    return stream_to_parquet(order_timeouts_stream(ev), "order_timeouts")

@@ -197,3 +197,28 @@ def test_no_session_id_memo_keys():
                 if pattern.search(line)
             ]
     assert not hits, hits
+
+
+def test_dirs_come_from_workspace():
+    """Package code gets its scratch and output dirs from
+    ``sources.io.workspace``, which removes them at interpreter exit. A
+    raw ``mkdtemp`` leaks one dir per call, and a pid-named path one per
+    process. Only the two transient same-filesystem staging dirs, which
+    their owners rename or remove, keep their own ``mkdtemp``."""
+    staging = {
+        "flink_realtime_2024_spark/plans/lakehouse.py": 'prefix="lake_stage_"',
+        "flink_realtime_2024_spark/sources/maintenance.py": 'prefix=".compact_staging_"',
+    }
+    io_py = os.path.join("flink_realtime_2024_spark", "sources", "io.py")
+    hits = []
+    for root, _, files in os.walk(os.path.join(REPO, "flink_realtime_2024_spark")):
+        for f in files:
+            rel = os.path.relpath(os.path.join(root, f), REPO)
+            if not f.endswith(".py") or rel == io_py:
+                continue
+            with open(os.path.join(root, f), encoding="utf-8") as fh:
+                for n, line in enumerate(fh, 1):
+                    raw = "tempfile.mkdtemp(" in line and staging.get(rel, "\0") not in line
+                    if raw or "os.getpid()" in line:
+                        hits.append(f"{rel}:{n}")
+    assert not hits, hits

@@ -1511,3 +1511,31 @@ def test_widen_exchange_probe_classifies_and_stays_lazy(spark):
     assert after == before, "widen() eagerly executed a shuffle-bearing plan"
     # and the decision is the unconditional repartition (pre-r12 shape)
     assert "Repartition" in out._jdf.queryExecution().analyzed().toString()
+
+
+def test_lake_table_is_built_per_orders_content(spark, tmp_path):
+    """The memoized lakehouse table is keyed on the orders file's
+    content, not on the sf dir's basename: two sf dirs with one basename
+    but different orders each get lake_cdc_merge results that match
+    their own changelog's latest-per-key state."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from flink_realtime_2024_spark.plans.lakehouse import lake_cdc_merge
+    from flink_realtime_2024_spark.sources.cdc import cdc_latest_row
+
+    cols = ["key", "op", "totalprice", "orderstatus", "ts_ms"]
+    orders = pq.read_table(f"{SF_DIR}/orders.parquet")
+    even = orders.filter(pc.equal(pc.bit_wise_and(orders["o_orderkey"], 1), 0))
+    results = []
+    for i, part in enumerate((orders, even)):
+        d = tmp_path / f"copy{i}" / os.path.basename(os.path.normpath(SF_DIR))
+        d.mkdir(parents=True)
+        pq.write_table(part, str(d / "orders.parquet"))
+        got = {tuple(r) for r in lake_cdc_merge(spark, str(d)).select(cols).collect()}
+        want = {tuple(r) for r in cdc_latest_row(spark, str(d)).select(cols).collect()}
+        assert got == want
+        results.append(got)
+    assert results[0] != results[1]

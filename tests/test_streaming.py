@@ -774,16 +774,60 @@ def test_stream_cdc_upsert_jobs_per_batch_and_single_scan(spark, monkeypatch):
     assert sum(p["numInputRows"] for p in progress) == build_changelog(spark, SF_DIR).count()
 
 
-def test_run_stream_registers_checkpoint_dir(spark):
-    """run_stream's fresh checkpoint dir is registered for removal at
-    interpreter exit, like every other per-run temp dir: after a
-    streaming builder runs, its ``ckpt_<tag>_`` dir is in the registry."""
+def test_stream_split_jobs_per_batch(spark, monkeypatch):
+    """stream_split tags each row with its branch, so a micro-batch is
+    one write: at most 1 Spark job per batch, whatever the number of
+    branches."""
+    from flink_realtime_2024_spark.streaming.jobs import stream_split
+
+    per_batch, _ = _jobs_per_batch(spark, monkeypatch, stream_split)
+    assert max(per_batch.values()) <= 1, per_batch
+
+
+def test_write_batch_replay_is_idempotent(spark, tmp_path):
+    """The file sink keys an append-mode batch by its id: writing batch
+    1 again (a replay after a restart between the sink write and the
+    offset commit) replaces it instead of adding its rows twice."""
+    from flink_realtime_2024_spark.streaming.jobs import write_batch
+
+    out = str(tmp_path / "sink")
+    write_batch(spark.range(3), 0, out)
+    write_batch(spark.range(10, 15), 1, out)
+    write_batch(spark.range(10, 15), 1, out)
+    got = sorted(r["id"] for r in spark.read.parquet(out).drop("batch").collect())
+    assert got == [0, 1, 2, 10, 11, 12, 13, 14]
+
+
+def test_run_stream_removes_checkpoint_dir(spark):
+    """run_stream removes its checkpoint once the query has stopped, so
+    a long-lived process keeps no dir per run."""
     import os
 
-    from flink_realtime_2024_spark.operators import _util
+    from flink_realtime_2024_spark.sources import io
     from flink_realtime_2024_spark.streaming.jobs import stream_source_smoke
 
-    before = set(_util._TMP_DIRS)
+    before = len(io._WORKSPACES)
     stream_source_smoke(spark, SF_DIR).collect()
-    new = [d for d in _util._TMP_DIRS if d not in before]
-    assert any(os.path.basename(d).startswith("ckpt_smoke_") for d in new), new
+    ckpts = [d for d in io._WORKSPACES[before:] if os.path.basename(d).startswith("ckpt_smoke_")]
+    assert ckpts and not any(os.path.exists(d) for d in ckpts), ckpts
+
+
+def test_streaming_builders_write_only_staged_and_workspace_dirs(spark, tmp_path, monkeypatch):
+    """Every top-level dir a streaming builder leaves in the temp dir is
+    either a ``stage()`` layout (``<name>_<16 hex>``, one per content)
+    or a ``workspace`` dir (removed at interpreter exit)."""
+    import os
+    import re
+
+    from flink_realtime_2024_spark.sources import io
+    from flink_realtime_2024_spark.streaming.jobs import stream_source_smoke, stream_split
+    from flink_realtime_2024_spark.streaming.stateful import run_first_visits
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for build in (stream_source_smoke, stream_split, run_first_visits):
+        build(spark, SF_DIR).collect()
+    staged = re.compile(r".+_[0-9a-f]{16}")
+    entries = os.listdir(tmp_path)
+    ours = [e for e in entries if str(tmp_path / e) in io._WORKSPACES]
+    left = [e for e in entries if e not in ours and not staged.fullmatch(e)]
+    assert ours and not left, (ours, left)
