@@ -9,7 +9,8 @@ result.
 
 Streaming-side metrics (state rows, watermark drops) come from
 StreamingQueryProgress instead — see streaming/jobs.py
-late_rows_metrics for that path.
+late_rows_metrics for that path. JVM-wide counters come from Spark's
+own metric sources: ``codegen_compiles`` reads the codegen one.
 """
 
 from __future__ import annotations
@@ -64,3 +65,13 @@ def await_observation(obs: Observation, who: str) -> dict:
             )
         time.sleep(0.005)
     return obs.get
+
+
+def codegen_compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far, across
+    every session on it: the "what was reused" counter for whole-stage
+    codegen. A plan whose classes are still in Spark's codegen cache
+    compiles none, so the difference over a repeat of the same plans
+    is 0 when the cache holds their working set."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -74,10 +74,14 @@ def winfn_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
+    # the filter stays on the raw row_number() so Spark can push it down
+    # as a WindowGroupLimit; the cast after it gives the oracle's BIGINT
     return (
         orders.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
-        .select("o_orderpriority", "o_orderkey", "o_totalprice", "rn")
+        .select(
+            "o_orderpriority", "o_orderkey", "o_totalprice", F.col("rn").cast("bigint").alias("rn")
+        )
     )
 
 
@@ -94,15 +98,16 @@ FROM supplier
 @register("winfn_rank", oracle=_RANK_ORACLE, section="W2")
 def winfn_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 rank/dense_rank — tie-tolerant (equal acctbal ⇒ equal rank, so
-    the values are deterministic without a tiebreaker)."""
+    the values are deterministic without a tiebreaker). Spark's ranks
+    are INTEGER; cast to the oracle's BIGINT."""
     supplier = load_table(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy(F.col("s_acctbal").desc())
     return supplier.select(
         "s_suppkey",
         "s_nationkey",
         "s_acctbal",
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
+        F.rank().over(w).cast("bigint").alias("rnk"),
+        F.dense_rank().over(w).cast("bigint").alias("drnk"),
     )
 
 

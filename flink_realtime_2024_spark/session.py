@@ -13,6 +13,15 @@ Scale notes (100 TB design):
   env; on a real cluster leave high (e.g. 2×cores) and let AQE coalesce.
 - Arrow execution for every pandas_udf/mapInPandas kernel (vectorized
   Python, not row-at-a-time pickling).
+- ``spark.sql.codegen.cache.maxEntries`` — the JVM-wide cache of
+  whole-stage-codegen classes, sized to the engine's working set so each
+  generated class is compiled (Janino, then the JIT) once per JVM. The
+  six ``dws_serving`` serving reads need about 100-120 classes and the
+  37 benched ids about 450-470 at sf0.01 and sf0.1 (one pass each, on
+  ``local[4]``); under Spark's default of 100 every repeat of a plan
+  shape compiled most of its classes again. A static conf, so only
+  ``get_spark`` can set it: a session built elsewhere (the verification
+  driver's, ``driver_sim.py``'s) keeps Spark's 100.
 """
 
 from __future__ import annotations
@@ -166,6 +175,9 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # static, read at the JVM's first codegen (see Scale notes): about
+        # twice the ~470 classes one pass of the 37 benched ids compiles
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.ui.enabled", "false")
         # console progress bars share stdout with bench.py's one-line
         # JSON contract and truncated the driver's tail capture

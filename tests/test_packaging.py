@@ -222,3 +222,29 @@ def test_dirs_come_from_workspace():
                     if raw or "os.getpid()" in line:
                         hits.append(f"{rel}:{n}")
     assert not hits, hits
+
+
+def test_tests_take_dirs_from_pytest():
+    """Tests get their scratch dirs from pytest's ``tmp_path`` or
+    ``tmp_path_factory``, which pytest reaps; a raw ``mkdtemp`` call
+    leaks one dir per run. ``parity.compare_engine_side``'s default
+    ``workdir``, which every caller in the suite overrides, is the one
+    exception."""
+    import ast
+
+    allowed = {os.path.join("tests", "parity.py"): 'prefix="parity_engine_side_"'}
+    hits = []
+    for f in sorted(os.listdir(os.path.join(REPO, "tests"))):
+        if not f.endswith(".py"):
+            continue
+        rel = os.path.join("tests", f)
+        with open(os.path.join(REPO, rel), encoding="utf-8") as fh:
+            src = fh.read()
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", "")
+            if name == "mkdtemp" and allowed.get(rel, "\0") not in ast.get_source_segment(src, node):
+                hits.append(f"{rel}:{node.lineno}")
+    assert not hits, hits

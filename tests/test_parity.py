@@ -115,6 +115,19 @@ def test_compare_engine_side(spark, tmp_path):
             "dec_val", str(tmp_path))
 
 
+@pytest.mark.parametrize("name", ["winfn_topn", "winfn_rank"])
+def test_window_ranks_pass_engine_side(name, spark, duck, tmp_path):
+    """Spark's row_number()/rank()/dense_rank() are INTEGER and DuckDB's
+    BIGINT. The pandas gate tags both widths ``int``; the type-faithful
+    engine-side compare does not, so the builders cast their ranks."""
+    from .parity import compare_engine_side
+
+    duck.execute(f"CREATE OR REPLACE TEMP TABLE _oracle AS {_QUERIES[name].oracle}")
+    assert compare_engine_side(
+        _QUERIES[name].builder(spark, SF_DIR), duck, "_oracle", name, str(tmp_path)
+    ) > 0
+
+
 def test_deltas_skip_quarantined_history(tmp_path, monkeypatch):
     """r12 (verdict #3): a bench_history entry carrying `quarantined`
     (a record taken under known contamination) must never become the

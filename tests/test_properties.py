@@ -461,13 +461,12 @@ def _compact(spark, table, how):
 
 @given(merge_batches(), _COMPACTIONS)
 @settings(**_SETTINGS)
-def test_lakehouse_merge_matches_dict_state(spark, batches, compactions):
+def test_lakehouse_merge_matches_dict_state(spark, tmp_path_factory, batches, compactions):
     """Any sequence of MERGE commits, with compactions drawn anywhere
     between them, must leave the table equal to a trivial dict-state
     replay of the same batches (latest image per key, deletes drop) —
     merge-on-read reduction, stats-pruned compaction, file carry-over
     and in-batch dedup can never change semantics."""
-    import tempfile
 
     from flink_realtime_2024_spark.plans.lakehouse import LakeTable
 
@@ -486,7 +485,7 @@ def test_lakehouse_merge_matches_dict_state(spark, batches, compactions):
                 __import__(
                     "flink_realtime_2024_spark.sources.cdc", fromlist=["latest_per_key"]
                 ).latest_per_key(df),
-                tempfile.mkdtemp(prefix="lake_prop_"),
+                str(tmp_path_factory.mktemp("lake_prop")),
                 "key",
                 n_files=3,
             )
@@ -509,11 +508,10 @@ def test_lakehouse_merge_matches_dict_state(spark, batches, compactions):
 
 @given(merge_batches())
 @settings(**_SETTINGS)
-def test_lakehouse_snapshot_diff_matches_dict_diff(spark, batches):
+def test_lakehouse_snapshot_diff_matches_dict_diff(spark, tmp_path_factory, batches):
     """snapshot_diff(v0, latest) must equal the dict-state diff of the
     replayed batches: +I for keys absent at v0, -D for keys gone, U for
     changed images — and nothing for keys merely rewritten unchanged."""
-    import tempfile
 
     from flink_realtime_2024_spark.plans.lakehouse import LakeTable, snapshot_diff
     from flink_realtime_2024_spark.sources.cdc import latest_per_key
@@ -533,7 +531,7 @@ def test_lakehouse_snapshot_diff_matches_dict_diff(spark, batches):
         return  # empty creation snapshot: read() rejects, nothing to diff
     table = LakeTable.create(
         latest_per_key(spark.createDataFrame(batches[0], schema)),
-        tempfile.mkdtemp(prefix="lake_dprop_"),
+        str(tmp_path_factory.mktemp("lake_dprop")),
         "key",
         n_files=3,
     )
@@ -579,21 +577,22 @@ def sum_batches(draw):
 @example([[(0, Decimal("1.5")), (9, Decimal("-2.25"))], [(100, Decimal("0.0001"))],
           [(5, Decimal("3")), (101, Decimal("-0.5"))]], ["fold", "fold", "fold", "none"])
 @settings(**_SETTINGS)
-def test_lakehouse_sum_merge_matches_dict_sum(spark, batches, compactions):
+def test_lakehouse_sum_merge_matches_dict_sum(spark, tmp_path_factory, batches, compactions):
     """MERGE commits into a table with stream_agg_merge's sum reduction,
     with compactions drawn anywhere between them, must leave the table
     equal to a dict of exact per-key sums of the same batches. A merge
     rewrites nothing (every file of its parent is carried by path), and
     the stats-pruned fold carries every base file whose key range
     misses the deltas' by reference, not rewritten."""
-    import tempfile
 
     import pyspark.sql.functions as F
 
     from flink_realtime_2024_spark.plans.lakehouse import LakeTable
     from flink_realtime_2024_spark.streaming.jobs import sum_per_user
 
-    table = LakeTable(tempfile.mkdtemp(prefix="lake_sum_prop_"), "user_id", reduce=sum_per_user)
+    table = LakeTable(
+        str(tmp_path_factory.mktemp("lake_sum_prop")), "user_id", reduce=sum_per_user
+    )
     want: dict = {}
     for rows, how in zip(batches, compactions):
         for k, v in rows:
@@ -765,14 +764,13 @@ def test_bpe_train_fuzzed_vs_reference(spark, words):
 
 @given(changelogs(), st.integers(0, 10), st.booleans())
 @settings(**_SETTINGS)
-def test_merge_upsert_split_equivalence(spark, rows, split_ts, compact):
+def test_merge_upsert_split_equivalence(spark, tmp_path_factory, rows, split_ts, compact):
     """Applying a changelog in two EVENT-TIME-ORDERED batches through
     ``LakeTable.merge`` — with or without a compaction between them —
     must equal the one-shot latest-per-key materialization for ANY
     split point: the invariant dim_upsert and stream_cdc_upsert rely
     on. (Its replay property over arbitrary batch sequences is
     test_lakehouse_merge_matches_dict_state.)"""
-    import tempfile
 
     from flink_realtime_2024_spark.plans.lakehouse import LakeTable
     from flink_realtime_2024_spark.sources.cdc import latest_per_key
@@ -783,7 +781,7 @@ def test_merge_upsert_split_equivalence(spark, rows, split_ts, compact):
         (r["key"], r["totalprice"], r["orderstatus"])
         for r in latest_per_key(df).collect()
     }
-    table = LakeTable(tempfile.mkdtemp(prefix="lake_split_"), "key")
+    table = LakeTable(str(tmp_path_factory.mktemp("lake_split")), "key")
     table.merge(spark, df.filter(df.ts_ms < split_ts))  # an empty batch commits nothing
     if compact and table._head()[0] >= 0:
         table._compact(spark, n_files=2)
@@ -1118,13 +1116,12 @@ def dup_corpora(draw):
 
 @given(dup_corpora())
 @settings(max_examples=5, deadline=None)
-def test_lsh_kernels_match_oracles_on_generated_corpora(spark, corpus):
+def test_lsh_kernels_match_oracles_on_generated_corpora(spark, tmp_path_factory, corpus):
     """Cross-engine property: on generated duplicate-family corpora
     with tiny bucket caps, the Spark kernels and the generated DuckDB
     oracles emit IDENTICAL pair sets — segmentation hash, chain order,
     star/stitch algebra, and verify thresholds all in lockstep (r11).
     Every example forces oversized buckets (families >> cap)."""
-    import tempfile
 
     import duckdb
 
@@ -1137,7 +1134,7 @@ def test_lsh_kernels_match_oracles_on_generated_corpora(spark, corpus):
 
     rows, cap = corpus
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    path = tempfile.mkdtemp(prefix="lsh_prop_") + "/docs.parquet"
+    path = str(tmp_path_factory.mktemp("lsh_prop")) + "/docs.parquet"
     docs.write.mode("overwrite").parquet(path)
     con = duckdb.connect()
     con.execute(

@@ -7,7 +7,6 @@ from __future__ import annotations
 import contextlib
 import io
 import re
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -184,14 +183,13 @@ def test_targeted_salted_join_matches_plain_join(spark):
             salted_join(left, right, "k", "rk", how=how)
 
 
-def test_schema_evolution_merge(spark):
+def test_schema_evolution_merge(spark, tmp_path):
     """S8 schema evolution: a reader over mixed-generation parquet (an
     evolving DWD table) with mergeSchema sees the superset schema; old
     files surface NULL for the new column."""
     import os
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="schema_evo_")
+    root = str(tmp_path)
     spark.createDataFrame([(1, "a")], "id bigint, v string").write.parquet(
         os.path.join(root, "gen=1")
     )
@@ -210,7 +208,6 @@ def test_dynamic_partition_overwrite(spark):
     batch — the month-partitioned serving table's incremental refresh.
     (Static mode would wipe every other month.)"""
     import os
-    import tempfile
 
     base = spark.createDataFrame(
         [(10, "2024-01"), (20, "2024-02")], "n int, month string"
@@ -338,14 +335,13 @@ def test_retract_aggregate_plan_shape(spark):
         assert python_node not in plan, python_node
 
 
-def test_lakehouse_merge_reuses_disjoint_files(spark):
+def test_lakehouse_merge_reuses_disjoint_files(spark, tmp_path):
     """The lakehouse MERGE must be genuinely incremental: files whose
     key range is disjoint from the batch carry into the new snapshot BY
     REFERENCE (same path, no rewrite), only overlapping files rewrite,
     and earlier snapshots stay byte-identical (time travel) — asserted
     on a keyed table where the merge touches a narrow key band."""
     import os
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -358,7 +354,7 @@ def test_lakehouse_merge_reuses_disjoint_files(spark):
         F.lit("O").alias("orderstatus"),
         F.lit(1000).cast("bigint").alias("ts_ms"),
     )
-    root = tempfile.mkdtemp(prefix="lake_test_")
+    root = str(tmp_path)
     t = LakeTable.create(base, root, "key", n_files=8)
     v0_files = {e["path"] for e in t.manifest(0)["files"]}
     assert len(v0_files) == 8
@@ -396,7 +392,7 @@ def test_lakehouse_merge_reuses_disjoint_files(spark):
     assert os.path.exists(os.path.join(root, "manifest-v2.json"))
 
 
-def test_lakehouse_expire_snapshots(spark):
+def test_lakehouse_expire_snapshots(spark, tmp_path):
     """VACUUM reclaims exactly the files referenced only by dropped
     snapshots: the latest snapshot stays fully readable and content-
     identical, time travel to dropped versions fails, and every data
@@ -405,7 +401,6 @@ def test_lakehouse_expire_snapshots(spark):
     frees no file; after a compaction, expiring frees the replaced
     ones."""
     import os
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -420,7 +415,7 @@ def test_lakehouse_expire_snapshots(spark):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_exp_"), "key", n_files=4)
+    t = LakeTable.create(base, str(tmp_path), "key", n_files=4)
     upd = spark.range(0, 50).select(
         F.col("id").alias("key"), F.lit("u").alias("op"),
         (F.col("id") * 2.0).alias("totalprice"),
@@ -451,11 +446,10 @@ def test_lakehouse_expire_snapshots(spark):
     assert on_disk == referenced, "orphan data files survived vacuum"
 
 
-def test_lakehouse_first_commit_wins(spark):
+def test_lakehouse_first_commit_wins(spark, tmp_path):
     """Two writers racing the same parent snapshot: the second commit
     must FAIL loudly (O_EXCL manifest create), never silently clobber —
     and the winner's snapshot must be what readers see."""
-    import tempfile
 
     import pyspark.sql.functions as F
     import pytest as _pytest
@@ -467,7 +461,7 @@ def test_lakehouse_first_commit_wins(spark):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_race_"), "key", n_files=2)
+    t = LakeTable.create(base, str(tmp_path), "key", n_files=2)
     # writer A commits v1 normally
     upd = spark.createDataFrame(
         [(5, "u", 99.0, "F", 2)],
@@ -482,12 +476,11 @@ def test_lakehouse_first_commit_wins(spark):
     assert got[5] == 99.0 and len(got) == 100
 
 
-def test_lakehouse_compact_and_snapshot_diff(spark):
+def test_lakehouse_compact_and_snapshot_diff(spark, tmp_path):
     """OPTIMIZE commit preserves content and history; snapshot_diff
     reads only the manifests' symmetric difference and reports exactly
     the keys a merge inserted/updated/deleted — carried-by-reference
     files contribute nothing (pruned diff)."""
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -502,7 +495,7 @@ def test_lakehouse_compact_and_snapshot_diff(spark):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_diff_"), "key", n_files=8)
+    t = LakeTable.create(base, str(tmp_path), "key", n_files=8)
     batch = spark.createDataFrame(
         [(5, "u", 999.0, "F", 2), (801, "c", 1.0, "O", 2), (7, "d", None, None, 2)],
         "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint",
@@ -519,12 +512,11 @@ def test_lakehouse_compact_and_snapshot_diff(spark):
     assert len(t.manifest(v2)["files"]) == 2
 
 
-def test_lakehouse_compact_then_expire(spark):
+def test_lakehouse_compact_then_expire(spark, tmp_path):
     """Lifecycle interaction: after OPTIMIZE + VACUUM(keep_last=1) the
     table holds exactly the compacted snapshot's files — merge- and
     pre-compaction files are reclaimed, content is intact."""
     import os
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -539,7 +531,7 @@ def test_lakehouse_compact_then_expire(spark):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_ce_"), "key", n_files=6)
+    t = LakeTable.create(base, str(tmp_path), "key", n_files=6)
     t.merge(
         spark,
         spark.createDataFrame(
@@ -757,7 +749,7 @@ def test_no_unbounded_single_partition_windows(spark):
     )
 
 
-def test_lakehouse_racing_disjoint_writers(spark, monkeypatch):
+def test_lakehouse_racing_disjoint_writers(spark, monkeypatch, tmp_path):
     """Two writers merging DISJOINT key ranges from the SAME parent
     snapshot must BOTH land (round-6 optimistic-concurrency retry): a
     barrier inside _commit forces a true manifest race — the loser's
@@ -765,7 +757,6 @@ def test_lakehouse_racing_disjoint_writers(spark, monkeypatch):
     merge re-derives against the winner's head and commits the next
     version. Under round-5 semantics the loser raised FileExistsError
     to the caller."""
-    import tempfile
     import threading
 
     import pyspark.sql.functions as F
@@ -777,7 +768,7 @@ def test_lakehouse_racing_disjoint_writers(spark, monkeypatch):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    root = tempfile.mkdtemp(prefix="lake_race_retry_")
+    root = str(tmp_path)
     LakeTable.create(base, root, "key", n_files=2)
 
     orig = LakeTable._commit
@@ -821,13 +812,12 @@ def test_lakehouse_racing_disjoint_writers(spark, monkeypatch):
     assert got[5] == 111.0 and got[90] == 222.0 and len(got) == 100
 
 
-def test_lakehouse_delete_delta_masks_base_across_compaction(spark):
+def test_lakehouse_delete_delta_masks_base_across_compaction(spark, tmp_path):
     """A delete is merge-on-read: the merge writes only the tombstone as
     a delta, the base file still holds the key, and every read masks it.
     The stats-pruned fold then rewrites only the base file the tombstone
     overlaps, drops the key from it and carries the others by path; the
     key stays gone."""
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -838,7 +828,7 @@ def test_lakehouse_delete_delta_masks_base_across_compaction(spark):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_tomb_"), "key", n_files=4)
+    t = LakeTable.create(base, str(tmp_path), "key", n_files=4)
     v0 = {e["path"]: e for e in t.manifest(0)["files"]}
     dels = spark.createDataFrame(
         [(7, "d", None, None, 2)],
@@ -860,7 +850,7 @@ def test_lakehouse_delete_delta_masks_base_across_compaction(spark):
     assert sorted(r["key"] for r in t.read(spark).collect()) == keys
 
 
-def test_lakehouse_append_racing_compaction_survives(spark, monkeypatch):
+def test_lakehouse_append_racing_compaction_survives(spark, monkeypatch, tmp_path):
     """An append and a compaction computed against the same head race
     for the next version (a barrier inside _commit makes the race
     real). Whichever loses retries against the winner's head: a lost
@@ -868,7 +858,6 @@ def test_lakehouse_append_racing_compaction_survives(spark, monkeypatch):
     compaction folds the append's delta too. Both updates survive, the
     history is linear, and no uncommitted file is left behind."""
     import os
-    import tempfile
     import threading
 
     import pyspark.sql.functions as F
@@ -880,7 +869,7 @@ def test_lakehouse_append_racing_compaction_survives(spark, monkeypatch):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    root = tempfile.mkdtemp(prefix="lake_race_compact_")
+    root = str(tmp_path)
     schema = "key bigint, op string, totalprice double, orderstatus string, ts_ms bigint"
     LakeTable.create(base, root, "key", n_files=2).merge(
         spark, spark.createDataFrame([(5, "u", 111.0, "F", 2)], schema)
@@ -927,18 +916,17 @@ def test_lakehouse_append_racing_compaction_survives(spark, monkeypatch):
     assert set(os.listdir(final.data_dir)) == referenced
 
 
-def test_lakehouse_reduce_is_recorded_and_checked_on_open(spark):
+def test_lakehouse_reduce_is_recorded_and_checked_on_open(spark, tmp_path):
     """The per-key reduction is a property of the table: every commit
     records it, and opening the table with another one raises instead
     of reading sums as latest images (or the reverse)."""
-    import tempfile
 
     import pyspark.sql.functions as F
 
     from flink_realtime_2024_spark.plans.lakehouse import LakeTable
     from flink_realtime_2024_spark.streaming.jobs import sum_per_user
 
-    root = tempfile.mkdtemp(prefix="lake_reduce_rec_")
+    root = str(tmp_path)
     t = LakeTable(root, "user_id", reduce=sum_per_user)
     rows = spark.createDataFrame([(1, 2), (1, 3), (2, 5)], "user_id bigint, v bigint").select(
         "user_id", F.lit(1).cast("bigint").alias("n_events"),
@@ -953,7 +941,7 @@ def test_lakehouse_reduce_is_recorded_and_checked_on_open(spark):
     assert got == {1: (2, 5.0), 2: (1, 5.0)}
 
 
-def test_lakehouse_merge_write_cost_scales_with_batch(spark):
+def test_lakehouse_merge_write_cost_scales_with_batch(spark, tmp_path_factory):
     """A merge's write cost is O(batch), not O(state): equal batches
     whose keys spread over the WHOLE base (so a copy-on-write merge
     would rewrite every base file) are merged into tables whose base is
@@ -961,7 +949,6 @@ def test_lakehouse_merge_write_cost_scales_with_batch(spark):
     stay within 2x of the batch's own parquet bytes, whatever the base
     size (three merges per table, below the compaction threshold)."""
     import os
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -982,12 +969,12 @@ def test_lakehouse_merge_write_cost_scales_with_batch(spark):
     assert 3 <= _MAX_DELTAS
     for mult in (1, 4, 16):
         t = LakeTable.create(
-            rows(n * mult, 1, "c", 1), tempfile.mkdtemp(prefix=f"lake_cost{mult}_"), "key", 4
+            rows(n * mult, 1, "c", 1), str(tmp_path_factory.mktemp(f"lake_cost{mult}")), "key", 4
         )
         base_bytes = nbytes(t.root, [e["path"] for e in t.manifest(0)["files"]])
         for ts in (2, 3, 4):
             batch = rows(n, mult, "u", ts)  # every mult-th key: all base files
-            own = tempfile.mkdtemp(prefix="lake_cost_batch_")
+            own = str(tmp_path_factory.mktemp("lake_cost_batch"))
             batch.write.mode("overwrite").parquet(own)
             own_bytes = nbytes(own, [f for f in os.listdir(own) if f.endswith(".parquet")])
             head = t.latest_version()
@@ -1003,13 +990,12 @@ def test_lakehouse_merge_write_cost_scales_with_batch(spark):
         assert got[1] == (4 if mult == 1 else 1)
 
 
-def test_lake_point_lookup_prunes_files(spark):
+def test_lake_point_lookup_prunes_files(spark, tmp_path):
     """The manifest Bloom + min/max stats must actually SKIP files on a
     point probe: for a 6-file table, a single-key lookup may read only
     files whose range contains the key AND whose Bloom bit matches —
     structurally < all files, and the un-pruned read returns the same
     row."""
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -1023,7 +1009,7 @@ def test_lake_point_lookup_prunes_files(spark):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_pt_"), "key", n_files=6)
+    t = LakeTable.create(base, str(tmp_path), "key", n_files=6)
     m = t.manifest(t.latest_version())
     assert len(m["files"]) == 6
     probe = 311
@@ -1048,12 +1034,11 @@ def test_lake_point_lookup_prunes_files(spark):
     assert len(got) == 1 and got[0]["totalprice"] == 311.0
 
 
-def test_lakehouse_compact_after_schema_evolution(spark):
+def test_lakehouse_compact_after_schema_evolution(spark, tmp_path):
     """OPTIMIZE after an add-column commit must preserve the evolved
     read exactly: pre-evolution rows keep NULL in the new column
     through the rewrite, and the compacted manifest records the
     widened column list (so read order stays stable)."""
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -1064,7 +1049,7 @@ def test_lakehouse_compact_after_schema_evolution(spark):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_evo_cmp_"), "key", n_files=3)
+    t = LakeTable.create(base, str(tmp_path), "key", n_files=3)
     evolved = spark.createDataFrame(
         [(7, "u", 70.5, "F", 2, 99)],
         "key bigint, op string, totalprice double, orderstatus string,"
@@ -1081,13 +1066,12 @@ def test_lakehouse_compact_after_schema_evolution(spark):
     assert t.manifest(v)["columns"][-1] == "audit_seq"
 
 
-def test_lakehouse_merge_schema_stays_monotone(spark):
+def test_lakehouse_merge_schema_stays_monotone(spark, tmp_path_factory):
     """The round-6 advisor's narrowing bug, pinned: after an add-column
     evolution, a LATER merge whose batch lacks the evolved column and
     whose pruning touches only pre-evolution files must NOT narrow the
     committed column list — carried files still hold evolved data, and
     read() must keep surfacing it (Delta's monotone log schema)."""
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -1098,7 +1082,7 @@ def test_lakehouse_merge_schema_stays_monotone(spark):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_mono_"), "key", n_files=4)
+    t = LakeTable.create(base, str(tmp_path_factory.mktemp("lake_mono")), "key", n_files=4)
     # evolve: audit_seq arrives on a high-key batch (touches the top file)
     t.merge(spark, spark.createDataFrame(
         [(95, "u", 1.0, "F", 2, 42)],
@@ -1120,7 +1104,7 @@ def test_lakehouse_merge_schema_stays_monotone(spark):
     # lacks the column → NO surviving file holds audit_seq physically;
     # the manifest types let read() NULL-fill it at the right dtype
     t2 = LakeTable.create(
-        base.limit(10), tempfile.mkdtemp(prefix="lake_mono2_"), "key", n_files=1
+        base.limit(10), str(tmp_path_factory.mktemp("lake_mono2")), "key", n_files=1
     )
     t2.merge(spark, spark.createDataFrame(
         [(5, "u", 1.0, "F", 2, 7)],
@@ -1134,7 +1118,7 @@ def test_lakehouse_merge_schema_stays_monotone(spark):
 
 
 @pytest.mark.parametrize("key_type", ["bigint", "string", "long_string"])
-def test_lakehouse_file_stats_match_spark_aggregate(spark, key_type):
+def test_lakehouse_file_stats_match_spark_aggregate(spark, key_type, tmp_path_factory):
     """Manifest stats come from the write itself: min/max from the
     Parquet footers, Bloom bits from an Observation on the write job.
     For every entry of every snapshot built by create, merge and
@@ -1146,7 +1130,6 @@ def test_lakehouse_file_stats_match_spark_aggregate(spark, key_type):
     whole table to zero rows (once compacted, its empty file is never
     manifested)."""
     import os
-    import tempfile
 
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
@@ -1189,7 +1172,9 @@ def test_lakehouse_file_stats_match_spark_aggregate(spark, key_type):
                 want = oracle(os.path.join(t.root, e["path"]))
                 assert {k: e[k] for k in want} == want, (v, e["path"])
 
-    t = LakeTable.create(rows(range(300), "c", 1), tempfile.mkdtemp(prefix="lake_st_"), "key", 4)
+    t = LakeTable.create(
+        rows(range(300), "c", 1), str(tmp_path_factory.mktemp("lake_st")), "key", 4
+    )
     t.merge(spark, rows(range(10, 41), "u", 2).unionByName(rows(range(400, 411), "c", 2)))
     t.merge(spark, rows(range(250, 261), "d", 3))  # all deletes
     compact_table(t, spark, n_files=3)
@@ -1199,7 +1184,9 @@ def test_lakehouse_file_stats_match_spark_aggregate(spark, key_type):
         .row_group(0).column(0).statistics
     assert stats.has_min_max == (key_type != "long_string")
 
-    small = LakeTable.create(rows(range(10), "c", 1), tempfile.mkdtemp(prefix="lake_st0_"), "key", 2)
+    small = LakeTable.create(
+        rows(range(10), "c", 1), str(tmp_path_factory.mktemp("lake_st0")), "key", 2
+    )
     small.merge(spark, rows(range(10), "d", 2))
     assert small.read(spark).count() == 0
     v = compact_table(small, spark, n_files=2)
@@ -1207,7 +1194,7 @@ def test_lakehouse_file_stats_match_spark_aggregate(spark, key_type):
     check(small)
 
 
-def test_lakehouse_commit_survives_failed_manifest_write(spark, monkeypatch):
+def test_lakehouse_commit_survives_failed_manifest_write(spark, monkeypatch, tmp_path):
     """A commit that dies while writing its manifest must not publish
     it: the head stays at v(N-1) and readable, no temp name is taken
     for a head, and the next commit still takes vN. Under an O_EXCL
@@ -1215,7 +1202,6 @@ def test_lakehouse_commit_survives_failed_manifest_write(spark, monkeypatch):
     the head and the table unreadable."""
     import json
     import os
-    import tempfile
 
     import pyspark.sql.functions as F
     import pytest as _pytest
@@ -1228,7 +1214,7 @@ def test_lakehouse_commit_survives_failed_manifest_write(spark, monkeypatch):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    root = tempfile.mkdtemp(prefix="lake_crash_")
+    root = str(tmp_path)
     t = LakeTable.create(base, root, "key", n_files=2)
     upd = spark.createDataFrame(
         [(5, "u", 99.0, "F", 2)],
@@ -1256,7 +1242,7 @@ def test_lakehouse_commit_survives_failed_manifest_write(spark, monkeypatch):
     assert got[5] == 99.0 and len(got) == 50
 
 
-def test_lakehouse_empty_batch_commits_nothing(spark):
+def test_lakehouse_empty_batch_commits_nothing(spark, tmp_path):
     """A zero-row batch commits no snapshot: ``merge`` returns the head
     and adds no manifest. On a table with no snapshot yet that head is
     -1 (``latest_version`` still raises) and the first non-empty merge
@@ -1264,7 +1250,6 @@ def test_lakehouse_empty_batch_commits_nothing(spark):
     checkpoint, both from an input with partitions and from one with
     none."""
     import os
-    import tempfile
 
     import pytest as _pytest
 
@@ -1277,7 +1262,7 @@ def test_lakehouse_empty_batch_commits_nothing(spark):
         rows.where("key < 0"),
     ]
     assert [e.rdd.getNumPartitions() > 0 for e in empties] == [False, True]
-    root = tempfile.mkdtemp(prefix="lake_empty_")
+    root = str(tmp_path)
     t = LakeTable(root, "key")
     assert [t.merge(spark, e) for e in empties] == [-1, -1]
     assert os.listdir(root) == []
@@ -1292,13 +1277,12 @@ def test_lakehouse_empty_batch_commits_nothing(spark):
     )
 
 
-def test_lakehouse_merge_reapply_is_idempotent(spark):
+def test_lakehouse_merge_reapply_is_idempotent(spark, tmp_path):
     """Replay safety of the foreachBatch sink: no manifest records a
     batch id, so a batch replayed after a crash is merged again. The
     latest-image reduction makes that harmless — merging the same batch
     twice (inserts, updates, deletes, an in-batch duplicate key) leaves
     content identical to merging it once."""
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -1309,7 +1293,7 @@ def test_lakehouse_merge_reapply_is_idempotent(spark):
         (F.col("id") * 1.0).alias("totalprice"),
         F.lit("O").alias("orderstatus"), F.lit(1).cast("bigint").alias("ts_ms"),
     )
-    t = LakeTable.create(base, tempfile.mkdtemp(prefix="lake_idem_"), "key", n_files=4)
+    t = LakeTable.create(base, str(tmp_path), "key", n_files=4)
     batch = spark.createDataFrame(
         [(5, "u", 50.0, "F", 2), (5, "u", 51.0, "F", 3), (70, "d", None, None, 2),
          (150, "u", 1.5, "P", 2), (250, "c", 2.5, "O", 2), (3, "u", 0.5, "F", 0)],
@@ -1322,20 +1306,19 @@ def test_lakehouse_merge_reapply_is_idempotent(spark):
     assert got[5][2] == 51.0 and 70 not in got and got[3][2] == 3.0 and len(got) == 200
 
 
-def test_lakehouse_merge_rejects_type_changing_reduce(spark):
+def test_lakehouse_merge_rejects_type_changing_reduce(spark, tmp_path):
     """A table's reduction must keep every column at its input type:
     the commit records the input's types, and a file of another type
     would fail every later read of the table. A sum of an int column (a
     bigint) is rejected before any file or manifest is written."""
     import os
-    import tempfile
 
     import pyspark.sql.functions as F
 
     from flink_realtime_2024_spark.plans.lakehouse import LakeTable
 
     t = LakeTable(
-        tempfile.mkdtemp(prefix="lake_reduce_type_"), "k",
+        str(tmp_path), "k",
         reduce=lambda r: r.groupBy("k").agg(F.sum("v").alias("v")),
     )
     df = spark.createDataFrame([(1, 2), (1, 3)], "k bigint, v int")
@@ -1539,3 +1522,25 @@ def test_lake_table_is_built_per_orders_content(spark, tmp_path):
         assert got == want
         results.append(got)
     assert results[0] != results[1]
+
+
+def test_serving_plans_compile_once(spark):
+    """A serving tier runs the same few plan shapes over and over, so
+    each generated class must be compiled once per JVM and then reused.
+    The six ``dws_serving`` reads need more classes than Spark's default
+    codegen cache holds (100), so under that default every repeat
+    compiled some of them again; ``get_spark`` sizes the cache to the
+    engine's working set. The second run of the same plans, in the same
+    order, must compile nothing."""
+    from flink_realtime_2024_spark.observability import codegen_compiles
+    from flink_realtime_2024_spark.plans.registry import all_queries
+    from perfbench.workloads import WORKLOADS
+
+    queries = all_queries()
+    compiled = []
+    for _ in range(2):
+        before = codegen_compiles(spark)
+        for op in WORKLOADS["dws_serving"].ops:
+            queries[op].builder(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+        compiled.append(codegen_compiles(spark) - before)
+    assert compiled[0] > 0 and compiled[1] == 0, compiled

@@ -10,9 +10,9 @@ import pyspark.sql.functions as F
 from .conftest import SF_DIR
 
 
-def _run_stream_agg(spark, stream_df, out_mode="complete"):
-    """Windowed agg → memory-equivalent parquet sink via foreachBatch."""
-    out = tempfile.mkdtemp(prefix="stream_test_out_")
+def _run_stream_agg(spark, stream_df, out, out_mode="complete"):
+    """Windowed agg → memory-equivalent parquet sink (at ``out``) via
+    foreachBatch."""
 
     def sink(batch_df, batch_id):
         batch_df.write.mode("overwrite").parquet(out)
@@ -23,7 +23,7 @@ def _run_stream_agg(spark, stream_df, out_mode="complete"):
     return spark.read.parquet(out)
 
 
-def test_streaming_tumbling_equals_batch(spark):
+def test_streaming_tumbling_equals_batch(spark, tmp_path):
     """readStream + watermark + window == batch window on the same data.
     Watermark covers the (unordered) replay span so nothing is late."""
     from flink_realtime_2024_spark.streaming.jobs import events_stream
@@ -42,7 +42,7 @@ def test_streaming_tumbling_equals_batch(spark):
     )
     got = {
         (r["bucket_us"], r["event_type"]): r["n_events"]
-        for r in _run_stream_agg(spark, agg).collect()
+        for r in _run_stream_agg(spark, agg, str(tmp_path)).collect()
     }
     want = {
         (r["bucket_us"], r["event_type"]): r["n_events"]
@@ -53,7 +53,7 @@ def test_streaming_tumbling_equals_batch(spark):
     assert got == want
 
 
-def test_streaming_session_window_equals_batch(spark):
+def test_streaming_session_window_equals_batch(spark, tmp_path):
     """Streaming session_window (update via complete rewrite) == batch
     sessionization."""
     from flink_realtime_2024_spark.streaming.jobs import events_stream
@@ -72,7 +72,7 @@ def test_streaming_session_window_equals_batch(spark):
     )
     got = {
         (r["user_id"], r["session_start_us"]): r["n_events"]
-        for r in _run_stream_agg(spark, agg).collect()
+        for r in _run_stream_agg(spark, agg, str(tmp_path)).collect()
     }
     want = {
         (r["user_id"], r["session_start_us"]): r["n_events"]
@@ -276,14 +276,14 @@ def test_late_split_side_output(spark):
     assert counts["main"] > 0
 
 
-def test_streaming_runs_in_micro_batches(spark):
+def test_streaming_runs_in_micro_batches(spark, tmp_path):
     """The staged replay really produces multiple micro-batches (the
     maxFilesPerTrigger=1 'topic' contract the jobs rely on)."""
     from flink_realtime_2024_spark.streaming.jobs import events_stream, run_stream
 
     ev = events_stream(spark, SF_DIR)
     seen = []
-    out = tempfile.mkdtemp(prefix="mb_count_")
+    out = str(tmp_path)
 
     def sink(batch_df, batch_id):
         seen.append((batch_id, batch_df.count()))
@@ -295,21 +295,20 @@ def test_streaming_runs_in_micro_batches(spark):
     ).count()
 
 
-def test_checkpoint_recovery_is_exactly_once(spark):
+def test_checkpoint_recovery_is_exactly_once(spark, tmp_path_factory):
     """S11 checkpoint semantics: re-starting a query on the SAME
     checkpoint dir must not reprocess already-committed micro-batches —
     the second run finds the source exhausted and the sink state is
     unchanged (exactly-once across restarts, the property HDFS
     checkpointing gives the reference)."""
     import os
-    import tempfile
 
     from flink_realtime_2024_spark.streaming.jobs import events_stream
 
     ev = events_stream(spark, SF_DIR)
     counts = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    out = tempfile.mkdtemp(prefix="ckpt_recovery_out_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_recovery_")
+    out = str(tmp_path_factory.mktemp("ckpt_recovery_out"))
+    ckpt = str(tmp_path_factory.mktemp("ckpt_recovery"))
 
     def sink(batch_df, batch_id):
         batch_df.write.mode("overwrite").parquet(os.path.join(out, f"batch={batch_id}"))
@@ -336,7 +335,7 @@ def test_checkpoint_recovery_is_exactly_once(spark):
     assert all(p["numInputRows"] == 0 for p in q2.recentProgress)
 
 
-def test_streaming_sliding_window_equals_batch(spark):
+def test_streaming_sliding_window_equals_batch(spark, tmp_path):
     """T3 streaming form: sliding windows (2h length / 1h hop, matching
     the batch twin) over the watermarked stream equal the batch answer."""
     from flink_realtime_2024_spark.streaming.jobs import events_stream
@@ -354,7 +353,7 @@ def test_streaming_sliding_window_equals_batch(spark):
     )
     got = {
         (r["bucket_us"], r["n_events"])
-        for r in _run_stream_agg(spark, agg).collect()
+        for r in _run_stream_agg(spark, agg, str(tmp_path)).collect()
     }
     want = {
         (r["bucket_us"], r["n_events"])
@@ -452,7 +451,7 @@ def test_prefix_filter_recall_exact(spark):
     assert truth <= cands, truth - cands
 
 
-def test_checkpoint_resume_exactly_once(spark):
+def test_checkpoint_resume_exactly_once(spark, tmp_path_factory):
     """S11 checkpointing, proven directly: a file-sink stream is STOPPED
     mid-topic after its first micro-batches commit, then a NEW query
     resumes from the same checkpoint and drains the rest. The resumed
@@ -467,8 +466,8 @@ def test_checkpoint_resume_exactly_once(spark):
     from flink_realtime_2024_spark.streaming.jobs import staged_events_dir_ordered
 
     staged = staged_events_dir_ordered(spark, SF_DIR)
-    ckpt = tempfile.mkdtemp(prefix="resume_ckpt_")
-    out = tempfile.mkdtemp(prefix="resume_out_")
+    ckpt = str(tmp_path_factory.mktemp("resume_ckpt"))
+    out = str(tmp_path_factory.mktemp("resume_out"))
     schema = spark.read.parquet(staged).schema
 
     def writer():
@@ -514,7 +513,7 @@ def test_checkpoint_resume_exactly_once(spark):
     assert batch.select("event_id").exceptAll(final.select("event_id")).count() == 0
 
 
-def test_late_event_refires_window_update_mode(spark):
+def test_late_event_refires_window_update_mode(spark, tmp_path_factory):
     """T7 allowed-lateness RE-EMISSION parity (the Flink contract, now
     tested rather than documented): in update output mode, a window
     result already emitted in an earlier micro-batch must be RE-EMITTED
@@ -540,7 +539,7 @@ def test_late_event_refires_window_update_mode(spark):
 
     from flink_realtime_2024_spark.streaming.jobs import run_stream
 
-    topic = tempfile.mkdtemp(prefix="refire_topic_")
+    topic = str(tmp_path_factory.mktemp("refire_topic"))
     batches = [
         ["2024-03-01 10:05:00", "2024-03-01 10:20:00"],
         ["2024-03-01 12:30:00"],
@@ -575,7 +574,7 @@ def test_late_event_refires_window_update_mode(spark):
             "n",
         )
     )
-    out = tempfile.mkdtemp(prefix="refire_out_")
+    out = str(tmp_path_factory.mktemp("refire_out"))
     emissions: list[tuple[int, str, int]] = []
 
     def sink(batch_df, batch_id):
@@ -599,7 +598,7 @@ def test_late_event_refires_window_update_mode(spark):
     assert [n for b, w, n in emissions if w == "12:00"] == [1]
 
 
-def test_stream_stream_join_state_is_bounded(spark):
+def test_stream_stream_join_state_is_bounded(spark, tmp_path_factory):
     """J4 stream-stream interval join STATE EVICTION, measured (r7
     verdict task #5): with a realistic watermark, the symmetric-hash
     join's state store must PLATEAU once the watermark passes the
@@ -618,7 +617,7 @@ def test_stream_stream_join_state_is_bounded(spark):
 
     from flink_realtime_2024_spark.streaming.jobs import run_stream
 
-    topic = tempfile.mkdtemp(prefix="ssj_state_topic_")
+    topic = str(tmp_path_factory.mktemp("ssj_state_topic"))
     n_batches, users = 10, range(4)
     base_mtime = int(time.time()) - 1000
     for i in range(n_batches):
@@ -667,7 +666,7 @@ def test_stream_stream_join_state_is_bounded(spark):
         & (F.col("cts") <= F.col("pts")),
     ).select("purchase_id", "click_id")
 
-    out = tempfile.mkdtemp(prefix="ssj_state_out_")
+    out = str(tmp_path_factory.mktemp("ssj_state_out"))
 
     def sink(batch_df, batch_id):
         batch_df.write.mode("overwrite").parquet(os.path.join(out, f"batch={batch_id}"))
