@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], writes the
+full record to bench_detail.json and prints ONE fixed-schema JSON line
+(``bench_line``):
 
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric":"...","value":N,"unit":"sec",...,"queries":{...},"sf1_probe":[...],...}
 
 Each query is fully materialized through the noop sink (computes
 everything, writes nothing) so timings measure engine work, not driver
@@ -13,17 +14,29 @@ codegen startup isn't billed to the first query.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import json
 import os
+import re
+import shutil
+import subprocess
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
+from flink_realtime_2024_spark import reclaim_checkpoints  # noqa: E402
 from flink_realtime_2024_spark.plans.registry import all_queries  # noqa: E402
 from flink_realtime_2024_spark.session import get_spark  # noqa: E402
-from flink_realtime_2024_spark.sources.io import enable_hot_cache, load_table  # noqa: E402
+from flink_realtime_2024_spark.sources.io import (  # noqa: E402
+    drop_all_caches,
+    enable_hot_cache,
+    load_table,
+    stage,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -190,9 +203,8 @@ def main() -> None:
         except Exception as e:
             query_errors[name] = f"{type(e).__name__}: {e}"[:200]
     total = round(sum(timings.values()), 3)
-    # batch/streaming subtotals (r9 verdict #2): the batch trend must
-    # stay readable even when a streaming id jitters — deltas are
-    # attributable per class straight off the compact line.
+    # batch/streaming subtotals: the batch trend stays readable even
+    # when a streaming id jitters.
     streaming_sec = round(
         sum(t for n, t in timings.items() if n.startswith("stream_")), 3
     )
@@ -212,65 +224,32 @@ def main() -> None:
     }
     r1_subset = round(sum(t for n, t in timings.items() if n in r1_set), 3)
 
-    # probes run over ALL registered builders (not just benched ones)
-    from flink_realtime_2024_spark.plans.registry import all_queries as _aq
-
-    builders = {n: q.builder for n, q in _aq().items()}
-    # every probe block fetches a LIVE session (r14 verdict #1): a JVM
-    # death inside one tier must cost that tier's remaining steps at
-    # most — the next block gets a fresh context instead of a cascade
-    # of stopped-SparkContext errors (the r13 failure shape).
-    sf1 = None
-    if not os.environ.get("SPARK_GRAFT_SKIP_SF1_PROBE"):
+    # probes run over ALL registered builders (not just benched ones).
+    # Reps: min-of-2 at 10× and 30× (a single cold run overstated the
+    # minhash 30× ratio by ~60%), one at 100×, where each run is 10-100 s
+    # of engine work, far above JIT noise. Each probe fetches a LIVE
+    # session: a JVM death inside one probe costs that probe at most,
+    # and the next one gets a fresh context. A probe is evidence, not a
+    # gate: one that raises records its error and the bench goes on.
+    builders = {n: q.builder for n, q in all_queries().items()}
+    probes: dict[str, dict] = {}
+    for key, run in (
+        ("sf1_probe", lambda s: _scale_probe(
+            s, builders, timings, _SF1_REPLICATION, _SF1_QUERIES, reps=2)),
+        ("sf3_probe", lambda s: _scale_probe(
+            s, builders, timings, _SF3_REPLICATION, _SF3_QUERIES, reps=2)),
+        ("sf10_probe", lambda s: _scale_probe(
+            s, builders, timings, _SF10_REPLICATION, _SF10_QUERIES, reps=1)),
+        ("streaming_probe", _streaming_probe),
+        ("skew_probe", _skew_probe),
+    ):
+        # SPARK_GRAFT_SKIP_{SF1,SF3,SF10,STREAMING,SKEW}_PROBE skips one
+        if os.environ.get(f"SPARK_GRAFT_SKIP_{key.split('_')[0].upper()}_PROBE"):
+            continue
         try:
-            sf1 = _scale_probe(
-                _live_spark(), builders, timings, _SF1_REPLICATION,
-                _SF1_QUERIES, reps=2,
-            )
-        except Exception as e:  # the probe is evidence, not a gate
-            sf1 = {"error": f"{type(e).__name__}: {e}"[:200]}
-    sf3 = None
-    if not os.environ.get("SPARK_GRAFT_SKIP_SF3_PROBE"):
-        try:
-            # the second scaling point (30× = sf3-equivalent): turns the
-            # one-off manual 30× record in PLANS.md into a regenerated
-            # artifact. min-of-2 — a single cold run overstated the
-            # minhash 30× ratio by ~60% (JIT/page-cache, r6 measurement)
-            sf3 = _scale_probe(
-                _live_spark(), builders, timings, _SF3_REPLICATION,
-                _SF3_QUERIES, reps=2,
-            )
+            probes[key] = run(_live_spark())
         except Exception as e:
-            sf3 = {"error": f"{type(e).__name__}: {e}"[:200]}
-
-    sf10 = None
-    if not os.environ.get("SPARK_GRAFT_SKIP_SF10_PROBE"):
-        try:
-            # the third scaling point (100× = sf10-equivalent, r9
-            # verdict #1): the bar is "plans you'd want at 100×" and the
-            # measured evidence previously stopped at 30×. One rep —
-            # each run is 10-100 s of real engine work, far above JIT
-            # noise; the rep count is billed in the block.
-            sf10 = _scale_probe(
-                _live_spark(), builders, timings, _SF10_REPLICATION,
-                _SF10_QUERIES, reps=1,
-            )
-        except Exception as e:
-            sf10 = {"error": f"{type(e).__name__}: {e}"[:200]}
-
-    streaming = None
-    if not os.environ.get("SPARK_GRAFT_SKIP_STREAMING_PROBE"):
-        try:
-            streaming = _streaming_probe(_live_spark())
-        except Exception as e:
-            streaming = {"error": f"{type(e).__name__}: {e}"[:200]}
-
-    skew = None
-    if not os.environ.get("SPARK_GRAFT_SKIP_SKEW_PROBE"):
-        try:
-            skew = _skew_probe(_live_spark())
-        except Exception as e:
-            skew = {"error": f"{type(e).__name__}: {e}"[:200]}
+            probes[key] = {"error": f"{type(e).__name__}: {e}"[:200]}
 
     out = {
         "metric": "headline_queries_total_wall_seconds",
@@ -288,16 +267,7 @@ def main() -> None:
         "batch_reps": BATCH_REPS,
         "streaming_reps": STREAM_REPS,
     }
-    if sf1:
-        out["sf1_probe"] = sf1
-    if sf3:
-        out["sf3_probe"] = sf3
-    if sf10:
-        out["sf10_probe"] = sf10
-    if streaming:
-        out["streaming_probe"] = streaming
-    if skew:
-        out["skew_probe"] = skew
+    out.update(probes)
     if _ACTIVE["rebuilds"]:
         # a rebuild means a prior step crashed the JVM mid-bench — the
         # numbers after each timestamp come from a fresh context
@@ -310,41 +280,29 @@ def main() -> None:
     if query_errors:
         out["query_errors"] = query_errors
 
-    # Full-fidelity record → a file; stdout gets a COMPACT (<1.8 KB)
-    # final line. The driver captures only the last ~2 KB of stdout and
-    # JSON-parses it — the full record overflowed that every round
-    # (BENCH_r* "parsed": null), so the machine-readable contract is:
-    # compact summary on the LAST line, details in bench_detail.json.
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "bench_detail.json")
+    # Full-fidelity record → a file; stdout's LAST line is the
+    # fixed-schema summary (bench_line), small enough for a reader that
+    # keeps only the last 2 KB of stdout.
+    detail_path = os.path.join(_HERE, "bench_detail.json")
     with open(detail_path, "w") as fh:
         json.dump(out, fh, indent=1)
-    import hashlib
-
     with open(detail_path, "rb") as fh:
         digest = hashlib.sha256(fh.read()).hexdigest()[:12]
-    # per-round delta baseline (r9 verdict #4): the compact line no
-    # longer carries per-query timings, so archived BENCH_r{N}.json
-    # lines can't seed next round's delta diff anymore — append every
-    # run's timings to a committed history log instead.
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "bench_history.jsonl"), "a") as fh:
+    # per-round delta baseline: every run's timings go to a committed
+    # history log, which _deltas_vs_previous reads first.
+    with open(os.path.join(_HERE, "bench_history.jsonl"), "a") as fh:
         fh.write(json.dumps({
             "round": _bench_round(),
             "sf": out["sf"],
             "value": out["value"],
             "batch_sec": out["batch_sec"],
             "streaming_sec": out["streaming_sec"],
-            # the 2×-gate headline (r12 verdict #5): auditing the
-            # subset trend used to require cross-referencing
-            # BENCH_rN.json + PLANS prose; now every history entry
-            # carries it, plus the detail digest tying the entry to
-            # its full-fidelity record
+            # the digest ties the entry to its full-fidelity record
             "r1_comparable_subset_sec": out["r1_comparable_subset_sec"],
             "detail_sha256": digest,
             "queries": out["queries"],
         }) + "\n")
-    print(json.dumps(_compact_summary(out, digest)))
+    print(bench_line(out, digest))
 
 
 def _bench_round() -> int:
@@ -367,9 +325,8 @@ def _bench_round() -> int:
             # to the PROGRESS.jsonl inference like every other source
             # failure, instead of aborting the bench (r11 advice)
             pass
-    here = os.path.dirname(os.path.abspath(__file__))
     try:
-        with open(os.path.join(here, "PROGRESS.jsonl")) as fh:
+        with open(os.path.join(_HERE, "PROGRESS.jsonl")) as fh:
             lines = [ln for ln in fh.read().splitlines() if ln.strip()]
         if lines:
             rnd = json.loads(lines[-1]).get("round")
@@ -381,140 +338,66 @@ def _bench_round() -> int:
         # object (e.g. a bare number) must fall through to the legacy
         # inference, not abort the bench
         pass
-    import glob
-    import re
-
     rounds = [
         int(m.group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
+        for p in glob.glob(os.path.join(_HERE, "BENCH_r*.json"))
         if (m := re.search(r"r(\d+)", os.path.basename(p)))
     ]
     return (max(rounds) + 1) if rounds else 1
 
 
-def _compact_summary(out: dict, detail_digest: str) -> dict:
-    """<1.2 KB single-line view of the bench record (r9 verdict #4: the
-    old line carried all per-query timings and sat at 1756/1800 bytes —
-    one more field would silently evict them). Per-query timings now
-    live in bench_detail.json EXCLUSIVELY; the line carries the
-    class-split totals, the top-3 per-query deltas vs last round, probe
-    extremes + recall, and a content digest of the detail file so the
-    recorded BENCH_r{N} line is verifiably paired with the
-    bench_detail.json snapshot it summarizes."""
-    c = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "sf": out["sf"],
-        "n_ok": out["n_ok"],
-        "n_err": out["n_err"],
-        "batch_sec": out["batch_sec"],
-        "streaming_sec": out["streaming_sec"],
-        "batch_reps": out["batch_reps"],
-        "streaming_reps": out["streaming_reps"],
-        "r1_comparable_subset_sec": out["r1_comparable_subset_sec"],
-        "detail": "bench_detail.json",
-        "detail_sha256": detail_digest,
+def bench_line(out: dict, detail_digest: str) -> str:
+    """The bench record's one-line summary. Its key set never changes:
+    the totals, a session-rebuild count, the detail file's name and
+    digest, ``queries`` (seconds per benched id, null for an id that
+    raised), each probe tier as ``_tier_summary`` (null when skipped or
+    raised) and the 100× banding recall ``sf10_recall`` as
+    {minhash|simhash|simhash_b5: [recall_vs_bruteforce,
+    recall_connected]}. Deltas, the skew and streaming probes, error
+    texts and the 10×/30× recall live only in bench_detail.json. With
+    37 ids the widest line is ~1.6 KB (tests/test_parity.py pins it)."""
+    line = {
+        k: out[k]
+        for k in (
+            "metric", "value", "unit", "sf", "n_ok", "n_err", "batch_sec",
+            "streaming_sec", "batch_reps", "streaming_reps", "r1_comparable_subset_sec",
+        )
     }
-    if out.get("session_rebuilds"):
-        c["session_rebuilds"] = len(out["session_rebuilds"])
-    deltas = out.get("deltas")
-    if deltas and deltas.get("queries"):
-        top = sorted(
-            deltas["queries"].items(), key=lambda kv: abs(kv[1]), reverse=True
-        )[:3]
-        c["top_deltas"] = {"vs": deltas["vs"], **dict(top)}
-    for probe_key in ("sf1_probe", "sf3_probe", "sf10_probe"):
-        p = out.get(probe_key)
-        if not p or "queries" not in p:
-            continue
-        ratios = [
-            q["ratio_vs_base"]
-            for q in p["queries"].values()
-            if isinstance(q, dict) and "ratio_vs_base" in q
-        ]
-        secs = [q["sec"] for q in p["queries"].values() if isinstance(q, dict) and "sec" in q]
-        recalls = {
-            n: q["recall_vs_bruteforce"]
-            for n, q in p["queries"].items()
-            if isinstance(q, dict) and q.get("recall_vs_bruteforce") is not None
-        }
-        c[probe_key] = {
-            "replication": p.get("replication"),
-            "n": len(secs),
-            "total_sec": round(sum(secs), 1),
-            "max_ratio": max(ratios) if ratios else None,
-            "median_ratio": sorted(ratios)[len(ratios) // 2] if ratios else None,
-        }
-        if recalls:
-            # banding recall on the replicated corpus (exact sampled
-            # brute-force truth) — quality evidence, not just wall
-            # time. Keys shortened (llm_dedup_ prefix dropped) to keep
-            # the line small.
-            c[probe_key]["recall_vs_bruteforce"] = {
-                n.replace("llm_dedup_", ""): r for n, r in recalls.items()
-            }
-            # component-level recall, only where it adds information
-            # beyond pair recall (i.e. when the cap-degrade chain or a
-            # banding miss left pairs unemitted but families connected)
-            conn = {
-                n.replace("llm_dedup_", ""): q["recall_connected"]
-                for n, q in p["queries"].items()
-                if isinstance(q, dict)
-                and q.get("recall_connected") is not None
-                and q.get("recall_connected") != q.get("recall_vs_bruteforce")
-            }
-            if conn:
-                c[probe_key]["recall_connected"] = conn
-    sk = out.get("skew_probe")
-    if sk and "salted_targeted_sec" in sk:
-        c["skew_probe"] = {
-            k: sk[k]
-            for k in (
-                "plain_skew_handled_sec",
-                "plain_unhandled_sec",
-                "salted_blanket_sec",
-                "salted_targeted_sec",
-                "salted_equals_plain",
-                "hot_key_fraction",
-            )
-            if k in sk
-        }
-    sp = out.get("streaming_probe")
-    if sp and "queries" in sp:
-        eps = [
-            q["events_per_sec"]
-            for q in sp["queries"].values()
-            if isinstance(q, dict) and "events_per_sec" in q
-        ]
-        c["streaming_events_per_sec"] = [min(eps), max(eps)] if eps else None
-    if out.get("query_errors"):
-        c["query_errors"] = sorted(out["query_errors"])
-    # hard guarantee: stay inside the driver's ~2 KB tail capture with
-    # generous margin. Everything dropped here is in the detail file.
-    # Degradation ladder (never crash, never overflow — a bad round
-    # with many query_errors plus three populated probe blocks must
-    # still print a parseable line): optional extras first, then
-    # per-probe recall dicts, then error-list truncation, then whole
-    # probe blocks.
-    for victim in ("streaming_events_per_sec", "skew_probe", "top_deltas"):
-        if len(json.dumps(c)) > 1200:
-            c.pop(victim, None)
-    for probe_key in ("sf1_probe", "sf3_probe", "sf10_probe"):
-        for field in ("recall_connected", "recall_vs_bruteforce"):
-            if len(json.dumps(c)) > 1500 and probe_key in c:
-                c[probe_key].pop(field, None)
-    if len(json.dumps(c)) > 1500 and len(c.get("query_errors", [])) > 5:
-        # only truncate when truncation actually shrinks something —
-        # with <=5 errors the oversize comes from other blocks, which
-        # the later ladder steps handle (r10 advice: the unguarded
-        # branch printed bogus '...and 0 more' trailers)
-        errs = c["query_errors"]
-        c["query_errors"] = errs[:5] + [f"...and {len(errs) - 5} more"]
-    for probe_key in ("sf1_probe", "sf3_probe", "sf10_probe"):
-        if len(json.dumps(c)) > 1700:
-            c.pop(probe_key, None)
-    return c
+    ids = sorted({**out["queries"], **out.get("query_errors", {})})
+    sf10 = (out.get("sf10_probe") or {}).get("queries", {})
+    line.update(
+        session_rebuilds=len(out.get("session_rebuilds", ())),
+        detail="bench_detail.json",
+        detail_sha256=detail_digest,
+        queries={n: out["queries"].get(n) for n in ids},
+        sf1_probe=_tier_summary(out.get("sf1_probe")),
+        sf3_probe=_tier_summary(out.get("sf3_probe")),
+        sf10_probe=_tier_summary(out.get("sf10_probe")),
+        sf10_recall={
+            n.replace("llm_dedup_", ""): [
+                sf10.get(n, {}).get("recall_vs_bruteforce"),
+                sf10.get(n, {}).get("recall_connected"),
+            ]
+            for n in _RECALL_IDS
+        },
+    )
+    return json.dumps(line, separators=(",", ":"))
+
+
+def _tier_summary(probe: dict | None) -> list | None:
+    """[replication, n, total_sec, max_ratio, median_ratio] over the
+    tier's timed ids, or None for a tier that was skipped or raised."""
+    if not probe or "queries" not in probe:
+        return None
+    timed = [q for q in probe["queries"].values() if "sec" in q]
+    ratios = sorted(q["ratio_vs_base"] for q in timed)
+    return [
+        probe["replication"],
+        len(timed),
+        round(sum(q["sec"] for q in timed), 1),
+        ratios[-1] if ratios else None,
+        ratios[len(ratios) // 2] if ratios else None,
+    ]
 
 
 _SF1_QUERIES = (
@@ -645,8 +528,6 @@ def _stage_probe(prefix: str, params: tuple, build) -> str:
     the probe parameters, so regenerating the fixture IN PLACE builds a
     new dir instead of silently reusing a stale corpus, and the stale
     sibling is pruned."""
-    from flink_realtime_2024_spark.sources.io import stage
-
     inputs = [
         os.path.join(SF_DIR, f) for f in sorted(os.listdir(SF_DIR)) if f.endswith(".parquet")
     ]
@@ -758,8 +639,6 @@ def _scale_probe(
         # stores) leaked until the 100× tier OOM'd the JVM (r10).
         # Hot base-table caches rebuild lazily; headline timings are
         # already recorded and probe reps are min-of-N.
-        from flink_realtime_2024_spark.sources.io import drop_all_caches
-
         drop_all_caches(_live_spark())
     return {
         "replication": replication,
@@ -801,7 +680,7 @@ def _neardup_recall_at_scale(builders, probe_dir, replication, probe) -> None:
         # not abort the whole scale probe
         if name not in probe or "error" in probe[name]:
             continue
-        _reclaim(_live_spark())  # each recall re-runs a full dedup kernel
+        reclaim_checkpoints(_live_spark())  # each recall re-runs a full dedup kernel
         try:
             if replication >= 100:
                 probe[name].update(
@@ -827,8 +706,6 @@ def _recall_in_subprocess(name, probe_dir, replication, timeout_s=2700) -> dict:
     RECALL_JSON stdout line. A dead/hung child raises (timeout or rc),
     which the caller records as that id's recall_error — nothing else
     in the bench is touched."""
-    import subprocess
-
     env = dict(os.environ)
     env["SPARK_DRIVER_MEM"] = env.get("SPARK_GRAFT_RECALL_MEM", "20g")
     proc = subprocess.run(
@@ -861,9 +738,7 @@ def _recall_child(name: str, probe_dir: str, replication: int) -> None:
     spark = get_spark(app_name="bench_recall_child")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-    from flink_realtime_2024_spark.plans.registry import all_queries as _aq
-
-    builders = {n: q.builder for n, q in _aq().items()}
+    builders = {n: q.builder for n, q in all_queries().items()}
     metrics: dict = {}
     rc = 0
     try:
@@ -1049,8 +924,6 @@ def _exact_connected_recall(spark, builders, probe_dir, name, truth, fp_of):
     run as their own job with their own memory, and the CC fixpoint
     starts from a clean disk scan instead of stacking its shuffle
     state on top of theirs."""
-    import shutil
-
     import pyspark.sql.functions as F
     from pyspark import StorageLevel
 
@@ -1113,11 +986,9 @@ def _isolate_tier(builders, query_names, probe_dir, probe) -> None:
     first = next((n for n in query_names if n in builders), None)
     if first is None:
         return
-    from flink_realtime_2024_spark.sources.io import drop_all_caches
-
     spark = _live_spark()
     drop_all_caches(spark)
-    _reclaim(spark)
+    reclaim_checkpoints(spark)
     t0 = time.perf_counter()
     try:
         materialize(builders[first](spark, probe_dir))
@@ -1133,17 +1004,6 @@ def _isolate_tier(builders, query_names, probe_dir, probe) -> None:
         }
 
 
-def _reclaim(spark) -> None:
-    """Release dead checkpoint blocks between probe queries (r11: the
-    accumulated blocks + DISK_ONLY read-ahead buffers OOM'd the shared
-    local-mode heap at the 100× tier). r12: the helper is now part of
-    the public library surface — library consumers looping the dedup
-    kernels inherit the same hazard."""
-    from flink_realtime_2024_spark import reclaim_checkpoints
-
-    reclaim_checkpoints(spark)
-
-
 def _probe_queries(builders, timings, query_names, probe_dir, probe, reps):
     for name in query_names:
         if name not in builders:
@@ -1152,7 +1012,7 @@ def _probe_queries(builders, timings, query_names, probe_dir, probe, reps):
         # probe id costs that id an error entry; the next id (and the
         # recall passes after) run on a fresh context
         spark = _live_spark()
-        _reclaim(spark)
+        reclaim_checkpoints(spark)
         try:
             base = timings.get(name)
             if not base:
@@ -1199,8 +1059,7 @@ def _streaming_probe(spark) -> dict:
     pays one-time topic staging, which is layout work, not streaming
     throughput (r6: a cold stream_dedup read 2× slow purely from
     staging)."""
-    from flink_realtime_2024_spark.plans.registry import all_queries
-    from flink_realtime_2024_spark.streaming.jobs import last_stream_breakdown
+    from flink_realtime_2024_spark.observability import stream_progress
 
     n_events = spark.read.parquet(os.path.join(SF_DIR, "events.parquet")).count()
     qs = all_queries()
@@ -1211,32 +1070,23 @@ def _streaming_probe(spark) -> dict:
         try:
             wall = float("inf")
             for _ in range(2):
-                last_stream_breakdown.clear()
-                t0 = time.perf_counter()
-                qs[name].builder(spark, SF_DIR).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                wall = min(wall, time.perf_counter() - t0)
-            # per-stage attribution (r10 verdict #6): what bounds the
-            # events/s — source replay (latestOffset/getBatch), engine
-            # work (addBatch), or checkpoint I/O (walCommit/
-            # commitOffsets/stateOperators)? Snapshot from the WARM
-            # (second) run, the one min-of-2 usually keeps; summed
-            # durationMs across all micro-batches and, for ids that
-            # drive several streams, across every run_stream call.
+                with stream_progress(spark) as progress:
+                    t0 = time.perf_counter()
+                    materialize(qs[name].builder(spark, SF_DIR))
+                    wall = min(wall, time.perf_counter() - t0)
+            # what bounds the events/s: source replay (latestOffset/
+            # getBatch), engine work (addBatch) or checkpoint I/O
+            # (walCommit/commitOffsets)? durationMs summed over every
+            # micro-batch of every query the second (warm) run started.
             stages: dict[str, int] = {}
-            batches = 0
-            for bd in last_stream_breakdown.values():
-                batches += bd["batches"]
-                for k, v in bd["duration_ms"].items():
-                    stages[k] = stages.get(k, 0) + v
+            for p in progress:
+                for k, v in p.durationMs.items():
+                    stages[k] = stages.get(k, 0) + int(v)
             probe[name] = {
                 "wall_sec": round(wall, 3),
                 "events_per_sec": int(n_events / wall),
-                "micro_batches": batches,
-                "duration_ms": dict(
-                    sorted(stages.items(), key=lambda kv: -kv[1])
-                ),
+                "micro_batches": len(progress),
+                "duration_ms": dict(sorted(stages.items(), key=lambda kv: -kv[1])),
             }
         except Exception as e:
             probe[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
@@ -1427,10 +1277,7 @@ def _deltas_vs_previous(
        timings (rounds ≤ 9 — the driver wraps the line under "parsed").
     Highest round wins; within a round, the latest entry (the round's
     final tree). ``here`` overrides the history directory (tests)."""
-    import glob
-    import re
-
-    here = here or os.path.dirname(os.path.abspath(__file__))
+    here = here or _HERE
     cur = _bench_round()
     best: tuple[int, int, str, dict] | None = None  # (round, seq, label, queries)
 

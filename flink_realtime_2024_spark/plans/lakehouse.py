@@ -262,7 +262,9 @@ class LakeTable:
         # project it as a column, observe that, then drop it
         obs = Observation()
         bit = F.struct("_part", _bloom_bit(F.col(self.key)))
-        staging = tempfile.mkdtemp(prefix="lake_stage_")
+        # staged under the table root, so each rename below stays on
+        # the root's filesystem
+        staging = tempfile.mkdtemp(prefix="lake_stage_", dir=self.root)
         try:
             out.withColumn("_part", F.spark_partition_id()).observe(
                 obs, F.collect_set(bit).alias("bits")

@@ -13,7 +13,7 @@ micro-batches). Every query runs with ``trigger(availableNow=True)``
 and an explicit checkpointLocation (S11), exactly as a Kafka-fed job
 would — swap ``format("parquet")`` for ``format("kafka")`` in
 production and nothing else changes. That substitution point is
-``events_stream()``.
+``topic_stream()``.
 
 Sinks: every file sink is ``stream_to_parquet``. A run writes into its
 own ``workspace`` dir, a complete-mode snapshot overwrites it and any
@@ -96,40 +96,34 @@ def _staged_events_dir_keyed(spark: SparkSession, sf_dir: str, n_files: int = 4)
     return stage(f"events_topic_keyed_{tag}", [path], (n_files,), build)
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1 stream source: the engine's Kafka-source equivalent. Schema is
-    probed from the file footer (streams require one, and it must match
-    what this Spark version scans); ts normalized to TimestampType like
-    the batch loader so batch twins share expressions."""
-    prepare(spark)
-    staged = _staged_events_dir(spark, sf_dir)
-    # micro-batch granularity: 1 file per trigger — the semantic tests
-    # (checkpoint resume, cross-batch dedup, late re-fire) rely on the
-    # replay arriving as multiple batches
-    raw = (
+def topic_stream(spark: SparkSession, staged: str) -> DataFrame:
+    """Replay a staged events topic as a stream, one file per
+    micro-batch: the semantic tests (checkpoint resume, cross-batch
+    dedup, late re-fire) rely on the replay arriving as several
+    batches. The schema is probed from the file footer (streams require
+    one, and it must match what this Spark version scans); ts is
+    normalized to TimestampType like the batch loader, so batch twins
+    share expressions."""
+    return events_ts_to_timestamp(
         spark.readStream.schema(spark.read.parquet(staged).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    return events_ts_to_timestamp(raw)
 
 
-# Per-stage attribution of the LAST run_stream call (r10 verdict #6:
-# the streaming probe reported events/s without saying what bounds it).
-# Keyed by checkpoint_tag; values sum StreamingQueryProgress.durationMs
-# across every micro-batch of the run, plus batch/row counts — read by
-# bench.py's streaming probe right after each timed run. A plain module
-# dict, not a listener: availableNow runs are synchronous, so
-# recentProgress is complete by the time awaitTermination returns.
-last_stream_breakdown: dict[str, dict] = {}
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S1 stream source: the engine's Kafka-source equivalent, over the
+    hash-split events topic."""
+    prepare(spark)
+    return topic_stream(spark, _staged_events_dir(spark, sf_dir))
 
 
 def run_stream(df_writer, checkpoint_tag: str):
     """Start with availableNow (process everything, then stop) + a fresh
     checkpoint dir (S11), await termination and remove the checkpoint
     once the query has stopped: no caller resumes an availableNow run.
-    Records a per-stage durationMs breakdown into
-    ``last_stream_breakdown``."""
+    A caller that wants the run's per-trigger progress collects it with
+    ``observability.stream_progress``."""
     ckpt = workspace(f"ckpt_{checkpoint_tag}_")
     q = df_writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     try:
@@ -137,46 +131,7 @@ def run_stream(df_writer, checkpoint_tag: str):
     finally:
         q.stop()  # a no-op once terminated; an interrupted wait leaves it running
         shutil.rmtree(ckpt, ignore_errors=True)
-    stages: dict[str, int] = {}
-    batches = 0
-    rows = 0
-    progress = q.recentProgress
-    for p in progress:
-        batches += 1
-        rows += p.get("numInputRows", 0) or 0
-        for k, v in (p.get("durationMs") or {}).items():
-            stages[k] = stages.get(k, 0) + int(v)
-    bd = {
-        "batches": batches,
-        "input_rows": rows,
-        "duration_ms": stages,
-    }
-    # recentProgress is a ring buffer capped at
-    # spark.sql.streaming.numRecentProgressUpdates (default 100): a
-    # replay staged with more files than that would silently undercount
-    # — mark it so the bench attribution can't misread a truncated sum
-    # as a full one (r11 review).
-    if batches >= 100:
-        bd["progress_truncated"] = True
-    _accumulate_breakdown(checkpoint_tag, bd)
     return q
-
-
-def _accumulate_breakdown(tag: str, bd: dict) -> None:
-    """Record a run's stats under ``tag``, ACCUMULATING within a
-    clear() window (r11 advice): a repeat run_stream under the same tag
-    used to silently overwrite the first run's stats, undercounting the
-    bench attribution sum. No builder reuses a tag today, but pytest
-    sessions legitimately re-run an id without clear()ing."""
-    prev = last_stream_breakdown.get(tag)
-    if prev is not None:
-        bd["batches"] += prev["batches"]
-        bd["input_rows"] += prev["input_rows"]
-        for k, v in prev["duration_ms"].items():
-            bd["duration_ms"][k] = bd["duration_ms"].get(k, 0) + v
-        if prev.get("progress_truncated"):
-            bd["progress_truncated"] = True
-    last_stream_breakdown[tag] = bd
 
 
 def write_batch(
@@ -477,11 +432,7 @@ def stream_late_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-asserted too."""
     prepare(spark)
     staged = _staged_events_dir_keyed(spark, sf_dir)
-    ev = events_ts_to_timestamp(
-        spark.readStream.schema(spark.read.parquet(staged).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    ev = topic_stream(spark, staged)
     root = workspace("late_split_")
     allowed_us = 3_600_000_000  # 1 hour allowed lateness
     wm = {"us": None}  # watermark BEFORE the current batch, in epoch-µs

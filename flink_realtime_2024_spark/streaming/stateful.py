@@ -314,17 +314,12 @@ def run_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the CEP job over the in-order replay (register semantics
     need cross-batch event-time order) and aggregate the accumulated
     conversion stream to the batch twin's schema."""
-    from .jobs import staged_events_dir_ordered, stream_to_parquet
+    from .jobs import staged_events_dir_ordered, stream_to_parquet, topic_stream
     from ..session import prepare
-    from ..sources.io import events_ts_to_timestamp
 
     prepare(spark)
     staged = staged_events_dir_ordered(spark, sf_dir)
-    ev = events_ts_to_timestamp(
-        spark.readStream.schema(spark.read.parquet(staged).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    ev = topic_stream(spark, staged)
     return (
         stream_to_parquet(cep_funnel_stream(ev), "cep_funnel")
         .groupBy("user_id")
@@ -350,14 +345,9 @@ def run_order_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the timer job over an in-order replay (timers need the
     watermark to advance monotonically across micro-batches)."""
     from ..session import prepare
-    from ..sources.io import events_ts_to_timestamp
-    from .jobs import staged_events_dir_ordered, stream_to_parquet
+    from .jobs import staged_events_dir_ordered, stream_to_parquet, topic_stream
 
     prepare(spark)
     staged = staged_events_dir_ordered(spark, sf_dir)
-    ev = events_ts_to_timestamp(
-        spark.readStream.schema(spark.read.parquet(staged).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    ev = topic_stream(spark, staged)
     return stream_to_parquet(order_timeouts_stream(ev), "order_timeouts")

@@ -168,29 +168,94 @@ def test_bench_round_malformed_env_falls_through(monkeypatch):
     assert bench._bench_round() == 12
 
 
-def test_stream_breakdown_accumulates_per_tag():
-    """r11 advice: two run_stream calls under one tag within a clear()
-    window must SUM their stats, not overwrite."""
-    from flink_realtime_2024_spark.streaming.jobs import (
-        _accumulate_breakdown,
-        last_stream_breakdown,
-    )
+def test_stream_progress_attributes_by_run(spark):
+    """``observability.stream_progress`` keeps the progress of the
+    queries started inside its block, by run id: two
+    ``stream_source_smoke`` runs in one block sum to twice the events
+    feed, and a block opened right after a run holds none of that run's
+    progress, even while its last events may still be queued on the
+    listener bus."""
+    from flink_realtime_2024_spark.observability import stream_progress
 
-    last_stream_breakdown.clear()
-    _accumulate_breakdown("t", {"batches": 2, "input_rows": 10,
-                                "duration_ms": {"addBatch": 5}})
-    _accumulate_breakdown("t", {"batches": 3, "input_rows": 7,
-                                "duration_ms": {"addBatch": 4, "walCommit": 1},
-                                "progress_truncated": True})
-    bd = last_stream_breakdown["t"]
-    assert bd["batches"] == 5 and bd["input_rows"] == 17
-    assert bd["duration_ms"] == {"addBatch": 9, "walCommit": 1}
-    assert bd["progress_truncated"] is True
-    # truncation flag survives even when the LATER run is clean
-    _accumulate_breakdown("t", {"batches": 1, "input_rows": 1,
-                                "duration_ms": {}})
-    assert last_stream_breakdown["t"]["progress_truncated"] is True
-    last_stream_breakdown.clear()
+    n_events = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
+    smoke = _QUERIES["stream_source_smoke"].builder
+    with stream_progress(spark) as progress:
+        smoke(spark, SF_DIR)
+        smoke(spark, SF_DIR)
+    assert len({str(p.runId) for p in progress}) == 2
+    assert sum(p.numInputRows for p in progress) == 2 * n_events
+    assert all("addBatch" in p.durationMs for p in progress)
+
+    smoke(spark, SF_DIR)
+    with stream_progress(spark) as later:
+        pass
+    assert later == []
+
+
+_LINE_KEYS = {
+    "metric", "value", "unit", "sf", "n_ok", "n_err", "batch_sec",
+    "streaming_sec", "batch_reps", "streaming_reps", "r1_comparable_subset_sec",
+    "session_rebuilds", "detail", "detail_sha256", "queries",
+    "sf1_probe", "sf3_probe", "sf10_probe", "sf10_recall",
+}
+
+
+def test_bench_line_fixed_schema():
+    """``bench.bench_line`` prints one key set whatever the run did, and
+    its widest line (37 ids at 9999.999 s, every tier populated, 37
+    errors and session rebuilds on top) fits in 1,800 bytes: a reader
+    that keeps the last 2 KB of stdout always parses it. No size check
+    is left to drop fields."""
+    import inspect
+    import json
+
+    import bench
+
+    ids = sorted(n for n, q in _QUERIES.items() if q.bench)
+    assert len(ids) == 37
+
+    def tier(replication, names):
+        timed = {
+            n: {"sec": 9999.999, "base_sec": 9999.999, "ratio_vs_base": 9999.99,
+                "recall_vs_bruteforce": 0.9999, "recall_connected": 0.9999}
+            for n in names
+        }
+        warmup = {"warmup_id": names[0], "warmup_sec": 9999.999}
+        return {"replication": replication, "base_sf": 0.001, "staging_seconds": 9999.999,
+                "queries": {"_tier_isolation": warmup, **timed}}
+
+    errors = {n: "RuntimeError: " + "x" * 186 for n in ids}
+    totals = {
+        "metric": "headline_queries_total_wall_seconds", "value": 369999.963,
+        "unit": "sec", "sf": 0.001, "n_ok": 37, "n_err": 37,
+        "batch_sec": 369999.963, "streaming_sec": 369999.963, "batch_reps": 3,
+        "streaming_reps": 5, "r1_comparable_subset_sec": 369999.963,
+        "query_errors": errors, "session_rebuilds": ["23:59:59"] * 37,
+        "streaming_probe": {"error": errors[ids[0]]},
+        "skew_probe": {"error": errors[ids[0]]},
+    }
+    worst = {
+        **totals,
+        "queries": dict.fromkeys(ids, 9999.999),
+        "deltas": {"vs": "r99", "queries": dict.fromkeys(ids, -9999.999)},
+        "sf1_probe": tier(10, bench._SF1_QUERIES),
+        "sf3_probe": tier(30, bench._SF3_QUERIES),
+        "sf10_probe": tier(100, bench._SF10_QUERIES),
+    }
+    failed = {**totals, "queries": {}, "sf1_probe": {"error": errors[ids[0]]},
+              "sf10_probe": {"error": errors[ids[0]]}}  # sf3 skipped
+    lines = [bench.bench_line(r, "0123456789ab") for r in (worst, failed)]
+    got = [json.loads(line) for line in lines]
+    assert set(got[0]) == set(got[1]) == _LINE_KEYS
+    assert [len(line.encode()) <= 1800 for line in lines] == [True, True], lines
+    assert got[0]["queries"] == dict.fromkeys(ids, 9999.999)
+    assert got[1]["queries"] == dict.fromkeys(ids)
+    n10 = len(bench._SF10_QUERIES)
+    assert got[0]["sf10_probe"] == [100, n10, round(n10 * 9999.999, 1), 9999.99, 9999.99]
+    assert got[1]["sf1_probe"] is got[1]["sf3_probe"] is got[1]["sf10_probe"] is None
+    assert got[0]["sf10_recall"] == dict.fromkeys(["minhash", "simhash", "simhash_b5"], [0.9999] * 2)
+    assert got[1]["sf10_recall"] == dict.fromkeys(["minhash", "simhash", "simhash_b5"], [None] * 2)
+    assert "len(json.dumps(" not in inspect.getsource(bench)
 
 
 def test_entry_smoke(spark):
