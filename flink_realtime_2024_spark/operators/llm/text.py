@@ -733,10 +733,7 @@ def bpe_train(
     n_pairs = await_observation(obs, "bpe_train")["n_pairs"]
     # a word of n chars has n + 1 symbols, hence n adjacent pairs
     pair_rows = max(int(n_pairs), 1)
-    try:
-        session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        session_width = 200
+    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     width = max(1, -(-pair_rows // _BPE_PAIR_ROWS_PER_TASK))
     # ADVICE r14 #1: the explicit repartition-before-groupBy removes
     # map-side partial aggregation — fine while the whole pair stream

@@ -9,8 +9,16 @@ Scale notes (100 TB design):
 - ``spark.sql.adaptive.enabled`` — runtime re-planning: coalesces small
   shuffle partitions, converts sort-merge→broadcast when a side turns out
   small, splits skewed partitions (skew-join handling). Mandatory at scale.
-- ``spark.sql.shuffle.partitions`` — sized for the local test harness via
-  env; on a real cluster leave high (e.g. 2×cores) and let AQE coalesce.
+- ``spark.sql.shuffle.partitions`` — the session's
+  ``sparkContext.defaultParallelism``, set by ``prepare()``: one wave of
+  tasks on every host (32 on a ``local[32]`` host, 8 under a ``local[8]``
+  session, 4 on a 4-core ``local[4]`` one). A stateful streaming
+  operator fixes its partition count, one state store each, at its
+  query's first batch and AQE never coalesces it, so a wider constant
+  opened and committed that many stores per operator per batch on a
+  narrower host. The width a checkpoint was written at is kept when it
+  resumes. ``operators/_util.widen`` and the hot-copy staging in
+  ``load_table`` use the same width.
 - Arrow execution for every pandas_udf/mapInPandas kernel (vectorized
   Python, not row-at-a-time pickling).
 - ``spark.sql.codegen.cache.maxEntries`` — the JVM-wide cache of
@@ -52,11 +60,10 @@ _RUNTIME_CONFS: dict[str, str] = {
     # 10_000_000_000 never returns from getOrCreate) — so this is the
     # largest round int-safe value.
     "spark.sql.cteRecursionRowLimit": str(2_000_000_000),
-    # Harness-scale shuffle width (driver sessions default to 200 → 200
-    # near-empty tasks per exchange at test SFs; stateful streaming ops
-    # can't rely on AQE coalescing because AQE is disabled for them).
-    # On a real cluster this would be ≥2× total cores and AQE-managed.
-    "spark.sql.shuffle.partitions": "32",
+    # spark.sql.shuffle.partitions is not a constant here: prepare()
+    # sets it to the session's defaultParallelism, one wave per host
+    # (Spark's default 200 is 200 near-empty tasks per exchange at test
+    # SFs, and AQE never coalesces a stateful streaming operator's).
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -95,6 +102,10 @@ def prepare(spark: SparkSession) -> SparkSession:
     Every query builder calls this first so the engine behaves the same
     under the driver's session as under our own.
 
+    The shuffle width is the session's ``defaultParallelism`` (see the
+    Scale notes), so our session, the driver's and the no-AQE clone
+    each run one wave of tasks per exchange on the host they run on.
+
     A session may PIN confs against this sweep via a
     ``_flink_rt_pinned_confs`` attribute (an iterable of conf keys):
     the no-AQE planning clone (plans/analytics._noaqe_session) exists
@@ -103,7 +114,11 @@ def prepare(spark: SparkSession) -> SparkSession:
     concurrently with an iterative loop must not silently re-enable
     AQE mid-loop (r14 review finding)."""
     pinned = frozenset(getattr(spark, "_flink_rt_pinned_confs", ()))
-    for k, v in _RUNTIME_CONFS.items():
+    confs = {
+        **_RUNTIME_CONFS,
+        "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
+    }
+    for k, v in confs.items():
         if k in pinned:
             continue
         try:
@@ -155,22 +170,15 @@ def assert_environment(spark: SparkSession, sf_dir: str) -> None:
 def get_spark(
     app_name: str = "flink_realtime_2024_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine session.
 
-    Local harness: ``local[$SPARK_GRAFT_CPUS]``; shuffle partitions default
-    to _RUNTIME_CONFS' 32 (tiny SFs don't need more; AQE coalesces anyway);
-    an explicit ``shuffle_partitions`` becomes the new process-wide default.
+    Local harness: ``local[$SPARK_GRAFT_CPUS]`` (32 when unset). The
+    shuffle width is no option: ``prepare()`` sets it to the session's
+    ``defaultParallelism``, one wave of tasks on the host's cores.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is not None:
-        # An explicit choice must survive prepare() — which every query
-        # builder re-runs — so update the module default rather than a
-        # builder conf that the _RUNTIME_CONFS loop (and later prepare()
-        # calls) would overwrite back to 32.
-        _RUNTIME_CONFS["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -411,17 +411,18 @@ def stream_late_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop metric. Flink's ``.sideOutputLateData(tag)`` reroutes late
     rows to a secondary stream; Structured Streaming's stateful ops
     only DROP them (late_rows_metrics counts the drops). This job
-    restores the reroute semantics: foreachBatch tracks the event-time
+    restores the reroute semantics: the sink tracks the event-time
     watermark across micro-batches (max event time seen so far minus
     the allowed lateness — Flink's exact definition, persisted across
-    batches in driver scope) and splits each batch into the main flow
-    and the late side output BEFORE any stateful operator would drop
-    it. Each branch appends to its own sink ('topic'), idempotent per
-    batchId.
+    batches in driver scope) and tags each row of a batch ``main`` or
+    ``late`` against it BEFORE any stateful operator would drop it.
+    Each batch is one ``stream_to_parquet`` write, idempotent per
+    batchId, like ``stream_split``'s branches.
 
-    Scale: the split is two filters on the executing batch (no extra
-    shuffle); the watermark update is a single per-batch max — O(1)
-    driver state.
+    Scale: the tag is one expression on the executing batch (no extra
+    shuffle); the batch's max event time is an Observation on that same
+    write, read when the next batch is tagged (the write has run, so it
+    has posted) — O(1) driver state, no second pass.
 
     Full oracle (was rows-only through r4): the topic is staged with
     the SQL-expressible assignment ``event_id % 4`` replayed in fixed
@@ -430,60 +431,40 @@ def stream_late_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure function of the static table and DuckDB reproduces the exact
     main/late row sets; the main+late=total invariant stays
     pytest-asserted too."""
+    from pyspark.sql import Observation
+
+    from ..observability import await_observation
+
     prepare(spark)
     staged = _staged_events_dir_keyed(spark, sf_dir)
-    ev = topic_stream(spark, staged)
-    root = workspace("late_split_")
     allowed_us = 3_600_000_000  # 1 hour allowed lateness
-    wm = {"us": None}  # watermark BEFORE the current batch, in epoch-µs
+    # the watermark BEFORE the current batch, in epoch-µs, and the
+    # Observation of the previous batch's max event time
+    wm: dict = {"us": None, "obs": None}
 
-    def split_sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        from ..observability import await_observation
-
-        # observation rides the SAME pass as the first branch write
-        # (the observe node sits below the branch filters, so every
-        # batch row flows through it) — no second scan for the max
-        obs = Observation(f"late_split_wm_{batch_id}")
-        with_us = batch_df.withColumn("us", F.unix_micros("ts")).observe(
-            obs, F.max("us").alias("max_us")
-        )
-        with_us.persist()
-        try:
-            threshold = wm["us"]
-            late = (
-                with_us.filter(F.col("us") < F.lit(threshold))
-                if threshold is not None
-                else with_us.limit(0)
-            )
-            main = (
-                with_us.filter(F.col("us") >= F.lit(threshold))
-                if threshold is not None
-                else with_us
-            )
-            for name, branch in (("main", main), ("late", late)):
-                branch.drop("us").write.mode("overwrite").parquet(
-                    os.path.join(root, name, f"batch={batch_id}")
-                )
-            batch_max = await_observation(obs, "late_split")["max_us"]
+    def tag(batch_df: DataFrame) -> DataFrame:
+        if wm["obs"] is not None:
+            batch_max = await_observation(wm["obs"], "late_split")["max_us"]
             if batch_max is not None:
                 cand = batch_max - allowed_us
-                wm["us"] = cand if threshold is None else max(threshold, cand)
-        finally:
-            with_us.unpersist()
-
-    run_stream(ev.writeStream.foreachBatch(split_sink), "late_split")
-    result = None
-    for name in ("main", "late"):
-        df = (
-            spark.read.parquet(os.path.join(root, name))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(name).alias("branch"), "n")
+                wm["us"] = cand if wm["us"] is None else max(wm["us"], cand)
+        wm["obs"] = Observation()
+        us = F.unix_micros("ts")
+        branch = (
+            F.lit("main")
+            if wm["us"] is None
+            else F.when(us < F.lit(wm["us"]), "late").otherwise("main")
         )
-        result = df if result is None else result.unionByName(df)
-    assert result is not None
-    return result
+        return batch_df.observe(wm["obs"], F.max(us).alias("max_us")).withColumn(
+            "branch", branch
+        )
+
+    tagged = stream_to_parquet(topic_stream(spark, staged), "late_split", transform=tag)
+    # both branches are rows of the result, an empty one with n = 0
+    branches = spark.createDataFrame([("main",), ("late",)], "branch string")
+    return branches.join(tagged.groupBy("branch").count(), "branch", "left").select(
+        "branch", F.coalesce("count", F.lit(0)).alias("n")
+    )
 
 
 _SMOKE_ORACLE = """

@@ -14,7 +14,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from flink_realtime_2024_spark.session import get_spark
 
-    spark = get_spark(app_name="tests", shuffle_partitions=8)
+    spark = get_spark(app_name="tests")
     yield spark
     spark.stop()
 

@@ -335,6 +335,79 @@ def test_checkpoint_recovery_is_exactly_once(spark, tmp_path_factory):
     assert all(p["numInputRows"] == 0 for p in q2.recentProgress)
 
 
+def test_stateful_operators_run_at_session_width(spark):
+    """A stateful operator fixes its partition count, one state store
+    each, at its query's first batch, and AQE never coalesces it: the
+    session width is what every batch opens and commits. prepare() sets
+    it to the session's defaultParallelism, so the stateful streaming ids
+    run one state store per core, not a wider constant's."""
+    from flink_realtime_2024_spark.observability import stream_progress
+    from flink_realtime_2024_spark.streaming.jobs import stream_dedup, stream_source_smoke
+
+    width = spark.sparkContext.defaultParallelism
+    with stream_progress(spark) as progress:
+        for build in (stream_dedup, stream_source_smoke):
+            build(spark, SF_DIR).collect()
+    ops = [op for p in progress for op in p.stateOperators]
+    assert ops, "no stateful operator reported progress"
+    widths = {(op.numShufflePartitions, op.numStateStoreInstances) for op in ops}
+    assert widths == {(width, width)}, widths
+
+
+def test_resumed_stateful_stream_keeps_checkpoint_width(spark, tmp_path):
+    """Operator state is keyed by the shuffle, so the width a checkpoint
+    was written at holds for its whole life: a stateful aggregate
+    started on a wider session (a larger host's) and resumed after
+    prepare() set this host's width keeps the first width, and its
+    final state equals the batch answer."""
+    import os
+    import shutil
+
+    from flink_realtime_2024_spark.observability import stream_progress
+    from flink_realtime_2024_spark.session import prepare
+    from flink_realtime_2024_spark.sources.io import load_table
+    from flink_realtime_2024_spark.streaming.jobs import _staged_events_dir, topic_stream
+
+    staged = _staged_events_dir(spark, SF_DIR)
+    files = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
+    src, out, ckpt = (str(tmp_path / d) for d in ("topic", "out", "ckpt"))
+    os.mkdir(src)
+    shutil.copy(os.path.join(staged, files[0]), src)
+    counts = topic_stream(spark, src).groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+
+    def run() -> list[int]:
+        with stream_progress(spark) as progress:
+            (
+                counts.writeStream.outputMode("complete")
+                .foreachBatch(lambda df, _: df.write.mode("overwrite").parquet(out))
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        return [op.numShufflePartitions for p in progress for op in p.stateOperators]
+
+    host = spark.sparkContext.defaultParallelism
+    wide = 2 * host
+    spark.conf.set("spark.sql.shuffle.partitions", str(wide))
+    try:
+        first = run()  # one batch: the topic holds one file so far
+    finally:
+        prepare(spark)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(host)
+    for f in files[1:]:
+        shutil.copy(os.path.join(staged, f), src)
+    resumed = run()
+    assert first == [wide], first
+    assert len(resumed) == len(files) - 1 and set(resumed) == {wide}, resumed
+    want = load_table(spark, SF_DIR, "events").groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    assert {tuple(r) for r in spark.read.parquet(out).collect()} == {
+        tuple(r) for r in want.collect()
+    }
+
+
 def test_streaming_sliding_window_equals_batch(spark, tmp_path):
     """T3 streaming form: sliding windows (2h length / 1h hop, matching
     the batch twin) over the watermarked stream equal the batch answer."""
@@ -780,6 +853,16 @@ def test_stream_split_jobs_per_batch(spark, monkeypatch):
     from flink_realtime_2024_spark.streaming.jobs import stream_split
 
     per_batch, _ = _jobs_per_batch(spark, monkeypatch, stream_split)
+    assert max(per_batch.values()) <= 1, per_batch
+
+
+def test_stream_late_split_jobs_per_batch(spark, monkeypatch):
+    """stream_late_split tags each row main or late and observes the
+    batch's max event time on that same write: at most 1 Spark job per
+    micro-batch, with no persist or second branch write."""
+    from flink_realtime_2024_spark.streaming.jobs import stream_late_split
+
+    per_batch, _ = _jobs_per_batch(spark, monkeypatch, stream_late_split)
     assert max(per_batch.values()) <= 1, per_batch
 
 
