@@ -10,13 +10,10 @@ package ``__init__`` so ``operators.llm.<name>`` paths are unchanged.
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
 
 import pyspark.sql.functions as F
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import types as T
 

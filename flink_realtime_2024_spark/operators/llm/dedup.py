@@ -10,8 +10,6 @@ package ``__init__`` so ``operators.llm.<name>`` paths are unchanged.
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
 
@@ -22,7 +20,7 @@ from pyspark.sql import types as T
 
 from ...sources.io import load_table
 from ...plans.registry import register
-from .._util import distributed_row_number, widen
+from .._util import widen
 
 from .lsh import jaccard_prefix_len, shingle_str_expr  # noqa: E402
 

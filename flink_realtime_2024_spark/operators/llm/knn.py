@@ -2,6 +2,13 @@
 partition-pruned), PQ, int8 scalar quantization, distributed k-means,
 SemDeDup semantic dedup, and embedding-level decontamination.
 
+All six kNN ids run on one scan-and-rank kernel, ``_scan_topk``: one
+mapInPandas over the scan keeps each query's partial top-k per Arrow
+batch and one row_number window finalizes k. Each id supplies only its
+scoring — a dense score matrix (``_dense_candidates``: cosine, PQ,
+int8) or the rows of the probed inverted lists (``_probed_candidates``:
+the two IVF ids).
+
 Split out of operators/llm.py (r13 — the single file reached 4.9k
 lines); every public and test-visible name is re-exported by the
 package ``__init__`` so ``operators.llm.<name>`` paths are unchanged.
@@ -9,8 +16,6 @@ package ``__init__`` so ``operators.llm.<name>`` paths are unchanged.
 
 
 from __future__ import annotations
-
-import re
 
 import numpy as np
 import pandas as pd
@@ -22,7 +27,7 @@ from pyspark.sql import types as T
 
 from ...sources.io import load_table
 from ...plans.registry import register
-from .._util import distributed_row_number, widen
+from .._util import widen
 
 
 
@@ -56,13 +61,62 @@ QUALIFY ROW_NUMBER() OVER (
 """
 
 
+_KNN_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.LongType()),
+        T.StructField("neighbor_id", T.LongType()),
+        T.StructField("score", T.DoubleType()),
+    ]
+)
+
+
+def _scan_topk(frame: DataFrame, candidates) -> DataFrame:
+    """The scan-and-rank kernel behind every kNN id: partition-local
+    top-k, then one global merge (the distributed top-k plan of REPOSE,
+    ICDE 2021). ``frame`` streams through ONE mapInPandas; per Arrow
+    batch, ``candidates(ids, E, pdf)`` gets the batch's ``vec_id`` as
+    int64, its ``embedding`` as a float64 (n, d) matrix and the raw
+    batch, and yields ``(query_id, candidate_ids, scores)`` per query,
+    scores already quantized to 1e-6. The kernel keeps each query's
+    best ``_KNN_K`` (score desc, ties on neighbor_id — the oracles'
+    ORDER BY), and a row_number over query_id finalizes k, so only
+    ≤ k × n_queries rows per batch reach the one window shuffle and the
+    corpus is never collected."""
+
+    def partial_topk(batches):
+        for pdf in batches:
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            E = np.array(list(pdf["embedding"]), dtype=np.float64)
+            rows = []
+            for qid, mids, ms in candidates(ids, E, pdf):
+                for i in np.lexsort((mids, -ms))[:_KNN_K]:
+                    rows.append((int(qid), int(mids[i]), float(ms[i])))
+            if rows:
+                yield pd.DataFrame(rows, columns=_KNN_SCHEMA.names)
+
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
+    return (
+        frame.mapInPandas(partial_topk, _KNN_SCHEMA)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= _KNN_K)
+        .select(*_KNN_SCHEMA.names)
+    )
+
+
+def _dense_candidates(qids: np.ndarray, ids: np.ndarray, S: np.ndarray):
+    """Candidates from a dense (n, q) score matrix: for query column j,
+    every row of the batch except the query itself."""
+    for j, qid in enumerate(qids):
+        mask = ids != qid
+        yield qid, ids[mask], S[mask, j]
+
+
 @register("llm_knn_cosine", oracle=_KNN_ORACLE, section="L3", bench=True)
 def llm_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 brute-force cosine top-k (embeddings are L2-normalized ⇒ cosine
     = dot product). The query set (tiny) is broadcast as a dense float64
-    matrix; the corpus streams through mapInPandas doing one BLAS matmul
-    per Arrow batch; per-partition partial top-k, then a global
-    row_number finalizes k — the corpus is never collected.
+    matrix; the corpus streams through ``_scan_topk`` doing one BLAS
+    matmul per Arrow batch — the corpus is never collected.
 
     Determinism: scores quantized to 1e-6 BEFORE ranking, ties broken by
     neighbor_id, so Spark and DuckDB rank identically despite float
@@ -74,43 +128,13 @@ def llm_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TakeOrderedAndProject (per-partition top-N, no full sort) — the
     # collect is O(_KNN_MAX_QUERIES) regardless of corpus size
     qids, Q = _knn_query_matrix(spark, sf_dir, emb)
-    sc = spark.sparkContext
-    b = sc.broadcast((qids, Q))
+    b = spark.sparkContext.broadcast((qids, Q))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def partial_topk(batches):
+    def candidates(ids, E, pdf):
         bqids, bQ = b.value
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            E = np.array(list(pdf["embedding"]), dtype=np.float64)
-            S = np.round(E @ bQ.T, 6)  # (n, k_queries), quantized
-            rows = []
-            for j in range(len(bqids)):
-                s = S[:, j]
-                mask = ids != bqids[j]
-                mids, ms = ids[mask], s[mask]
-                order = np.lexsort((mids, -ms))[: _KNN_K]
-                for i in order:
-                    rows.append((int(bqids[j]), int(mids[i]), float(ms[i])))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "score"])
+        return _dense_candidates(bqids, ids, np.round(E @ bQ.T, 6))
 
-    partial = widen(emb.select("vec_id", "embedding")).mapInPandas(partial_topk, out_schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KNN_K)
-        .select("query_id", "neighbor_id", "score")
-    )
+    return _scan_topk(widen(emb.select("vec_id", "embedding")), candidates)
 
 
 def _emb_memo(spark: SparkSession, sf_dir: str, kind: str, build, *knobs):
@@ -392,7 +416,7 @@ def llm_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic Lloyd k-means on a fixed sample) defines inverted
     lists; each query probes only its nprobe nearest lists.
 
-    Fused single-pass plan: one mapInPandas scan assigns each corpus
+    Fused single-pass plan: one ``_scan_topk`` scan assigns each corpus
     vector to its list AND scores it against exactly the queries probing
     that list — no inverted-list materialization, no join, and the
     embedding arrays never leave the scan stage. Only per-batch partial
@@ -426,45 +450,23 @@ def llm_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_mask[j, top] = True
     bc = spark.sparkContext.broadcast((cent, qids, Q, probe_mask))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def scan_lists(batches):
+    def candidates(ids, E, pdf):
         C, bqids, bQ, M = bc.value
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            E = np.array(list(pdf["embedding"]), dtype=np.float64)
-            cids = (E @ C.T).argmax(axis=1)
-            rows = []
-            for j in range(len(bqids)):
-                # only rows in this query's probed lists are scored —
-                # the compute-side pruning IVF exists for
-                allowed = M[j, cids] & (ids != bqids[j])
-                if not allowed.any():
-                    continue
-                mids = ids[allowed]
-                ms = np.round(E[allowed] @ bQ[j], 6)
-                order = np.lexsort((mids, -ms))[:_KNN_K]
-                for i in order:
-                    rows.append((int(bqids[j]), int(mids[i]), float(ms[i])))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "score"])
+        return _probed_candidates(bqids, bQ, M, ids, (E @ C.T).argmax(axis=1), E)
 
-    partial = widen(emb.select("vec_id", "embedding")).mapInPandas(scan_lists, out_schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    topk = (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KNN_K)
-        .select("query_id", "neighbor_id", "score")
-    )
+    topk = _scan_topk(widen(emb.select("vec_id", "embedding")), candidates)
     return with_recall_vs_exact(spark, sf_dir, topk)
+
+
+def _probed_candidates(qids, Q, M, ids, cids, E):
+    """IVF candidates: query j scores only the batch rows whose list
+    ``cids`` it probes (``M[j]``), minus itself — the compute-side
+    pruning IVF exists for. A query none of whose probed lists has a
+    row in the batch yields nothing."""
+    for j, qid in enumerate(qids):
+        allowed = M[j, cids] & (ids != qid)
+        if allowed.any():
+            yield qid, ids[allowed], np.round(E[allowed] @ Q[j], 6)
 
 
 def _ivf_seeded_centroids(emb: DataFrame) -> np.ndarray:
@@ -641,44 +643,13 @@ def llm_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed = sorted(int(c) for c in np.nonzero(probe_mask.any(axis=0))[0])
     bc = spark.sparkContext.broadcast((qids, Q, probe_mask))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def score_lists(batches):
+    def candidates(ids, E, pdf):
         bqids, bQ, M = bc.value
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cids = pdf["centroid_id"].to_numpy(dtype=np.int64)
-            E = np.array(list(pdf["embedding"]), dtype=np.float64)
-            rows = []
-            for j in range(len(bqids)):
-                allowed = M[j, cids] & (ids != bqids[j])
-                if not allowed.any():
-                    continue
-                mids = ids[allowed]
-                ms = np.round(E[allowed] @ bQ[j], 6)
-                order = np.lexsort((mids, -ms))[:_KNN_K]
-                for i in order:
-                    rows.append((int(bqids[j]), int(mids[i]), float(ms[i])))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "score"])
+        cids = pdf["centroid_id"].to_numpy(dtype=np.int64)
+        return _probed_candidates(bqids, bQ, M, ids, cids, E)
 
     lists = spark.read.parquet(index_dir).filter(F.col("centroid_id").isin(probed))
-    partial = lists.mapInPandas(score_lists, out_schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    topk = (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KNN_K)
-        .select("query_id", "neighbor_id", "score")
-    )
-    return with_recall_vs_exact(spark, sf_dir, topk)
+    return with_recall_vs_exact(spark, sf_dir, _scan_topk(lists, candidates))
 
 
 _PQ_M = 8  # subspaces
@@ -852,9 +823,11 @@ def llm_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched at query time: the decode reads codes + the broadcast
     codebooks only.
 
-    Fused in-scan form like llm_knn_ivf: one mapInPandas encodes AND
-    scores each Arrow batch; only partial top-k rows reach the final
-    shuffle. At 100 TB the codes (+ codebooks) would be the stored
+    Fused in-scan form like llm_knn_ivf: ``_pq_topk`` encodes AND
+    scores each Arrow batch in the one ``_scan_topk`` pass; only
+    partial top-k rows reach the final shuffle. The trained codebooks
+    are memoized per session and fixture (``_emb_memo``), like the IVF
+    quantizer. At 100 TB the codes (+ codebooks) would be the stored
     index — 8 bytes/vector — with this same kernel reading codes
     instead of raw embeddings.
 
@@ -865,48 +838,29 @@ def llm_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     all value-checked cross-engine. Reconstruction quality and recall
     vs exact kNN are additionally pytest-asserted."""
     emb = load_table(spark, sf_dir, "embeddings")
-    books = _pq_train(emb)
+    books = _emb_memo(
+        spark, sf_dir, "pq_books", lambda: _pq_train(emb),
+        _IVF_TRAIN_BUDGET, _PQ_M, _PQ_K,
+    )
+    return _pq_topk(spark, sf_dir, emb, books, pq_encode)
+
+
+def _pq_topk(spark: SparkSession, sf_dir: str, emb: DataFrame, books, encode) -> DataFrame:
+    """The ADC scan both PQ ids share — they differ only in codebooks
+    and ``encode``: each batch is encoded to m one-byte codes, decoded
+    back to (n, d) (exact codeword concatenation), and scored by ONE
+    BLAS matmul against the query matrix, ADC(q, x) = q · reconstruct(x)
+    — 3.6× faster end-to-end at the 100× corpus than the per-subspace
+    lookup-table gather, with identical scores."""
     qids, Q = _knn_query_matrix(spark, sf_dir, emb)
     bc = spark.sparkContext.broadcast((books, qids, Q))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def scan_codes(batches):
+    def candidates(ids, E, pdf):
         B, bqids, bQ = bc.value
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            E = np.array(list(pdf["embedding"]), dtype=np.float64)
-            codes = pq_encode(E, B)
-            # ADC via the reconstruction identity (see llm_knn_pq_seeded:
-            # one BLAS matmul beats the per-subspace LUT gather 3.6×
-            # end-to-end at the 100× corpus, same scores)
-            R = pq_reconstruct(codes, B)
-            S = np.round(R @ bQ.T, 6)
-            rows = []
-            for j in range(len(bqids)):
-                mask = ids != bqids[j]
-                mids, ms = ids[mask], S[mask, j]
-                order = np.lexsort((mids, -ms))[:_KNN_K]
-                for i in order:
-                    rows.append((int(bqids[j]), int(mids[i]), float(ms[i])))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "score"])
+        R = pq_reconstruct(encode(E, B), B)
+        return _dense_candidates(bqids, ids, np.round(R @ bQ.T, 6))
 
-    partial = widen(emb.select("vec_id", "embedding")).mapInPandas(scan_codes, out_schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    topk = (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KNN_K)
-        .select("query_id", "neighbor_id", "score")
-    )
+    topk = _scan_topk(widen(emb.select("vec_id", "embedding")), candidates)
     return with_recall_vs_exact(spark, sf_dir, topk)
 
 
@@ -919,9 +873,10 @@ def _pq_seeded_books(emb: DataFrame) -> np.ndarray:
     identical to the IVF one: an oracle engine re-derives the codebooks in
     one ORDER BY ... LIMIT + list_slice, so encoding, ADC scoring, and the
     final top-k all become value-checkable SQL. Lloyd-trained codebooks
-    (better reconstruction) live on in ``llm_knn_pq`` (rows-only, recall
-    self-reported). Returns (m, k, d/m); O(_PQ_K) driver memory at any
-    corpus size (orderBy+limit is TakeOrderedAndProject)."""
+    (better reconstruction) live on in ``llm_knn_pq``, whose oracle
+    unrolls their Lloyd rounds (``_pq_lloyd_oracle``). Returns
+    (m, k, d/m); O(_PQ_K) driver memory at any corpus size
+    (orderBy+limit is TakeOrderedAndProject)."""
     rows = (
         emb.select("vec_id", "embedding")
         .orderBy(
@@ -1023,77 +978,23 @@ approx AS (
 
 @register("llm_knn_pq_seeded", oracle=_pq_seeded_oracle(), section="L3")
 def llm_knn_pq_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L3 product-quantization ANN, FULL-ORACLE variant (r14): identical
-    fused plan to ``llm_knn_pq`` — one mapInPandas encodes each Arrow
-    batch to m one-byte codes AND scores it via asymmetric distance
-    computation; only partial top-k rows reach the final shuffle — but
-    with the SEEDED deterministic codebooks (``_pq_seeded_books``: the
-    subvectors of the first _PQ_K corpus vectors in Knuth-hash order,
-    no Lloyd rounds) and the full rounding discipline: encoding
-    distances quantized to 1e-6 before argmin (codeword-ordinal ties),
-    scores quantized to 1e-6 before ranking, ties on neighbor_id.
-    Scoring uses the ADC identity ADC(q, x) = q · reconstruct(x): each
-    batch decodes its codes back to (n, d) and pays ONE BLAS matmul
-    against the query matrix — measured 3.6× faster END-TO-END at the
-    100× probe corpus (71 s → 19.6 s, most of the residual being the
-    shared exact-ground-truth pass) than the textbook per-subspace
-    lookup-table gather (1e9 numpy fancy-index ops for 256 queries),
-    identical scores either way since reconstruction is exact
-    concatenation of codewords. DuckDB re-derives the whole pipeline (codebooks →
-    codes → reconstruction → scored top-k → recall) and value-matches
-    it — the r9 minhash/simhash flip standard, extended from IVF
-    (llm_knn_ivf_partitioned) to the memory side of the ANN stack.
-    Lloyd-trained codebooks (better reconstruction quality) remain in
-    ``llm_knn_pq`` (rows-only, recall self-reported); at 100 TB the
-    stored index would be the 8-byte codes either way — the kernel and
-    plan shape are unchanged by the codebook choice."""
+    """L3 product-quantization ANN with SEEDED codebooks (r14): the same
+    ``_pq_topk`` ADC scan as ``llm_knn_pq``, but the codebooks are
+    ``_pq_seeded_books`` (the subvectors of the first _PQ_K corpus
+    vectors in Knuth-hash order, no Lloyd rounds) and encoding
+    distances are quantized to 1e-6 before argmin (codeword-ordinal
+    ties). DuckDB re-derives the whole pipeline (codebooks → codes →
+    reconstruction → scored top-k → recall) in ``_pq_seeded_oracle``
+    and value-matches it. ``llm_knn_pq`` keeps the Lloyd-trained
+    codebooks (better reconstruction quality) and is likewise
+    full-oracle, via ``_pq_lloyd_oracle``; at 100 TB the stored index
+    would be the 8-byte codes either way — the kernel and plan shape
+    are unchanged by the codebook choice."""
     emb = load_table(spark, sf_dir, "embeddings")
     books = _emb_memo(
         spark, sf_dir, "pq_books_seeded", lambda: _pq_seeded_books(emb), _PQ_M, _PQ_K
     )
-    qids, Q = _knn_query_matrix(spark, sf_dir, emb)
-    bc = spark.sparkContext.broadcast((books, qids, Q))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def scan_codes(batches):
-        B, bqids, bQ = bc.value
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            E = np.array(list(pdf["embedding"]), dtype=np.float64)
-            codes = _pq_seeded_encode(E, B)
-            R = pq_reconstruct(codes, B)  # (n, d) — exact codeword concat
-            S = np.round(R @ bQ.T, 6)  # (n, q): ADC via reconstruction
-            rows = []
-            for j in range(len(bqids)):
-                mask = ids != bqids[j]
-                mids, ms = ids[mask], S[mask, j]
-                order = np.lexsort((mids, -ms))[:_KNN_K]
-                for i in order:
-                    rows.append((int(bqids[j]), int(mids[i]), float(ms[i])))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["query_id", "neighbor_id", "score"]
-                )
-
-    partial = widen(emb.select("vec_id", "embedding")).mapInPandas(
-        scan_codes, out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    topk = (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KNN_K)
-        .select("query_id", "neighbor_id", "score")
-    )
-    return with_recall_vs_exact(spark, sf_dir, topk)
+    return _pq_topk(spark, sf_dir, emb, books, _pq_seeded_encode)
 
 
 @register("llm_neardup_cosine", oracle=None, section="L2,L3", reverify=14)
@@ -1611,48 +1512,19 @@ def llm_knn_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the quantizer must be a plain SQL expression so the DuckDB oracle
     # can re-derive the exact same int8 codes
     Q8 = np.floor(Q / qscale[:, None] + 0.5).astype(np.int8)
-    sc = spark.sparkContext
-    b = sc.broadcast((qids, Q8, qscale))
+    b = spark.sparkContext.broadcast((qids, Q8, qscale))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def partial_topk(batches):
+    def candidates(ids, E, pdf):
         bqids, bQ8, bqs = b.value
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            E = np.array(list(pdf["embedding"]), dtype=np.float64)
-            escale = np.abs(E).max(axis=1) / 127.0
-            escale[escale == 0] = 1.0
-            E8 = np.floor(E / escale[:, None] + 0.5).astype(np.int8)
-            # int32 accumulation of int8 dots, then rescale to float
-            S = (E8.astype(np.int32) @ bQ8.astype(np.int32).T).astype(np.float64)
-            S = np.round(S * escale[:, None] * bqs[None, :], 6)
-            rows = []
-            for j in range(len(bqids)):
-                s = S[:, j]
-                mask = ids != bqids[j]
-                mids, ms = ids[mask], s[mask]
-                order = np.lexsort((mids, -ms))[: _KNN_K]
-                for i in order:
-                    rows.append((int(bqids[j]), int(mids[i]), float(ms[i])))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "score"])
+        escale = np.abs(E).max(axis=1) / 127.0
+        escale[escale == 0] = 1.0
+        E8 = np.floor(E / escale[:, None] + 0.5).astype(np.int8)
+        # int32 accumulation of int8 dots, then rescale to float
+        S = (E8.astype(np.int32) @ bQ8.astype(np.int32).T).astype(np.float64)
+        S = np.round(S * escale[:, None] * bqs[None, :], 6)
+        return _dense_candidates(bqids, ids, S)
 
-    partial = widen(emb.select("vec_id", "embedding")).mapInPandas(
-        partial_topk, out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    topk = (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KNN_K)
-        .select("query_id", "neighbor_id", "score")
-    )
+    topk = _scan_topk(widen(emb.select("vec_id", "embedding")), candidates)
     return with_recall_vs_exact(spark, sf_dir, topk)
 
 

@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 
 from ...sources.io import load_table
 from ...plans.registry import register
-from .._util import distributed_row_number, widen
+from .._util import widen
 
 from .text import llm_quality_gopher  # noqa: E402
 

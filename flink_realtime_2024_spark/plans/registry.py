@@ -17,7 +17,7 @@ across engines (SURVEY §5.2 gotchas):
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 

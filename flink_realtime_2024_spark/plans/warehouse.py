@@ -368,8 +368,9 @@ def warehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer costs and the NameNode/object-store pays the metadata.
     Stage: orders deliberately fragmented into 64 shards; compact with
     ``sources.maintenance.compact_parquet`` — the byte-sized,
-    shuffle-free (coalesce) rewrite with an ATOMIC directory swap
-    (readers see old files or new, never a mix). The oracle proves
+    shuffle-free (coalesce) rewrite swapped in by two renames (not
+    atomic: between them the directory is missing, see
+    ``compact_parquet``). The oracle proves
     compaction is LOSSLESS (full content equality vs the original
     table); the file-count reduction is asserted inline and in
     tests/test_scale_techniques.py. At 100 TB this runs per

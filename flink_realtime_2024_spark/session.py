@@ -88,8 +88,7 @@ _RUNTIME_CONFS: dict[str, str] = {
     # at 100 TB: state size is bounded by disk, not executor heap —
     # Flink's RocksDBStateBackend, reference pom.xml's checkpointing
     # stack). Local evidence: stream_dedup over 6M rows (3M-entry
-    # dedup state) completes in a 2 GiB JVM with this provider; it is
-    # also the only provider transformWithStateInPandas supports.
+    # dedup state) completes in a 2 GiB JVM with this provider.
     "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",

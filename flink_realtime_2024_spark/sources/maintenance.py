@@ -6,11 +6,14 @@ dies by a thousand 2 MB files (driver listing cost, one task per file,
 no row-group locality). The reference stack delegates this to Doris
 compaction — a Spark-native table needs its own pass.
 
-Design: per-directory rewrite sized by actual bytes, atomic via
-write-to-temp + directory swap (readers either see the old file set or
-the new one, never a mix). At 100 TB you run this per partition
-directory (hence the single-dir contract) — each partition compacts
-independently and in parallel from a scheduler.
+Design: per-directory rewrite sized by actual bytes, written to a
+staging dir and swapped in by two renames. The swap is NOT atomic:
+between retiring the old dir and renaming the staging dir into place
+the path does not exist, and a crash there leaves the table only at
+``<path>.compact_bak`` (see ``compact_parquet``). ROADMAP direction 4
+replaces this swap with the shared commit primitive. At 100 TB you run
+this per partition directory (hence the single-dir contract) — each
+partition compacts independently and in parallel from a scheduler.
 """
 
 from __future__ import annotations
@@ -38,11 +41,13 @@ def compact_parquet(
 ) -> dict:
     """Rewrite a parquet directory into ceil(bytes/target) files.
 
-    Returns {"files_before", "files_after", "bytes", "rows"}. The swap
-    is atomic at the directory level: the new file set is staged next to
-    `path` on the same filesystem and `os.rename`d into place, with the
-    old set retired to a .bak dir that is removed only after the swap
-    succeeds."""
+    Returns {"files_before", "files_after", "bytes", "rows"}. The new
+    file set is staged next to `path` on the same filesystem; the old
+    set is renamed to `<path>.compact_bak`, the staging dir is renamed
+    to `path`, and the .bak dir is removed only after that succeeds.
+    Each rename is atomic, the pair is not: between them `path` does
+    not exist, so a reader there fails, and a crash there leaves the
+    table only at `<path>.compact_bak`."""
     n_before, total_bytes = parquet_dir_stats(path)
     n_out = max(1, math.ceil(total_bytes / target_file_bytes))
 

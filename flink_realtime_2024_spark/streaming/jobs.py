@@ -30,7 +30,6 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import schemas
 from ..sources.io import (
     events_ts_to_timestamp,
     load_table,

@@ -4,16 +4,10 @@ Reference surface: Flink KeyedProcessFunction with ValueState/MapState +
 TTL and event-time timers (flink-streaming-java, reference pom.xml:32-37)
 — the first-visit/new-UV flag job, order-timeout detection, per-day dedup.
 
-Spark mapping (SURVEY §1.3): ``transformWithStateInPandas`` (PySpark
-4.x) is the full equivalent (value/list/map state + timers). Its state
-client requires ``google.protobuf`` at RUNTIME, which this container
-lacks — so the engine probes the capability
-(``transform_with_state_available``) and picks the implementation per
-call: the StatefulProcessor path when protobuf is importable, else the
-``applyInPandasWithState`` fallback (GroupState per key, timeout
-support). Both implementations of the first-visit operator share the
-same kernel logic; the TWS path is pytest-covered with a skip marker
-that activates wherever protobuf exists.
+Spark mapping (SURVEY §1.3): ``applyInPandasWithState`` (GroupState
+per key, processing- and event-time timeouts). PySpark 4.x's
+``transformWithStateInPandas`` adds list/map state, but its state client
+needs ``google.protobuf`` at run time, so it is not used.
 
 Semantics note (vs the batch twin ``state_first_visit``): state persists
 ACROSS micro-batches via the checkpointed state store; each batch emits
@@ -40,17 +34,6 @@ from pyspark.sql.types import (
 )
 
 
-def transform_with_state_available() -> bool:
-    """True when PySpark's transformWithStateInPandas can actually run
-    (its state client needs google.protobuf)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 _FIRST_VISIT_OUT = StructType(
     [
         StructField("user_id", LongType()),
@@ -62,32 +45,12 @@ _FIRST_VISIT_OUT = StructType(
 _FIRST_VISIT_STATE = StructType([StructField("seen_days", StringType())])
 
 
-def _first_days_chunks(key, pdfs, seen: set) -> list[pd.DataFrame]:
-    """Vectorized kernel shared by both state backends: per incoming
-    pandas chunk, keep the first (us, event_id)-ordered row of each day
-    not yet in ``seen``, updating ``seen`` in place. Whole-column
-    pandas ops (sort + drop_duplicates + isin) — no per-row Python."""
-    out = []
-    for pdf in pdfs:
-        firsts = pdf.sort_values(["us", "event_id"]).drop_duplicates("day")
-        firsts = firsts[~firsts["day"].isin(seen)]
-        if len(firsts):
-            seen.update(firsts["day"].tolist())
-            out.append(
-                pd.DataFrame(
-                    {
-                        "user_id": key[0],
-                        "day": firsts["day"].to_numpy(),
-                        "first_event_id": firsts["event_id"].to_numpy(),
-                    }
-                )
-            )
-    return out
-
-
 def _first_visit_fn(key, pdfs, state: GroupState):
     """Per-key kernel: emit (user, day, event_id) the first time a day is
     seen for this user; remember seen days in GroupState across batches.
+    Per incoming pandas chunk, the first (us, event_id)-ordered row of
+    each unseen day is kept with whole-column pandas ops (sort +
+    drop_duplicates + isin) — no per-row Python.
 
     State is a single comma-joined string of days — GroupState values
     must be hashable tuples of simple types.
@@ -97,61 +60,35 @@ def _first_visit_fn(key, pdfs, state: GroupState):
         (packed,) = state.get
         if packed:
             seen = set(packed.split(","))
-    chunks = _first_days_chunks(key, pdfs, seen)
+    chunks = []
+    for pdf in pdfs:
+        firsts = pdf.sort_values(["us", "event_id"]).drop_duplicates("day")
+        firsts = firsts[~firsts["day"].isin(seen)]
+        if len(firsts):
+            seen.update(firsts["day"].tolist())
+            chunks.append(
+                pd.DataFrame(
+                    {
+                        "user_id": key[0],
+                        "day": firsts["day"].to_numpy(),
+                        "first_event_id": firsts["event_id"].to_numpy(),
+                    }
+                )
+            )
     state.update((",".join(sorted(seen)),))
     if chunks:
         yield pd.concat(chunks, ignore_index=True)
 
 
-def _first_visit_tws_processor():
-    """StatefulProcessor twin of _first_visit_fn for the
-    transformWithStateInPandas path (imported lazily: the class itself
-    imports cleanly without protobuf; only execution needs it)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class FirstVisitProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState("seen_days", _FIRST_VISIT_STATE)
-
-        def handleInputRows(self, key, rows, timer_values):
-            packed = self._seen.get()
-            seen = set(packed[0].split(",")) if packed and packed[0] else set()
-            chunks = _first_days_chunks(key, rows, seen)
-            self._seen.update((",".join(sorted(seen)),))
-            if chunks:
-                yield pd.concat(chunks, ignore_index=True)
-
-        def close(self) -> None:
-            pass
-
-    return FirstVisitProcessor()
-
-
-def first_visits_stream(events: DataFrame, use_tws: bool | None = None) -> DataFrame:
-    """T5 keyed-process-function over a streaming events DataFrame.
-
-    Picks ``transformWithStateInPandas`` (the full Flink
-    KeyedProcessFunction equivalent) when its protobuf-backed state
-    client is usable, else the ``applyInPandasWithState`` fallback —
-    same output either way."""
-    if use_tws is None:
-        use_tws = transform_with_state_available()
+def first_visits_stream(events: DataFrame) -> DataFrame:
+    """T5 keyed-process-function over a streaming events DataFrame: the
+    Flink KeyedProcessFunction as ``applyInPandasWithState``."""
     prepared = events.select(
         "user_id",
         "event_id",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
         F.unix_micros("ts").alias("us"),
     )
-    if use_tws:
-        return prepared.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_first_visit_tws_processor(),
-            outputStructType=_FIRST_VISIT_OUT,
-            outputMode="append",
-            timeMode="None",
-        )
     return prepared.groupBy("user_id").applyInPandasWithState(
         _first_visit_fn,
         outputStructType=_FIRST_VISIT_OUT,
@@ -330,15 +267,13 @@ def run_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_first_visits(
-    spark: SparkSession, sf_dir: str, use_tws: bool | None = None
-) -> DataFrame:
+def run_first_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the streaming first-visit job over the staged replay and
     return the accumulated output (all micro-batches appended)."""
     from .jobs import events_stream, stream_to_parquet
 
     ev = events_stream(spark, sf_dir)
-    return stream_to_parquet(first_visits_stream(ev, use_tws=use_tws), "first_visits")
+    return stream_to_parquet(first_visits_stream(ev), "first_visits")
 
 
 def run_order_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame:

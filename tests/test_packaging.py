@@ -248,3 +248,32 @@ def test_tests_take_dirs_from_pytest():
             if name == "mkdtemp" and allowed.get(rel, "\0") not in ast.get_source_segment(src, node):
                 hits.append(f"{rel}:{node.lineno}")
     assert not hits, hits
+
+
+def test_no_unused_module_imports():
+    """Every module-level import in package code is used in its module.
+    ``__init__.py`` files re-export, and ``from __future__`` imports
+    change compilation, so both are exempt. A name counts as used when
+    it appears anywhere in the module as a bare name or as the root of
+    an attribute chain."""
+    import ast
+
+    hits = []
+    for root, _, files in os.walk(os.path.join(REPO, "flink_realtime_2024_spark")):
+        for f in sorted(files):
+            if not f.endswith(".py") or f == "__init__.py":
+                continue
+            path = os.path.join(root, f)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+            for node in tree.body:
+                if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                    continue
+                if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                    continue
+                for alias in node.names:
+                    name = alias.asname or alias.name.split(".")[0]
+                    if name not in used:
+                        hits.append(f"{os.path.relpath(path, REPO)}:{node.lineno} {name}")
+    assert not hits, hits

@@ -212,6 +212,60 @@ def test_knn_neighbors_match_brute_force(spark):
         assert got[int(qid)] == [int(x) for x in expect], f"query {qid}"
 
 
+def test_scan_topk_matches_sorted_reference(spark):
+    """The shared kNN kernel over a hand-built frame split across
+    partitions equals a plain ``sorted()`` top-k: two candidates tied
+    at 1e-6 straddle the k-th place and the lower neighbor_id wins
+    (the higher raw score sits on the higher id); a query never returns
+    its own id; a query with fewer than k candidates returns them all;
+    and a query whose probed list holds no rows returns nothing."""
+    from flink_realtime_2024_spark.operators.llm.knn import (
+        _KNN_K,
+        _probed_candidates,
+        _scan_topk,
+    )
+
+    qids = np.array([1, 2, 3], dtype=np.int64)
+    Q = np.array([[1.0, 1.0], [0.0, 1.0], [1.0, 0.0]])
+    M = np.eye(3, dtype=bool)  # query j probes list j only
+    rows = [(1, [1.0, 1.0], 0)]  # query 1, best-scoring in its own list
+    rows += [(10 + i, [0.9 - 0.1 * i, 0.0], 0) for i in range(_KNN_K - 1)]
+    rows += [(20, [0.3, 0.2000001], 0), (21, [0.3, 0.2000002], 0), (22, [0.1, 0.0], 0)]
+    rows += [(30, [0.2, 0.7], 1), (31, [0.9, 0.1], 1)]
+    frame = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, centroid_id int"
+    ).repartition(3, "vec_id")
+
+    def candidates(ids, E, pdf):
+        cids = pdf["centroid_id"].to_numpy(dtype=np.int64)
+        return _probed_candidates(qids, Q, M, ids, cids, E)
+
+    got = sorted(tuple(r) for r in _scan_topk(frame, candidates).collect())
+    want = []
+    for j, q in enumerate(qids):
+        scored = sorted(
+            (-float(np.round(np.dot(e, Q[j]), 6)), v)
+            for v, e, c in rows
+            if M[j, c] and v != q
+        )
+        want += [(int(q), v, -s) for s, v in scored[:_KNN_K]]
+    assert got == sorted(want)
+    by_query = {q: [v for qq, v, _ in got if qq == q] for q in (1, 2, 3)}
+    assert 20 in by_query[1] and 21 not in by_query[1] and 1 not in by_query[1]
+    assert sorted(by_query[2]) == [30, 31] and by_query[3] == []
+
+
+def test_pq_codebooks_trained_once_per_session(spark, monkeypatch):
+    """``llm_knn_pq`` memoizes its Lloyd codebooks like its siblings'
+    quantizers: a second build on the same session and fixture does not
+    retrain (no sample collect, no Lloyd rounds)."""
+    from flink_realtime_2024_spark.operators.llm import knn
+
+    knn.llm_knn_pq(spark, SF_DIR)
+    monkeypatch.setattr(knn, "_pq_train", lambda emb: pytest.fail("codebooks retrained"))
+    knn.llm_knn_pq(spark, SF_DIR)
+
+
 def test_knn_ivf_recall(spark):
     """IVF approximate kNN must recover most exact top-k neighbors."""
     from flink_realtime_2024_spark.operators.llm import llm_knn_cosine, llm_knn_ivf

@@ -104,95 +104,6 @@ def test_stateful_first_visits_equals_batch(spark):
     assert set(got) == want and len(got) > 0
 
 
-def test_stateful_first_visits_tws_path(spark):
-    """T5 backend auto-selection, asserted on BOTH branches (no skip):
-
-    - when google.protobuf is importable, transformWithStateInPandas is
-      selected and the full first-visits invariant runs through it;
-    - when it is absent (this container — protobuf cannot be installed
-      here, the documented environment blocker), the selector must
-      report unavailable AND auto-selection must build the
-      applyInPandasWithState plan (FlatMapGroupsInPandasWithState
-      node), while an explicit use_tws=True still builds the
-      TransformWithStateInPySpark node (API-drift guard lives in
-      test_tws_plan_compiles_without_protobuf).
-    So the 'auto-selects its backend' claim is exercised everywhere —
-    executionally where protobuf exists, structurally where it can't."""
-    from flink_realtime_2024_spark.streaming.jobs import events_stream
-    from flink_realtime_2024_spark.streaming.stateful import (
-        first_visits_stream,
-        run_first_visits,
-        transform_with_state_available,
-    )
-    from flink_realtime_2024_spark.streaming.event_time import state_first_visit
-
-    if not transform_with_state_available():
-        try:
-            import google.protobuf  # noqa: F401
-
-            raise AssertionError("selector said unavailable but protobuf imports")
-        except ImportError:
-            pass
-        auto = first_visits_stream(events_stream(spark, SF_DIR), use_tws=None)
-        plan = auto._jdf.queryExecution().analyzed().toString()
-        assert "FlatMapGroupsInPandasWithState" in plan, plan.splitlines()[0]
-        assert "TransformWithStateInPySpark" not in plan
-        return
-
-    emitted = run_first_visits(spark, SF_DIR, use_tws=True).collect()
-    got = [(r["user_id"], r["day"]) for r in emitted]
-    assert len(got) == len(set(got)), "a (user, day) was emitted twice"
-    want = {
-        (r["user_id"], r["day"])
-        for r in state_first_visit(spark, SF_DIR).select("user_id", "day").collect()
-    }
-    assert set(got) == want and len(got) > 0
-
-
-def test_stateful_first_visits_fallback_forced(spark, monkeypatch):
-    """T5 BOTH-BACKENDS guarantee (round-7): the applyInPandasWithState
-    fallback is exercised END TO END in every environment, protobuf or
-    not — the import probe is monkeypatched to report unavailable, so
-    auto-selection must build the FlatMapGroupsInPandasWithState plan
-    and the full first-visits invariant must hold through it. Paired
-    with test_stateful_first_visits_tws_path (which executes the TWS
-    path wherever protobuf exists), one CI run on a protobuf-present
-    host now proves the shared kernel green on BOTH backends."""
-    import flink_realtime_2024_spark.streaming.stateful as st
-    from flink_realtime_2024_spark.streaming.jobs import events_stream
-    from flink_realtime_2024_spark.streaming.event_time import state_first_visit
-
-    monkeypatch.setattr(st, "transform_with_state_available", lambda: False)
-    plan = (
-        st.first_visits_stream(events_stream(spark, SF_DIR), use_tws=None)
-        ._jdf.queryExecution()
-        .analyzed()
-        .toString()
-    )
-    assert "FlatMapGroupsInPandasWithState" in plan
-    emitted = st.run_first_visits(spark, SF_DIR).collect()
-    got = [(r["user_id"], r["day"]) for r in emitted]
-    assert len(got) == len(set(got)), "a (user, day) was emitted twice"
-    want = {
-        (r["user_id"], r["day"])
-        for r in state_first_visit(spark, SF_DIR).select("user_id", "day").collect()
-    }
-    assert set(got) == want and len(got) > 0
-
-
-def test_tws_plan_compiles_without_protobuf(spark):
-    """The TWS DataFrame must at least BUILD on any environment (the
-    protobuf dependency is runtime-only) — guards against API drift in
-    the transformWithStateInPandas call signature."""
-    from flink_realtime_2024_spark.streaming.jobs import events_stream
-    from flink_realtime_2024_spark.streaming.stateful import first_visits_stream
-
-    df = first_visits_stream(events_stream(spark, SF_DIR), use_tws=True)
-    assert set(df.columns) == {"user_id", "day", "first_event_id"}
-    plan = df._jdf.queryExecution().analyzed().toString()
-    assert "TransformWithStateInPySpark" in plan, plan.splitlines()[0]
-
-
 def test_order_timeout_timers(spark):
     """T5 event-time timers: purchases confirmed by a signup within 1h
     emit 'confirmed'; otherwise the GroupState timeout fires 'timed_out'
