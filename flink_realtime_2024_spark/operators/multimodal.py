@@ -23,6 +23,12 @@ The decode step is REAL across both container classes:
   palette + variable-code-width LZW per the spec's Appendix F,
   encoder AND decoder, lossless round-trip-tested).
 
+Each container has ONE parser (``decode_pixels``, ``_wav_parse``,
+``_y4m_frames``) shared by the decode and ``resize_stats`` kernels, and
+every payload kernel is one Arrow-batch loop (``_map_rows``) over a row
+function; a ``*_tolerant`` kernel wraps its strict row function in
+``_tolerant``, which turns ``_PAYLOAD_ERRORS`` into error rows.
+
 All are asserted against hand-built fixtures and round-trips in
 tests/test_semantics.py. For MP3 and H.264 the STRUCTURE layer is
 also real (operators/_mpeg.py: ISO 11172-3 frame-header walk + ID3v2
@@ -75,16 +81,23 @@ def encode_ppm(pixels: np.ndarray) -> bytes:
     return f"P6\n{w} {h}\n255\n".encode("ascii") + pixels.tobytes()
 
 
-def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
-    """Encode an int16 sample array as mono 16-bit PCM WAV."""
-    data = samples.astype("<i2").tobytes()
+def _wav_container(data: bytes, fmt_tag: int, rate: int, bits: int) -> bytes:
+    """Wrap mono sample bytes in the canonical RIFF/WAVE layout: a
+    16-byte ``fmt `` chunk, then one ``data`` chunk. The single header
+    writer behind both WAV encoders."""
+    align = bits // 8
     hdr = struct.pack(
         "<4sI4s4sIHHIIHH4sI",
         b"RIFF", 36 + len(data), b"WAVE",
-        b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16,
+        b"fmt ", 16, fmt_tag, 1, rate, rate * align, align, bits,
         b"data", len(data),
     )
     return hdr + data
+
+
+def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
+    """Encode an int16 sample array as mono 16-bit PCM WAV."""
+    return _wav_container(samples.astype("<i2").tobytes(), 1, rate, 16)
 
 
 def encode_png(pixels: np.ndarray) -> bytes:
@@ -92,8 +105,6 @@ def encode_png(pixels: np.ndarray) -> bytes:
     (8-bit truecolor, filter 0 scanlines, one zlib IDAT, CRC-32 chunk
     checksums). zlib is the Python standard library — an actual
     COMPRESSED codec with zero external dependencies."""
-    import zlib
-
     h, w, _ = pixels.shape
 
     def chunk(tag: bytes, body: bytes) -> bytes:
@@ -162,8 +173,6 @@ def _png_unfilter(raw: bytes, w: int, h: int, bpp: int = 3) -> np.ndarray:
 def decode_png(payload: bytes) -> np.ndarray:
     """Decode an 8-bit truecolor PNG: walk chunks, inflate the IDAT
     stream, reverse scanline filters. Returns (h, w, 3) uint8 RGB."""
-    import zlib
-
     if payload[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG payload")
     off, w = 8, None
@@ -215,35 +224,28 @@ def _mulaw_expand(codes: np.ndarray) -> np.ndarray:
 def encode_wav_mulaw(samples: np.ndarray, rate: int = 8000) -> bytes:
     """Encode int16 samples as mono G.711 μ-law WAV (format tag 7,
     8 bits/sample — half the bytes of PCM16)."""
-    data = _mulaw_compress(samples).tobytes()
-    hdr = struct.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF", 36 + len(data), b"WAVE",
-        b"fmt ", 16, 7, 1, rate, rate, 1, 8,
-        b"data", len(data),
-    )
-    return hdr + data
+    return _wav_container(_mulaw_compress(samples).tobytes(), 7, rate, 8)
 
 
-def decode_image(payload: bytes) -> dict:
-    """Decode a BMP, PPM, PNG, GIF, or JPEG payload to real pixel
-    stats: width, height, mean pixel value over all RGB samples, plus
-    the exact integer (sum, count) pair behind that mean — integer
-    sums survive any aggregation order bit-exactly, which is what lets
-    the per-mime rollup carry a full DuckDB oracle. PNG (zlib inflate +
-    unfiltering), GIF (LZW), and JPEG (Huffman + dequant + IDCT,
-    operators/_jpeg.py) are genuinely COMPRESSED containers."""
+def decode_pixels(payload: bytes) -> np.ndarray:
+    """Decode a PNG, JPEG, GIF, BMP or PPM payload to an (h, w, 3)
+    uint8 RGB array. The single image parser: it owns the magic-byte
+    dispatch, so decode_image and resize_stats read every payload the
+    same way, and anything it does not recognise raises ValueError.
+    PNG (zlib inflate + unfiltering), GIF (LZW), and JPEG (Huffman +
+    dequant + IDCT, operators/_jpeg.py) are genuinely COMPRESSED
+    containers."""
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        px = decode_png(payload)
-    elif payload[:2] == b"\xff\xd8":
+        return decode_png(payload)
+    if payload[:2] == b"\xff\xd8":
         from ._jpeg import decode_jpeg
 
-        px = decode_jpeg(payload)
-    elif payload[:6] in (b"GIF87a", b"GIF89a"):
+        return decode_jpeg(payload)
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
         from ._gif import decode_gif
 
-        px = decode_gif(payload)
-    elif payload[:2] == b"BM":
+        return decode_gif(payload)
+    if payload[:2] == b"BM":
         data_off = struct.unpack_from("<I", payload, 10)[0]
         w, h = struct.unpack_from("<ii", payload, 18)
         bpp = struct.unpack_from("<H", payload, 28)[0]
@@ -253,14 +255,22 @@ def decode_image(payload: bytes) -> dict:
         row_size = (w * 3 + 3) & ~3
         arr = np.frombuffer(payload, dtype=np.uint8, offset=data_off, count=row_size * ah)
         # bottom-up BGR rows → top-down RGB
-        px = arr.reshape(ah, row_size)[:, : w * 3].reshape(ah, w, 3)[::-1, :, ::-1]
-    elif payload[:2] == b"P6":
+        return arr.reshape(ah, row_size)[:, : w * 3].reshape(ah, w, 3)[::-1, :, ::-1]
+    if payload[:2] == b"P6":
         # header: "P6" <ws> width <ws> height <ws> maxval <single-ws> data
         parts = payload.split(b"\n", 3)
         w, h = (int(x) for x in parts[1].split())
-        px = np.frombuffer(parts[3], dtype=np.uint8, count=w * h * 3).reshape(h, w, 3)
-    else:
-        raise ValueError(f"unknown image magic {payload[:2]!r}")
+        return np.frombuffer(parts[3], dtype=np.uint8, count=w * h * 3).reshape(h, w, 3)
+    raise ValueError(f"unknown image magic {payload[:2]!r}")
+
+
+def decode_image(payload: bytes) -> dict:
+    """Pixel stats of an image payload (decoded by ``decode_pixels``):
+    width, height, mean pixel value over all RGB samples, plus the
+    exact integer (sum, count) pair behind that mean — integer sums
+    survive any aggregation order bit-exactly, which is what lets the
+    per-mime rollup carry a full DuckDB oracle."""
+    px = decode_pixels(payload)
     h, w = px.shape[:2]
     return {
         "width": int(w),
@@ -275,8 +285,10 @@ def _wav_parse(payload: bytes) -> tuple[int, int, int, int, np.ndarray]:
     """Walk RIFF chunks to fmt/data (tolerating extra chunks like LIST
     in any order — the one correct way to locate WAV samples) and
     return (fmt_tag, channels, rate, bits, samples-as-int16). The
-    single parser both decode_audio and resize_stats use, so a
-    non-canonical chunk layout can never be read two different ways."""
+    single WAV parser, as ``decode_pixels`` is for images and
+    ``_y4m_frames`` for Y4M: decode_audio and resize_stats both call
+    it, so a non-canonical chunk layout can never be read two different
+    ways."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     off, rate, bits, channels, fmt_tag = 12, None, None, None, None
@@ -358,13 +370,14 @@ def encode_y4m(
     return hdr + b"".join(frames)
 
 
-def decode_video(payload: bytes) -> dict:
-    """Decode a YUV4MPEG2 (Y4M) payload: parse the stream header
-    (W/H/F tags), walk the FRAME markers, and compute per-stream stats
-    from the luma planes — width, height, frame count, duration from
-    the fps fraction, mean luma. Uncompressed 4:2:0 only, like the
-    BMP/PPM/WAV siblings; swap in ffmpeg/PyAV here for compressed
-    codecs on a real cluster."""
+def _y4m_frames(payload: bytes) -> tuple[int, int, int, int, list[int]]:
+    """Validate a YUV4MPEG2 (Y4M) stream and return (width, height,
+    fps numerator, fps denominator, byte offset of each frame's luma
+    plane). The single Y4M parser: it checks the stream magic, the
+    W/H tags, 4:2:0 chroma, every FRAME marker and that every frame is
+    whole, and reads no plane, so decode_video (all frames) and
+    resize_stats (a few sampled frames) each read only the planes they
+    use."""
     if not payload.startswith(b"YUV4MPEG2"):
         raise ValueError("not a YUV4MPEG2 payload")
     nl = payload.index(b"\n")
@@ -382,15 +395,31 @@ def decode_video(payload: bytes) -> dict:
     if not w or not h:
         raise ValueError("Y4M header missing W/H")
     frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
-    off, luma_sum, n_frames = nl + 1, 0, 0
+    off, planes = nl + 1, []
     while off < len(payload):
         fnl = payload.index(b"\n", off)
         if payload[off : off + 5] != b"FRAME":
             raise ValueError("malformed Y4M frame marker")
-        yplane = np.frombuffer(payload, dtype=np.uint8, offset=fnl + 1, count=w * h)
-        luma_sum += int(yplane.astype(np.int64).sum())
-        n_frames += 1
         off = fnl + 1 + frame_bytes
+        if off > len(payload):
+            raise ValueError("truncated Y4M frame")
+        planes.append(fnl + 1)
+    return w, h, num, den, planes
+
+
+def _luma_plane(payload: bytes, off: int, w: int, h: int) -> np.ndarray:
+    return np.frombuffer(payload, dtype=np.uint8, offset=off, count=w * h).reshape(h, w)
+
+
+def decode_video(payload: bytes) -> dict:
+    """Decode a YUV4MPEG2 (Y4M) payload: walk the stream with
+    ``_y4m_frames`` and compute per-stream stats from the luma planes —
+    width, height, frame count, duration from the fps fraction, mean
+    luma. Uncompressed 4:2:0 only, like the BMP/PPM/WAV siblings; swap
+    in ffmpeg/PyAV here for compressed codecs on a real cluster."""
+    w, h, num, den, planes = _y4m_frames(payload)
+    n_frames = len(planes)
+    luma_sum = sum(int(_luma_plane(payload, off, w, h).astype(np.int64).sum()) for off in planes)
     return {
         "width": int(w),
         "height": int(h),
@@ -542,47 +571,64 @@ def synthesize_assets(batches):
                 )
                 mime = "video/x-yuv4mpeg"
             out.append((int(doc_id), mime, payload))
-        yield pd.DataFrame(out, columns=["asset_id", "mime", "payload"])
+        yield pd.DataFrame(out, columns=ASSET_SCHEMA.names)
 
 
-_DECODE_STATS_COLS = [
-    "asset_id", "mime", "n_bytes", "width", "height",
-    "duration_ms", "mean_value", "checksum", "value_sum", "value_count",
-]
+def _map_rows(batches, row_fn, columns):
+    """The one Arrow-batch loop every payload kernel runs: apply
+    ``row_fn(asset_id, mime, payload_bytes)`` to each row of each pandas
+    batch and yield the rows as one frame per batch, so executor memory
+    stays bounded by the batch size."""
+    for pdf in batches:
+        rows = [
+            row_fn(int(asset_id), mime, bytes(payload))
+            for asset_id, mime, payload in zip(pdf["asset_id"], pdf["mime"], pdf["payload"])
+        ]
+        yield pd.DataFrame(rows, columns=columns)
+
+
+# What a corrupt payload raises in any parser here (struct/zlib errors
+# are not ValueErrors): the tolerant kernels turn exactly these into
+# error rows and let anything else fail the task.
+_PAYLOAD_ERRORS = (ValueError, IndexError, KeyError, struct.error, zlib.error)
+
+
+def _tolerant(row_fn, error_row):
+    """Error-isolating form of a strict row function: its row plus a
+    null error column, or on a payload error ``error_row``'s row plus
+    ``"<ExceptionType>: <message>"``."""
+
+    def row(asset_id, mime, payload):
+        try:
+            return row_fn(asset_id, mime, payload) + (None,)
+        except _PAYLOAD_ERRORS as exc:
+            return error_row(asset_id, mime, payload) + (f"{type(exc).__name__}: {exc}",)
+
+    return row
 
 
 def _decode_stats_row(asset_id, mime, payload) -> tuple:
-    payload = bytes(payload)
-    checksum = hashlib.md5(payload).hexdigest()
-    if mime.startswith("image/"):
-        s = decode_image(payload)
-        return (int(asset_id), mime, len(payload), s["width"], s["height"],
-                None, s["mean_value"], checksum, s["value_sum"], s["value_count"])
-    if mime.startswith("audio/"):
-        s = decode_audio(payload)
-        return (int(asset_id), mime, len(payload), None, None,
-                s["duration_ms"], s["mean_value"], checksum,
-                s["value_sum"], s["value_count"])
-    if mime.startswith("video/"):
-        s = decode_video(payload)
-        return (int(asset_id), mime, len(payload), s["width"], s["height"],
-                s["duration_ms"], s["mean_value"], checksum,
-                s["value_sum"], s["value_count"])
-    raise ValueError(f"no decoder for mime {mime}")
+    major, slash, _ = mime.partition("/")
+    decode = {"image": decode_image, "audio": decode_audio, "video": decode_video}.get(major)
+    if not (slash and decode):
+        raise ValueError(f"no decoder for mime {mime}")
+    s = decode(payload)  # audio has no width/height, images no duration
+    return (asset_id, mime, len(payload), s.get("width"), s.get("height"),
+            s.get("duration_ms"), s["mean_value"], hashlib.md5(payload).hexdigest(),
+            s["value_sum"], s["value_count"])
+
+
+def _decode_error_row(asset_id, mime, payload) -> tuple:
+    # the checksum survives so quarantined payloads stay auditable
+    return (asset_id, mime, len(payload), None, None, None, None,
+            hashlib.md5(payload).hexdigest(), None, None)
 
 
 def decode_stats(batches):
     """Real decode kernel: parses each payload's container format and
     computes pixel/sample statistics in numpy. Arrow batch in → Arrow
     batch out; executor memory is bounded by the batch size."""
-    for pdf in batches:
-        rows = [
-            _decode_stats_row(asset_id, mime, payload)
-            for asset_id, mime, payload in zip(
-                pdf["asset_id"], pdf["mime"], pdf["payload"]
-            )
-        ]
-        yield pd.DataFrame(rows, columns=_DECODE_STATS_COLS)
+    yield from _map_rows(batches, _decode_stats_row, DECODE_STATS_SCHEMA.names)
 
 
 DECODE_STATS_TOLERANT_SCHEMA = T.StructType(
@@ -593,23 +639,16 @@ DECODE_STATS_TOLERANT_SCHEMA = T.StructType(
 def decode_stats_tolerant(batches):
     """Error-isolating twin of ``decode_stats`` (same contract as
     ``stream_meta_tolerant``): a corrupt or unknown-mime payload yields
-    one typed error row (null stats + ``decode_error``) instead of
-    failing the Spark task. The strict kernel stays on the oracle ids —
-    fixtures decode clean, and silent nulls there would mask codec
-    regressions; this is the ingest-side default for crawled media."""
-    for pdf in batches:
-        rows = []
-        for asset_id, mime, payload in zip(pdf["asset_id"], pdf["mime"], pdf["payload"]):
-            try:
-                rows.append(_decode_stats_row(asset_id, mime, payload) + (None,))
-            except (ValueError, IndexError, KeyError, struct.error, zlib.error) as exc:
-                payload = bytes(payload)
-                rows.append(
-                    (int(asset_id), mime, len(payload), None, None, None, None,
-                     hashlib.md5(payload).hexdigest(), None, None,
-                     f"{type(exc).__name__}: {exc}")
-                )
-        yield pd.DataFrame(rows, columns=_DECODE_STATS_COLS + ["decode_error"])
+    one typed error row (null stats + ``decode_error``, checksum kept)
+    instead of failing the Spark task. The strict kernel stays on the
+    oracle ids — fixtures decode clean, and silent nulls there would
+    mask codec regressions; this is the ingest-side default for crawled
+    media."""
+    yield from _map_rows(
+        batches,
+        _tolerant(_decode_stats_row, _decode_error_row),
+        DECODE_STATS_TOLERANT_SCHEMA.names,
+    )
 
 
 def build_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -637,88 +676,40 @@ _N_FRAMES = 4
 _FRAME_LEN = 256
 
 
+def _thumb_sum(px: np.ndarray) -> int:
+    return int(resize_nearest(px, _THUMB, _THUMB).astype(np.int64).sum())
+
+
+def _resize_stats_row(asset_id, mime, payload) -> tuple:
+    if mime.startswith("image/"):
+        return (asset_id, mime, _thumb_sum(decode_pixels(payload)),
+                _THUMB * _THUMB * 3, _THUMB * _THUMB)
+    if mime.startswith("video/"):
+        # frame-sample: thumbnail the luma plane of up to _N_FRAMES
+        # evenly-spaced frames
+        w, h, _, _, planes = _y4m_frames(payload)
+        n = len(planes)
+        take = min(n, _N_FRAMES)
+        idx = (np.arange(take) * max(n - 1, 0)) // max(take - 1, 1)
+        fs = sum(
+            _thumb_sum(np.repeat(_luma_plane(payload, planes[i], w, h)[:, :, None], 3, axis=2))
+            for i in idx
+        )
+        return (asset_id, mime, fs, take * _THUMB * _THUMB * 3, take)
+    _, _, _, _, samples = _wav_parse(payload)
+    frames = frame_sample(samples, _N_FRAMES, _FRAME_LEN)
+    return (asset_id, mime, int((frames.astype(np.int64) ** 2).sum()),
+            int(frames.size), _N_FRAMES)
+
+
 def resize_stats(batches):
     """Feature-extract kernel: images → 8×8 nearest-neighbor thumbnail
     (pixel sum over 8×8×3 samples); video → luma thumbnails of 4
     evenly-spaced frames; audio → pooled energy (Σ sample²) over 4
-    evenly-spaced 256-sample frames. The decode+downsample happens per
-    Arrow batch on executors; sums stay integral for exact rollups."""
-    for pdf in batches:
-        rows = []
-        for asset_id, mime, payload in zip(pdf["asset_id"], pdf["mime"], pdf["payload"]):
-            payload = bytes(payload)
-            if mime.startswith("image/"):
-                if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                    px = decode_png(payload)
-                elif payload[:2] == b"\xff\xd8":
-                    from ._jpeg import decode_jpeg
-
-                    px = decode_jpeg(payload)
-                elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                    from ._gif import decode_gif
-
-                    px = decode_gif(payload)
-                elif payload[:2] == b"BM":
-                    data_off = struct.unpack_from("<I", payload, 10)[0]
-                    w, h = struct.unpack_from("<ii", payload, 18)
-                    ah = abs(h)
-                    row_size = (w * 3 + 3) & ~3
-                    arr = np.frombuffer(
-                        payload, dtype=np.uint8, offset=data_off, count=row_size * ah
-                    )
-                    px = arr.reshape(ah, row_size)[:, : w * 3].reshape(ah, w, 3)[::-1, :, ::-1]
-                else:
-                    parts = payload.split(b"\n", 3)
-                    w, ah = (int(x) for x in parts[1].split())
-                    px = np.frombuffer(parts[3], dtype=np.uint8, count=w * ah * 3).reshape(ah, w, 3)
-                thumb = resize_nearest(px, _THUMB, _THUMB)
-                rows.append(
-                    (int(asset_id), mime, int(thumb.astype(np.int64).sum()),
-                     int(thumb.size), _THUMB * _THUMB)
-                )
-            elif mime.startswith("video/"):
-                # frame-sample: decode header once, thumbnail the luma
-                # plane of up to _N_FRAMES evenly-spaced frames
-                nl = payload.index(b"\n")
-                w = h = None
-                for tok in payload[9:nl].split():
-                    if tok[:1] == b"W":
-                        w = int(tok[1:])
-                    elif tok[:1] == b"H":
-                        h = int(tok[1:])
-                frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
-                starts = []
-                off = nl + 1
-                while off < len(payload):
-                    fnl = payload.index(b"\n", off)
-                    starts.append(fnl + 1)
-                    off = fnl + 1 + frame_bytes
-                n = len(starts)
-                take = min(n, _N_FRAMES)
-                idx = (np.arange(take) * max(n - 1, 0)) // max(take - 1, 1)
-                fs = fc = 0
-                for i in idx:
-                    yplane = np.frombuffer(
-                        payload, dtype=np.uint8, offset=starts[i], count=w * h
-                    ).reshape(h, w)
-                    lum3 = np.repeat(yplane[:, :, None], 3, axis=2)
-                    thumb = resize_nearest(lum3, _THUMB, _THUMB)
-                    fs += int(thumb.astype(np.int64).sum())
-                    fc += int(thumb.size)
-                rows.append((int(asset_id), mime, fs, fc, take))
-            else:
-                # same RIFF chunk walk as decode_audio — no fixed
-                # offsets, so LIST/extra chunks can't mis-parse here
-                _, _, _, _, samples = _wav_parse(payload)
-                frames = frame_sample(samples, _N_FRAMES, _FRAME_LEN)
-                rows.append(
-                    (int(asset_id), mime,
-                     int((frames.astype(np.int64) ** 2).sum()),
-                     int(frames.size), _N_FRAMES)
-                )
-        yield pd.DataFrame(
-            rows, columns=["asset_id", "mime", "feat_sum", "feat_count", "n_units"]
-        )
+    evenly-spaced 256-sample frames. Payloads are read by the same
+    parsers as ``decode_stats`` (``decode_pixels``, ``_y4m_frames``,
+    ``_wav_parse``); sums stay integral for exact rollups."""
+    yield from _map_rows(batches, _resize_stats_row, RESIZE_STATS_SCHEMA.names)
 
 
 def _md5_byte_sql(k: int) -> str:
@@ -940,6 +931,13 @@ FROM rassets GROUP BY mime
 """
 
 
+def _pooled(num: str, den: str):
+    """Per-mime mean from exact integer sums; audio reports the pooled
+    RMS (sqrt of the pooled mean square)."""
+    ratio = F.col(num).cast("double") / F.col(den).cast("double")
+    return F.when(F.col("mime").startswith("audio/"), F.sqrt(ratio)).otherwise(ratio)
+
+
 @register("mm_resize_stats", oracle=_RESIZE_STATS_ORACLE, section="L6", reverify=9)
 def mm_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L6 feature-extract pipeline with a FULL oracle (r9, previously
@@ -960,15 +958,7 @@ def mm_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("feat_count").alias("_fc"),
         F.sum("n_units").alias("total_units"),
     )
-    ratio = F.col("_fs").cast("double") / F.col("_fc").cast("double")
-    return g.select(
-        "mime",
-        "n_assets",
-        F.when(F.col("mime").startswith("audio/"), F.sqrt(ratio))
-        .otherwise(ratio)
-        .alias("avg_feature"),
-        "total_units",
-    )
+    return g.select("mime", "n_assets", _pooled("_fs", "_fc").alias("avg_feature"), "total_units")
 
 
 _DECODE_DIMS_ORACLE = f"""
@@ -1047,31 +1037,15 @@ def mm_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("value_sum").alias("_vs"),
         F.sum("value_count").alias("_vc"),
     )
-    ratio = F.col("_vs").cast("double") / F.col("_vc").cast("double")
     return g.select(
-        "mime",
-        "n_assets",
-        "total_values",
-        "avg_width",
-        "avg_height",
-        "avg_duration_ms",
-        F.when(F.col("mime").startswith("audio/"), F.sqrt(ratio))
-        .otherwise(ratio)
-        .alias("pooled_mean_value"),
+        "mime", "n_assets", "total_values", "avg_width", "avg_height", "avg_duration_ms",
+        _pooled("_vs", "_vc").alias("pooled_mean_value"),
     )
 
 
 # =============================================================================
 # compressed stream containers: MP3 / H.264 structure parsing (_mpeg.py)
 # =============================================================================
-
-STREAM_ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
 
 STREAM_META_SCHEMA = T.StructType(
     [
@@ -1119,38 +1093,30 @@ def synthesize_stream_assets(batches):
                 )
                 mime = "video/h264"
             out.append((int(doc_id), mime, payload))
-        yield pd.DataFrame(out, columns=["asset_id", "mime", "payload"])
+        yield pd.DataFrame(out, columns=ASSET_SCHEMA.names)
+
+
+def _stream_meta_row(asset_id, mime, payload) -> tuple:
+    from ._mpeg import parse_h264, parse_mp3
+
+    if mime == "audio/mpeg":
+        m = parse_mp3(payload)
+        return (asset_id, mime, None, None, m["sample_rate"],
+                m["bitrate_kbps"], m["n_frames"], m["duration_ms"])
+    m = parse_h264(payload)
+    return (asset_id, mime, m["width"], m["height"], None,
+            None, m["n_frames"], None)
+
+
+def _stream_error_row(asset_id, mime, payload) -> tuple:
+    return (asset_id, mime) + (None,) * (len(STREAM_META_SCHEMA) - 2)
 
 
 def stream_meta(batches):
     """Metadata-extraction kernel: MP3 frame walk (every frame's sync
     validated, ID3v2 skipped) / H.264 NAL walk + exp-Golomb SPS parse.
     Arrow batch in → Arrow batch out."""
-    for pdf in batches:
-        rows = [
-            _stream_meta_row(asset_id, mime, payload)
-            for asset_id, mime, payload in zip(
-                pdf["asset_id"], pdf["mime"], pdf["payload"]
-            )
-        ]
-        yield pd.DataFrame(rows, columns=_STREAM_META_COLS)
-
-
-_STREAM_META_COLS = ["asset_id", "mime", "width", "height", "sample_rate",
-                     "bitrate_kbps", "n_frames", "duration_ms"]
-
-
-def _stream_meta_row(asset_id, mime, payload) -> tuple:
-    from ._mpeg import parse_h264, parse_mp3
-
-    payload = bytes(payload)
-    if mime == "audio/mpeg":
-        m = parse_mp3(payload)
-        return (int(asset_id), mime, None, None, m["sample_rate"],
-                m["bitrate_kbps"], m["n_frames"], m["duration_ms"])
-    m = parse_h264(payload)
-    return (int(asset_id), mime, m["width"], m["height"], None,
-            None, m["n_frames"], None)
+    yield from _map_rows(batches, _stream_meta_row, STREAM_META_SCHEMA.names)
 
 
 STREAM_META_TOLERANT_SCHEMA = T.StructType(
@@ -1166,23 +1132,17 @@ def stream_meta_tolerant(batches):
     strict kernel (fixtures parse clean, and silent nulls there would
     mask codec regressions); this is the ingest-side default for
     crawled corpora. Same Arrow batch shape, one extra string column."""
-    for pdf in batches:
-        rows = []
-        for asset_id, mime, payload in zip(pdf["asset_id"], pdf["mime"], pdf["payload"]):
-            try:
-                rows.append(_stream_meta_row(asset_id, mime, payload) + (None,))
-            except (ValueError, IndexError) as exc:
-                rows.append(
-                    (int(asset_id), mime, None, None, None, None, None, None,
-                     f"{type(exc).__name__}: {exc}")
-                )
-        yield pd.DataFrame(rows, columns=_STREAM_META_COLS + ["parse_error"])
+    yield from _map_rows(
+        batches,
+        _tolerant(_stream_meta_row, _stream_error_row),
+        STREAM_META_TOLERANT_SCHEMA.names,
+    )
 
 
 def build_stream_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → compressed-stream asset table (MP3 / H.264 payloads)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return widen(docs).mapInPandas(synthesize_stream_assets, STREAM_ASSET_SCHEMA)
+    return widen(docs).mapInPandas(synthesize_stream_assets, ASSET_SCHEMA)
 
 
 _STREAM_META_ORACLE = f"""

@@ -604,7 +604,7 @@ def stream_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_cep_funnel(spark, sf_dir)
 
 
-_RETENTION_ORACLE = """
+_RETENTION_COHORTS_ORACLE = """
 WITH e AS (
   SELECT user_id,
          CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 604800000000 AS BIGINT) AS week
@@ -623,7 +623,7 @@ FROM activity GROUP BY cohort_week, week_offset
 """
 
 
-@register("analytics_retention_cohorts", oracle=_RETENTION_ORACLE, section="A1,J1,W4")
+@register("analytics_retention_cohorts", oracle=_RETENTION_COHORTS_ORACLE, section="A1,J1,W4")
 def analytics_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention — the canonical product-analytics rollup every
     event warehouse serves: users grouped by first-seen epoch week,

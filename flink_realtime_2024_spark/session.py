@@ -34,7 +34,10 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import glob
 import os
+import threading
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -95,8 +98,36 @@ _RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Flag attribute on each SparkContext the package was shipped to (the
+# _ENV_CHECKED_ATTR idiom below: it dies with the context it marks).
+_SHIPPED_ATTR = "_flink_realtime_2024_pkg_shipped"
+_SHIP_GUARD = threading.Lock()
+
+
+def _ship_package(sc) -> None:
+    """Put this package on the Python workers' path, once per
+    SparkContext. Every kernel is a module-level function, so it is
+    pickled by reference and the worker must import the package; without
+    this a worker finds it only when its working directory is the
+    checkout. The package's ``.py`` files are zipped into a workspace
+    dir and handed to ``addPyFile``."""
+    with _SHIP_GUARD:
+        if getattr(sc, _SHIPPED_ATTR, False):
+            return
+        from .sources.io import workspace  # sources.io imports this module
+
+        pkg = os.path.dirname(os.path.abspath(__file__))
+        archive = os.path.join(workspace("pkg_ship_"), os.path.basename(pkg) + ".zip")
+        with zipfile.ZipFile(archive, "w") as zf:
+            for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+                zf.write(path, os.path.relpath(path, os.path.dirname(pkg)))
+        sc.addPyFile(archive)
+        setattr(sc, _SHIPPED_ATTR, True)
+
+
 def prepare(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent).
+    """Apply runtime confs to an existing session (idempotent) and ship
+    the package to its Python workers (once per SparkContext).
 
     Every query builder calls this first so the engine behaves the same
     under the driver's session as under our own.
@@ -124,6 +155,7 @@ def prepare(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # non-settable on this session → keep its value
+    _ship_package(spark.sparkContext)
     return spark
 
 

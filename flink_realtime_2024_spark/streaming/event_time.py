@@ -194,8 +194,9 @@ def state_first_visit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 keyed process function with per-key state: first-visit-per-day
     detection (the reference's new-UV flag job). Implemented as
     applyInPandas — per-key imperative logic with explicit state (a seen-
-    days dict), the batch twin of transformWithStateInPandas; the
-    streaming form is exercised in tests/test_streaming.py.
+    days dict), the batch twin of the applyInPandasWithState stream in
+    streaming/stateful.py, which tests/test_streaming.py checks against
+    it.
 
     At scale: one shuffle on user_id; state lives per key inside the
     kernel, never on the driver.

@@ -277,3 +277,64 @@ def test_no_unused_module_imports():
                     if name not in used:
                         hits.append(f"{os.path.relpath(path, REPO)}:{node.lineno} {name}")
     assert not hits, hits
+
+
+def test_no_module_name_bound_twice():
+    """No package module binds one top-level name twice through an
+    assignment, ``def`` or ``class``: a second binding silently replaces
+    the first for every reader after it, while a decorator that read the
+    name in between keeps the old value."""
+    import ast
+
+    hits = []
+    for root, _, files in os.walk(os.path.join(REPO, "flink_realtime_2024_spark")):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            seen = set()
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    names = [node.name]
+                elif isinstance(node, ast.Assign):
+                    names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+                else:
+                    continue
+                for name in names:
+                    if name in seen:
+                        hits.append(f"{os.path.relpath(path, REPO)}:{node.lineno} {name}")
+                    seen.add(name)
+    assert not hits, hits
+
+
+def test_kernels_run_outside_the_checkout(tmp_path):
+    """A kernel runs on Python workers whose working directory is not
+    the checkout and whose environment does not name it: the driver has
+    the repo on ``sys.path`` only, as ``__spark_entry__.py`` arranges,
+    and ``prepare()`` ships the package to the workers."""
+    script = f"""
+import sys
+sys.path.insert(0, {REPO!r})
+import pandas as pd
+from pyspark.sql import SparkSession
+from flink_realtime_2024_spark.session import prepare
+from flink_realtime_2024_spark.operators.multimodal import (
+    DECODE_STATS_SCHEMA, decode_stats, encode_ppm,
+)
+import numpy as np
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+prepare(spark)
+px = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
+pdf = pd.DataFrame({{"asset_id": [7], "mime": ["image/x-portable-pixmap"],
+                    "payload": [encode_ppm(px)]}})
+rows = spark.createDataFrame(pdf).mapInPandas(decode_stats, DECODE_STATS_SCHEMA).collect()
+print("ROW", rows[0]["asset_id"], rows[0]["width"], rows[0]["height"])
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = _run([sys.executable, "-c", script], cwd=str(tmp_path), env=env)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "ROW 7 3 2" in r.stdout

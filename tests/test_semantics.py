@@ -715,6 +715,46 @@ def test_multimodal_codecs_roundtrip():
         decode_video(b"\x00\x00\x00\x18ftypmp42")
 
 
+def test_resize_kernel_rejects_what_the_decoders_reject():
+    """The feature-extract kernel and the decoders read payloads through
+    one parser per container, so a payload the strict decoder rejects
+    cannot yield a thumbnail row: a 32-bpp BMP header, an unknown image
+    magic, non-4:2:0 Y4M chroma and a corrupt FRAME marker each raise
+    ValueError on both paths."""
+    import struct as st
+
+    import pandas as pd
+
+    from flink_realtime_2024_spark.operators.multimodal import (
+        decode_image,
+        decode_video,
+        encode_bmp,
+        encode_ppm,
+        encode_y4m,
+        resize_stats,
+    )
+
+    px = np.arange(8 * 8 * 3, dtype=np.uint8).reshape(8, 8, 3)
+    bmp32 = bytearray(encode_bmp(px))
+    st.pack_into("<H", bmp32, 28, 32)  # biBitCount
+    y = np.full((4, 8, 8), 7, np.uint8)
+    uv = np.full((4, 4, 4), 128, np.uint8)
+    y4m = encode_y4m(y, uv, uv)
+    second = y4m.index(b"FRAME", y4m.index(b"FRAME") + 1)
+    cases = [
+        ("image/bmp", bytes(bmp32), decode_image),
+        ("image/x-portable-pixmap", b"XX" + encode_ppm(px)[2:], decode_image),
+        ("video/x-yuv4mpeg", y4m.replace(b"C420jpeg", b"C444"), decode_video),
+        ("video/x-yuv4mpeg", y4m[:second] + b"FRAMX" + y4m[second + 5 :], decode_video),
+    ]
+    for mime, payload, decode in cases:
+        with pytest.raises(ValueError):
+            decode(payload)
+        batch = pd.DataFrame({"asset_id": [1], "mime": [mime], "payload": [payload]})
+        with pytest.raises(ValueError):
+            list(resize_stats([batch]))
+
+
 def test_multimodal_resize_and_frame_sample(spark):
     """resize/frame-sample kernels are exact: nearest-neighbor on a 2x2
     block pattern reproduces the blocks; frame sampling recovers known
@@ -1857,10 +1897,12 @@ def test_wav_chunk_walk_tolerates_noncanonical_layout():
     _wav_parse, so fixed-offset mis-parses are structurally impossible."""
     import struct as st
     import numpy as np
+    import pandas as pd
     from flink_realtime_2024_spark.operators.multimodal import (
         _wav_parse,
         decode_audio,
         encode_wav,
+        resize_stats,
     )
 
     rng = np.random.RandomState(11)
@@ -1877,6 +1919,12 @@ def test_wav_chunk_walk_tolerates_noncanonical_layout():
     assert (ftag, ch, rate, bits) == (1, 1, 8000, 16)
     assert np.array_equal(got, samples)
     assert decode_audio(weird) == decode_audio(canonical)
+
+    def resized(payload):
+        batch = pd.DataFrame({"asset_id": [1], "mime": ["audio/wav"], "payload": [payload]})
+        return pd.concat(resize_stats([batch])).to_dict("records")
+
+    assert resized(weird) == resized(canonical)
 
 
 def test_png_roundtrip_and_all_filters():
