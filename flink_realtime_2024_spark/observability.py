@@ -19,34 +19,11 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Observation
 from pyspark.sql.streaming import StreamingQueryListener
 
 # How long ``await_observation`` waits for an action's metrics to post.
 _OBSERVATION_WAIT_S = 60.0
-
-
-def observe_counts(df: DataFrame, name: str, **metrics: Column):
-    """Attach named metric expressions to a DataFrame.
-
-    Returns (observed_df, observation). After ANY action on
-    observed_df, ``observation.get`` holds the metric values computed
-    in the same pass — zero extra scans, exactly Flink's
-    counter-updated-as-records-flow contract.
-
-    Example::
-
-        obs_df, obs = observe_counts(
-            parsed, "parse",
-            n_rows=F.count(F.lit(1)),
-            n_dirty=F.count(F.when(F.col("k").isNull(), 1)),
-        )
-        obs_df.write.parquet(out)   # the job
-        await_observation(obs, "parse")["n_dirty"]  # the counter, for free
-    """
-    obs = Observation(name)
-    observed = df.observe(obs, *[expr.alias(alias) for alias, expr in metrics.items()])
-    return observed, obs
 
 
 def await_observation(obs: Observation, who: str) -> dict:

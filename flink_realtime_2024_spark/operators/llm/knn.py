@@ -9,6 +9,15 @@ scoring — a dense score matrix (``_dense_candidates``: cosine, PQ,
 int8) or the rows of the probed inverted lists (``_probed_candidates``:
 the two IVF ids).
 
+The four approximate ids are two families of two. Each family has one
+trainer (``_ivf_train``, ``_pq_train``) and one DuckDB oracle builder
+(``_ivf_lloyd_oracle``, ``_pq_lloyd_oracle``), each taking a number of
+Lloyd ``rounds``: ``_ANN_LLOYD_ROUNDS`` (10) for llm_knn_ivf and
+llm_knn_pq, 0 for their seeded twins llm_knn_ivf_partitioned and
+llm_knn_pq_seeded, whose quantizers are the first Knuth-ordered sample
+rows as they are. All four train on one memoized sample,
+``_knuth_sample``.
+
 Split out of operators/llm.py (r13 — the single file reached 4.9k
 lines); every public and test-visible name is re-exported by the
 package ``__init__`` so ``operators.llm.<name>`` paths are unchanged.
@@ -199,9 +208,30 @@ _IVF_NCENT = 16
 # IVF's worst case; 6/16 lists probed gives ~0.7 recall here, while on
 # genuinely clustered embeddings the same setting approaches 1.0
 _IVF_NPROBE = 6
+# Lloyd rounds of the trained ANN ids (llm_knn_ivf, llm_knn_pq); their
+# seeded twins (llm_knn_ivf_partitioned, llm_knn_pq_seeded) run 0
+_ANN_LLOYD_ROUNDS = 10
 
 
 _IVF_KNUTH = 2654435761  # Knuth multiplicative hash constant
+
+_RAW_DOT = "list_dot_product({a}, {b})"
+_DOT6 = "round(list_dot_product({a}, {b}), 6)"
+
+# The head of both ANN oracle builders, embeddings cast to DOUBLE[]:
+# ``sample`` is ``_knuth_sample`` (``sord`` = position in Knuth order)
+# and ``qset`` is ``_knn_query_matrix``.
+_ANN_HEAD_CTES = f"""sample AS MATERIALIZED (
+  SELECT vec_id, embedding::DOUBLE[] AS emb,
+         ROW_NUMBER() OVER (
+           ORDER BY (vec_id * {_IVF_KNUTH}) % 4294967296, vec_id) - 1 AS sord
+  FROM embeddings QUALIFY sord < {_IVF_TRAIN_BUDGET}
+),
+qset AS MATERIALIZED (
+  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
+  WHERE vec_id % {_KNN_QUERY_MOD} = 0
+  ORDER BY vec_id LIMIT {_KNN_MAX_QUERIES}
+)"""
 
 
 def _knn_query_matrix(spark: SparkSession, sf_dir: str, emb: DataFrame):
@@ -227,34 +257,40 @@ def _knn_query_matrix(spark: SparkSession, sf_dir: str, emb: DataFrame):
     )
 
 
-def _ivf_train(emb: DataFrame) -> np.ndarray:
-    """Coarse quantizer: deterministic sample → numpy Lloyd iterations.
-    The training sample is bounded by SIZE (_IVF_TRAIN_BUDGET rows), not
-    by a sampling rate: ordering by the Knuth multiplicative hash
-    ``(vec_id * 2654435761) % 2^32`` is a deterministic uniform-ish
-    shuffle (r14: was Spark's xxhash64, switched to the engine-portable
-    permutation the seeded variant already uses so the DuckDB oracle can
-    re-derive the sample — xxhash64's seed-42 serialized-value hash has
-    no DuckDB twin), and orderBy+limit compiles to
-    TakeOrderedAndProject — driver memory is O(budget) at any corpus
-    size. Callers memoize it per session (``_emb_memo``): the training
-    is deterministic given the embeddings and knobs, so repeat kernel
-    calls skip the training scan + collect entirely."""
-    sample = np.array(
-        [
-            r["embedding"]
-            for r in emb.select("vec_id", "embedding")
-            .orderBy(
-                (F.col("vec_id") * F.lit(_IVF_KNUTH)) % F.lit(2**32), "vec_id"
-            )
+def _knuth_sample(spark: SparkSession, sf_dir: str, emb: DataFrame) -> np.ndarray:
+    """The one training sample of all four ANN ids, as float64: the
+    first ``_IVF_TRAIN_BUDGET`` vectors in Knuth multiplicative-hash
+    order ``(vec_id * _IVF_KNUTH) % 2^32``, ties on vec_id — a
+    deterministic uniform-ish shuffle that DuckDB re-derives exactly
+    (``_ANN_HEAD_CTES``), where Spark's xxhash64 has no DuckDB twin.
+    Bounded by SIZE, not by a sampling rate: orderBy+limit compiles to
+    TakeOrderedAndProject, so driver memory is O(budget) at any corpus
+    size. Memoized per session and fixture: a session building all four
+    ids collects it once."""
+
+    def build():
+        rows = (
+            emb.select("vec_id", "embedding")
+            .orderBy((F.col("vec_id") * F.lit(_IVF_KNUTH)) % F.lit(2**32), "vec_id")
             .limit(_IVF_TRAIN_BUDGET)
             .select("embedding")
             .collect()
-        ],
-        dtype=np.float64,
-    )
-    cent = sample[: _IVF_NCENT].copy()
-    for _ in range(10):
+        )
+        return np.array([r["embedding"] for r in rows], dtype=np.float64)
+
+    return _emb_memo(spark, sf_dir, "knn_sample", build, _IVF_TRAIN_BUDGET)
+
+
+def _ivf_train(sample: np.ndarray, rounds: int) -> np.ndarray:
+    """Coarse quantizer: the first ``_IVF_NCENT`` rows of the Knuth
+    sample, refined by ``rounds`` cosine Lloyd iterations —
+    ``_ANN_LLOYD_ROUNDS`` for llm_knn_ivf (balanced lists), 0 for
+    llm_knn_ivf_partitioned (the seeds as they are). Centroid ordinal =
+    position in Knuth order, the argmax/probe tie-break key on both
+    engines; ``_ivf_lloyd_oracle`` replays the same rounds in SQL.
+    Callers memoize it per session and ``rounds`` (``_emb_memo``)."""
+    cent = sample[:_IVF_NCENT].copy()
+    for _ in range(rounds):
         assign = (sample @ cent.T).argmax(axis=1)  # cosine on unit vectors
         for c in range(_IVF_NCENT):
             members = sample[assign == c]
@@ -266,21 +302,32 @@ def _ivf_train(emb: DataFrame) -> np.ndarray:
     return cent
 
 
-def _ann_recall_tail(q_expr: str) -> str:
-    """The exact-ground-truth + recall + final-SELECT tail shared by
-    ALL FOUR approximate-kNN oracles (IVF flat/partitioned, PQ
-    trained/seeded): given an ``approx(query_id, neighbor_id, score)``
-    CTE and a ``qset`` CTE whose query embedding is ``q_expr`` (the
-    only per-builder difference — some qsets pre-cast to DOUBLE[]),
+def _probe_mask(cent: np.ndarray, Q: np.ndarray, rank) -> np.ndarray:
+    """(n_queries, ncent) mask of each query's ``_IVF_NPROBE`` probed
+    lists: centroids ordered by ``rank(cent @ q)`` descending, stable,
+    ties to the lower ordinal (lexsort's last key is primary) — the
+    oracles' ``ORDER BY dot DESC, ord``. len(cent), not _IVF_NCENT: a
+    corpus smaller than ncent yields fewer centroids, and lexsort
+    requires same-shape keys."""
+    mask = np.zeros((len(Q), _IVF_NCENT), dtype=bool)
+    for j in range(len(Q)):
+        d = rank(cent @ Q[j])
+        mask[j, np.lexsort((np.arange(len(cent)), -d))[:_IVF_NPROBE]] = True
+    return mask
+
+
+def _ann_recall_tail() -> str:
+    """The exact-ground-truth + recall + final-SELECT tail of every
+    approximate-kNN oracle (both builders, ``_ivf_lloyd_oracle`` and
+    ``_pq_lloyd_oracle``, render it): given an ``approx(query_id,
+    neighbor_id, score)`` CTE and the ``qset`` of ``_ANN_HEAD_CTES``,
     appends ``exact``/``hits`` and the final recall-annotated SELECT.
     One rendering, so a change to the recall definition or tie-break
     discipline cannot desynchronize one oracle from the shared kernel
     helper ``with_recall_vs_exact`` (r14 review finding). ``exact`` is
     MATERIALIZED — ``hits`` consumes it twice and DuckDB would inline
     the corpus-wide ranking into both consumers."""
-    dot6 = (
-        f"round(list_dot_product({q_expr}, e.embedding::DOUBLE[]), 6)"
-    )
+    dot6 = _DOT6.format(a="q.emb", b="e.embedding::DOUBLE[]")
     return f"""exact AS MATERIALIZED (
   SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
   FROM qset q JOIN embeddings e ON e.vec_id <> q.vec_id
@@ -303,26 +350,23 @@ SELECT a.query_id, a.neighbor_id, a.score,
 FROM approx a JOIN hits h ON h.query_id = a.query_id"""
 
 
-def _lloyd_rounds_cte(src: str, k: int, rounds: int) -> str:
-    """The unrolled cosine-Lloyd round triple — (raw-dot argmax assign
+def _lloyd_rounds_cte(src: str, rounds: int) -> list[str]:
+    """The unrolled cosine-Lloyd round triples — (raw-dot argmax assign
     → per-dim mean → renormalize-or-keep centroid) as MATERIALIZED
     CTEs ``asg{r}``/``mean{r}``/``cent{r}`` reading training CTE
-    ``{src}`` (vec_id, emb DOUBLE[]) against ``cent{r-1}``. Shared by
-    ``_kmeans_unrolled_cte`` (trains on the full corpus) and
-    ``_ivf_lloyd_oracle`` (trains on the bounded Knuth-ordered sample);
-    callers supply their own ``cent0`` and consume ``cent{rounds}``.
-    MATERIALIZED is load-bearing: inlined, each round's centroid CTE
-    doubles into both of its consumers (2^rounds expression blowup —
-    224 s → 1 s at sf0.1)."""
-    raw = "list_dot_product({a}, {b})"
-    parts = []
-    for r in range(1, rounds + 1):
-        parts.append(
-            f"""asg{r} AS MATERIALIZED (
+    ``{src}`` (vec_id, emb DOUBLE[]) against ``cent{r-1}``, one list
+    item per round. Shared by ``_kmeans_unrolled_cte`` (trains on the
+    full corpus) and ``_ivf_lloyd_oracle`` (trains on the bounded
+    Knuth-ordered sample); callers supply their own ``cent0`` and
+    consume ``cent{rounds}``. MATERIALIZED is load-bearing: inlined,
+    each round's centroid CTE doubles into both of its consumers
+    (2^rounds expression blowup — 224 s → 1 s at sf0.1)."""
+    return [
+        f"""asg{r} AS MATERIALIZED (
   SELECT vec_id, emb, ord AS cid FROM (
     SELECT e.vec_id, e.emb, c.ord,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY {raw.format(a='e.emb', b='c.cvec')} DESC,
+             ORDER BY {_RAW_DOT.format(a='e.emb', b='c.cvec')} DESC,
                       c.ord) AS rnk
     FROM {src} e CROSS JOIN cent{r-1} c) WHERE rnk = 1
 ),
@@ -343,46 +387,33 @@ cent{r} AS MATERIALIZED (
               ELSE c.cvec END AS cvec
   FROM cent{r-1} c LEFT JOIN mean{r} m ON m.cid = c.ord
 )"""
-        )
-    return ",\n".join(parts)
-
-
-def _ivf_lloyd_oracle(rounds: int = 10) -> str:
-    """DuckDB re-derivation of the ENTIRE llm_knn_ivf pipeline,
-    INCLUDING its Lloyd-trained coarse quantizer: the training sample
-    (first ``_IVF_TRAIN_BUDGET`` vectors in Knuth-hash order) and the
-    10 Lloyd rounds unroll into a materialized CTE chain (the
-    ``_kmeans_unrolled_cte`` idiom), then the assignment / probe /
-    pruned-top-k / recall stages replay exactly as in
-    ``_ivf_partitioned_oracle``. Assignment and probe ORDER BY the RAW
-    dot product (the kernel argmaxes unrounded floats there); only the
-    output score and the exact ground truth are round-6, mirroring the
-    kernel."""
-    raw = "list_dot_product({a}, {b})"
-    dot6 = "round(list_dot_product({a}, {b}), 6)"
-    korder = f"(vec_id * {_IVF_KNUTH}) % 4294967296, vec_id"
-    parts = [
-        f"""sample AS MATERIALIZED (
-  SELECT vec_id, embedding::DOUBLE[] AS emb,
-         ROW_NUMBER() OVER (ORDER BY {korder}) - 1 AS sord
-  FROM embeddings ORDER BY {korder} LIMIT {_IVF_TRAIN_BUDGET}
-),
-cent0 AS MATERIALIZED (
-  SELECT sord AS ord, emb AS cvec FROM sample WHERE sord < {_IVF_NCENT}
-)"""
+        for r in range(1, rounds + 1)
     ]
-    parts.append(_lloyd_rounds_cte("sample", _IVF_NCENT, rounds))
-    parts.append(
-        f"""qset AS MATERIALIZED (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-  WHERE vec_id % {_KNN_QUERY_MOD} = 0
-  ORDER BY vec_id LIMIT {_KNN_MAX_QUERIES}
-),
-assign AS MATERIALIZED (
+
+
+def _ivf_lloyd_oracle(rounds: int, rank: str) -> str:
+    """DuckDB re-derivation of an ENTIRE IVF pipeline, quantizer
+    training included: the first ``_IVF_NCENT`` rows of the Knuth
+    sample seed ``cent0``, ``rounds`` Lloyd rounds unroll into a
+    materialized CTE chain (the ``_kmeans_unrolled_cte`` idiom), then
+    list assignment, probing, pruned top-k and recall replay the
+    kernel. ``rank`` is the dot expression assignment and probing ORDER
+    BY: the RAW dot for llm_knn_ivf (its kernel argmaxes unrounded
+    floats), the round-6 dot for llm_knn_ivf_partitioned (its kernel
+    quantizes before any argmax). The output score and the exact ground
+    truth are round-6 on both."""
+    return "WITH " + ",\n".join(
+        [
+            _ANN_HEAD_CTES,
+            f"""cent0 AS MATERIALIZED (
+  SELECT sord AS ord, emb AS cvec FROM sample WHERE sord < {_IVF_NCENT}
+)""",
+            *_lloyd_rounds_cte("sample", rounds),
+            f"""assign AS MATERIALIZED (
   SELECT vec_id, emb, ord AS cid FROM (
     SELECT e.vec_id, e.embedding::DOUBLE[] AS emb, c.ord,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY {raw.format(a='e.embedding::DOUBLE[]', b='c.cvec')} DESC,
+             ORDER BY {rank.format(a='e.embedding::DOUBLE[]', b='c.cvec')} DESC,
                       c.ord) AS rnk
     FROM embeddings e CROSS JOIN cent{rounds} c) WHERE rnk = 1
 ),
@@ -390,27 +421,30 @@ probe AS MATERIALIZED (
   SELECT vec_id AS query_id, ord AS cid FROM (
     SELECT q.vec_id, c.ord,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY {raw.format(a='q.emb', b='c.cvec')} DESC,
+             ORDER BY {rank.format(a='q.emb', b='c.cvec')} DESC,
                       c.ord) AS rnk
     FROM qset q CROSS JOIN cent{rounds} c) WHERE rnk <= {_IVF_NPROBE}
 ),
 approx AS MATERIALIZED (
   SELECT query_id, neighbor_id, score FROM (
     SELECT p.query_id, a.vec_id AS neighbor_id,
-           {dot6.format(a='q.emb', b='a.emb')} AS score,
+           {_DOT6.format(a='q.emb', b='a.emb')} AS score,
            ROW_NUMBER() OVER (PARTITION BY p.query_id
-             ORDER BY {dot6.format(a='q.emb', b='a.emb')} DESC,
+             ORDER BY {_DOT6.format(a='q.emb', b='a.emb')} DESC,
                       a.vec_id) AS rnk
     FROM probe p
     JOIN assign a ON a.cid = p.cid AND a.vec_id <> p.query_id
     JOIN qset q ON q.vec_id = p.query_id) WHERE rnk <= {_KNN_K}
-),
-{_ann_recall_tail('q.emb')}"""
+)""",
+            _ann_recall_tail(),
+        ]
     )
-    return "WITH " + ",\n".join(parts)
 
 
-@register("llm_knn_ivf", oracle=_ivf_lloyd_oracle(), section="L3", bench=True, reverify=14)
+@register(
+    "llm_knn_ivf", oracle=_ivf_lloyd_oracle(_ANN_LLOYD_ROUNDS, _RAW_DOT),
+    section="L3", bench=True, reverify=14,
+)
 def llm_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 scale path: IVF-style approximate top-k. A coarse quantizer
     (deterministic Lloyd k-means on a fixed sample) defines inverted
@@ -425,29 +459,26 @@ def llm_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by centroid_id so probing prunes at the SCAN (partition
     pruning), not just at compute — the kernel is unchanged.
 
-    FULL oracle (r14, previously rows-only): the last non-portable
-    piece was the TRAINING — r14 switched the sample ordering from
-    Spark's xxhash64 to the Knuth-hash permutation (see ``_ivf_train``)
-    and ``_ivf_lloyd_oracle`` now unrolls the 10 Lloyd rounds into SQL
-    the same way llm_kmeans_clusters' oracle does, so quantizer
-    training, list assignment, probing, pruned top-k AND the in-query
+    FULL oracle (r14, previously rows-only): the quantizer is
+    ``_ivf_train(_knuth_sample(...), _ANN_LLOYD_ROUNDS)`` and
+    ``_ivf_lloyd_oracle`` unrolls the same Lloyd rounds into SQL the
+    way llm_kmeans_clusters' oracle does, so quantizer training, list
+    assignment, probing, pruned top-k AND the in-query
     ``recall_at_k_vs_exact`` are all value-checked cross-engine.
     Recall@k vs the exact kNN is additionally asserted in
     tests/test_semantics.py.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     cent = _emb_memo(
-        spark, sf_dir, "ivf_quantizer", lambda: _ivf_train(emb),
-        _IVF_TRAIN_BUDGET, _IVF_NCENT,
+        spark, sf_dir, "ivf_quantizer",
+        lambda: _ivf_train(_knuth_sample(spark, sf_dir, emb), _ANN_LLOYD_ROUNDS),
+        _IVF_TRAIN_BUDGET, _IVF_NCENT, _ANN_LLOYD_ROUNDS,
     )
 
     # queries + their probe sets (fixed-size cap, same budget as the
     # exact kNN so both entry points answer the same query set)
     qids, Q = _knn_query_matrix(spark, sf_dir, emb)
-    probe_mask = np.zeros((len(qids), _IVF_NCENT), dtype=bool)
-    for j in range(len(qids)):
-        top = np.argsort(-(cent @ Q[j]))[:_IVF_NPROBE]
-        probe_mask[j, top] = True
+    probe_mask = _probe_mask(cent, Q, lambda d: d)
     bc = spark.sparkContext.broadcast((cent, qids, Q, probe_mask))
 
     def candidates(ids, E, pdf):
@@ -469,84 +500,8 @@ def _probed_candidates(qids, Q, M, ids, cids, E):
             yield qid, ids[allowed], np.round(E[allowed] @ Q[j], 6)
 
 
-def _ivf_seeded_centroids(emb: DataFrame) -> np.ndarray:
-    """Seeded deterministic coarse quantizer (r14, verdict #5): the
-    centroids are the ``_IVF_NCENT`` corpus vectors FIRST in Knuth
-    multiplicative-hash order — ``(vec_id * 2654435761) % 2^32``, a
-    pseudo-random but engine-portable permutation — with NO Lloyd
-    refinement. That trade is the whole point: an oracle engine can
-    re-derive these centroids in one ORDER BY ... LIMIT, so the entire
-    IVF pipeline (assignment, probe set, pruned scoring) becomes
-    value-checkable SQL, where the Lloyd-trained quantizer
-    (``_ivf_train``) is only reproducible by re-running 10 float64
-    k-means rounds. Centroid ORDINAL = position in hash order (the
-    argmax/probe tie-break key on both engines). orderBy+limit compiles
-    to TakeOrderedAndProject — O(ncent) driver memory at any corpus."""
-    rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(
-            (F.col("vec_id") * F.lit(_IVF_KNUTH)) % F.lit(2**32), "vec_id"
-        )
-        .limit(_IVF_NCENT)
-        .collect()
-    )
-    return np.array([r["embedding"] for r in rows], dtype=np.float64)
-
-
-def _ivf_partitioned_oracle() -> str:
-    """DuckDB re-derivation of the ENTIRE seeded-IVF pipeline: same
-    centroids (Knuth-hash order), same rounded-dot argmax assignment,
-    same probe set, same pruned top-k, same recall column."""
-    dot = (
-        "round(list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]), 6)"
-    )
-    return f"""
-WITH cent AS (
-  SELECT embedding AS cvec,
-         ROW_NUMBER() OVER (
-           ORDER BY (vec_id * {_IVF_KNUTH}) % 4294967296, vec_id) - 1 AS ord
-  FROM embeddings
-  ORDER BY (vec_id * {_IVF_KNUTH}) % 4294967296, vec_id
-  LIMIT {_IVF_NCENT}
-),
-qset AS (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id % {_KNN_QUERY_MOD} = 0
-  ORDER BY vec_id LIMIT {_KNN_MAX_QUERIES}
-),
-assign AS (
-  SELECT vec_id, embedding, ord AS cid FROM (
-    SELECT e.vec_id, e.embedding, c.ord,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY {dot.format(a='e.embedding', b='c.cvec')} DESC,
-                      c.ord) AS rnk
-    FROM embeddings e CROSS JOIN cent c) WHERE rnk = 1
-),
-probe AS (
-  SELECT vec_id AS query_id, ord AS cid FROM (
-    SELECT q.vec_id, c.ord,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY {dot.format(a='q.embedding', b='c.cvec')} DESC,
-                      c.ord) AS rnk
-    FROM qset q CROSS JOIN cent c) WHERE rnk <= {_IVF_NPROBE}
-),
-approx AS (
-  SELECT query_id, neighbor_id, score FROM (
-    SELECT p.query_id, a.vec_id AS neighbor_id,
-           {dot.format(a='q.embedding', b='a.embedding')} AS score,
-           ROW_NUMBER() OVER (PARTITION BY p.query_id
-             ORDER BY {dot.format(a='q.embedding', b='a.embedding')} DESC,
-                      a.vec_id) AS rnk
-    FROM probe p
-    JOIN assign a ON a.cid = p.cid AND a.vec_id <> p.query_id
-    JOIN qset q ON q.vec_id = p.query_id) WHERE rnk <= {_KNN_K}
-),
-{_ann_recall_tail('q.embedding::DOUBLE[]')}
-"""
-
-
 @register(
-    "llm_knn_ivf_partitioned", oracle=_ivf_partitioned_oracle(),
+    "llm_knn_ivf_partitioned", oracle=_ivf_lloyd_oracle(0, _DOT6),
     section="L3,S7", bench=True, reverify=14,
 )
 def llm_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -560,17 +515,15 @@ def llm_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanning nprobe/ncent of the corpus and scanning all of it.
 
     FULL ORACLE (r14, verdict #5 — moved off the rows-only list): the
-    coarse quantizer is the SEEDED deterministic one
-    (``_ivf_seeded_centroids``: first ncent vectors in Knuth-hash
-    order, no Lloyd rounds), every dot product is quantized to 1e-6
-    before any argmax/rank (the llm_knn_cosine discipline), and ties
-    break on centroid ordinal / neighbor_id — so DuckDB re-derives the
-    ENTIRE pipeline (centroids → assignment → probe sets → pruned
-    top-k → recall column) and value-matches it. The Lloyd-trained
-    quantizer lives on in ``llm_knn_ivf`` — since later in r14 ALSO a
-    full oracle (its 10 Lloyd rounds unroll via ``_ivf_lloyd_oracle``);
-    the two variants now differ only in training (Lloyd-balanced lists
-    vs zero-training seeding), both value-checked. The numpy expected
+    coarse quantizer is the SEEDED one, ``_ivf_train(sample, 0)`` —
+    the first ncent vectors of the Knuth sample, zero Lloyd rounds —
+    every dot product is quantized to 1e-6 before any argmax/rank (the
+    llm_knn_cosine discipline), and ties break on centroid ordinal /
+    neighbor_id. DuckDB re-derives the ENTIRE pipeline (centroids →
+    assignment → probe sets → pruned top-k → recall column) with the
+    same builder as llm_knn_ivf, ``_ivf_lloyd_oracle(0, round-6 dot)``.
+    The two ids differ only in Lloyd rounds (balanced lists vs
+    zero-training seeding) and in that ranking rule. The numpy expected
     output is additionally pinned by tests/test_semantics.py."""
     import os
 
@@ -578,8 +531,9 @@ def llm_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cent = _emb_memo(
-        spark, sf_dir, "ivf_quantizer_seeded", lambda: _ivf_seeded_centroids(emb),
-        _IVF_NCENT,
+        spark, sf_dir, "ivf_quantizer",
+        lambda: _ivf_train(_knuth_sample(spark, sf_dir, emb), 0),
+        _IVF_TRAIN_BUDGET, _IVF_NCENT, 0,
     )
     bc_cent = spark.sparkContext.broadcast(cent)
     assign_schema = T.StructType(
@@ -630,16 +584,7 @@ def llm_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     qids, Q = _knn_query_matrix(spark, sf_dir, emb)
-    probe_mask = np.zeros((len(qids), _IVF_NCENT), dtype=bool)
-    for j in range(len(qids)):
-        # stable rank on QUANTIZED dots, ties to the lower ordinal —
-        # lexsort's last key is primary — so the probe set is the
-        # oracle's ROW_NUMBER(... ORDER BY dot DESC, ord) exactly.
-        # len(cent), not _IVF_NCENT: a corpus smaller than ncent yields
-        # fewer centroids and lexsort requires same-shape keys
-        d = np.round(cent @ Q[j], 6)
-        top = np.lexsort((np.arange(len(cent)), -d))[:_IVF_NPROBE]
-        probe_mask[j, top] = True
+    probe_mask = _probe_mask(cent, Q, lambda d: np.round(d, 6))
     probed = sorted(int(c) for c in np.nonzero(probe_mask.any(axis=0))[0])
     bc = spark.sparkContext.broadcast((qids, Q, probe_mask))
 
@@ -655,40 +600,41 @@ def llm_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M = 8  # subspaces
 _PQ_K = 16  # codewords per subspace → 4 bits; 64-dim float32 → 8 bytes (32×)
 
+# Squared subvector distances, {a} the subvector and {b} the codeword:
+# the kernel's own subtract-square-sum form (pq_encode, every training
+# round), and the rounded expanded identity ‖x‖² − 2x·c + ‖c‖² of
+# _pq_seeded_encode, term for term.
+_PQ_SQD = (
+    "list_aggregate(list_transform(list_zip({a}, {b}),"
+    " p -> (p[1] - p[2]) * (p[1] - p[2])), 'sum')"
+)
+_PQ_SQD_EXPANDED6 = (
+    "round(list_dot_product({a}, {a}) - 2 * list_dot_product({a}, {b})"
+    " + list_dot_product({b}, {b}), 6)"
+)
 
-def _pq_train(emb: DataFrame) -> np.ndarray:
-    """Product-quantization codebooks (Jégou et al., TPAMI'11): per
-    subspace, Lloyd k-means over a FIXED-size sample (same budget
-    discipline as the IVF trainer; r14: sample ordering switched from
-    xxhash64 to the engine-portable Knuth-hash permutation, same reason
-    as ``_ivf_train``). Returns (m, k, d/m)."""
-    sample = np.array(
-        [
-            r["embedding"]
-            for r in emb.select("vec_id", "embedding")
-            .orderBy(
-                (F.col("vec_id") * F.lit(_IVF_KNUTH)) % F.lit(2**32), "vec_id"
-            )
-            .limit(_IVF_TRAIN_BUDGET)
-            .select("embedding")
-            .collect()
-        ],
-        dtype=np.float64,
+
+def _pq_train(sample: np.ndarray, rounds: int) -> np.ndarray:
+    """Product-quantization codebooks (Jégou et al., TPAMI'11), shaped
+    (m, k, d/m): per subspace, the subvectors of the first ``_PQ_K``
+    rows of the Knuth sample, refined by ``rounds`` Euclidean Lloyd
+    iterations — ``_ANN_LLOYD_ROUNDS`` for llm_knn_pq (better
+    reconstruction), 0 for llm_knn_pq_seeded (the seeds as they are).
+    ``_pq_lloyd_oracle`` replays the same rounds in SQL. Callers
+    memoize it per session and ``rounds`` (``_emb_memo``)."""
+    dsub = sample.shape[1] // _PQ_M
+    books = np.stack(
+        [sample[:_PQ_K, mi * dsub : (mi + 1) * dsub] for mi in range(_PQ_M)]
     )
-    d = sample.shape[1]
-    dsub = d // _PQ_M
-    books = np.zeros((_PQ_M, _PQ_K, dsub))
     for mi in range(_PQ_M):
-        sub = sample[:, mi * dsub : (mi + 1) * dsub]
-        cent = sub[:_PQ_K].copy()
-        for _ in range(10):
+        sub, cent = sample[:, mi * dsub : (mi + 1) * dsub], books[mi]
+        for _ in range(rounds):
             d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
             assign = d2.argmin(axis=1)
             for c in range(_PQ_K):
                 mem = sub[assign == c]
                 if len(mem):
                     cent[c] = mem.mean(axis=0)
-        books[mi] = cent
     return books
 
 
@@ -704,54 +650,62 @@ def pq_encode(E: np.ndarray, books: np.ndarray) -> np.ndarray:
     return codes
 
 
+def _pq_seeded_encode(E: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, d) float64 → (n, m) uint8 codes under the oracle discipline:
+    squared distance via the expanded identity ‖x‖² − 2x·c + ‖c‖²
+    (matching ``_PQ_SQD_EXPANDED6`` term for term), quantized to 1e-6
+    BEFORE argmin; np.argmin takes the FIRST minimum ⇒ ties break on
+    codeword ordinal, same as the oracle's ROW_NUMBER tie key."""
+    n, d = E.shape
+    dsub = d // _PQ_M
+    codes = np.zeros((n, _PQ_M), dtype=np.uint8)
+    for mi in range(_PQ_M):
+        sub = E[:, mi * dsub : (mi + 1) * dsub]
+        xx = (sub * sub).sum(axis=1, keepdims=True)
+        cc = (books[mi] * books[mi]).sum(axis=1)
+        d2 = np.round(xx - 2.0 * (sub @ books[mi].T) + cc[None, :], 6)
+        codes[:, mi] = d2.argmin(axis=1).astype(np.uint8)
+    return codes
+
+
 def pq_reconstruct(codes: np.ndarray, books: np.ndarray) -> np.ndarray:
     return np.concatenate([books[mi][codes[:, mi]] for mi in range(_PQ_M)], axis=1)
 
 
-def _pq_lloyd_oracle(rounds: int = 10) -> str:
-    """DuckDB re-derivation of the ENTIRE llm_knn_pq pipeline,
-    INCLUDING its per-subspace Lloyd codebook training: the Knuth-hash
-    sample and the 10 Euclidean Lloyd rounds unroll into a materialized
-    CTE chain — subspaces stay a COLUMN (mi), only the sequential
-    rounds unroll — then encoding, reconstruction-dot scoring, top-k
-    and recall replay as in ``_pq_seeded_oracle``. The squared distance
-    is computed in the kernel's own subtract-square-sum form (not the
-    expanded ‖x‖²−2x·c+‖c‖² identity) so both engines reduce the same
-    8-element operand list; argmins are RAW (the kernel does not round
-    before argmin), only the output ADC score is round-6."""
-    korder = f"(vec_id * {_IVF_KNUTH}) % 4294967296, vec_id"
-    sqd = (
-        "list_aggregate(list_transform(list_zip({a}, {b}),"
-        " p -> (p[1] - p[2]) * (p[1] - p[2])), 'sum')"
-    )
-    dot6 = "round(list_dot_product({a}, {b}), 6)"
-    parts = [
-        f"""dims AS (
+def _pq_lloyd_oracle(rounds: int, dist: str) -> str:
+    """DuckDB re-derivation of an ENTIRE PQ pipeline, codebook training
+    included: the subvectors of the first ``_PQ_K`` rows of the Knuth
+    sample seed ``book0``, ``rounds`` Euclidean Lloyd rounds unroll
+    into a materialized CTE chain — subspaces stay a COLUMN (mi), only
+    the sequential rounds unroll — then encoding, reconstruction-dot
+    scoring (ADC(q,x) ≡ q · reconstruct(x), the identity the kernel's
+    BLAS form exploits), top-k and recall. Training argmins use the
+    kernel's subtract-square-sum ``_PQ_SQD`` unrounded, so both engines
+    reduce the same 8-element operand list; ``dist`` is the distance
+    the final ``codes`` CTE orders by: ``_PQ_SQD`` for llm_knn_pq
+    (``pq_encode``), ``_PQ_SQD_EXPANDED6`` for llm_knn_pq_seeded
+    (``_pq_seeded_encode``). Only the output ADC score is round-6."""
+    sub = "list_slice({v}, m.mi * d.dsub + 1, (m.mi + 1) * d.dsub)"
+    return "WITH " + ",\n".join(
+        [
+            _ANN_HEAD_CTES,
+            f"""dims AS (
   SELECT len(embedding) // {_PQ_M} AS dsub FROM embeddings LIMIT 1
 ),
 mis AS (SELECT UNNEST(range({_PQ_M})) AS mi),
-sample AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         ROW_NUMBER() OVER (ORDER BY {korder}) - 1 AS sord
-  FROM embeddings ORDER BY {korder} LIMIT {_IVF_TRAIN_BUDGET}
-),
 ssub AS MATERIALIZED (
-  SELECT s.vec_id, s.sord, m.mi,
-         list_slice(s.embedding, m.mi * d.dsub + 1,
-                    (m.mi + 1) * d.dsub)::DOUBLE[] AS xs
+  SELECT s.vec_id, s.sord, m.mi, {sub.format(v='s.emb')} AS xs
   FROM sample s CROSS JOIN mis m CROSS JOIN dims d
 ),
 book0 AS MATERIALIZED (
   SELECT mi, sord AS ord, xs AS cw FROM ssub WHERE sord < {_PQ_K}
-)"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f"""pasg{r} AS MATERIALIZED (
+)""",
+            *(
+                f"""pasg{r} AS MATERIALIZED (
   SELECT vec_id, mi, xs, ord AS code FROM (
     SELECT s.vec_id, s.mi, s.xs, b.ord,
            ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.mi
-             ORDER BY {sqd.format(a='s.xs', b='b.cw')} ASC, b.ord) AS rnk
+             ORDER BY {_PQ_SQD.format(a='s.xs', b='b.cw')} ASC, b.ord) AS rnk
     FROM ssub s JOIN book{r-1} b ON b.mi = s.mi) WHERE rnk = 1
 ),
 pmean{r} AS MATERIALIZED (
@@ -766,49 +720,70 @@ book{r} AS MATERIALIZED (
   SELECT b.mi, b.ord, COALESCE(m.m, b.cw) AS cw
   FROM book{r-1} b LEFT JOIN pmean{r} m ON m.mi = b.mi AND m.code = b.ord
 )"""
-        )
-    parts.append(
-        f"""esub AS MATERIALIZED (
-  SELECT e.vec_id, m.mi,
-         list_slice(e.embedding, m.mi * d.dsub + 1,
-                    (m.mi + 1) * d.dsub)::DOUBLE[] AS xs
+                for r in range(1, rounds + 1)
+            ),
+            f"""esub AS MATERIALIZED (
+  SELECT e.vec_id, m.mi, {sub.format(v='e.embedding')}::DOUBLE[] AS xs
   FROM embeddings e CROSS JOIN mis m CROSS JOIN dims d
 ),
 codes AS MATERIALIZED (
   SELECT vec_id, mi, ord AS code FROM (
     SELECT s.vec_id, s.mi, b.ord,
            ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.mi
-             ORDER BY {sqd.format(a='s.xs', b='b.cw')} ASC, b.ord) AS rnk
+             ORDER BY {dist.format(a='s.xs', b='b.cw')} ASC, b.ord) AS rnk
     FROM esub s JOIN book{rounds} b ON b.mi = s.mi) WHERE rnk = 1
-),
-qset AS (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id % {_KNN_QUERY_MOD} = 0
-  ORDER BY vec_id LIMIT {_KNN_MAX_QUERIES}
 ),
 recon AS MATERIALIZED (
   SELECT c.vec_id, flatten(list(b.cw ORDER BY c.mi)) AS rvec
   FROM codes c JOIN book{rounds} b ON b.mi = c.mi AND b.ord = c.code
   GROUP BY c.vec_id
 ),
-adc AS (
-  SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-         {dot6.format(a='q.embedding::DOUBLE[]', b='r.rvec')} AS score
-  FROM qset q JOIN recon r ON r.vec_id <> q.vec_id
-),
 approx AS (
   SELECT query_id, neighbor_id, score FROM (
     SELECT query_id, neighbor_id, score,
            ROW_NUMBER() OVER (PARTITION BY query_id
              ORDER BY score DESC, neighbor_id) AS rnk
-    FROM adc) WHERE rnk <= {_KNN_K}
-),
-{_ann_recall_tail('q.embedding::DOUBLE[]')}"""
+    FROM (
+      SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
+             {_DOT6.format(a='q.emb', b='r.rvec')} AS score
+      FROM qset q JOIN recon r ON r.vec_id <> q.vec_id)) WHERE rnk <= {_KNN_K}
+)""",
+            _ann_recall_tail(),
+        ]
     )
-    return "WITH " + ",\n".join(parts)
 
 
-@register("llm_knn_pq", oracle=_pq_lloyd_oracle(), section="L3", reverify=14)
+def _pq_topk(spark: SparkSession, sf_dir: str, rounds: int, encode) -> DataFrame:
+    """The PQ scan both PQ ids share — they differ only in Lloyd
+    ``rounds`` and ``encode``. The codebooks, ``_pq_train(sample,
+    rounds)``, are memoized per session and fixture (``_emb_memo``).
+    Each batch is encoded to m one-byte codes, decoded back to (n, d)
+    (exact codeword concatenation), and scored by ONE BLAS matmul
+    against the query matrix, ADC(q, x) = q · reconstruct(x) — 3.6×
+    faster end-to-end at the 100× corpus than the per-subspace
+    lookup-table gather, with identical scores."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    books = _emb_memo(
+        spark, sf_dir, "pq_books",
+        lambda: _pq_train(_knuth_sample(spark, sf_dir, emb), rounds),
+        _IVF_TRAIN_BUDGET, _PQ_M, _PQ_K, rounds,
+    )
+    qids, Q = _knn_query_matrix(spark, sf_dir, emb)
+    bc = spark.sparkContext.broadcast((books, qids, Q))
+
+    def candidates(ids, E, pdf):
+        B, bqids, bQ = bc.value
+        R = pq_reconstruct(encode(E, B), B)
+        return _dense_candidates(bqids, ids, np.round(R @ bQ.T, 6))
+
+    topk = _scan_topk(widen(emb.select("vec_id", "embedding")), candidates)
+    return with_recall_vs_exact(spark, sf_dir, topk)
+
+
+@register(
+    "llm_knn_pq", oracle=_pq_lloyd_oracle(_ANN_LLOYD_ROUNDS, _PQ_SQD),
+    section="L3", reverify=14,
+)
 def llm_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 product-quantization ANN: the corpus is encoded to 8 one-byte
     codes per vector (32× smaller than float32 — the memory side of the
@@ -825,176 +800,35 @@ def llm_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fused in-scan form like llm_knn_ivf: ``_pq_topk`` encodes AND
     scores each Arrow batch in the one ``_scan_topk`` pass; only
-    partial top-k rows reach the final shuffle. The trained codebooks
-    are memoized per session and fixture (``_emb_memo``), like the IVF
-    quantizer. At 100 TB the codes (+ codebooks) would be the stored
-    index — 8 bytes/vector — with this same kernel reading codes
-    instead of raw embeddings.
+    partial top-k rows reach the final shuffle. At 100 TB the codes
+    (+ codebooks) would be the stored index — 8 bytes/vector — with
+    this same kernel reading codes instead of raw embeddings.
 
-    FULL oracle (r14, previously rows-only): ``_pq_lloyd_oracle``
-    unrolls the per-subspace Lloyd codebook training into SQL (the
+    FULL oracle (r14, previously rows-only): the codebooks are
+    ``_pq_train(sample, _ANN_LLOYD_ROUNDS)`` and ``_pq_lloyd_oracle``
+    unrolls the same per-subspace Lloyd rounds into SQL (the
     llm_knn_ivf/llm_kmeans_clusters flip applied to Euclidean PQ), so
     training, encoding, ADC scoring and the in-query recall column are
     all value-checked cross-engine. Reconstruction quality and recall
     vs exact kNN are additionally pytest-asserted."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = _emb_memo(
-        spark, sf_dir, "pq_books", lambda: _pq_train(emb),
-        _IVF_TRAIN_BUDGET, _PQ_M, _PQ_K,
-    )
-    return _pq_topk(spark, sf_dir, emb, books, pq_encode)
+    return _pq_topk(spark, sf_dir, _ANN_LLOYD_ROUNDS, pq_encode)
 
 
-def _pq_topk(spark: SparkSession, sf_dir: str, emb: DataFrame, books, encode) -> DataFrame:
-    """The ADC scan both PQ ids share — they differ only in codebooks
-    and ``encode``: each batch is encoded to m one-byte codes, decoded
-    back to (n, d) (exact codeword concatenation), and scored by ONE
-    BLAS matmul against the query matrix, ADC(q, x) = q · reconstruct(x)
-    — 3.6× faster end-to-end at the 100× corpus than the per-subspace
-    lookup-table gather, with identical scores."""
-    qids, Q = _knn_query_matrix(spark, sf_dir, emb)
-    bc = spark.sparkContext.broadcast((books, qids, Q))
-
-    def candidates(ids, E, pdf):
-        B, bqids, bQ = bc.value
-        R = pq_reconstruct(encode(E, B), B)
-        return _dense_candidates(bqids, ids, np.round(R @ bQ.T, 6))
-
-    topk = _scan_topk(widen(emb.select("vec_id", "embedding")), candidates)
-    return with_recall_vs_exact(spark, sf_dir, topk)
-
-
-def _pq_seeded_books(emb: DataFrame) -> np.ndarray:
-    """Seeded deterministic PQ codebooks (r14 — the llm_knn_ivf_partitioned
-    flip standard applied to product quantization): the per-subspace
-    codewords are the SUBVECTORS of the first ``_PQ_K`` corpus vectors in
-    Knuth multiplicative-hash order (the same engine-portable permutation
-    as ``_ivf_seeded_centroids``), with NO Lloyd refinement. The trade is
-    identical to the IVF one: an oracle engine re-derives the codebooks in
-    one ORDER BY ... LIMIT + list_slice, so encoding, ADC scoring, and the
-    final top-k all become value-checkable SQL. Lloyd-trained codebooks
-    (better reconstruction) live on in ``llm_knn_pq``, whose oracle
-    unrolls their Lloyd rounds (``_pq_lloyd_oracle``). Returns
-    (m, k, d/m); O(_PQ_K) driver memory at any corpus size
-    (orderBy+limit is TakeOrderedAndProject)."""
-    rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(
-            (F.col("vec_id") * F.lit(_IVF_KNUTH)) % F.lit(2**32), "vec_id"
-        )
-        .limit(_PQ_K)
-        .collect()
-    )
-    src = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    dsub = src.shape[1] // _PQ_M
-    return np.stack([src[:, mi * dsub : (mi + 1) * dsub] for mi in range(_PQ_M)])
-
-
-def _pq_seeded_encode(E: np.ndarray, books: np.ndarray) -> np.ndarray:
-    """(n, d) float64 → (n, m) uint8 codes under the oracle discipline:
-    squared distance via the expanded identity ‖x‖² − 2x·c + ‖c‖²
-    (matching the SQL spelling term for term), quantized to 1e-6 BEFORE
-    argmin; np.argmin takes the FIRST minimum ⇒ ties break on codeword
-    ordinal, same as the oracle's ROW_NUMBER tie key."""
-    n, d = E.shape
-    dsub = d // _PQ_M
-    codes = np.zeros((n, _PQ_M), dtype=np.uint8)
-    for mi in range(_PQ_M):
-        sub = E[:, mi * dsub : (mi + 1) * dsub]
-        xx = (sub * sub).sum(axis=1, keepdims=True)
-        cc = (books[mi] * books[mi]).sum(axis=1)
-        d2 = np.round(xx - 2.0 * (sub @ books[mi].T) + cc[None, :], 6)
-        codes[:, mi] = d2.argmin(axis=1).astype(np.uint8)
-    return codes
-
-
-def _pq_seeded_oracle() -> str:
-    """DuckDB re-derivation of the ENTIRE seeded-PQ pipeline: same
-    codebooks (Knuth-hash order + list_slice), same rounded expanded-
-    identity encoding argmin, same reconstruction-dot scoring
-    (ADC(q,x) ≡ q · reconstruct(x) — the identity the kernel's BLAS
-    form exploits), same top-k tie-breaks, same recall column."""
-    dot = "round(list_dot_product({a}, {b}), 6)"
-    return f"""
-WITH dims AS (
-  SELECT len(embedding) // {_PQ_M} AS dsub FROM embeddings LIMIT 1
-),
-mis AS (SELECT UNNEST(range({_PQ_M})) AS mi),
-cent AS (
-  SELECT embedding AS cvec,
-         ROW_NUMBER() OVER (
-           ORDER BY (vec_id * {_IVF_KNUTH}) % 4294967296, vec_id) - 1 AS ord
-  FROM embeddings
-  ORDER BY (vec_id * {_IVF_KNUTH}) % 4294967296, vec_id
-  LIMIT {_PQ_K}
-),
-book AS (
-  SELECT m.mi, c.ord,
-         list_slice(c.cvec, m.mi * d.dsub + 1,
-                    (m.mi + 1) * d.dsub)::DOUBLE[] AS cw
-  FROM cent c CROSS JOIN mis m CROSS JOIN dims d
-),
-esub AS (
-  SELECT e.vec_id, m.mi,
-         list_slice(e.embedding, m.mi * d.dsub + 1,
-                    (m.mi + 1) * d.dsub)::DOUBLE[] AS xs
-  FROM embeddings e CROSS JOIN mis m CROSS JOIN dims d
-),
-codes AS (
-  SELECT vec_id, mi, ord AS code FROM (
-    SELECT s.vec_id, s.mi, b.ord,
-           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.mi ORDER BY
-             round(list_dot_product(s.xs, s.xs)
-                   - 2 * list_dot_product(s.xs, b.cw)
-                   + list_dot_product(b.cw, b.cw), 6),
-             b.ord) AS rnk
-    FROM esub s JOIN book b ON b.mi = s.mi) WHERE rnk = 1
-),
-qset AS (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id % {_KNN_QUERY_MOD} = 0
-  ORDER BY vec_id LIMIT {_KNN_MAX_QUERIES}
-),
-recon AS (
-  SELECT c.vec_id, flatten(list(b.cw ORDER BY c.mi)) AS rvec
-  FROM codes c JOIN book b ON b.mi = c.mi AND b.ord = c.code
-  GROUP BY c.vec_id
-),
-adc AS (
-  SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-         {dot.format(a='q.embedding::DOUBLE[]', b='r.rvec')} AS score
-  FROM qset q JOIN recon r ON r.vec_id <> q.vec_id
-),
-approx AS (
-  SELECT query_id, neighbor_id, score FROM (
-    SELECT query_id, neighbor_id, score,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY score DESC, neighbor_id) AS rnk
-    FROM adc) WHERE rnk <= {_KNN_K}
-),
-{_ann_recall_tail('q.embedding::DOUBLE[]')}
-"""
-
-
-@register("llm_knn_pq_seeded", oracle=_pq_seeded_oracle(), section="L3")
+@register(
+    "llm_knn_pq_seeded", oracle=_pq_lloyd_oracle(0, _PQ_SQD_EXPANDED6), section="L3"
+)
 def llm_knn_pq_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 product-quantization ANN with SEEDED codebooks (r14): the same
-    ``_pq_topk`` ADC scan as ``llm_knn_pq``, but the codebooks are
-    ``_pq_seeded_books`` (the subvectors of the first _PQ_K corpus
-    vectors in Knuth-hash order, no Lloyd rounds) and encoding
-    distances are quantized to 1e-6 before argmin (codeword-ordinal
-    ties). DuckDB re-derives the whole pipeline (codebooks → codes →
-    reconstruction → scored top-k → recall) in ``_pq_seeded_oracle``
-    and value-matches it. ``llm_knn_pq`` keeps the Lloyd-trained
-    codebooks (better reconstruction quality) and is likewise
-    full-oracle, via ``_pq_lloyd_oracle``; at 100 TB the stored index
-    would be the 8-byte codes either way — the kernel and plan shape
-    are unchanged by the codebook choice."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = _emb_memo(
-        spark, sf_dir, "pq_books_seeded", lambda: _pq_seeded_books(emb), _PQ_M, _PQ_K
-    )
-    return _pq_topk(spark, sf_dir, emb, books, _pq_seeded_encode)
+    ``_pq_topk`` ADC scan as ``llm_knn_pq`` at zero Lloyd rounds — the
+    codebooks are ``_pq_train(sample, 0)``, the subvectors of the first
+    _PQ_K vectors of the Knuth sample — and encoding distances are
+    quantized to 1e-6 before argmin (codeword-ordinal ties). DuckDB
+    re-derives the whole pipeline (codebooks → codes → reconstruction →
+    scored top-k → recall) with llm_knn_pq's builder,
+    ``_pq_lloyd_oracle(0, _PQ_SQD_EXPANDED6)``, and value-matches it.
+    At 100 TB the stored index would be the 8-byte codes either way —
+    the kernel and plan shape are unchanged by the codebook choice."""
+    return _pq_topk(spark, sf_dir, 0, _pq_seeded_encode)
 
 
 @register("llm_neardup_cosine", oracle=None, section="L2,L3", reverify=14)
@@ -1280,7 +1114,7 @@ def _kmeans_unrolled_cte(
   SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS ord, emb AS cvec
   FROM src0 ORDER BY vec_id LIMIT {k}
 )""",
-        _lloyd_rounds_cte("src0", k, rounds),
+        *_lloyd_rounds_cte("src0", rounds),
         f"""asgF AS MATERIALIZED (
   SELECT vec_id, emb, cid FROM (
     SELECT e.vec_id, e.emb, c.ord AS cid,

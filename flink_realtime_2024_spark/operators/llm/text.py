@@ -968,9 +968,6 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _noaqe_session(spark)
     docs = load_table(s, sf_dir, "documents")
-    # belt-and-braces after load_table's prepare() sweep (the pin in
-    # _noaqe_session already protects this; same discipline as pagerank)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
     return bpe_train(docs)
 
 

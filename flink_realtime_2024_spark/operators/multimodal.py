@@ -254,8 +254,9 @@ def decode_pixels(payload: bytes) -> np.ndarray:
         ah = abs(h)
         row_size = (w * 3 + 3) & ~3
         arr = np.frombuffer(payload, dtype=np.uint8, offset=data_off, count=row_size * ah)
-        # bottom-up BGR rows → top-down RGB
-        return arr.reshape(ah, row_size)[:, : w * 3].reshape(ah, w, 3)[::-1, :, ::-1]
+        rgb = arr.reshape(ah, row_size)[:, : w * 3].reshape(ah, w, 3)[:, :, ::-1]
+        # a positive height stores the rows bottom-up, a negative one top-down
+        return rgb[::-1] if h > 0 else rgb
     if payload[:2] == b"P6":
         # header: "P6" <ws> width <ws> height <ws> maxval <single-ws> data
         parts = payload.split(b"\n", 3)

@@ -914,13 +914,6 @@ def analytics_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = deg.count()
     base = _PR_SCALE // n
     teleport = (15 * base) // 100
-    # re-assert AFTER the load_table calls above: load_table runs
-    # session.prepare(), which re-applies the runtime-conf defaults
-    # (adaptive=true included) to whatever session it's given — the
-    # clone must enter the checkpoint/loop region with AQE off or the
-    # checkpoints silently capture UnknownPartitioning again (caught
-    # by the conf probe in tests/test_semantics.py)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
     pr = deg.select("src", F.lit(base).cast("bigint").alias("pr")).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     g = edges.join(deg, "src").localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)  # (src, dst, d) — static
     for _ in range(_PR_ITERS):

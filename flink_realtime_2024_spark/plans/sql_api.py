@@ -192,10 +192,6 @@ def sql_recursive_cte_iterative(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _noaqe_session(spark)
     orders = load_table(s, sf_dir, "orders")
-    # re-assert AFTER load_table (it re-runs session.prepare, which
-    # re-applies adaptive=true to the clone — the pagerank trap, pinned
-    # by test_noaqe_clone_checkpoints_preserve_partitioning)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = (
         orders

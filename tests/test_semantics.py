@@ -262,8 +262,39 @@ def test_pq_codebooks_trained_once_per_session(spark, monkeypatch):
     from flink_realtime_2024_spark.operators.llm import knn
 
     knn.llm_knn_pq(spark, SF_DIR)
-    monkeypatch.setattr(knn, "_pq_train", lambda emb: pytest.fail("codebooks retrained"))
+    monkeypatch.setattr(knn, "_pq_train", lambda *a: pytest.fail("codebooks retrained"))
     knn.llm_knn_pq(spark, SF_DIR)
+
+
+def test_ann_ids_share_one_training_sample(spark, tmp_path, monkeypatch):
+    """The four ANN ids — IVF and PQ, each Lloyd-trained and seeded —
+    train on ONE memoized Knuth-ordered sample: building all four in
+    one session collects it once. The fixture is a fresh copy, so no
+    earlier build's memo serves it."""
+    import shutil
+
+    from flink_realtime_2024_spark.operators.llm import knn
+
+    shutil.copy(f"{SF_DIR}/embeddings.parquet", tmp_path / "embeddings.parquet")
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
+    collect, sampled = frame_cls.collect, []
+
+    def guarded(df):
+        if str(knn._IVF_KNUTH) in df._jdf.queryExecution().logical().toString():
+            if sampled:
+                pytest.fail("training sample collected twice")
+            sampled.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(frame_cls, "collect", guarded)
+    for build in (
+        knn.llm_knn_ivf,
+        knn.llm_knn_ivf_partitioned,
+        knn.llm_knn_pq,
+        knn.llm_knn_pq_seeded,
+    ):
+        build(spark, str(tmp_path))
+    assert len(sampled) == 1
 
 
 def test_knn_ivf_recall(spark):
@@ -755,6 +786,37 @@ def test_resize_kernel_rejects_what_the_decoders_reject():
             list(resize_stats([batch]))
 
 
+def test_bmp_top_down_rows_decode_upright():
+    """A negative BMP header height means the rows are stored top-down:
+    a hand-built 1×2 top-down BMP and its bottom-up twin (what
+    ``encode_bmp`` writes) decode to the same upright pixels and give
+    the same ``resize_stats`` row."""
+    import struct as st
+
+    import pandas as pd
+
+    from flink_realtime_2024_spark.operators.multimodal import (
+        decode_pixels,
+        encode_bmp,
+        resize_stats,
+    )
+
+    px = np.array([[[10, 20, 30]], [[200, 210, 220]]], dtype=np.uint8)
+    bottom_up = encode_bmp(px)  # 54-byte header, then two 4-byte rows
+    top_down = bytearray(bottom_up[:54] + bottom_up[58:62] + bottom_up[54:58])
+    st.pack_into("<i", top_down, 22, -2)  # biHeight
+    top_down = bytes(top_down)
+
+    assert np.array_equal(decode_pixels(bottom_up), px)
+    assert np.array_equal(decode_pixels(top_down), decode_pixels(bottom_up))
+
+    def features(payload):
+        batch = pd.DataFrame({"asset_id": [1], "mime": ["image/bmp"], "payload": [payload]})
+        return pd.concat(resize_stats([batch])).values.tolist()
+
+    assert features(top_down) == features(bottom_up)
+
+
 def test_multimodal_resize_and_frame_sample(spark):
     """resize/frame-sample kernels are exact: nearest-neighbor on a 2x2
     block pattern reproduces the blocks; frame sampling recovers known
@@ -1057,18 +1119,19 @@ def test_observation_metrics_single_pass(spark):
     """Operator counters via the Observation API: metric values arrive
     with the action itself (no second scan), and match an independent
     recomputation — the Flink metric-counter contract."""
-    from flink_realtime_2024_spark.observability import observe_counts
+    from pyspark.sql import Observation
+
     from flink_realtime_2024_spark.sources.io import load_table
 
     ev = load_table(spark, SF_DIR, "events")
     parsed = ev.select(
         "event_id", F.get_json_object("props", "$.missing").alias("m")
     )
-    obs_df, obs = observe_counts(
-        parsed,
-        "parse",
-        n_rows=F.count(F.lit(1)),
-        n_null=F.count(F.when(F.col("m").isNull(), 1)),
+    obs = Observation("parse")
+    obs_df = parsed.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count(F.when(F.col("m").isNull(), 1)).alias("n_null"),
     )
     n_out = obs_df.count()  # the action; metrics ride along
     got = obs.get
@@ -1082,14 +1145,16 @@ def test_await_observation_raises_without_action(spark, monkeypatch):
     blocking its caller forever (a bare ``obs.get`` would hang)."""
     import pytest as _pytest
 
+    from pyspark.sql import Observation
+
     from flink_realtime_2024_spark import observability
-    from flink_realtime_2024_spark.observability import await_observation, observe_counts
+    from flink_realtime_2024_spark.observability import await_observation
 
     monkeypatch.setattr(observability, "_OBSERVATION_WAIT_S", 0.5)
-    ran_df, ran = observe_counts(spark.range(5), "ran", n=F.count(F.lit(1)))
-    ran_df.collect()
+    ran, idle = Observation("ran"), Observation("idle")
+    spark.range(5).observe(ran, F.count(F.lit(1)).alias("n")).collect()
     assert await_observation(ran, "test")["n"] == 5
-    _, idle = observe_counts(spark.range(5), "idle", n=F.count(F.lit(1)))
+    spark.range(5).observe(idle, F.count(F.lit(1)).alias("n"))
     with _pytest.raises(RuntimeError, match="never posted"):
         await_observation(idle, "test")
 
@@ -1101,6 +1166,8 @@ def test_pq_reconstruction_and_recall(spark):
     (2) ADC top-k recall vs exact kNN beats random-guessing by a wide
     margin on uniform-sphere fixtures (PQ's hardest case)."""
     from flink_realtime_2024_spark.operators.llm import (
+        _ANN_LLOYD_ROUNDS,
+        _knuth_sample,
         _pq_train,
         llm_knn_cosine,
         llm_knn_pq,
@@ -1110,7 +1177,7 @@ def test_pq_reconstruction_and_recall(spark):
     from flink_realtime_2024_spark.sources.io import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    books = _pq_train(emb)
+    books = _pq_train(_knuth_sample(spark, SF_DIR, emb), _ANN_LLOYD_ROUNDS)
     E = np.array([r["embedding"] for r in emb.collect()], dtype=np.float64)
     R = pq_reconstruct(pq_encode(E, books), books)
     cos = (E * R).sum(1) / (np.linalg.norm(E, axis=1) * np.linalg.norm(R, axis=1))
@@ -1130,9 +1197,10 @@ def test_pq_reconstruction_and_recall(spark):
 
 
 def test_pq_seeded_determinism_and_recall(spark):
-    """llm_knn_pq_seeded (r14 full-oracle PQ): (1) the seeded codebooks
-    are a deterministic function of the corpus — two independent builds
-    are bit-identical and shaped (m, k, d/m); (2) the rounded-distance
+    """llm_knn_pq_seeded (r14 full-oracle PQ): (1) the seeded codebooks,
+    ``_pq_train(sample, 0)``, equal a numpy reference built straight
+    from the fixture — the subvectors of the first _PQ_K vectors in
+    Knuth-hash order, shaped (m, k, d/m); (2) the rounded-distance
     encoder agrees with the unrounded one almost everywhere (rounding
     exists for oracle parity, not to change assignments); (3) ADC
     recall vs exact kNN stays above the random floor (uniform-sphere
@@ -1140,10 +1208,12 @@ def test_pq_seeded_determinism_and_recall(spark):
     for oracle-checkability — the floor is accordingly below the
     Lloyd-trained gate in test_pq_reconstruction_and_recall)."""
     from flink_realtime_2024_spark.operators.llm import (
+        _IVF_KNUTH,
         _PQ_K,
         _PQ_M,
-        _pq_seeded_books,
+        _knuth_sample,
         _pq_seeded_encode,
+        _pq_train,
         llm_knn_cosine,
         llm_knn_pq_seeded,
         pq_encode,
@@ -1151,12 +1221,17 @@ def test_pq_seeded_determinism_and_recall(spark):
     from flink_realtime_2024_spark.sources.io import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    books = _pq_seeded_books(emb)
-    again = _pq_seeded_books(emb)
-    assert books.shape[0] == _PQ_M and books.shape[1] == _PQ_K
-    assert np.array_equal(books, again)
+    books = _pq_train(_knuth_sample(spark, SF_DIR, emb), 0)
 
-    E = np.array([r["embedding"] for r in emb.collect()], dtype=np.float64)
+    rows = sorted(emb.select("vec_id", "embedding").collect(), key=lambda r: r["vec_id"])
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    E = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    seeds = E[np.lexsort((ids, (ids * _IVF_KNUTH) % 2**32))[:_PQ_K]]
+    dsub = E.shape[1] // _PQ_M
+    want = np.stack([seeds[:, mi * dsub : (mi + 1) * dsub] for mi in range(_PQ_M)])
+    assert books.shape == (_PQ_M, _PQ_K, dsub)
+    assert np.array_equal(books, want)
+
     rounded = _pq_seeded_encode(E, books)
     plain = pq_encode(E, books)
     agree = (rounded == plain).mean()
@@ -1332,25 +1407,15 @@ def test_ann_training_margins_support_oracle_exactness(spark):
     import pyspark.sql.functions as F
 
     from flink_realtime_2024_spark.operators.llm import (
-        _IVF_KNUTH,
         _IVF_NCENT,
-        _IVF_TRAIN_BUDGET,
         _PQ_K,
         _PQ_M,
+        _knuth_sample,
     )
     from flink_realtime_2024_spark.sources.io import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    sample = np.array(
-        [
-            r["embedding"]
-            for r in emb.select("vec_id", "embedding")
-            .orderBy((F.col("vec_id") * F.lit(_IVF_KNUTH)) % F.lit(2**32), "vec_id")
-            .limit(_IVF_TRAIN_BUDGET)
-            .collect()
-        ],
-        dtype=np.float64,
-    )
+    sample = _knuth_sample(spark, SF_DIR, emb)
     corpus = np.array(
         [r["embedding"] for r in emb.select("embedding").collect()],
         dtype=np.float64,
@@ -3103,20 +3168,23 @@ def test_noaqe_clone_checkpoints_preserve_partitioning(spark):
     1. a ``localCheckpoint`` taken under the ``_noaqe_session`` clone
        preserves HashPartitioning — a self-join of two such frames on
        the partitioning key plans with ZERO exchanges;
-    2. building ``analytics_pagerank`` leaves the clone's adaptive conf
-       false even though ``load_table`` re-runs ``session.prepare``
-       (which re-applies adaptive=true) on it, and never touches the
-       caller's session conf."""
+    2. the clone's adaptive conf stays false through ``session.prepare``
+       (which ``load_table`` runs on it) and through building every id
+       that plans on the clone — ``prepare`` skips the confs the clone
+       pins in ``_flink_rt_pinned_confs`` — and the caller's session
+       conf is never touched."""
     import pyspark.sql.functions as F
     from pyspark import StorageLevel
 
+    from flink_realtime_2024_spark.operators.llm import llm_bpe_train
     from flink_realtime_2024_spark.plans.analytics import (
         _noaqe_session,
         analytics_pagerank,
     )
+    from flink_realtime_2024_spark.plans.sql_api import sql_recursive_cte_iterative
+    from flink_realtime_2024_spark.session import prepare
 
     s = _noaqe_session(spark)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
     a = (
         s.range(0, 1000)
         .select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
@@ -3146,9 +3214,12 @@ def test_noaqe_clone_checkpoints_preserve_partitioning(spark):
                     pass
     assert "Exchange" not in plan, plan
 
-    analytics_pagerank(spark, SF_DIR)
     clone = _noaqe_session(spark)
+    prepare(clone)
     assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
+    for build in (analytics_pagerank, sql_recursive_cte_iterative, llm_bpe_train):
+        build(spark, SF_DIR)
+        assert clone.conf.get("spark.sql.adaptive.enabled") == "false", build.__name__
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
